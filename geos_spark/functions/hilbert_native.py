@@ -1,13 +1,20 @@
-"""Hilbert cell codes as native Spark Column expressions.
+"""Tile grid ordinates, join keys and Hilbert cell codes as native
+Spark Column expressions.
 
-Same branch-free bitwise algorithm as
+Tile assignment has two steps. ``grid_xy`` is the one place a
+coordinate becomes a clamped grid ordinate. Every internal equijoin
+keys on ``tile_key``, the row-major index ``gy * 2^level + gx`` of
+those ordinates: a hash join needs an injective key, not a
+space-filling-curve order. The Hilbert code (``with_hilbert_cell``)
+is applied only where a cell id leaves the engine.
+
+``with_hilbert_cell`` is the branch-free bitwise algorithm of
 ``geos_spark.kernels.hilbert.hilbert_encode`` (reference semantics:
-``src/shape/fractal/HilbertCode.cpp:124-193``), expressed as a chain
-of integer Column ops so Catalyst/Tungsten codegens it — tile
-assignment stays entirely JVM-side. Intermediates are materialized as
-temporary projection columns (linear-size plan, no exponential
-expression blowup); a parity test checks every level against the
-numpy kernel.
+``src/shape/fractal/HilbertCode.cpp:124-193``) as ~40 chained
+projections, so the code stays JVM-side; a parity test checks every
+level against the numpy kernel. Catalyst's optimizer rules walk that
+chain on every query, so it costs planning time each time it is
+used, which is why joins do not key on it.
 
 uint32 semantics are emulated on LongType: every left-shift is masked
 with 0xFFFFFFFF; right shifts on non-negative longs are exact.
@@ -138,44 +145,77 @@ def with_hilbert_cell(
     return out_df.drop(*drop)
 
 
-def with_tile_cells_exploded(
+def grid_xy(
+    x: Column, y: Column, level: int, extent: tuple[float, float, float, float]
+) -> tuple[Column, Column]:
+    """Tile grid ordinates of (x, y): tiles partition the extent into
+    2^level x 2^level squares, and ordinates are clamped to
+    [0, 2^level - 1] so boundary/outside coordinates land in the edge
+    tiles."""
+    minx, miny, maxx, maxy = extent
+    n = 1 << level
+
+    def ordinate(c: Column, origin: float, stride: float) -> Column:
+        f = F.floor((c - F.lit(origin)) / F.lit(stride))
+        return F.greatest(F.lit(0), F.least(F.lit(n - 1), f))
+
+    return ordinate(x, minx, (maxx - minx) / n), ordinate(y, miny, (maxy - miny) / n)
+
+
+def tile_key(gx: Column, gy: Column, level: int) -> Column:
+    """Row-major tile index ``gy * 2^level + gx``: the key of every
+    internal tile equijoin (one multiply-add, no projection chain)."""
+    if level > 16:
+        raise ValueError("Level out of range")
+    return gy * F.lit(1 << level) + gx
+
+
+def with_grid_exploded(
     df: DataFrame,
     bbox_cols: tuple[str, str, str, str],
     level: int,
     extent: tuple[float, float, float, float],
-    out: str = "cell",
     pad: float = 0.0,
-    keep_grid: bool = False,
 ) -> DataFrame:
     """Explode each row to every tile its (optionally padded) envelope
-    overlaps — fully native (sequence + explode + Hilbert chain), so it
-    is safe on join build sides and broadcast plans (a python UDF there
-    defeats codegen and costs seconds per stage).
-    """
-    minx, miny, maxx, maxy = extent
-    n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
+    overlaps, adding the tile's ordinates as ``__gx``/``__gy`` — fully
+    native (sequence + explode), so it is safe on join build sides and
+    broadcast plans (a python UDF there defeats codegen and costs
+    seconds per stage)."""
     xmin, ymin, xmax, ymax = (F.col(c) for c in bbox_cols)
     if pad:
         xmin, ymin = xmin - F.lit(pad), ymin - F.lit(pad)
         xmax, ymax = xmax + F.lit(pad), ymax + F.lit(pad)
-
-    def clamp(c: Column) -> Column:
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), c))
-
-    gx0 = clamp(F.floor((xmin - F.lit(minx)) / F.lit(sx)))
-    gx1 = clamp(F.floor((xmax - F.lit(minx)) / F.lit(sx)))
-    gy0 = clamp(F.floor((ymin - F.lit(miny)) / F.lit(sy)))
-    gy1 = clamp(F.floor((ymax - F.lit(miny)) / F.lit(sy)))
-    tmp = (
-        df.withColumn("__gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("__gy", F.explode(F.sequence(gy0, gy1)))
+    gx0, gy0 = grid_xy(xmin, ymin, level, extent)
+    gx1, gy1 = grid_xy(xmax, ymax, level, extent)
+    return df.withColumn("__gx", F.explode(F.sequence(gx0, gx1))).withColumn(
+        "__gy", F.explode(F.sequence(gy0, gy1))
     )
-    res = with_hilbert_cell(tmp, "__gx", "__gy", level, out)
-    if keep_grid:
-        return res.withColumnsRenamed({"__gx": "gx", "__gy": "gy"})
-    return res.drop("__gx", "__gy")
+
+
+def with_tile_keys_exploded(
+    df: DataFrame,
+    bbox_cols: tuple[str, str, str, str],
+    level: int,
+    extent: tuple[float, float, float, float],
+    pad: float = 0.0,
+) -> DataFrame:
+    """``with_grid_exploded`` reduced to the ``__cell`` join key."""
+    g = with_grid_exploded(df, bbox_cols, level, extent, pad)
+    key = tile_key(F.col("__gx"), F.col("__gy"), level)
+    return g.withColumn("__cell", key).drop("__gx", "__gy")
+
+
+def with_tile_key(
+    df: DataFrame,
+    x_col: str,
+    y_col: str,
+    level: int,
+    extent: tuple[float, float, float, float],
+) -> DataFrame:
+    """Point coordinates -> containing-tile ``__cell`` join key."""
+    gx, gy = grid_xy(F.col(x_col), F.col(y_col), level, extent)
+    return df.withColumn("__cell", tile_key(gx, gy, level))
 
 
 def with_tile_cell(
@@ -186,20 +226,9 @@ def with_tile_cell(
     extent: tuple[float, float, float, float],
     out: str = "cell",
 ) -> DataFrame:
-    """Point coordinates -> containing-tile Hilbert cell (native).
-
-    Tiles partition the extent into 2^level x 2^level squares; grid
-    ordinates are clamped to [0, 2^level - 1] so boundary/outside
-    points land in the edge tiles.
-    """
-    minx, miny, maxx, maxy = extent
-    n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
-    gx = F.floor((F.col(x_col) - F.lit(minx)) / F.lit(sx))
-    gy = F.floor((F.col(y_col) - F.lit(miny)) / F.lit(sy))
-    gx = F.greatest(F.lit(0), F.least(F.lit(n - 1), gx))
-    gy = F.greatest(F.lit(0), F.least(F.lit(n - 1), gy))
+    """Point coordinates -> containing-tile Hilbert cell (native), on
+    the ``grid_xy`` ordinates."""
+    gx, gy = grid_xy(F.col(x_col), F.col(y_col), level, extent)
     tmp = df.withColumn("__gx", gx).withColumn("__gy", gy)
     return with_hilbert_cell(tmp, "__gx", "__gy", level, out).drop(
         "__gx", "__gy"

@@ -1412,9 +1412,7 @@ def st_srid(wkb: pd.Series) -> pd.Series:
     """GEOSGetSRID (capi geos_c.h.in:2900): the geometry's srid tag, 0
     when untagged.  The tag travels in the binary column as EWKB (see
     st_setsrid); canonical ISO WKB reads back as 0."""
-    return wkb.map(
-        lambda b: None if b is None else parse_wkb(b).srid
-    ).astype("Int32")
+    return wkb.map(_row_nullout(lambda b: parse_wkb(b).srid)).astype("Int32")
 
 
 def st_setsrid(srid: int):

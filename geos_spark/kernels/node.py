@@ -85,7 +85,7 @@ def _ords(side, n, i):
     return None if math.isnan(v) else v
 
 
-def _extract_strings(g: G.Geom) -> list[_NStr]:
+def _extract_strings(g: G.Geom) -> tuple[list[_NStr], bool, bool]:
     """Linework of ``g`` as segment strings (SegmentStringUtil::
     extractSegmentStrings: line parts + polygon rings; points ignored;
     curved types unsupported)."""
@@ -237,23 +237,25 @@ def _node_pass(strings: list[_NStr]) -> tuple[list[_NStr], bool]:
         sa, ia = who[int(ii[h])]
         sb, ib = who[int(jj[h])]
         if cls[h] == POINT_INTERSECTION:
-            if sa == sb and abs(ia - ib) == 1:
-                # adjacent segments of one string sharing their vertex:
-                # trivial unless the crossing is a genuine second point
-                pt = segment_intersection_point(
-                    strings[sa].xy[ia], strings[sa].xy[ia + 1],
-                    strings[sb].xy[ib], strings[sb].xy[ib + 1],
-                    int(o1[k]), int(o2[k]), int(o3[k]), int(o4[k]),
-                )
-                shared = strings[sa].xy[max(ia, ib)]
-                if pt == shared:
+            pt = segment_intersection_point(
+                strings[sa].xy[ia], strings[sa].xy[ia + 1],
+                strings[sb].xy[ib], strings[sb].xy[ib + 1],
+                int(o1[k]), int(o2[k]), int(o3[k]), int(o4[k]),
+            )
+            if sa == sb:
+                # adjacent segments of one string sharing their vertex
+                # (including the first and last segment of a closed
+                # string at the closure vertex): trivial unless the
+                # crossing is a genuine second point
+                xy = strings[sa].xy
+                if abs(ia - ib) == 1 and pt == xy[max(ia, ib)]:
                     continue
-            else:
-                pt = segment_intersection_point(
-                    strings[sa].xy[ia], strings[sa].xy[ia + 1],
-                    strings[sb].xy[ib], strings[sb].xy[ib + 1],
-                    int(o1[k]), int(o2[k]), int(o3[k]), int(o4[k]),
-                )
+                if (
+                    {ia, ib} == {0, nseg[sa] - 1}
+                    and xy[0] == xy[-1]
+                    and pt == xy[0]
+                ):
+                    continue
             add_node(sa, ia, pt)
             add_node(sb, ib, pt)
         elif cls[h] == COLLINEAR_INTERSECTION:

@@ -4,7 +4,7 @@
 against its envelope-near neighbours — the distributed form of the
 reference's ``CoverageValidator`` loop
 (src/coverage/CoverageValidator.cpp:80-126, which queries an STRtree
-per polygon; here the candidate neighbour discovery is a Hilbert-cell
+per polygon; here the candidate neighbour discovery is a tile-key
 equijoin + envelope filter, and each polygon's validation runs in a
 vectorized applyInPandas group on the kernel
 ``kernels/coverage_valid.py``).
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geos_spark.functions.hilbert_native import with_tile_cells_exploded
+from geos_spark.functions.hilbert_native import grid_xy, with_tile_keys_exploded
 from geos_spark.functions.st import DEFAULT_EXTENT
 
 _OUT_SCHEMA = T.StructType(
@@ -68,16 +68,11 @@ def coverage_validate(
         (F.col("env.ymax") + F.lit(gap_width)).alias("ymax"),
     )
 
-    # materialize the exploded-cell table: it feeds both join sides,
-    # and the Hilbert-cell expression chain is large enough that
-    # re-codegen per branch dominates dim-sized inputs
+    # materialize the exploded-cell table: it feeds both sides of the
+    # ``__cell`` self-join, so the explode runs once, not per side
     cells = _materialize(
-        with_tile_cells_exploded(
-            base,
-            ("xmin", "ymin", "xmax", "ymax"),
-            level,
-            extent,
-            out="__cell",
+        with_tile_keys_exploded(
+            base, ("xmin", "ymin", "xmax", "ymax"), level, extent
         )
     )
     tgt = cells.select(
@@ -208,14 +203,7 @@ def coverage_simplify_partitioned(
     )
     cx = (F.col("xmin") + F.col("xmax")) / 2
     cy = (F.col("ymin") + F.col("ymax")) / 2
-    hgx = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1), F.floor((cx - F.lit(minx)) / F.lit(sx))),
-    )
-    hgy = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1), F.floor((cy - F.lit(miny)) / F.lit(sy))),
-    )
+    hgx, hgy = grid_xy(cx, cy, level, extent)
     home = base.withColumn(
         "part", (hgx * F.lit(n) + hgy).cast("long")
     )
@@ -229,18 +217,9 @@ def coverage_simplify_partitioned(
         f = F.when(col == f * F.lit(stride) + F.lit(origin), f - 1).otherwise(f)
         return F.greatest(F.lit(0), F.least(F.lit(n - 1), f))
 
-    def hi(col, origin, stride):
-        return F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(n - 1), F.floor((col - F.lit(origin)) / F.lit(stride))
-            ),
-        )
-
     gx0 = lo(F.col("xmin"), minx, sx)
-    gx1 = hi(F.col("xmax"), minx, sx)
     gy0 = lo(F.col("ymin"), miny, sy)
-    gy1 = hi(F.col("ymax"), miny, sy)
+    gx1, gy1 = grid_xy(F.col("xmax"), F.col("ymax"), level, extent)
     spread = (
         home.withColumn("tgx", F.explode(F.sequence(gx0, gx1)))
         .withColumn("tgy", F.explode(F.sequence(gy0, gy1)))
@@ -346,10 +325,7 @@ def coverage_clean_partitioned(
     from geos_spark.functions.st import st_envelope_struct
     from geos_spark.operators.cluster import _materialize
 
-    minx, miny, maxx, maxy = extent
     n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
 
     base = df.select(
         F.col(id_col).cast("long").alias("id"),
@@ -397,23 +373,12 @@ def coverage_clean_partitioned(
 
     cx = (F.col("xmin") + F.col("xmax")) / 2
     cy = (F.col("ymin") + F.col("ymax")) / 2
-    hgx = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1), F.floor((cx - F.lit(minx)) / F.lit(sx))),
-    )
-    hgy = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1), F.floor((cy - F.lit(miny)) / F.lit(sy))),
-    )
+    hgx, hgy = grid_xy(cx, cy, level, extent)
     home = base.withColumn("part", (hgx * F.lit(n) + hgy).cast("long"))
 
-    def clamp(col):
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), col))
-
-    gx0 = clamp(F.floor((F.col("xmin") - F.lit(margin) - F.lit(minx)) / F.lit(sx)))
-    gx1 = clamp(F.floor((F.col("xmax") + F.lit(margin) - F.lit(minx)) / F.lit(sx)))
-    gy0 = clamp(F.floor((F.col("ymin") - F.lit(margin) - F.lit(miny)) / F.lit(sy)))
-    gy1 = clamp(F.floor((F.col("ymax") + F.lit(margin) - F.lit(miny)) / F.lit(sy)))
+    m = F.lit(margin)
+    gx0, gy0 = grid_xy(F.col("xmin") - m, F.col("ymin") - m, level, extent)
+    gx1, gy1 = grid_xy(F.col("xmax") + m, F.col("ymax") + m, level, extent)
     work = (
         home.withColumn("tgx", F.explode(F.sequence(gx0, gx1)))
         .withColumn("tgy", F.explode(F.sequence(gy0, gy1)))

@@ -25,8 +25,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from geos_spark.functions.hilbert_native import (
-    with_tile_cell,
-    with_tile_cells_exploded,
+    grid_xy,
+    with_tile_key,
+    with_tile_keys_exploded,
 )
 from geos_spark.functions.st import DEFAULT_EXTENT
 
@@ -46,9 +47,9 @@ def within_distance_join(
     plan: tile equijoin + codegen'd squared-distance filter."""
     px, py = probe_xy
     bx, by = build_xy
-    p = with_tile_cell(probe, px, py, level, extent, out="__cell")
-    b = with_tile_cells_exploded(
-        build, (bx, by, bx, by), level, extent, out="__cell", pad=distance
+    p = with_tile_key(probe, px, py, level, extent)
+    b = with_tile_keys_exploded(
+        build, (bx, by, bx, by), level, extent, pad=distance
     )
     if broadcast_build:
         # exploded side has no size estimate -> hint (see spatial_join)
@@ -139,14 +140,7 @@ def knn_join(
     bx, by = build_xy
 
     def grid(df: DataFrame, xc: str, yc: str, pre: str) -> DataFrame:
-        gx = F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor((F.col(xc) - F.lit(minx)) / F.lit(sx))),
-        )
-        gy = F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor((F.col(yc) - F.lit(miny)) / F.lit(sy))),
-        )
+        gx, gy = grid_xy(F.col(xc), F.col(yc), level, extent)
         return df.withColumn(pre + "gx", gx).withColumn(pre + "gy", gy)
 
     def ckpt(df: DataFrame) -> DataFrame:

@@ -2,11 +2,13 @@
 
 Two-phase plan (SURVEY §2.5, §3.1):
 
-1. **global phase (native)** — both sides are assigned Hilbert tile
-   cells: points get their containing tile via the JVM-native bitwise
-   cell chain (zero python); polygons explode to every tile their
-   envelope overlaps (pUDF producing an int array, then ``explode``).
-   A Catalyst equijoin on ``cell`` plus a codegen'd bbox
+1. **global phase (native)** — both sides are keyed on the row-major
+   tile index ``gy * 2^level + gx`` (``hilbert_native.tile_key``):
+   points get their containing tile, polygons explode (``sequence`` +
+   ``explode``) to every tile their envelope overlaps. The key is a
+   plain injective index, not the Hilbert code, so the plan carries
+   no bitwise chain to optimize on every query. A Catalyst equijoin
+   on ``__cell`` plus a codegen'd bbox
    containment/overlap filter reproduces the reference's envelope
    short-circuit (``src/geom/Geometry.cpp:295``) *before* any python
    runs.
@@ -35,8 +37,11 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from geos_spark.functions.hilbert_native import (
-    with_tile_cell,
-    with_tile_cells_exploded,
+    grid_xy,
+    tile_key,
+    with_grid_exploded,
+    with_tile_key,
+    with_tile_keys_exploded,
 )
 from geos_spark.functions.st import DEFAULT_EXTENT
 
@@ -294,15 +299,13 @@ def within_distance_join_polygons(
     plan stays inside whole-stage codegen, so it scales like
     pip_native (no Arrow boundary, no python workers)."""
     xmin, ymin, xmax, ymax = bbox_cols
-    pts = with_tile_cell(points, x_col, y_col, level, extent, out="__cell")
+    pts = with_tile_key(points, x_col, y_col, level, extent)
     build = polygons.select(
         *([poly_id_col] if poly_id_col else []),
         *bbox_cols,
         _wkb_edges(F.col(wkb_col)).alias("__edges"),
     )
-    polys = with_tile_cells_exploded(
-        build, bbox_cols, level, extent, out="__cell", pad=distance
-    )
+    polys = with_tile_keys_exploded(build, bbox_cols, level, extent, pad=distance)
     if broadcast_build:
         # the explode defeats size estimation (see point_in_polygon_join)
         polys = F.broadcast(polys)
@@ -596,17 +599,12 @@ def polygon_join(
     max(ymin_a, ymin_b)) — no duplicate pairs, no second distinct
     shuffle (SURVEY §3.1 dedup). Refine = relate-kernel pUDF.
     """
-    minx, miny, maxx, maxy = extent
-    n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
     axmin, aymin, axmax, aymax = a_bbox
     bxmin, bymin, bxmax, bymax = b_bbox
 
-    ea = with_tile_cells_exploded(
-        a, a_bbox, level, extent, out="__cell", keep_grid=True
-    )
-    eb = with_tile_cells_exploded(b, b_bbox, level, extent, out="__cell")
+    ea = with_grid_exploded(a, a_bbox, level, extent)
+    ea = ea.withColumn("__cell", tile_key(F.col("__gx"), F.col("__gy"), level))
+    eb = with_tile_keys_exploded(b, b_bbox, level, extent)
 
     cand = ea.join(eb, "__cell").where(
         (F.col(axmin) <= F.col(bxmax))
@@ -617,20 +615,15 @@ def polygon_join(
     # reference-point dedup (codegen'd, no shuffle)
     rx = F.greatest(F.col(axmin), F.col(bxmin))
     ry = F.greatest(F.col(aymin), F.col(bymin))
-    rgx = F.greatest(
-        F.lit(0), F.least(F.lit(n - 1), F.floor((rx - F.lit(minx)) / F.lit(sx)))
-    )
-    rgy = F.greatest(
-        F.lit(0), F.least(F.lit(n - 1), F.floor((ry - F.lit(miny)) / F.lit(sy)))
-    )
-    cand = cand.where((F.col("gx") == rgx) & (F.col("gy") == rgy))
+    rgx, rgy = grid_xy(rx, ry, level, extent)
+    cand = cand.where((F.col("__gx") == rgx) & (F.col("__gy") == rgy))
 
     refined = cand.withColumn(
         "__ok", relate_refine(predicate)(F.col(a_wkb), F.col(b_wkb))
     )
     return (
         refined.where(F.col("__ok"))
-        .drop("__ok", "__cell", "gx", "gy")
+        .drop("__ok", "__cell", "__gx", "__gy")
     )
 
 
@@ -672,7 +665,7 @@ def point_in_polygon_join(
     accepted = _POINT_PREDICATES[predicate]
 
     xmin, ymin, xmax, ymax = bbox_cols
-    pts = with_tile_cell(points, x_col, y_col, level, extent, out="__cell")
+    pts = with_tile_key(points, x_col, y_col, level, extent)
 
     # slim-build path: a broadcastable polygon dim with an id column
     # never ships WKB through the join or the Arrow boundary — the
@@ -706,9 +699,7 @@ def point_in_polygon_join(
     else:
         build = polygons
 
-    polys = with_tile_cells_exploded(
-        build, bbox_cols, level, extent, out="__cell"
-    )
+    polys = with_tile_keys_exploded(build, bbox_cols, level, extent)
 
     # the exploded build side defeats Catalyst's size estimation (an
     # explode's output size is unknown), which silently degrades the

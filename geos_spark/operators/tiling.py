@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from geos_spark.functions.hilbert_native import with_tile_cells_exploded
+from geos_spark.functions.hilbert_native import with_grid_exploded, with_hilbert_cell
 from geos_spark.functions.st import DEFAULT_EXTENT
 
 _CLIP_SCHEMA = T.StructType(
@@ -158,13 +158,12 @@ def tile_materialize_rects(
     sx = (maxx - minx) / n
     sy = (maxy - miny) / n
     xmin, ymin, xmax, ymax = (F.col(c) for c in bbox_cols)
-    e = with_tile_cells_exploded(
-        df, bbox_cols, level, extent, out="cell", keep_grid=True
-    )
-    tx0 = F.lit(minx) + F.col("gx") * F.lit(sx)
-    ty0 = F.lit(miny) + F.col("gy") * F.lit(sy)
-    tx1 = F.lit(minx) + (F.col("gx") + 1) * F.lit(sx)
-    ty1 = F.lit(miny) + (F.col("gy") + 1) * F.lit(sy)
+    e = with_grid_exploded(df, bbox_cols, level, extent)
+    e = with_hilbert_cell(e, "__gx", "__gy", level)
+    tx0 = F.lit(minx) + F.col("__gx") * F.lit(sx)
+    ty0 = F.lit(miny) + F.col("__gy") * F.lit(sy)
+    tx1 = F.lit(minx) + (F.col("__gx") + 1) * F.lit(sx)
+    ty1 = F.lit(miny) + (F.col("__gy") + 1) * F.lit(sy)
     fx0 = F.greatest(xmin, tx0)
     fy0 = F.greatest(ymin, ty0)
     fx1 = F.least(xmax, tx1)
@@ -180,7 +179,7 @@ def tile_materialize_rects(
             "covers_fully", area == F.lit(sx) * F.lit(sy)
         )
         .where(area > 0)
-        .drop("gx", "gy")
+        .drop("__gx", "__gy")
     )
 
 
@@ -198,18 +197,17 @@ def tile_materialize(
     n = 1 << level
     sx = (maxx - minx) / n
     sy = (maxy - miny) / n
-    e = with_tile_cells_exploded(
-        df, bbox_cols, level, extent, out="cell", keep_grid=True
-    )
+    e = with_grid_exploded(df, bbox_cols, level, extent)
+    e = with_hilbert_cell(e, "__gx", "__gy", level)
     # the explode multiplies rows without changing partitioning, so a
     # dim-sized input would funnel the (expensive, python) clip into a
     # couple of tasks — spread the per-tile work across the cluster
     e = e.repartition(F.col("cell"))
     e = (
-        e.withColumn("tile_xmin", F.lit(minx) + F.col("gx") * F.lit(sx))
-        .withColumn("tile_ymin", F.lit(miny) + F.col("gy") * F.lit(sy))
-        .withColumn("tile_xmax", F.lit(minx) + (F.col("gx") + 1) * F.lit(sx))
-        .withColumn("tile_ymax", F.lit(miny) + (F.col("gy") + 1) * F.lit(sy))
+        e.withColumn("tile_xmin", F.lit(minx) + F.col("__gx") * F.lit(sx))
+        .withColumn("tile_ymin", F.lit(miny) + F.col("__gy") * F.lit(sy))
+        .withColumn("tile_xmax", F.lit(minx) + (F.col("__gx") + 1) * F.lit(sx))
+        .withColumn("tile_ymax", F.lit(miny) + (F.col("__gy") + 1) * F.lit(sy))
     )
     e = e.withColumn(
         "clip",

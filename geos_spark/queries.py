@@ -13,6 +13,8 @@ after sorting columns by name).
 
 from __future__ import annotations
 
+from collections import UserDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -3391,21 +3393,36 @@ WHERE sess_end_us < (SELECT epoch_us(MAX(ts) - INTERVAL 1 HOUR) FROM events)
 """
 
 
+class _Oracles(UserDict):
+    """Oracle SQL by query name. A value may be a zero-argument
+    builder, run on first access and cached: the xt_* oracles read the
+    GEOS reference corpus, which importing this module must not need."""
+
+    def __getitem__(self, name: str) -> str:
+        sql = self.data[name]
+        if callable(sql):
+            sql = self.data[name] = sql()
+        return sql
+
+
 def _fixture_oracles() -> dict:
     from geos_spark import fixtures as FX
 
+    def of(cases):
+        return lambda: FX.oracle_for(cases())
+
     return {
-        "xt_unit": FX.unit_oracle(),
-        "xt_predicates": FX.oracle_for(FX.predicate_cases()),
-        "xt_validate": FX.oracle_for(FX.validate_cases()),
-        "xt_valid": FX.oracle_for(FX.valid_cases()),
-        "xt_overlay": FX.oracle_for(FX.overlay_cases()),
-        "xt_overlay_prec": FX.oracle_for(FX.overlay_prec_cases()),
-        "xt_robust": FX.oracle_for(FX.robust_cases()),
-        "xt_issue": FX.oracle_for(FX.issue_cases()),
-        "xt_misc": FX.oracle_for(FX.misc_cases()),
-        "xt_construct": FX.oracle_for(FX.construct_cases()),
-        "xt_buffer": FX.oracle_all_match(FX.buffer_cases()),
+        "xt_unit": FX.unit_oracle,
+        "xt_predicates": of(FX.predicate_cases),
+        "xt_validate": of(FX.validate_cases),
+        "xt_valid": of(FX.valid_cases),
+        "xt_overlay": of(FX.overlay_cases),
+        "xt_overlay_prec": of(FX.overlay_prec_cases),
+        "xt_robust": of(FX.robust_cases),
+        "xt_issue": of(FX.issue_cases),
+        "xt_misc": of(FX.misc_cases),
+        "xt_construct": of(FX.construct_cases),
+        "xt_buffer": lambda: FX.oracle_all_match(FX.buffer_cases()),
     }
 
 
@@ -3485,7 +3502,7 @@ QUERIES = {
     "stream_pip": q_stream_pip,
 }
 
-ORACLES = {
+ORACLES = _Oracles({
     "tile_assign": q_tile_assign_sql(),
     "pip_join": q_pip_join_sql(),
     "pip_native": q_pip_join_sql(),
@@ -3549,7 +3566,7 @@ ORACLES = {
     "stream_sessions": q_stream_sessions_sql(),
     "stream_first_seen": q_stream_first_seen_sql(),
     "stream_pip": q_pip_join_sql(),
-}
+})
 
 ORACLES.update(_fixture_oracles())
 

@@ -284,10 +284,12 @@ def streaming_pip_join(
     static dim table. This is literally the batch operator
     (:func:`geos_spark.operators.spatial_join.point_in_polygon_join`)
     with the ``native_edges`` physical strategy: the static build side
-    becomes a broadcast edge-array table at plan time, the probe's
-    tile-cell key and the RayCrossingCounter locate are stateless
-    Catalyst expressions, and the cell equijoin is a stream-static
-    broadcast join — streaming-legal in append mode with NO state
+    becomes a broadcast edge-array table, the probe's tile key and the
+    RayCrossingCounter locate are stateless Catalyst expressions, and
+    the tile equijoin is a stream-static broadcast join. The build side
+    is not prepared once: every micro-batch re-plans it and re-runs the
+    ``_wkb_edges`` pandas UDF over the whole dim. The join is
+    streaming-legal in append mode with NO state
     store at all (each micro-batch joins independently; nothing is
     buffered across batches).
 

@@ -99,3 +99,33 @@ def test_morton_roundtrip():
     i = np.arange(4096, dtype=np.uint32)
     x, y = H.morton_decode(6, i)
     assert np.array_equal(H.morton_encode(6, x, y), i)
+
+
+def test_native_hilbert_matches_numpy_every_level(spark):
+    from geos_spark.functions.hilbert_native import with_hilbert_cell
+
+    for level in range(17):
+        n = 1 << level
+        rs = np.random.RandomState(level)
+        xs = [0, n - 1] + rs.randint(0, n, size=30).tolist()
+        ys = [n - 1, 0] + rs.randint(0, n, size=30).tolist()
+        df = spark.createDataFrame(list(zip(xs, ys)), "gx long, gy long")
+        got = [r.cell for r in with_hilbert_cell(df, "gx", "gy", level).collect()]
+        want = H.hilbert_encode(level, np.array(xs), np.array(ys))
+        assert got == want.astype(np.int64).tolist(), level
+
+
+def test_tile_levels_above_16_raise(spark):
+    from geos_spark.functions.hilbert_native import with_tile_cell
+    from geos_spark.operators.spatial_join import point_in_polygon_join
+
+    pts = spark.createDataFrame([(1.0, 2.0)], "x double, y double")
+    polys = spark.createDataFrame(
+        [(b"", 0.0, 0.0, 1.0, 1.0)],
+        "wkb binary, xmin double, ymin double, xmax double, ymax double",
+    )
+    extent = (0.0, 0.0, 4096.0, 4096.0)
+    with pytest.raises(ValueError):
+        with_tile_cell(pts, "x", "y", 17, extent)
+    with pytest.raises(ValueError):
+        point_in_polygon_join(pts, polys, level=17, extent=extent)

@@ -93,6 +93,23 @@ def test_node_zm(inp, exp):
     assert _part_keys(got) == _part_keys(want)
 
 
+def test_node_ring_closure_keeps_other_strings_z():
+    # the first and last segment of a closed ring meet at the closure
+    # vertex trivially; a node another string makes there averages only
+    # the genuine crossings: (10 + 0) / 2, not the ring's Z repeated
+    got = node_geometry(
+        parse_wkt(
+            "MULTILINESTRING Z ((0 0 10, 4 0 10, 4 4 10, 0 0 10), "
+            "(-2 2 0, 2 -2 0))"
+        )
+    )
+    want = parse_wkt(
+        "MULTILINESTRING Z ((0 0 10, 4 0 10, 4 4 10, 0 0 10), "
+        "(-2 2 0, 0 0 5), (0 0 5, 2 -2 0))"
+    )
+    assert _part_keys(got) == _part_keys(want)
+
+
 def test_node_curved_rejected():
     # case 9: curved geometries are not supported -> error (UDF nulls)
     g = parse_wkt(
@@ -197,3 +214,19 @@ def test_st_node_and_srid_udfs(spark):
     # curved input nulls out (GEOSNodeTest case 9), null stays null
     assert out[1].noded is None
     assert out[2].noded is None and out[2].srid is None
+
+
+def test_st_srid_malformed_row_nulls_out(spark):
+    from pyspark.sql import functions as F
+
+    from geos_spark.functions import st
+
+    good = write_ewkb(parse_wkt("POINT (1 2)"), 4326)
+    df = spark.createDataFrame(
+        [(0, good), (1, b"\x01\x02\x00"), (2, None)], "id int, g binary"
+    )
+    got = {
+        r.id: r.srid
+        for r in df.select("id", st.st_srid(F.col("g")).alias("srid")).collect()
+    }
+    assert got == {0: 4326, 1: None, 2: None}

@@ -2,8 +2,8 @@
 
 These guard the scale contract, not results: filters reach the parquet
 scan, dimension joins broadcast, the native tiers contain no python
-eval nodes, and the refine pUDF sits after (not before) the envelope
-short-circuit.
+eval nodes, the refine pUDF sits after (not before) the envelope
+short-circuit, and the joins carry no Hilbert chain to optimize.
 """
 
 from pyspark.sql import functions as F
@@ -39,6 +39,41 @@ def test_pip_join_plan_shape(spark):
     # exactly one python eval NODE (formatted plans print each
     # operator twice: tree + detail section)
     assert plan.count("ArrowEvalPython (") == 1
+
+
+def _has_hilbert_chain(df) -> bool:
+    """Whether the optimized plan holds the Hilbert bitwise chain."""
+    j = df._jdf.queryExecution().optimizedPlan().toJSON()
+    return "BitwiseXor" in j or "ShiftRight" in j
+
+
+def test_joins_key_on_tile_index_not_hilbert(spark):
+    from geos_spark.functions.hilbert_native import with_tile_cell
+    from geos_spark.operators.spatial_join import (
+        point_in_polygon_join,
+        polygon_join,
+        within_distance_join_polygons,
+    )
+    from geos_spark.sources.pages import EXTENT, star_polygons, with_doc_point
+
+    pts = with_doc_point(spark.range(0, 100).withColumnRenamed("id", "doc_id"))
+    stars = star_polygons(spark)
+    other = stars.select(
+        *(F.col(c).alias("b" + c) for c in ("wkb", "xmin", "ymin", "xmax", "ymax"))
+    )
+    joins = [
+        point_in_polygon_join(pts, stars, level=6, extent=EXTENT),
+        point_in_polygon_join(
+            pts, stars, level=6, extent=EXTENT,
+            poly_id_col="poly_id", strategy="native_edges",
+        ),
+        polygon_join(stars, other, level=6, extent=EXTENT),
+        within_distance_join_polygons(pts, stars, 10.0, level=6, extent=EXTENT),
+    ]
+    for out in joins:
+        assert not _has_hilbert_chain(out)
+    # output cell ids stay Hilbert-coded
+    assert _has_hilbert_chain(with_tile_cell(pts, "x", "y", 6, EXTENT))
 
 
 def test_tile_assign_fully_native(spark):
