@@ -50,8 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: distributed ray-casting point-in-polygon join of
     deterministic doc-derived points against the star-polygon dim table
-    (Hilbert-tile partitioned, envelope short-circuit, RayCrossingCounter
-    as Catalyst higher-order functions — zero python in the hot path)."""
+    (tile-key partitioned, envelope short-circuit, then the robust
+    RayCrossingCounter refine by polygon id against the dim prepared
+    once per DataFrame)."""
     from geos_spark.queries import q_pip_native
 
     return q_pip_native(spark, "/root/testdata/sf0.001")

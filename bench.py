@@ -234,7 +234,7 @@ def _bench_queries(spark):
     def pip_native_1m():
         return point_in_polygon_join(
             pts_1m, stars, "intersects", level=6, extent=EXTENT,
-            poly_id_col="poly_id", strategy="native_edges",
+            poly_id_col="poly_id",
         ).select("doc_id", "poly_id")
 
     def tile_assign_1m():
@@ -258,7 +258,6 @@ def _bench_queries(spark):
 
     def distance_native_1m():
         # point-to-POLYGON within-distance, zero-python HOF refine
-        # (same physical shape as pip_native_1m)
         from geos_spark.operators.spatial_join import (
             within_distance_join_polygons,
         )
@@ -401,8 +400,8 @@ def _bench_queries(spark):
 
     def stream_pip_1m():
         # streaming spatial join end-to-end: file source -> point
-        # derivation -> stream-static native_edges join (stateless,
-        # broadcast build) -> checkpointed parquet sink. The headline
+        # derivation -> stream-static join against the prepared dim
+        # (stateless, broadcast build) -> checkpointed parquet sink. The headline
         # "unbounded probe" throughput number.
         import tempfile
 
@@ -590,7 +589,7 @@ def _bench_queries(spark):
 
     def raster_1024():
         # raster<->vector roundtrip at 1024x1024: 1m pixel centers
-        # probed against the 256 stars (native_edges join) -> ~75k
+        # probed against the 256 prepared stars -> ~75k
         # set pixels -> contraction CC -> per-region ring tracing
         # with measures from the traced geometry.  Oracle coverage:
         # catalog rows `rasterize` / `raster_vectorize` (512 grid).
@@ -628,7 +627,7 @@ def _bench_queries(spark):
     def pip_native_10m():
         return point_in_polygon_join(
             pts_10m, stars, "intersects", level=6, extent=EXTENT,
-            poly_id_col="poly_id", strategy="native_edges",
+            poly_id_col="poly_id",
         ).select("doc_id", "poly_id")
 
     def distance_native_10m():
@@ -706,7 +705,7 @@ def _scaling_queries(spark, cores: int):
         )
         return point_in_polygon_join(
             pts, star_polygons(spark), "intersects", level=6, extent=EXTENT,
-            poly_id_col="poly_id", strategy="native_edges",
+            poly_id_col="poly_id",
         ).select("doc_id", "poly_id")
 
     def tile_pipeline_96m():

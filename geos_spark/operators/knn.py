@@ -236,7 +236,8 @@ def knn_join(
         )
     )
     r = 2
-    while starving.limit(1).count() > 0:
+    live = starving.limit(1).count() > 0
+    while live:
         prev_starving = starving
         if r >= n:
             # whole grid in reach: rank whatever exists and finish
@@ -255,10 +256,11 @@ def knn_join(
         starving = ckpt(
             starving.join(sated.select(probe_id), probe_id, "left_anti")
         )
-        # materialize the new frontier, then release the previous
+        # materialize the new frontier (one job a round: it is also
+        # the loop's emptiness test), then release the previous
         # round's cache blocks — the loop would otherwise hold
         # O(log n) cached copies of the shrinking probe set
-        starving.limit(1).count()
+        live = starving.limit(1).count() > 0
         try:
             prev_starving.unpersist()
         except Exception:  # noqa: BLE001

@@ -7,9 +7,9 @@ side of raster<->vector materialization:
 * ``pixel_centers``     — the G x G raster sampling grid as a pure
   Column-expression DataFrame (never leaves the JVM);
 * ``rasterize_polygons`` — polygon -> set-pixel mask via the engine's
-  own two-phase native spatial join (pixel centers probed against the
-  polygon edge arrays with the RayCrossingCounter rule, zero python
-  in the hot path; ref: ``src/algorithm/RayCrossingCounter.cpp``);
+  own two-phase spatial join (pixel centers probed against the
+  prepared polygon dim; the candidate pairs are refined with the
+  RayCrossingCounter rule, ref: ``src/algorithm/RayCrossingCounter.cpp``);
 * ``vectorize_mask``    — mask -> polygons: 4-connected components of
   the set pixels (the contraction CC operator, ``operators/
   cluster.py``), then per-region boundary tracing into shell/hole
@@ -65,13 +65,17 @@ def rasterize_polygons(
     level: int = 6,
 ) -> DataFrame:
     """Polygon -> mask: (poly_id, px, py) rows for every pixel whose
-    center intersects the polygon.  Runs the native_edges two-phase
-    spatial join (cell equijoin + Catalyst-HOF ray crossing), so the
-    mask of a 10^12-pixel raster is one ordinary shuffle join."""
+    center intersects the polygon.  Runs the two-phase point join
+    against the prepared dim (tile equijoin on a broadcast build side,
+    then the by-id pandas refine), so only candidate pixels, not the
+    whole grid, reach python."""
     from geos_spark.operators.spatial_join import point_in_polygon_join
 
     spark = polys.sparkSession
-    pts = pixel_centers(spark, grid, extent)
+    # one probe partition per task slot: every probe task pays the
+    # python refine's start-up, so more partitions than slots only
+    # add that fixed cost
+    pts = pixel_centers(spark, grid, extent, spark.sparkContext.defaultParallelism)
     out = point_in_polygon_join(
         pts,
         polys,
@@ -79,7 +83,6 @@ def rasterize_polygons(
         level=level,
         extent=extent,
         poly_id_col=poly_id_col,
-        strategy="native_edges",
     )
     return out.select(poly_id_col, "px", "py")
 

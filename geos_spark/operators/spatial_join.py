@@ -13,23 +13,33 @@ Two-phase plan (SURVEY §2.5, §3.1):
    short-circuit (``src/geom/Geometry.cpp:295``) *before* any python
    runs.
 2. **local refine (pUDF)** — surviving candidate pairs cross the Arrow
-   boundary once; the batch kernel factorizes the polygon column,
-   decodes each distinct WKB once per batch (the distributed analogue
-   of GEOS prepared geometries, ``src/geom/prep/PreparedPolygon.cpp``),
-   and evaluates the vectorized ray-crossing locator.
+   boundary once and the vectorized ray-crossing locator (robust
+   orientation filter, ``kernels/pip.py``) classifies each point.
+
+Prepared polygon dims: a broadcast point join prepares its polygon
+dim once per DataFrame (:class:`PreparedPolygons`, the distributed
+analogue of GEOS ``src/geom/prep/PreparedPolygon.cpp``). The exploded
+``(__cell, id, bbox)`` build side is a small local relation, the
+WKBs ride one SparkContext broadcast, and each python worker decodes
+them once into a polygon pack that every later batch, join and
+micro-batch reuses. Candidates carry only the polygon id through the
+join and the Arrow boundary. The batch join, the stream join and the
+rasterizer all take this path; ``broadcast_build=False`` ships the
+WKB through a shuffle join instead and decodes each distinct polygon
+once per Arrow batch.
 
 Pair dedup: a point lives in exactly one tile, so point joins produce
 no duplicates. (Polygon-polygon joins use reference-point dedup — see
 ``polygon_join``.)
-
-Scale notes: the poly side is broadcast when small (Catalyst/AQE
-decides); the skew knob is the hot-cell salting in ``salted`` mode —
-hot cells are replicated on the build side and salted on the probe
-side so one popular tile cannot pin a single task.
 """
 
 from __future__ import annotations
 
+import uuid
+import weakref
+from dataclasses import dataclass
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,86 +69,146 @@ _POINT_PREDICATES = {
 }
 
 
-@pandas_udf(T.IntegerType())
-def pip_refine(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-    """Batch point-in-polygon location refine.
-
-    Decodes each distinct polygon once per Arrow batch (prepared-
-    geometry semantics), then runs the vectorized ray-crossing kernel
-    over the (pair x segment) expansion.
-    """
-    import numpy as np
-
+def _locate_pairs(px: pd.Series, py: pd.Series, pack, geom_offsets, codes) -> pd.Series:
+    """Location of pair i's point in geometry ``codes[i]`` of a decoded
+    pack: the (pair x polygon) expansion, the vectorized ray-crossing
+    kernel, then the min location over a multipolygon's parts (0
+    beats 1 beats 2)."""
     from geos_spark.kernels.pip import locate_points
-    from geos_spark.kernels.wkb import decode_polygons
 
     n = len(px)
     if n == 0:
         return pd.Series([], dtype="int32")
-    codes, uniques = pd.factorize(wkb.map(bytes))
-    pack, geom_offsets = decode_polygons(list(uniques))
     pts = np.column_stack([px.to_numpy(), py.to_numpy()])
-
-    # expand: pair i targets geometry codes[i] -> packed polygons
-    # geom_offsets[c]..geom_offsets[c+1] (multipolygons contribute >1)
+    # pair i targets packed polygons geom_offsets[c]..geom_offsets[c+1]
     counts = geom_offsets[codes + 1] - geom_offsets[codes]
     pair_rep = np.repeat(np.arange(n), counts)
     cum = np.concatenate(([0], np.cumsum(counts)[:-1]))
     intra = np.arange(int(counts.sum())) - np.repeat(cum, counts)
     poly_idx = np.repeat(geom_offsets[codes], counts) + intra
-
     loc = locate_points(pts, pack, pair_rep, poly_idx)
-    # reduce multi-poly geometries: min location (0 beats 1 beats 2)
     out = np.full(n, _EXTERIOR, dtype=np.int64)
     np.minimum.at(out, pair_rep, loc.astype(np.int64))
     return pd.Series(out.astype("int32"))
 
 
-def pip_refine_by_id(bc, id_order):
-    """Factory: PIP refine where candidates carry only the polygon ID
-    (8 bytes/row through Arrow instead of the full WKB). The polygon
-    dim rides a SparkContext broadcast and is decoded into ONE
-    PolygonPack per python worker, reused across every batch — the
-    per-worker analogue of a shared prepared-geometry index.
+@pandas_udf(T.IntegerType())
+def pip_refine(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
+    """Batch point-in-polygon location refine over candidates that carry
+    the polygon WKB: each distinct polygon is decoded once per Arrow
+    batch."""
+    from geos_spark.kernels.wkb import decode_polygons
 
-    ``id_order`` is the sorted array of polygon ids; ``bc.value`` maps
-    id -> wkb bytes."""
+    codes, uniques = pd.factorize(wkb.map(bytes))
+    pack, geom_offsets = decode_polygons(list(uniques))
+    return _locate_pairs(px, py, pack, geom_offsets, codes)
 
-    state: dict = {}
+
+# Per python worker: prepared-dim token -> (sorted ids, pack, offsets).
+# Module state survives across the tasks a reused worker runs (a UDF
+# closure's own state is unpickled afresh for every task); bounded so
+# a long-lived worker does not keep every dim a session prepared.
+_WORKER_PACKS: dict = {}
+_WORKER_PACKS_MAX = 8
+
+
+def _worker_pack(token: str, bc):
+    """The decoded polygons of one prepared dim, decoded on the first
+    batch this worker refines against it."""
+    from geos_spark.kernels.wkb import decode_polygons
+
+    hit = _WORKER_PACKS.get(token)
+    if hit is None:
+        if len(_WORKER_PACKS) >= _WORKER_PACKS_MAX:
+            del _WORKER_PACKS[next(iter(_WORKER_PACKS))]  # oldest first
+        ids, wkbs = bc.value
+        hit = _WORKER_PACKS[token] = (ids, *decode_polygons(wkbs))
+    return hit
+
+
+def _refine_by_id(bc, token: str):
+    """PIP refine where candidates carry only the polygon id (8 bytes a
+    row through Arrow instead of the WKB); ``bc.value`` is the dim's
+    (sorted ids, wkbs)."""
 
     @pandas_udf(T.IntegerType())
     def _refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from geos_spark.kernels.pip import locate_points
-        from geos_spark.kernels.wkb import decode_polygons
-
-        n = len(px)
-        if n == 0:
-            return pd.Series([], dtype="int32")
-        if "pack" not in state:
-            d = bc.value
-            pack, offs = decode_polygons([d[int(k)] for k in id_order])
-            state["pack"] = pack
-            state["offs"] = offs
-            state["ids"] = np.asarray(id_order, dtype=np.int64)
-        pack = state["pack"]
-        geom_offsets = state["offs"]
-        codes = np.searchsorted(
-            state["ids"], pid.to_numpy(np.int64)
-        )
-        pts = np.column_stack([px.to_numpy(), py.to_numpy()])
-        counts = geom_offsets[codes + 1] - geom_offsets[codes]
-        pair_rep = np.repeat(np.arange(n), counts)
-        cum = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        intra = np.arange(int(counts.sum())) - np.repeat(cum, counts)
-        poly_idx = np.repeat(geom_offsets[codes], counts) + intra
-        loc = locate_points(pts, pack, pair_rep, poly_idx)
-        out = np.full(n, _EXTERIOR, dtype=np.int64)
-        np.minimum.at(out, pair_rep, loc.astype(np.int64))
-        return pd.Series(out.astype("int32"))
+        ids, pack, geom_offsets = _worker_pack(token, bc)
+        codes = np.searchsorted(ids, pid.to_numpy(np.int64))
+        return _locate_pairs(px, py, pack, geom_offsets, codes)
 
     return _refine
+
+
+@dataclass(frozen=True)
+class PreparedPolygons:
+    """A polygon dim read and prepared once for broadcast point joins.
+
+    ``build`` is the exploded ``(__cell, id, bbox)`` side as a local
+    relation (no WKB), ``rest`` the dim's other columns keyed by id
+    (None when there are none), ``columns`` the dim's own columns in
+    order and ``refine`` the by-id pandas UDF over one broadcast of
+    the WKBs. ``id_col`` is the caller's id column, or an internal one
+    the join drops again."""
+
+    id_col: str
+    columns: tuple[str, ...]
+    build: DataFrame
+    rest: DataFrame | None
+    refine: object
+
+
+_INTERNAL_ID = "__pid"
+
+# dim DataFrame -> {(id col, bbox cols, wkb col, level, extent): prepared}
+_PREPARED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def prepare_polygons(
+    polygons: DataFrame,
+    *,
+    poly_id_col: str | None,
+    wkb_col: str,
+    bbox_cols: tuple[str, str, str, str],
+    level: int,
+    extent: tuple[float, float, float, float],
+) -> PreparedPolygons:
+    """The prepared form of ``polygons``, built on first use and
+    memoized on the DataFrame object until it is garbage-collected.
+
+    The dim is read when it is first prepared: later joins against the
+    same DataFrame reuse what was read then, so a changed dim source
+    needs a new DataFrame."""
+    import pyarrow as pa
+
+    key = (poly_id_col, tuple(bbox_cols), wkb_col, level, tuple(extent))
+    memo = _PREPARED.setdefault(polygons, {})
+    if key in memo:
+        return memo[key]
+    spark = polygons.sparkSession
+    dim = polygons.toArrow()  # the one read of the dim
+    id_col = poly_id_col or _INTERNAL_ID
+    if poly_id_col is None:
+        dim = dim.append_column(id_col, pa.array(np.arange(dim.num_rows)))
+    ids = dim.column(id_col).to_numpy().astype(np.int64)
+    order = np.argsort(ids, kind="stable")
+    if (np.diff(ids[order]) == 0).any():
+        raise ValueError(f"poly_id_col {poly_id_col!r} is not unique")
+    wkbs = dim.column(wkb_col).to_pylist()
+    bc = spark.sparkContext.broadcast((ids[order], [wkbs[i] for i in order]))
+    build = with_tile_keys_exploded(
+        spark.createDataFrame(dim.select([id_col, *bbox_cols])),
+        bbox_cols, level, extent,
+    ).select("__cell", id_col, *bbox_cols)
+    rest = [c for c in dim.column_names if c != id_col and c not in bbox_cols]
+    memo[key] = PreparedPolygons(
+        id_col=id_col,
+        columns=tuple(polygons.columns),
+        build=spark.createDataFrame(build.toArrow()),
+        rest=spark.createDataFrame(dim.select([id_col, *rest])) if rest else None,
+        refine=_refine_by_id(bc, uuid.uuid4().hex),
+    )
+    return memo[key]
 
 
 _EDGES_SCHEMA = T.ArrayType(
@@ -156,7 +226,7 @@ _EDGES_SCHEMA = T.ArrayType(
 @pandas_udf(_EDGES_SCHEMA)
 def _wkb_edges(wkb: pd.Series) -> pd.Series:
     """All boundary segments of each (multi)polygon as an array column
-    (dim-table prep for the native_edges strategy)."""
+    (dim-table prep for ``within_distance_join_polygons``)."""
     from geos_spark.kernels import geom as G
     from geos_spark.kernels.wkb import parse_wkb
 
@@ -183,53 +253,12 @@ def _wkb_edges(wkb: pd.Series) -> pd.Series:
     return wkb.map(_one)
 
 
-def _native_pip_location(px: Column, py: Column, edges: Column) -> Column:
-    """RayCrossingCounter (src/algorithm/RayCrossingCounter.cpp:
-    130-192) as pure Catalyst higher-order-function expressions over
-    an edge-array column — the whole locate stays inside whole-stage
-    codegen. Double arithmetic (exact for integer-coordinate
-    polygons); the prepared (pUDF) strategy keeps the robust
-    orientation filter for degenerate float inputs."""
-
-    def crossing(e):
-        upward = (e["y1"] > py) & (e["y2"] <= py)
-        downward = (e["y2"] > py) & (e["y1"] <= py)
-        orient = (e["x2"] - e["x1"]) * (py - e["y1"]) - (
-            e["y2"] - e["y1"]
-        ) * (px - e["x1"])
-        sign = F.when(e["y2"] < e["y1"], -orient).otherwise(orient)
-        return (upward | downward) & (sign > 0)
-
-    def on_boundary(e):
-        at_end = (px == e["x2"]) & (py == e["y2"])
-        horiz = (
-            (e["y1"] == py) & (e["y2"] == py)
-            & (px >= F.least(e["x1"], e["x2"]))
-            & (px <= F.greatest(e["x1"], e["x2"]))
-        )
-        orient = (e["x2"] - e["x1"]) * (py - e["y1"]) - (
-            e["y2"] - e["y1"]
-        ) * (px - e["x1"])
-        in_span = ((e["y1"] > py) & (e["y2"] <= py)) | (
-            (e["y2"] > py) & (e["y1"] <= py)
-        )
-        return at_end | horiz | (in_span & (orient == 0))
-
-    n_cross = F.size(F.filter(edges, crossing))
-    on = F.exists(edges, on_boundary)
-    return (
-        F.when(on, F.lit(_BOUNDARY))
-        .when(F.pmod(n_cross, F.lit(2)) == 1, F.lit(_INTERIOR))
-        .otherwise(F.lit(_EXTERIOR))
-    )
-
-
 def _native_within_distance(
     px: Column, py: Column, edges: Column, distance: float
 ) -> Column:
     """Point within ``distance`` of a polygon, as pure Catalyst
-    higher-order functions over the same ``__edges`` arrays the
-    native_edges PIP strategy uses: ray-crossing parity (interior)
+    higher-order functions over the boundary ``__edges`` arrays:
+    ray-crossing parity (interior)
     OR some boundary segment within distance (point-to-segment
     squared distance with the closest-point parameterization of
     ``geos::algorithm::Distance::pointToSegment``,
@@ -288,16 +317,16 @@ def within_distance_join_polygons(
     poly_id_col: str | None = None,
     broadcast_build: bool = True,
 ) -> DataFrame:
-    """Within-distance join of points to POLYGONS — the native_edges
-    zero-python strategy extended to distance (GEOSDistanceWithin for
-    point-vs-polygonal operands, capi geos_c.h.in DistanceWithin).
+    """Within-distance join of points to POLYGONS with a zero-python
+    refine (GEOSDistanceWithin for point-vs-polygonal operands, capi
+    geos_c.h.in DistanceWithin).
 
     Global phase: each polygon explodes to every tile its d-expanded
     envelope overlaps; points join on their containing tile; a codegen
     expanded-bbox filter prunes. Refine: ``_native_within_distance``
     higher-order expressions over the boundary edge arrays — the whole
-    plan stays inside whole-stage codegen, so it scales like
-    pip_native (no Arrow boundary, no python workers)."""
+    probe-side plan stays inside whole-stage codegen (no Arrow
+    boundary, no python workers on the probe side)."""
     xmin, ymin, xmax, ymax = bbox_cols
     pts = with_tile_key(points, x_col, y_col, level, extent)
     build = polygons.select(
@@ -639,23 +668,24 @@ def point_in_polygon_join(
     level: int = 6,
     extent: tuple[float, float, float, float] = DEFAULT_EXTENT,
     keep_location: bool = False,
-    salt: int = 0,
     broadcast_build: bool = True,
     poly_id_col: str | None = None,
-    strategy: str = "prepared",
 ) -> DataFrame:
     """Join points to polygons on a spatial predicate.
 
     Returns all columns of both inputs (plus ``location`` if
-    requested). Inputs must not share column names.
+    requested). Inputs must not share column names. ``points`` may be
+    a streaming DataFrame.
 
-    ``salt > 0`` enables explicit hot-cell salting for shuffle joins
-    of two large sides: the probe side adds a deterministic salt in
-    [0, salt) and the build side replicates each cell row ``salt``
-    times, so one dense tile fans out over ``salt`` shuffle
-    partitions instead of pinning a single task. (With a broadcastable
-    build side salting is unnecessary — there is no shuffle — and AQE
-    skew-join remains on as the backstop.)
+    With ``broadcast_build`` (the default) the polygon dim is prepared
+    once per DataFrame (:func:`prepare_polygons`): the dim is read
+    when it is first prepared, and later joins against the same
+    DataFrame reuse that read, so a changed dim needs a new DataFrame.
+    ``poly_id_col`` names a unique integer id column; without one the
+    dim gets an internal id. ``broadcast_build=False`` is for
+    polygon sides too large to broadcast: the exploded polygons,
+    WKB included, meet the points in a shuffle join (AQE skew-join is
+    the backstop for a hot tile).
     """
     if predicate not in _POINT_PREDICATES:
         raise ValueError(
@@ -666,80 +696,26 @@ def point_in_polygon_join(
 
     xmin, ymin, xmax, ymax = bbox_cols
     pts = with_tile_key(points, x_col, y_col, level, extent)
-
-    # slim-build path: a broadcastable polygon dim with an id column
-    # never ships WKB through the join or the Arrow boundary — the
-    # candidates carry (x, y, poly_id); the geometry rides a python
-    # broadcast decoded once per worker. Cuts shuffled+Arrow bytes per
-    # candidate ~10x, the dominant cost at memory-bandwidth-bound
-    # parallelism.
-    slim = poly_id_col is not None and broadcast_build and salt == 0
-    bc = None
-    id_order = None
-    if strategy == "native_edges":
-        # physical strategy for dim-sized polygon tables: the polygon
-        # boundaries become an edge-array column and the whole locate
-        # runs as Catalyst higher-order functions — zero python in the
-        # hot path, so the join scales like any JVM compute job
-        build = polygons.select(
-            *(
-                [poly_id_col] if poly_id_col else []
-            ),
-            *bbox_cols,
-            _wkb_edges(F.col(wkb_col)).alias("__edges"),
+    if broadcast_build:
+        prepared = prepare_polygons(
+            polygons, poly_id_col=poly_id_col, wkb_col=wkb_col,
+            bbox_cols=bbox_cols, level=level, extent=extent,
         )
-        slim = poly_id_col is not None
-    elif slim:
-        rows = polygons.select(poly_id_col, wkb_col).collect()
-        mapping = {int(r[0]): bytes(r[1]) for r in rows}
-        id_order = sorted(mapping)
-        sc = polygons.sparkSession.sparkContext
-        bc = sc.broadcast(mapping)
-        build = polygons.select(poly_id_col, *bbox_cols)
+        polys = F.broadcast(prepared.build)
+        loc_expr = prepared.refine(
+            F.col(x_col), F.col(y_col), F.col(prepared.id_col)
+        )
     else:
-        build = polygons
-
-    polys = with_tile_keys_exploded(build, bbox_cols, level, extent)
-
-    # the exploded build side defeats Catalyst's size estimation (an
-    # explode's output size is unknown), which silently degrades the
-    # plan to a sort-merge join that shuffles the full probe side.
-    # Broadcast explicitly when the build side is dimension-sized; for
-    # large-large joins pass broadcast_build=False (+ salt for skew).
-    if broadcast_build and salt == 0:
-        polys = F.broadcast(polys)
-
-    join_keys = ["__cell"]
-    if salt > 0:
-        pts = pts.withColumn(
-            "__salt",
-            F.pmod(
-                F.xxhash64(F.col(x_col), F.col(y_col)), F.lit(salt)
-            ),
-        )
-        polys = polys.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        join_keys.append("__salt")
+        polys = with_tile_keys_exploded(polygons, bbox_cols, level, extent)
+        loc_expr = pip_refine(F.col(x_col), F.col(y_col), F.col(wkb_col))
 
     # global phase: cell equijoin + envelope short-circuit (codegen)
-    cand = pts.join(polys, join_keys).where(
+    cand = pts.join(polys, "__cell").where(
         (F.col(x_col) >= F.col(xmin))
         & (F.col(x_col) <= F.col(xmax))
         & (F.col(y_col) >= F.col(ymin))
         & (F.col(y_col) <= F.col(ymax))
     )
-
-    if strategy == "native_edges":
-        loc_expr = _native_pip_location(
-            F.col(x_col), F.col(y_col), F.col("__edges")
-        )
-    elif slim:
-        loc_expr = pip_refine_by_id(bc, id_order)(
-            F.col(x_col), F.col(y_col), F.col(poly_id_col)
-        )
-    else:
-        loc_expr = pip_refine(F.col(x_col), F.col(y_col), F.col(wkb_col))
     if keep_location:
         refined = cand.withColumn("location", loc_expr)
         out = refined.where(F.col("location").isin(list(accepted)))
@@ -748,12 +724,15 @@ def point_in_polygon_join(
         # Catalyst evaluate the python UDF twice (once in the filter,
         # once in the projection that is then dropped)
         out = cand.where(loc_expr.isin(list(accepted)))
-    out = out.drop("__cell", "__salt", "__edges")
-    if slim:
-        # re-attach the remaining polygon columns (incl. wkb) so the
-        # output contract is unchanged — a broadcast equijoin on the
-        # id over the (small) result set
-        rest = polygons.drop(*bbox_cols)
-        if len(rest.columns) > 1:
-            out = out.join(F.broadcast(rest), poly_id_col)
-    return out
+    out = out.drop("__cell")
+    if not broadcast_build:
+        return out
+    if prepared.rest is not None:
+        # re-attach the dim's other columns (incl. wkb) over the
+        # (small) result set
+        out = out.join(F.broadcast(prepared.rest), prepared.id_col)
+    return out.select(
+        *points.columns,
+        *prepared.columns,
+        *(["location"] if keep_location else []),
+    )

@@ -108,7 +108,7 @@ SELECT doc_id, CAST(cell AS BIGINT) AS cell FROM {fin}
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase point-in-polygon spatial join: Hilbert-cell equijoin + codegen bbox filter + Arrow pUDF ray-casting refine with slim-build broadcast."""
+    """Two-phase point-in-polygon spatial join: tile-key equijoin + codegen bbox filter + Arrow pUDF ray-casting refine against the prepared (broadcast) polygon dim."""
     pts = _doc_points(spark, sf_dir)
     polys = star_polygons(spark)
     out = point_in_polygon_join(
@@ -119,15 +119,16 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pip_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join, ``native_edges`` physical strategy: the polygon
-    boundary rides an edge-array column and RayCrossingCounter runs
-    as Catalyst higher-order functions — zero python in the hot
-    path (ref algorithm: src/algorithm/RayCrossingCounter.cpp)."""
+    """The flagship join as ``entry()`` runs it: the same prepared-dim
+    path as ``pip_join`` (tile equijoin against the broadcast local
+    build side, by-id robust ray-crossing refine; ref algorithm:
+    src/algorithm/RayCrossingCounter.cpp). Kept as its own catalog id
+    for the driver contract."""
     pts = _doc_points(spark, sf_dir)
     polys = star_polygons(spark)
     out = point_in_polygon_join(
         pts, polys, "intersects", level=_LEVEL_JOIN, extent=EXTENT,
-        poly_id_col="poly_id", strategy="native_edges",
+        poly_id_col="poly_id",
     )
     return out.select("doc_id", "poly_id")
 
@@ -257,12 +258,11 @@ _DIST_POLY = 40.0
 
 
 def q_distance_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-distance join of points to the star POLYGONS with the
-    zero-python native_edges strategy: ray-crossing parity + point-to-
-    segment distance as Catalyst higher-order functions over the
-    boundary edge arrays (ref: Distance::pointToSegment,
-    src/algorithm/Distance.cpp:60-100; same physical shape as
-    pip_native)."""
+    """Within-distance join of points to the star POLYGONS with a
+    zero-python refine: ray-crossing parity + point-to-segment
+    distance as Catalyst higher-order functions over the boundary
+    edge arrays (ref: Distance::pointToSegment,
+    src/algorithm/Distance.cpp:60-100)."""
     from geos_spark.operators.spatial_join import (
         within_distance_join_polygons,
     )
@@ -3341,9 +3341,9 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the flagship spatial join: a file-source
     stream of document points joined stream-static against the star
-    polygons with the ``native_edges`` strategy (zero python, no state
-    store — each micro-batch joins independently against the broadcast
-    edge table), driven to completion in append mode. Same 46-row
+    polygons prepared once (no state store — each micro-batch joins
+    independently against the broadcast build side and refines by
+    polygon id), driven to completion in append mode. Same 46-row
     oracle as ``pip_join``/``pip_native``."""
     from geos_spark.sources.pages import with_doc_point
     from geos_spark.streaming import (
@@ -5739,7 +5739,8 @@ _G_RASTER = 512  # 512x512 raster over the 4096 extent -> 8.0-unit pixels
 def q_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector -> raster: the 256 star polygons sampled on a 512x512
     pixel grid (pixel center in polygon, RayCrossingCounter rule) via
-    the native_edges two-phase join — zero python per pixel.  Scored
+    the two-phase join against the prepared dim — only candidate
+    pixels reach the python refine.  Scored
     as per-polygon mask aggregates (count + first/second index
     moments + pixel bbox), which pin the exact set-pixel SET, not
     just its size."""

@@ -282,14 +282,14 @@ def streaming_pip_join(
 
     ``points`` is a STREAMING DataFrame of (id, x, y); ``polygons`` a
     static dim table. This is literally the batch operator
-    (:func:`geos_spark.operators.spatial_join.point_in_polygon_join`)
-    with the ``native_edges`` physical strategy: the static build side
-    becomes a broadcast edge-array table, the probe's tile key and the
-    RayCrossingCounter locate are stateless Catalyst expressions, and
-    the tile equijoin is a stream-static broadcast join. The build side
-    is not prepared once: every micro-batch re-plans it and re-runs the
-    ``_wkb_edges`` pandas UDF over the whole dim. The join is
-    streaming-legal in append mode with NO state
+    (:func:`geos_spark.operators.spatial_join.point_in_polygon_join`),
+    so the stream refines with the same robust orientation kernel as
+    the batch join. The dim is prepared once, when this is called
+    (:func:`geos_spark.operators.spatial_join.prepare_polygons`): every
+    micro-batch joins its tile keys against the same broadcast local
+    build side and refines by polygon id against polygons each python
+    worker decoded once. A changed dim needs a new DataFrame and a new
+    query. The join is streaming-legal in append mode with NO state
     store at all (each micro-batch joins independently; nothing is
     buffered across batches).
 
@@ -312,7 +312,6 @@ def streaming_pip_join(
         level=level,
         extent=extent,
         poly_id_col=poly_id_col,
-        strategy="native_edges",
     )
 
 

@@ -6,7 +6,8 @@ outside the extent, and zero-width boxes.
 - Cell filter: every point inside a box (padded by d for the distance
   joins) shares a tile key with it, so the key equijoin plus the
   envelope filter returns exactly the brute-force (point, box) pairs.
-- Joins: ``point_in_polygon_join`` (both strategies) and
+- Joins: ``point_in_polygon_join`` (prepared dim with and without an
+  id column, and the shuffle build) and
   ``polygon_join`` return exactly the brute-force rows over rectangle
   polygons, with no pair missing and none duplicated.
 """
@@ -177,7 +178,7 @@ def test_joins_return_exactly_the_brute_force_rows(spark, case):
     pts = _points_df(spark, points)
     polys = _boxes_df(spark, boxes)
     want = _inside(points, boxes, 0.0)
-    for kw in ({}, {"poly_id_col": "poly_id", "strategy": "native_edges"}):
+    for kw in ({}, {"poly_id_col": "poly_id"}, {"broadcast_build": False}):
         got = point_in_polygon_join(
             pts, polys, "intersects", level=level, extent=extent, **kw
         )
@@ -197,3 +198,160 @@ def test_joins_return_exactly_the_brute_force_rows(spark, case):
         if ax0 <= bx1 and bx0 <= ax1 and ay0 <= by1 and by0 <= ay1
     )
     assert _pairs(got, "poly_id", "bpoly_id") == want
+
+
+# ----------------------------------------------------------------------
+# near-degenerate float polygons: batch join, stream join and an exact
+# rational oracle must agree on every point location
+# ----------------------------------------------------------------------
+
+_INTERIOR, _BOUNDARY, _EXTERIOR = 0, 1, 2
+_DEGEN_EXTENT = (0.0, 0.0, 64.0, 64.0)
+
+
+def _exact_location(x: float, y: float, rings) -> int:
+    """Even-odd ray crossing over every ring in exact rationals: on
+    some edge -> boundary, else the parity of edges crossing the
+    rightward ray (half-open in y)."""
+    from fractions import Fraction as Q
+
+    px, py = Q(x), Q(y)
+    crossings = 0
+    for ring in rings:
+        for (ax, ay), (bx, by) in zip(ring, ring[1:]):
+            ax, ay, bx, by = Q(ax), Q(ay), Q(bx), Q(by)
+            if (
+                (bx - ax) * (py - ay) == (by - ay) * (px - ax)
+                and min(ax, bx) <= px <= max(ax, bx)
+                and min(ay, by) <= py <= max(ay, by)
+            ):
+                return _BOUNDARY
+            if (ay > py) != (by > py):
+                if ax + (py - ay) * (bx - ax) / (by - ay) > px:
+                    crossings += 1
+    return _INTERIOR if crossings % 2 else _EXTERIOR
+
+
+@st.composite
+def _degenerate_case(draw):
+    """(level, polygons, points). Polygons are triangles, trapezoids
+    with horizontal top and bottom edges (optionally with a hole) and
+    star-shaped rings, all with non-integer coordinates. Points sit on
+    vertices, on horizontal edges, on a rightward ray through a vertex,
+    on and beyond an edge's line (collinear), and one ulp either side
+    of those in x and in y."""
+    coord = st.floats(4.0, 60.0, allow_nan=False).map(lambda v: v + 0.1)
+    polys = []
+    for _ in range(draw(st.integers(1, 3))):
+        kind = draw(st.sampled_from(["triangle", "trapezoid", "star"]))
+        cx, cy = draw(coord), draw(coord)
+        r = draw(st.floats(0.7, 9.3))
+        if kind == "triangle":
+            shell = [
+                (cx + r * math.cos(a), cy + r * math.sin(a))
+                for a in (0.3, 2.4, 4.4)
+            ]
+        elif kind == "trapezoid":
+            dx = draw(st.floats(0.05, 0.45)) * r
+            shell = [
+                (cx - r, cy - r / 2), (cx + r, cy - r / 2),
+                (cx + r - dx, cy + r / 2), (cx - r + dx, cy + r / 2),
+            ]
+        else:
+            n = draw(st.integers(5, 9))
+            shell = [
+                (
+                    cx + rr * math.cos(2 * math.pi * (k + 0.5) / n),
+                    cy + rr * math.sin(2 * math.pi * (k + 0.5) / n),
+                )
+                for k, rr in enumerate(
+                    draw(st.lists(st.floats(0.3 * r, r), min_size=n, max_size=n))
+                )
+            ]
+        rings = [shell + shell[:1]]
+        if kind == "trapezoid" and draw(st.booleans()):
+            hole = [(cx + (x - cx) * 0.4, cy + (y - cy) * 0.4) for x, y in reversed(shell)]
+            rings.append(hole + hole[:1])
+        polys.append(rings)
+
+    points = []
+    for rings in polys:
+        for ring in rings:
+            for (ax, ay), (bx, by) in zip(ring, ring[1:]):
+                t = draw(st.sampled_from([0.5, 0.25, 1.0 / 3.0]))
+                on_edge = (ax + t * (bx - ax), ay + t * (by - ay))
+                collinear = (ax + 1.5 * (bx - ax), ay + 1.5 * (by - ay))
+                ray = (ax + draw(st.floats(-3.0, 3.0)), ay)
+                for x, y in ((ax, ay), on_edge, collinear, ray):
+                    points.append((x, y))
+                    points += [
+                        (math.nextafter(x, -math.inf), y),
+                        (math.nextafter(x, math.inf), y),
+                        (x, math.nextafter(y, -math.inf)),
+                        (x, math.nextafter(y, math.inf)),
+                    ]
+    points = draw(st.permutations(points))[: draw(st.integers(20, 160))]
+    return draw(st.integers(2, 4)), polys, points
+
+
+def _rings_df(spark, polys):
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+
+    rows = []
+    for i, rings in enumerate(polys):
+        xs = [x for x, _ in rings[0]]
+        ys = [y for _, y in rings[0]]
+        rows.append(
+            (i, write_wkb(Geom.polygon(rings)), min(xs), min(ys), max(xs), max(ys))
+        )
+    return spark.createDataFrame(
+        rows,
+        "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double",
+    )
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=_degenerate_case())
+def test_batch_and_stream_pip_agree_with_exact_oracle(spark, tmp_path_factory, case):
+    from geos_spark.operators.spatial_join import point_in_polygon_join
+    from geos_spark.streaming import (
+        read_documents_stream,
+        run_stream_to_memory,
+        streaming_pip_join,
+    )
+
+    level, polys, points = case
+    want = sorted(
+        (i, j, loc)
+        for i, (x, y) in enumerate(points)
+        for j, rings in enumerate(polys)
+        if (loc := _exact_location(x, y, rings)) != _EXTERIOR
+    )
+    dim = _rings_df(spark, polys)
+    pts = _points_df(spark, points)
+
+    got = point_in_polygon_join(
+        pts, dim, level=level, extent=_DEGEN_EXTENT,
+        poly_id_col="poly_id", keep_location=True,
+    )
+    assert sorted(
+        (r.pid, r.poly_id, r.location)
+        for r in got.select("pid", "poly_id", "location").collect()
+    ) == want
+
+    src = str(tmp_path_factory.mktemp("degenerate_points"))
+    pts.coalesce(1).write.mode("overwrite").parquet(src)
+    out, _ = run_stream_to_memory(
+        streaming_pip_join(
+            read_documents_stream(spark, src), dim,
+            level=level, extent=_DEGEN_EXTENT,
+        ).select("pid", "poly_id"),
+        spark,
+        output_mode="append",
+    )
+    assert _pairs(out, "pid", "poly_id") == sorted((i, j) for i, j, _ in want)

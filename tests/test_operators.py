@@ -45,21 +45,58 @@ def test_checkpoint_resume(spark, tmp_path):
     assert stats["buckets_done"] == 4 and stats["rows"] == 10000
 
 
-def test_salting_equivalence(spark):
-    from geos_spark.operators.spatial_join import point_in_polygon_join
+def test_prepared_dim_lifetime(spark, tmp_path):
+    """A polygon dim is prepared once per DataFrame: a second join runs
+    no prepare job, the first read stays in force after the source is
+    rewritten, a new DataFrame over the rewritten source is prepared
+    afresh, and the memo entry goes with the DataFrame."""
+    import gc
+    import weakref
+
+    from geos_spark.operators import spatial_join as sj
     from geos_spark.sources.pages import EXTENT, star_polygons, with_doc_point
 
-    pts = with_doc_point(
-        spark.range(0, 20000).withColumnRenamed("id", "doc_id")
-    )
-    polys = star_polygons(spark)
-    plain = point_in_polygon_join(pts, polys, "intersects", level=6, extent=EXTENT)
-    salted = point_in_polygon_join(
-        pts, polys, "intersects", level=6, extent=EXTENT, salt=4
-    )
-    a = {(r.doc_id, r.poly_id) for r in plain.select("doc_id", "poly_id").collect()}
-    b = {(r.doc_id, r.poly_id) for r in salted.select("doc_id", "poly_id").collect()}
-    assert a == b and len(a) > 0
+    stars = star_polygons(spark)
+    pts = with_doc_point(spark.range(0, 20000).withColumnRenamed("id", "doc_id"))
+    src = str(tmp_path / "dim")
+    stars.where(F.col("poly_id") < 128).write.parquet(src)
+
+    def pairs(df):
+        return {(r.doc_id, r.poly_id) for r in df.select("doc_id", "poly_id").collect()}
+
+    def join(dim, **kw):
+        return sj.point_in_polygon_join(
+            pts, dim, level=6, extent=EXTENT, poly_id_col="poly_id", **kw
+        )
+
+    def shuffled(cond):
+        return pairs(join(stars.where(cond), broadcast_build=False))
+
+    sc = spark.sparkContext
+    dim = spark.read.parquet(src)
+    sc.setJobGroup("prepare-dim", "prepare a polygon dim")
+    try:
+        first = join(dim)
+        n_first = len(sc.statusTracker().getJobIdsForGroup("prepare-dim"))
+        second = join(dim)
+        n_second = len(sc.statusTracker().getJobIdsForGroup("prepare-dim"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_first >= 1 and n_second == n_first
+    old = shuffled(F.col("poly_id") < 128)
+    assert pairs(first) == pairs(second) == old and old
+
+    stars.where(F.col("poly_id") >= 128).write.mode("overwrite").parquet(src)
+    assert pairs(join(dim)) == old  # read when first prepared
+    new = shuffled(F.col("poly_id") >= 128)
+    assert pairs(join(spark.read.parquet(src))) == new and new != old
+
+    gc.collect()
+    n_memo = len(sj._PREPARED)
+    ref = weakref.ref(dim)
+    del dim, first, second
+    gc.collect()
+    assert ref() is None and len(sj._PREPARED) == n_memo - 1
 
 
 def test_multimodal_plumbing(spark):

@@ -65,7 +65,7 @@ def test_joins_key_on_tile_index_not_hilbert(spark):
         point_in_polygon_join(pts, stars, level=6, extent=EXTENT),
         point_in_polygon_join(
             pts, stars, level=6, extent=EXTENT,
-            poly_id_col="poly_id", strategy="native_edges",
+            poly_id_col="poly_id",
         ),
         polygon_join(stars, other, level=6, extent=EXTENT),
         within_distance_join_polygons(pts, stars, 10.0, level=6, extent=EXTENT),

@@ -114,7 +114,7 @@ def test_stream_pip_join_multibatch_equals_batch(spark, tmp_path):
     batch = point_in_polygon_join(
         with_doc_point(base), polys, "intersects",
         level=_LEVEL_JOIN, extent=EXTENT,
-        poly_id_col="poly_id", strategy="native_edges",
+        poly_id_col="poly_id",
     ).select("doc_id", "poly_id")
     assert _collect_sorted(out) == _collect_sorted(batch)
 

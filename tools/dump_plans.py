@@ -18,10 +18,11 @@ from contextlib import redirect_stdout
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 AUDITED = [
-    ("pip_native", "flagship zero-python point-in-polygon join "
-     "(RayCrossingCounter as Catalyst higher-order functions)"),
-    ("pip_join", "two-phase pUDF spatial join (cell equijoin + codegen "
-     "bbox filter + slim-build broadcast + Arrow refine)"),
+    ("pip_native", "flagship point-in-polygon join as entry() runs "
+     "it (same prepared-dim plan as pip_join)"),
+    ("pip_join", "two-phase pUDF spatial join (tile-key equijoin "
+     "against the prepared dim's broadcast local build side + codegen "
+     "bbox filter + by-id Arrow refine)"),
     ("distance_native", "zero-python within-distance join to polygons "
      "(point-to-segment distance as Catalyst HOFs)"),
     ("tile_assign", "native Hilbert tile assignment (pure bitwise "
@@ -72,7 +73,7 @@ AUDITED = [
      "(cid-keyed self-equijoin -- per-cluster products, never the "
      "corpus square; sequential-fold cosine)"),
     ("rasterize", "vector->raster mask (pixel centers as a codegen "
-     "range projection probed through the native_edges spatial "
+     "range projection probed through the prepared-dim spatial "
      "join; per-polygon mask moments aggregate)"),
     ("dedup_cut", "exact duplicated-substring removal (window-hash "
      "emit materialized once, corpus count agg + hash equijoin "
@@ -98,12 +99,13 @@ def main() -> None:
         "unplanned shuffles; `WholeStageCodegen` spans cover the "
         "native tiers; `PushedFilters`/`ReadSchema` show scan "
         "pruning; `ArrowEvalPython` appears in exactly two declared "
-        "places — the pUDF refine of `pip_join`, and the one-time "
+        "places — the by-id pUDF refine of the point joins "
+        "(`pip_join`/`pip_native`/`rasterize`), whose build side is a "
+        "`LocalTableScan` prepared once per dim, and the one-time "
         "256-row build-side `_wkb_edges` decode UNDER the "
-        "`BroadcastExchange` of the native joins (the probe-side hot "
-        "path of `pip_native`/`distance_native` is pure codegen: the "
-        "ray-crossing / point-to-segment refine is higher-order "
-        "Column expressions, no python worker touches the big side).",
+        "`BroadcastExchange` of `distance_native` (whose probe-side "
+        "point-to-segment refine is higher-order Column expressions, "
+        "no python worker touches the big side).",
         "",
     ]
     for name, why in AUDITED:
