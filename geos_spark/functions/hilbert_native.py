@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geos_spark.kernels.subcells import SUB_LEVELS, grid_strides
+
 _M32 = 0xFFFFFFFF
 
 
@@ -145,21 +147,32 @@ def with_hilbert_cell(
     return out_df.drop(*drop)
 
 
-def grid_xy(
-    x: Column, y: Column, level: int, extent: tuple[float, float, float, float]
-) -> tuple[Column, Column]:
+def sql_name(name: str) -> str:
+    """A column name quoted for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def grid_xy(x, y, level: int, extent: tuple[float, float, float, float]):
     """Tile grid ordinates of (x, y): tiles partition the extent into
     2^level x 2^level squares, and ordinates are clamped to
     [0, 2^level - 1] so boundary/outside coordinates land in the edge
-    tiles."""
-    minx, miny, maxx, maxy = extent
-    n = 1 << level
+    tiles.
 
-    def ordinate(c: Column, origin: float, stride: float) -> Column:
+    ``x`` and ``y`` are Columns, or SQL expressions as strings, and the
+    ordinates come back in the same form. SQL text costs one parse per
+    expression where a Column costs a py4j round trip per operator,
+    which dominates the planning of a per-query key."""
+    n = 1 << level
+    sx, sy = grid_strides(level, extent)
+
+    def ordinate(c, origin: float, stride: float):
+        if isinstance(c, str):
+            f = f"floor(({c} - {float(origin)!r}D) / {stride!r}D)"
+            return f"greatest(0, least({n - 1}, {f}))"
         f = F.floor((c - F.lit(origin)) / F.lit(stride))
         return F.greatest(F.lit(0), F.least(F.lit(n - 1), f))
 
-    return ordinate(x, minx, (maxx - minx) / n), ordinate(y, miny, (maxy - miny) / n)
+    return ordinate(x, extent[0], sx), ordinate(y, extent[1], sy)
 
 
 def tile_key(gx: Column, gy: Column, level: int) -> Column:
@@ -213,9 +226,19 @@ def with_tile_key(
     level: int,
     extent: tuple[float, float, float, float],
 ) -> DataFrame:
-    """Point coordinates -> containing-tile ``__cell`` join key."""
-    gx, gy = grid_xy(F.col(x_col), F.col(y_col), level, extent)
-    return df.withColumn("__cell", tile_key(gx, gy, level))
+    """Point coordinates -> containing-tile ``__cell`` join key, and
+    ``__sub``, the bit ``8 * (sy mod 8) + (sx mod 8)`` of the point's
+    sub-cell in its tile's 8 x 8 sub-grid (the masks of
+    ``kernels/subcells.py``). One ``grid_xy`` call at
+    ``level + SUB_LEVELS`` gives the sub-cell ordinates; the tile
+    ordinate is their integer quotient by 8, which equals
+    ``grid_xy(level)``'s: the sub-cell stride is the tile stride over
+    8 exactly, so the two floors agree, and so do the clamps."""
+    k = 1 << SUB_LEVELS
+    sx, sy = grid_xy(sql_name(x_col), sql_name(y_col), level + SUB_LEVELS, extent)
+    cell = tile_key(F.expr(f"({sx}) div {k}"), F.expr(f"({sy}) div {k}"), level)
+    sub = F.expr(f"CAST(({sy}) % {k} * {k} + ({sx}) % {k} AS INT) AS __sub")
+    return df.select("*", cell.alias("__cell"), sub)
 
 
 def with_tile_cell(

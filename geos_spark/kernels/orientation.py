@@ -21,6 +21,10 @@ import numpy as np
 
 # Ozaki et al. filter coefficient, as in the reference
 _FILTER_COEFF = 3.3306690621773724e-16
+# The coefficient bounds relative error only, which a product of
+# nonzero factors loses when it falls below the normal range (it may
+# even round to zero and read as collinear): such lanes are uncertain
+_MIN_NORMAL = 2.0**-1022
 
 
 def orientation_filter(
@@ -36,11 +40,16 @@ def orientation_filter(
     pby = np.asarray(pby, dtype=np.float64)
     pcx = np.asarray(pcx, dtype=np.float64)
     pcy = np.asarray(pcy, dtype=np.float64)
-    detleft = (pax - pcx) * (pby - pcy)
-    detright = (pay - pcy) * (pbx - pcx)
+    l1, l2 = pax - pcx, pby - pcy
+    r1, r2 = pay - pcy, pbx - pcx
+    detleft = l1 * l2
+    detright = r1 * r2
     det = detleft - detright
     err = np.abs(detleft + detright) * _FILTER_COEFF
-    certain = np.abs(det) >= err
+    underflow = ((np.abs(detleft) < _MIN_NORMAL) & (l1 != 0) & (l2 != 0)) | (
+        (np.abs(detright) < _MIN_NORMAL) & (r1 != 0) & (r2 != 0)
+    )
+    certain = (np.abs(det) >= err) & ~underflow
     idx = np.sign(det).astype(np.int8)
     return idx, ~certain
 

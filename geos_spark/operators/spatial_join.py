@@ -4,28 +4,39 @@ Two-phase plan (SURVEY §2.5, §3.1):
 
 1. **global phase (native)** — both sides are keyed on the row-major
    tile index ``gy * 2^level + gx`` (``hilbert_native.tile_key``):
-   points get their containing tile, polygons explode (``sequence`` +
-   ``explode``) to every tile their envelope overlaps. The key is a
-   plain injective index, not the Hilbert code, so the plan carries
-   no bitwise chain to optimize on every query. A Catalyst equijoin
-   on ``__cell`` plus a codegen'd bbox
-   containment/overlap filter reproduces the reference's envelope
-   short-circuit (``src/geom/Geometry.cpp:295``) *before* any python
-   runs.
-2. **local refine (pUDF)** — surviving candidate pairs cross the Arrow
+   points get their containing tile, polygons explode to every tile
+   their envelope overlaps. The key is a plain injective index, not
+   the Hilbert code, so the plan carries no bitwise chain to optimize
+   on every query. A Catalyst equijoin on ``__cell`` plus a codegen'd
+   bbox containment/overlap filter reproduces the reference's
+   envelope short-circuit (``src/geom/Geometry.cpp:295``) *before*
+   any python runs.
+2. **sub-cell filter (native, prepared dims)** — each build row
+   carries two 64-bit masks over its tile's 8 x 8 sub-cells
+   (``kernels/subcells.py``, the APRIL intervals of *Raster
+   Intervals*): ALL, the sub-cells the closed polygon touches, and
+   FULL, those inside its open interior. The point's sub-cell bit
+   sorts each candidate: outside ALL it is **dropped** in the join
+   condition; in FULL it is **accepted** as INTERIOR with no kernel
+   call; otherwise it is **refined**.
+3. **local refine (pUDF)** — surviving candidate pairs cross the Arrow
    boundary once and the vectorized ray-crossing locator (robust
-   orientation filter, ``kernels/pip.py``) classifies each point.
+   orientation filter, ``kernels/pip.py``) classifies the points not
+   in a FULL sub-cell.
 
 Prepared polygon dims: a broadcast point join prepares its polygon
 dim once per DataFrame (:class:`PreparedPolygons`, the distributed
-analogue of GEOS ``src/geom/prep/PreparedPolygon.cpp``). The exploded
-``(__cell, id, bbox)`` build side is a small local relation, the
-WKBs ride one SparkContext broadcast, and each python worker decodes
-them once into a polygon pack that every later batch, join and
-micro-batch reuses. Candidates carry only the polygon id through the
-join and the Arrow boundary. The batch join, the stream join and the
-rasterizer all take this path; ``broadcast_build=False`` ships the
-WKB through a shuffle join instead and decodes each distinct polygon
+analogue of GEOS ``src/geom/prep/PreparedPolygon.cpp``). The driver
+decodes the dim once to build the ``(__cell, id, bbox, __all,
+__full)`` build side, a small local relation; the WKBs ride one
+SparkContext broadcast, and each python worker decodes them once into
+a polygon pack that every later batch, join and micro-batch reuses.
+Candidates carry only the polygon id through the join and the Arrow
+boundary. The dim's other columns come back through a left join on
+the id that the optimizer removes when the caller reads none of them.
+The batch join, the stream join and the rasterizer all take this
+path; ``broadcast_build=False`` ships the WKB through a shuffle join
+instead, with no sub-cell masks, and decodes each distinct polygon
 once per Arrow batch.
 
 Pair dedup: a point lives in exactly one tile, so point joins produce
@@ -48,12 +59,14 @@ from pyspark.sql.functions import pandas_udf
 
 from geos_spark.functions.hilbert_native import (
     grid_xy,
+    sql_name,
     tile_key,
     with_grid_exploded,
     with_tile_key,
     with_tile_keys_exploded,
 )
 from geos_spark.functions.st import DEFAULT_EXTENT
+from geos_spark.kernels.subcells import subcell_masks
 
 # Location codes (geom::Location)
 _INTERIOR, _BOUNDARY, _EXTERIOR = 0, 1, 2
@@ -69,27 +82,23 @@ _POINT_PREDICATES = {
 }
 
 
-def _locate_pairs(px: pd.Series, py: pd.Series, pack, geom_offsets, codes) -> pd.Series:
-    """Location of pair i's point in geometry ``codes[i]`` of a decoded
-    pack: the (pair x polygon) expansion, the vectorized ray-crossing
-    kernel, then the min location over a multipolygon's parts (0
-    beats 1 beats 2)."""
-    from geos_spark.kernels.pip import locate_points
+def _drop_zip_importers() -> None:
+    """Called in a python worker once the refine's imports are done.
 
-    n = len(px)
-    if n == 0:
-        return pd.Series([], dtype="int32")
-    pts = np.column_stack([px.to_numpy(), py.to_numpy()])
-    # pair i targets packed polygons geom_offsets[c]..geom_offsets[c+1]
-    counts = geom_offsets[codes + 1] - geom_offsets[codes]
-    pair_rep = np.repeat(np.arange(n), counts)
-    cum = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    intra = np.arange(int(counts.sum())) - np.repeat(cum, counts)
-    poly_idx = np.repeat(geom_offsets[codes], counts) + intra
-    loc = locate_points(pts, pack, pair_rep, poly_idx)
-    out = np.full(n, _EXTERIOR, dtype=np.int64)
-    np.minimum.at(out, pair_rep, loc.astype(np.int64))
-    return pd.Series(out.astype("int32"))
+    Before every task the pyspark worker calls
+    ``importlib.invalidate_caches()``, and on Python 3.11 that makes
+    every cached ``zipimporter`` re-read its whole archive. A worker
+    that imported pyspark from ``pyspark.zip`` holds one importer per
+    subpackage, so each task re-read about 27k zip entries: 140-220 ms
+    measured on a 4-core machine, before the task's first row. Without
+    the cached importers there is nothing to re-read; an import that
+    needs one again rebuilds it from zipimport's directory cache."""
+    import sys
+    import zipimport
+
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
 
 
 @pandas_udf(T.IntegerType())
@@ -97,11 +106,14 @@ def pip_refine(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
     """Batch point-in-polygon location refine over candidates that carry
     the polygon WKB: each distinct polygon is decoded once per Arrow
     batch."""
+    from geos_spark.kernels.pip import locate_in_geoms
     from geos_spark.kernels.wkb import decode_polygons
+
+    _drop_zip_importers()
 
     codes, uniques = pd.factorize(wkb.map(bytes))
     pack, geom_offsets = decode_polygons(list(uniques))
-    return _locate_pairs(px, py, pack, geom_offsets, codes)
+    return pd.Series(locate_in_geoms(px, py, pack, geom_offsets, codes))
 
 
 # Per python worker: prepared-dim token -> (sorted ids, pack, offsets).
@@ -123,19 +135,30 @@ def _worker_pack(token: str, bc):
             del _WORKER_PACKS[next(iter(_WORKER_PACKS))]  # oldest first
         ids, wkbs = bc.value
         hit = _WORKER_PACKS[token] = (ids, *decode_polygons(wkbs))
+        _drop_zip_importers()
     return hit
 
 
 def _refine_by_id(bc, token: str):
     """PIP refine where candidates carry only the polygon id (8 bytes a
-    row through Arrow instead of the WKB); ``bc.value`` is the dim's
-    (sorted ids, wkbs)."""
+    row through Arrow instead of the WKB) and whether the point lies
+    in a FULL sub-cell, which makes it INTERIOR with no kernel call;
+    ``bc.value`` is the dim's (sorted ids, wkbs)."""
 
     @pandas_udf(T.IntegerType())
-    def _refine(px: pd.Series, py: pd.Series, pid: pd.Series) -> pd.Series:
+    def _refine(
+        px: pd.Series, py: pd.Series, pid: pd.Series, full: pd.Series
+    ) -> pd.Series:
+        from geos_spark.kernels.pip import locate_in_geoms
+
         ids, pack, geom_offsets = _worker_pack(token, bc)
-        codes = np.searchsorted(ids, pid.to_numpy(np.int64))
-        return _locate_pairs(px, py, pack, geom_offsets, codes)
+        out = np.full(len(pid), _INTERIOR, dtype=np.int32)
+        todo = ~full.to_numpy(bool)
+        codes = np.searchsorted(ids, pid.to_numpy(np.int64)[todo])
+        out[todo] = locate_in_geoms(
+            px.to_numpy()[todo], py.to_numpy()[todo], pack, geom_offsets, codes
+        )
+        return pd.Series(out)
 
     return _refine
 
@@ -144,18 +167,30 @@ def _refine_by_id(bc, token: str):
 class PreparedPolygons:
     """A polygon dim read and prepared once for broadcast point joins.
 
-    ``build`` is the exploded ``(__cell, id, bbox)`` side as a local
-    relation (no WKB), ``rest`` the dim's other columns keyed by id
-    (None when there are none), ``columns`` the dim's own columns in
-    order and ``refine`` the by-id pandas UDF over one broadcast of
-    the WKBs. ``id_col`` is the caller's id column, or an internal one
-    the join drops again."""
+    ``build`` is the ``(__cell, id, bbox, __all, __full)`` side as a
+    local relation (no WKB): one row per tile the polygon's envelope
+    overlaps and its boundary or interior reaches, with the ALL and
+    FULL masks of the tile's 8 x 8 sub-cells (``kernels/subcells.py``).
+    ``rest`` holds the dim's other columns, one row per id (None when
+    there are none), ``columns`` the dim's own columns in order and
+    ``refine`` the by-id pandas UDF over one broadcast of the WKBs.
+    ``id_col`` is the caller's id column, or an internal one the join
+    drops again. ``build_rows``, ``all_subcells`` and
+    ``full_subcells`` count the build rows and the sub-cells set in
+    their ALL and FULL masks."""
 
     id_col: str
     columns: tuple[str, ...]
     build: DataFrame
     rest: DataFrame | None
     refine: object
+    build_rows: int
+    all_subcells: int
+    full_subcells: int
+
+
+def _popcount(masks: np.ndarray) -> int:
+    return int(np.unpackbits(masks.view(np.uint8)).sum())
 
 
 _INTERNAL_ID = "__pid"
@@ -178,7 +213,12 @@ def prepare_polygons(
 
     The dim is read when it is first prepared: later joins against the
     same DataFrame reuse what was read then, so a changed dim source
-    needs a new DataFrame."""
+    needs a new DataFrame. The driver decodes the dim once to classify
+    the sub-cells of every tile (``kernels.subcells.subcell_masks``):
+    a point outside a build row's ALL mask is dropped by the join, a
+    point in its FULL mask is INTERIOR, and only the rest reach the
+    exact refine. A polygon the driver cannot decode gets all-PARTIAL
+    masks, so every candidate of it is refined."""
     import pyarrow as pa
 
     key = (poly_id_col, tuple(bbox_cols), wkb_col, level, tuple(extent))
@@ -196,17 +236,34 @@ def prepare_polygons(
         raise ValueError(f"poly_id_col {poly_id_col!r} is not unique")
     wkbs = dim.column(wkb_col).to_pylist()
     bc = spark.sparkContext.broadcast((ids[order], [wkbs[i] for i in order]))
-    build = with_tile_keys_exploded(
-        spark.createDataFrame(dim.select([id_col, *bbox_cols])),
-        bbox_cols, level, extent,
-    ).select("__cell", id_col, *bbox_cols)
-    rest = [c for c in dim.column_names if c != id_col and c not in bbox_cols]
+    bbox = np.column_stack(
+        [dim.column(c).to_numpy().astype(np.float64) for c in bbox_cols]
+    )
+    row, cell, all_mask, full_mask = subcell_masks(wkbs, bbox, level, extent)
+    build = (
+        dim.select([id_col, *bbox_cols])
+        .take(pa.array(row, pa.int64()))
+        .add_column(0, "__cell", pa.array(cell, pa.int64()))
+        .append_column("__all", pa.array(all_mask, pa.int64()))
+        .append_column("__full", pa.array(full_mask, pa.int64()))
+    )
+    others = [c for c in dim.column_names if c != id_col and c not in bbox_cols]
+    rest = None
+    if others:
+        # one row per id, as the optimizer can see: a left join on the
+        # id then drops out of plans that read none of these columns
+        rest = spark.createDataFrame(dim.select([id_col, *others]))
+        rest = rest.dropDuplicates([id_col])
     memo[key] = PreparedPolygons(
         id_col=id_col,
         columns=tuple(polygons.columns),
-        build=spark.createDataFrame(build.toArrow()),
-        rest=spark.createDataFrame(dim.select([id_col, *rest])) if rest else None,
+        # the local relations carry no size estimate: hint the broadcasts
+        build=F.broadcast(spark.createDataFrame(build)),
+        rest=None if rest is None else F.broadcast(rest),
         refine=_refine_by_id(bc, uuid.uuid4().hex),
+        build_rows=len(row),
+        all_subcells=_popcount(all_mask),
+        full_subcells=_popcount(full_mask),
     )
     return memo[key]
 
@@ -326,7 +383,9 @@ def within_distance_join_polygons(
     expanded-bbox filter prunes. Refine: ``_native_within_distance``
     higher-order expressions over the boundary edge arrays — the whole
     probe-side plan stays inside whole-stage codegen (no Arrow
-    boundary, no python workers on the probe side)."""
+    boundary, no python workers on the probe side). ``poly_id_col``,
+    when given, must be unique: the polygons' other columns are
+    re-attached by it."""
     xmin, ymin, xmax, ymax = bbox_cols
     pts = with_tile_key(points, x_col, y_col, level, extent)
     build = polygons.select(
@@ -336,7 +395,7 @@ def within_distance_join_polygons(
     )
     polys = with_tile_keys_exploded(build, bbox_cols, level, extent, pad=distance)
     if broadcast_build:
-        # the explode defeats size estimation (see point_in_polygon_join)
+        # the explode defeats size estimation: hint the broadcast
         polys = F.broadcast(polys)
     d = F.lit(float(distance))
     cand = pts.join(polys, "__cell").where(
@@ -349,13 +408,15 @@ def within_distance_join_polygons(
         _native_within_distance(
             F.col(x_col), F.col(y_col), F.col("__edges"), distance
         )
-    ).drop("__cell", "__edges")
+    ).drop("__cell", "__sub", "__edges")
     if poly_id_col is not None:
         # re-attach remaining polygon columns (incl. wkb): output
-        # contract matches point_in_polygon_join
+        # contract matches point_in_polygon_join. A left join on the
+        # deduplicated id, so plans that read none of them drop it.
         rest = polygons.drop(*bbox_cols)
         if len(rest.columns) > 1:
-            out = out.join(F.broadcast(rest), poly_id_col)
+            rest = rest.dropDuplicates([poly_id_col])
+            out = out.join(F.broadcast(rest), poly_id_col, "left")
     return out
 
 
@@ -681,6 +742,12 @@ def point_in_polygon_join(
     once per DataFrame (:func:`prepare_polygons`): the dim is read
     when it is first prepared, and later joins against the same
     DataFrame reuse that read, so a changed dim needs a new DataFrame.
+    Each candidate is then dropped, accepted or refined by the bit of
+    its point's sub-cell: outside the build row's ALL mask it never
+    leaves the join; in its FULL mask it is INTERIOR without a kernel
+    call (``touches`` drops it before the refine); every other
+    candidate gets the exact ray-crossing refine. Only the dim columns
+    the caller reads are re-attached.
     ``poly_id_col`` names a unique integer id column; without one the
     dim gets an internal id. ``broadcast_build=False`` is for
     polygon sides too large to broadcast: the exploded polygons,
@@ -694,43 +761,47 @@ def point_in_polygon_join(
         )
     accepted = _POINT_PREDICATES[predicate]
 
-    xmin, ymin, xmax, ymax = bbox_cols
     pts = with_tile_key(points, x_col, y_col, level, extent)
+    # global phase: cell equijoin + envelope short-circuit (codegen),
+    # as SQL text: one parse instead of a py4j call per operator
+    x, y = sql_name(x_col), sql_name(y_col)
+    xmin, ymin, xmax, ymax = (sql_name(c) for c in bbox_cols)
+    keep = f"{x} >= {xmin} AND {x} <= {xmax} AND {y} >= {ymin} AND {y} <= {ymax}"
     if broadcast_build:
         prepared = prepare_polygons(
             polygons, poly_id_col=poly_id_col, wkb_col=wkb_col,
             bbox_cols=bbox_cols, level=level, extent=extent,
         )
-        polys = F.broadcast(prepared.build)
-        loc_expr = prepared.refine(
-            F.col(x_col), F.col(y_col), F.col(prepared.id_col)
-        )
+        # the point's sub-cell bit: outside ALL -> dropped here, in
+        # FULL -> INTERIOR with no kernel, else the exact refine
+        keep += " AND (__all & shiftleft(1L, __sub)) != 0"
+        full = "(__full & shiftleft(1L, __sub)) != 0"
+        if _INTERIOR not in accepted:
+            keep += f" AND NOT {full}"
+        cand = pts.join(prepared.build, "__cell")
+        loc_expr = prepared.refine(x_col, y_col, prepared.id_col, F.expr(full))
     else:
         polys = with_tile_keys_exploded(polygons, bbox_cols, level, extent)
-        loc_expr = pip_refine(F.col(x_col), F.col(y_col), F.col(wkb_col))
+        cand = pts.join(polys, "__cell")
+        loc_expr = pip_refine(x_col, y_col, wkb_col)
 
-    # global phase: cell equijoin + envelope short-circuit (codegen)
-    cand = pts.join(polys, "__cell").where(
-        (F.col(x_col) >= F.col(xmin))
-        & (F.col(x_col) <= F.col(xmax))
-        & (F.col(y_col) >= F.col(ymin))
-        & (F.col(y_col) <= F.col(ymax))
-    )
+    # the envelope and mask conjuncts go into the join condition; the
+    # pUDF stays a filter above the join, on the survivors only
     if keep_location:
-        refined = cand.withColumn("location", loc_expr)
+        refined = cand.where(F.expr(keep)).withColumn("location", loc_expr)
         out = refined.where(F.col("location").isin(list(accepted)))
     else:
         # filter directly on the pUDF: withColumn + where would make
         # Catalyst evaluate the python UDF twice (once in the filter,
         # once in the projection that is then dropped)
-        out = cand.where(loc_expr.isin(list(accepted)))
-    out = out.drop("__cell")
+        out = cand.where(F.expr(keep) & loc_expr.isin(list(accepted)))
     if not broadcast_build:
-        return out
+        return out.drop("__cell", "__sub")
     if prepared.rest is not None:
-        # re-attach the dim's other columns (incl. wkb) over the
-        # (small) result set
-        out = out.join(F.broadcast(prepared.rest), prepared.id_col)
+        # re-attach the dim's other columns (incl. wkb) by a left join
+        # on the unique id: the optimizer removes it from plans that
+        # read none of them
+        out = out.join(prepared.rest, prepared.id_col, "left")
     return out.select(
         *points.columns,
         *prepared.columns,

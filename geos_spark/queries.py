@@ -108,7 +108,7 @@ SELECT doc_id, CAST(cell AS BIGINT) AS cell FROM {fin}
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase point-in-polygon spatial join: tile-key equijoin + codegen bbox filter + Arrow pUDF ray-casting refine against the prepared (broadcast) polygon dim."""
+    """Two-phase point-in-polygon spatial join: tile-key equijoin + codegen bbox and sub-cell mask filter + Arrow pUDF ray-casting refine against the prepared (broadcast) polygon dim."""
     pts = _doc_points(spark, sf_dir)
     polys = star_polygons(spark)
     out = point_in_polygon_join(

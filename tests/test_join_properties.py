@@ -1,7 +1,7 @@
 """Property tests (hypothesis) for the tile-key cell filter of the
 spatial joins, on adversarial floating-point input: points exactly on
-tile edges, one ulp either side of them, on the extent edge and
-outside the extent, and zero-width boxes.
+tile and sub-cell edges, one ulp either side of them, on the extent
+edge and outside the extent, and zero-width boxes.
 
 - Cell filter: every point inside a box (padded by d for the distance
   joins) shares a tile key with it, so the key equijoin plus the
@@ -10,6 +10,10 @@ outside the extent, and zero-width boxes.
   id column, and the shuffle build) and
   ``polygon_join`` return exactly the brute-force rows over rectangle
   polygons, with no pair missing and none duplicated.
+- Sub-cell masks of the prepared dim: no sub-cell an edge or a vertex
+  touches is FULL or dropped, the masked join returns the exact
+  rational oracle's rows at levels up to 16 (sub-cell level 19), and
+  the sub-cell-derived tile key is ``grid_xy``'s.
 """
 
 import math
@@ -27,19 +31,37 @@ _settings = settings(
 _EXTENTS = [(0.0, 0.0, 4096.0, 4096.0), (-3.5, 1.25, 97.0, 50.3)]
 
 
-def _axis(draw, lo: float, hi: float, n: int):
-    """Coordinates along one axis: one tile edge (chosen per case, the
-    extent edges included) and one ulp either side of it, any tile
-    edge, points outside the extent and arbitrary points."""
+def _axis(draw, lo: float, hi: float, n: int, span: int | None = None):
+    """Coordinates along one axis: one tile or sub-cell edge (chosen
+    per case, the extent edges included) and one ulp either side of
+    it, any tile or sub-cell edge (a tile holds 8 x 8 sub-cells),
+    points outside the extent and arbitrary points. With ``span``,
+    the edges and arbitrary points fall in a window of that many
+    sub-cells, at times across the extent edge, so that a high level
+    keeps a small build side; its outside points are then just
+    beyond the window."""
     stride = (hi - lo) / n
-    edges = [lo + k * stride for k in range(n + 1)]
-    e = draw(st.sampled_from(edges))
+    s = stride / 8
+    k0, k1 = 0, 8 * n
+    if span is not None and span < 8 * n:
+        k0 = draw(st.integers(-2, 8 * n - span + 2))
+        k1 = k0 + span
+    subs = [lo + k * s for k in range(k0, k1 + 1)]
+    edges = [e for k, e in zip(range(k0, k1 + 1), subs) if k % 8 == 0] or subs
+    e = draw(st.sampled_from(edges) | st.sampled_from(subs))
     near = [math.nextafter(e, -math.inf), e, math.nextafter(e, math.inf)]
+    if span is None:
+        outside = [lo - stride / 2, hi + stride / 2, lo - 3 * stride]
+        anywhere = (lo - stride, hi + stride)
+    else:
+        outside = [subs[0] - s / 2, subs[-1] + s / 2]
+        anywhere = (subs[0] - s, subs[-1] + s)
     return st.one_of(
         st.sampled_from(near),
         st.sampled_from(edges),
-        st.sampled_from([lo - stride / 2, hi + stride / 2, lo - 3 * stride]),
-        st.floats(lo - stride, hi + stride, allow_nan=False),
+        st.sampled_from(subs),
+        st.sampled_from(outside),
+        st.floats(*anywhere, allow_nan=False),
     )
 
 
@@ -355,3 +377,229 @@ def test_batch_and_stream_pip_agree_with_exact_oracle(spark, tmp_path_factory, c
         output_mode="append",
     )
     assert _pairs(out, "pid", "poly_id") == sorted((i, j) for i, j, _ in want)
+
+
+# ----------------------------------------------------------------------
+# sub-cell ALL / FULL masks of the prepared dim
+# ----------------------------------------------------------------------
+
+
+@st.composite
+def _subcell_case(draw):
+    """(level, extent, polygons, points) at levels 1-16 inside a window
+    of a few tiles. Polygons are rectangles along sub-cell edges (some
+    with a hole), triangles with vertices on sub-cell corners and
+    trapezoids whose horizontal edges run along sub-cell centre rows.
+    Points sit on every vertex, on edge midpoints, on sub-cell edges
+    and corners, outside the extent, and one ulp either side of each
+    in x and in y."""
+    level = draw(st.integers(1, 16))
+    extent = draw(st.sampled_from(_EXTENTS))
+    n = 1 << level
+    xs = _axis(draw, extent[0], extent[2], n, span=24)
+    ys = _axis(draw, extent[1], extent[3], n, span=24)
+    s = (extent[3] - extent[1]) / (8 * n)
+
+    def centre_row(y):
+        return extent[1] + (math.floor((y - extent[1]) / s) + 0.5) * s
+
+    polys = []
+    for _ in range(draw(st.integers(1, 3))):
+        kind = draw(st.sampled_from(["rect", "triangle", "trapezoid"]))
+        if kind == "rect":
+            x0, x1 = sorted((draw(xs), draw(xs)))
+            y0, y1 = sorted((draw(ys), draw(ys)))
+            rings = [[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]
+            hx0, hx1 = sorted((draw(xs), draw(xs)))
+            hy0, hy1 = sorted((draw(ys), draw(ys)))
+            if x0 < hx0 < hx1 < x1 and y0 < hy0 < hy1 < y1:
+                rings.append([(hx0, hy0), (hx0, hy1), (hx1, hy1), (hx1, hy0), (hx0, hy0)])
+        elif kind == "triangle":
+            shell = [(draw(xs), draw(ys)) for _ in range(3)]
+            rings = [shell + shell[:1]]
+        else:
+            y0, y1 = sorted((centre_row(draw(ys)), centre_row(draw(ys))))
+            xa, xb, xc, xd = (draw(xs) for _ in range(4))
+            rings = [[(xa, y0), (xb, y0), (xc, y1), (xd, y1), (xa, y0)]]
+        polys.append(rings)
+
+    points = [(draw(xs), draw(ys)) for _ in range(draw(st.integers(0, 12)))]
+    for rings in polys:
+        for ring in rings:
+            for (ax, ay), (bx, by) in zip(ring, ring[1:]):
+                points += [(ax, ay), (ax + (bx - ax) / 2, ay + (by - ay) / 2)]
+    points += [(extent[0] - s / 2, draw(ys)), (draw(xs), extent[3] + s / 2)]
+    points = [
+        q
+        for x, y in points
+        for q in (
+            (x, y),
+            (math.nextafter(x, -math.inf), y),
+            (math.nextafter(x, math.inf), y),
+            (x, math.nextafter(y, -math.inf)),
+            (x, math.nextafter(y, math.inf)),
+        )
+    ]
+    points = draw(st.permutations(points))[:160]
+    return level, extent, polys, points
+
+
+def _seg_meets_box(a, b, box) -> bool:
+    """Whether the closed segment a-b meets the closed box, in exact
+    rationals (Liang-Barsky clipping)."""
+    from fractions import Fraction as Q
+
+    (ax, ay), (bx, by) = (tuple(map(Q, a)), tuple(map(Q, b)))
+    x0, y0, x1, y1 = box
+    t0, t1 = Q(0), Q(1)
+    for p, q in (
+        (ax - bx, ax - x0), (bx - ax, x1 - ax),
+        (ay - by, ay - y0), (by - ay, y1 - ay),
+    ):
+        if p == 0:
+            if q < 0:
+                return False
+        elif p < 0:
+            t0 = max(t0, q / p)
+        else:
+            t1 = min(t1, q / p)
+    return t0 <= t1
+
+
+def _bbox(rings):
+    xs = [x for x, _ in rings[0]]
+    ys = [y for _, y in rings[0]]
+    return min(xs), min(ys), max(xs), max(ys)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(case=_subcell_case())
+def test_no_touched_subcell_is_full_or_dropped(case):
+    """Every sub-cell of every tile a polygon's envelope overlaps: if
+    an edge or a vertex meets the sub-cell it is in ALL and not in
+    FULL; a FULL sub-cell's centre is INTERIOR and a dropped one's
+    EXTERIOR (exact rationals); extent-border sub-cells are in ALL and
+    never FULL."""
+    from fractions import Fraction as Q
+
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.subcells import subcell_masks
+    from geos_spark.kernels.wkb import write_wkb
+
+    level, extent, polys, _ = case
+    n = 1 << level
+    minx, miny, maxx, maxy = extent
+    tx, ty = (maxx - minx) / n, (maxy - miny) / n
+    sx, sy = tx / 8, ty / 8
+    bbox = [_bbox(rings) for rings in polys]
+    row, key, all_mask, full_mask = subcell_masks(
+        [write_wkb(Geom.polygon(rings)) for rings in polys], bbox, level, extent
+    )
+    masks = {(int(r), int(k)): (int(a), int(f)) for r, k, a, f in zip(row, key, all_mask, full_mask)}
+
+    def tile(v, o, t):
+        return min(n - 1, max(0, math.floor((v - o) / t)))
+
+    for i, rings in enumerate(polys):
+        x0, y0, x1, y1 = bbox[i]
+        edges = [
+            (a, b) for ring in rings for a, b in zip(ring, ring[1:])
+        ]
+        for gy in range(tile(y0, miny, ty), tile(y1, miny, ty) + 1):
+            for gx in range(tile(x0, minx, tx), tile(x1, minx, tx) + 1):
+                a, f = masks.get((i, gy * n + gx), (0, 0))
+                for bit in range(64):
+                    cx, cy = 8 * gx + bit % 8, 8 * gy + bit // 8
+                    box = (
+                        Q(minx + cx * sx), Q(miny + cy * sy),
+                        Q(minx + (cx + 1) * sx), Q(miny + (cy + 1) * sy),
+                    )
+                    in_all, in_full = a >> bit & 1, f >> bit & 1
+                    if cx in (0, 8 * n - 1) or cy in (0, 8 * n - 1):
+                        assert in_all and not in_full
+                        continue
+                    if any(_seg_meets_box(p, q, box) for p, q in edges):
+                        assert in_all and not in_full, (i, gx, gy, bit)
+                    elif in_full or not in_all:
+                        centre = (
+                            minx + (cx + 0.5) * sx, miny + (cy + 0.5) * sy
+                        )
+                        want = _INTERIOR if in_full else _EXTERIOR
+                        assert _exact_location(*centre, rings) == want, (i, gx, gy, bit)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=_subcell_case())
+def test_masked_join_agrees_with_exact_oracle(spark, case):
+    """The prepared join drops, accepts and refines by sub-cell, and
+    returns exactly the exact-rational rows for a predicate that
+    accepts INTERIOR (``intersects``, with locations) and one that
+    does not (``touches``)."""
+    from geos_spark.operators.spatial_join import point_in_polygon_join
+
+    level, extent, polys, points = case
+    want = sorted(
+        (i, j, loc)
+        for i, (x, y) in enumerate(points)
+        for j, rings in enumerate(polys)
+        if (loc := _exact_location(x, y, rings)) != _EXTERIOR
+    )
+    dim = _rings_df(spark, polys)
+    pts = _points_df(spark, points)
+    got = point_in_polygon_join(
+        pts, dim, level=level, extent=extent,
+        poly_id_col="poly_id", keep_location=True,
+    )
+    assert sorted(
+        (r.pid, r.poly_id, r.location)
+        for r in got.select("pid", "poly_id", "location").collect()
+    ) == want
+    got = point_in_polygon_join(
+        pts, dim, "touches", level=level, extent=extent, poly_id_col="poly_id"
+    )
+    assert _pairs(got, "pid", "poly_id") == sorted(
+        (i, j) for i, j, loc in want if loc == _BOUNDARY
+    )
+
+
+@_settings
+@given(case=_subcell_case())
+def test_subcell_tile_key_is_grid_xy_tile_key(spark, case):
+    """The probe's key, taken from its sub-cell ordinates, equals
+    ``tile_key(grid_xy(level))`` on every point, and its sub-cell bit
+    equals the one the driver-side classifier assigns."""
+    import numpy as np
+
+    from geos_spark.functions.hilbert_native import (
+        grid_xy,
+        tile_key,
+        with_tile_key,
+    )
+    from geos_spark.kernels.subcells import SUB_LEVELS, grid_ordinate, grid_strides
+
+    level, extent, _, points = case
+    gx, gy = grid_xy(F.col("x"), F.col("y"), level, extent)
+    rows = (
+        with_tile_key(_points_df(spark, points), "x", "y", level, extent)
+        .select("pid", "__cell", "__sub", tile_key(gx, gy, level).alias("key"))
+        .collect()
+    )
+    assert all(r["__cell"] == r["key"] for r in rows)
+    ns = 8 << level
+    s8x, s8y = grid_strides(level + SUB_LEVELS, extent)
+    xy = np.array(points)
+    ox = grid_ordinate(xy[:, 0], extent[0], s8x, ns).astype(np.int64)
+    oy = grid_ordinate(xy[:, 1], extent[1], s8y, ns).astype(np.int64)
+    want = {
+        i: (int(y // 8 * (1 << level) + x // 8), int(y % 8 * 8 + x % 8))
+        for i, (x, y) in enumerate(zip(ox, oy))
+    }
+    assert {r.pid: (r["__cell"], r["__sub"]) for r in rows} == want

@@ -99,6 +99,39 @@ def test_prepared_dim_lifetime(spark, tmp_path):
     assert ref() is None and len(sj._PREPARED) == n_memo - 1
 
 
+def test_malformed_dim_row_gets_all_partial_masks(spark):
+    """A dim polygon the driver-side classifier cannot decode does not
+    fail the prepare: its every tile gets ALL = all 64 sub-cells and
+    FULL = none, so each of its candidates goes to the exact refine as
+    before, and the other rows are classified as without it."""
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+    from geos_spark.operators.spatial_join import prepare_polygons
+
+    good = write_wkb(Geom.polygon([[(1.0, 1.0), (30.0, 1.0), (30.0, 30.0), (1.0, 1.0)]]))
+    rows = [(1, good, 1.0, 1.0, 30.0, 30.0), (2, b"\x01\x03\x00", 40.0, 40.0, 50.0, 50.0)]
+    schema = "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double"
+
+    def masks(data):
+        prepared = prepare_polygons(
+            spark.createDataFrame(data, schema), poly_id_col="poly_id",
+            wkb_col="wkb", bbox_cols=("xmin", "ymin", "xmax", "ymax"),
+            level=2, extent=(0.0, 0.0, 64.0, 64.0),
+        )
+        got = prepared.build.select("poly_id", "__cell", "__all", "__full")
+        return prepared, {(r[0], r[1]): (r[2], r[3]) for r in got.collect()}
+
+    prepared, both = masks(rows)
+    bad = {k: v for k, v in both.items() if k[0] == 2}
+    # the envelope (40, 40)-(50, 50) lies in tiles (2, 2), (3, 2), (2, 3), (3, 3)
+    assert sorted(c for _, c in bad) == [10, 11, 14, 15]
+    assert set(bad.values()) == {(-1, 0)}
+    _, alone = masks(rows[:1])
+    assert {k: v for k, v in both.items() if k[0] == 1} == alone
+    assert prepared.build_rows == len(both)
+    assert prepared.all_subcells > 4 * 64 and prepared.full_subcells > 0
+
+
 def test_multimodal_plumbing(spark):
     from geos_spark.operators.multimodal import decode_image, extract_features
 

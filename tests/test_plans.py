@@ -41,6 +41,35 @@ def test_pip_join_plan_shape(spark):
     assert plan.count("ArrowEvalPython (") == 1
 
 
+def test_pip_join_reattach_is_pruned(spark):
+    """The dim's other columns come back through a left join on the
+    unique id, which the optimizer removes when none of them is read:
+    an id-only select and a count/hash aggregate each hold exactly one
+    ``BroadcastExchange`` (the build side), while a full select keeps
+    the re-attach and returns the dim's columns."""
+    from geos_spark.operators.spatial_join import point_in_polygon_join
+    from geos_spark.sources.pages import EXTENT, star_polygons, with_doc_point
+
+    pts = with_doc_point(spark.range(0, 2000).withColumnRenamed("id", "doc_id"))
+    stars = star_polygons(spark)
+    out = point_in_polygon_join(
+        pts, stars, level=6, extent=EXTENT, poly_id_col="poly_id"
+    )
+    ids = out.select("doc_id", "poly_id")
+    agg = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("doc_id", "poly_id")).alias("h"),
+    )
+    for q in (ids, agg):
+        assert _plan(q).count("BroadcastExchange (") == 1
+    assert _plan(out).count("BroadcastExchange (") == 2
+    assert out.columns == pts.columns + stars.columns
+    rows = out.select("poly_id", "wkb").collect()
+    wkb = {r.poly_id: bytes(r.wkb) for r in stars.select("poly_id", "wkb").collect()}
+    assert rows and all(bytes(r.wkb) == wkb[r.poly_id] for r in rows)
+    assert sorted(ids.collect()) == sorted(out.select("doc_id", "poly_id").collect())
+
+
 def _has_hilbert_chain(df) -> bool:
     """Whether the optimized plan holds the Hilbert bitwise chain."""
     j = df._jdf.queryExecution().optimizedPlan().toJSON()

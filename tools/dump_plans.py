@@ -22,7 +22,7 @@ AUDITED = [
      "it (same prepared-dim plan as pip_join)"),
     ("pip_join", "two-phase pUDF spatial join (tile-key equijoin "
      "against the prepared dim's broadcast local build side + codegen "
-     "bbox filter + by-id Arrow refine)"),
+     "bbox and sub-cell mask filter + by-id Arrow refine)"),
     ("distance_native", "zero-python within-distance join to polygons "
      "(point-to-segment distance as Catalyst HOFs)"),
     ("tile_assign", "native Hilbert tile assignment (pure bitwise "
@@ -95,17 +95,22 @@ def main() -> None:
         "coalescing; the structure below is what runs at any SF).",
         "",
         "Audit keys: every `Exchange` is a shuffle — the joins below "
-        "have exactly one build-side `BroadcastExchange` and no "
-        "unplanned shuffles; `WholeStageCodegen` spans cover the "
-        "native tiers; `PushedFilters`/`ReadSchema` show scan "
-        "pruning; `ArrowEvalPython` appears in exactly two declared "
-        "places — the by-id pUDF refine of the point joins "
+        "have exactly one build-side `BroadcastExchange` (the dim's "
+        "other columns come back through a left join on its unique "
+        "id, which the optimizer removes because these queries read "
+        "only ids) and no unplanned shuffles; `WholeStageCodegen` "
+        "spans cover the native tiers; `PushedFilters`/`ReadSchema` "
+        "show scan pruning; `ArrowEvalPython` appears in exactly two "
+        "declared places — the by-id pUDF refine of the point joins "
         "(`pip_join`/`pip_native`/`rasterize`), whose build side is a "
-        "`LocalTableScan` prepared once per dim, and the one-time "
-        "256-row build-side `_wkb_edges` decode UNDER the "
-        "`BroadcastExchange` of `distance_native` (whose probe-side "
-        "point-to-segment refine is higher-order Column expressions, "
-        "no python worker touches the big side).",
+        "`LocalTableScan` prepared once per dim with the `__all`/"
+        "`__full` sub-cell masks (the join condition drops candidates "
+        "outside ALL; the refine's boolean argument marks those in "
+        "FULL, which skip the kernel), and the one-time 256-row "
+        "build-side `_wkb_edges` decode UNDER the `BroadcastExchange` "
+        "of `distance_native` (whose probe-side point-to-segment "
+        "refine is higher-order Column expressions, no python worker "
+        "touches the big side).",
         "",
     ]
     for name, why in AUDITED:
