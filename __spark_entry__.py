@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  -> flagship point-in-polygon spatial join at sf0.001.
-queries()     -> operator catalog (geos_spark.queries.QUERIES; 124 as
-                 of round 5) — synthetic-table operators (joins,
+queries()     -> operator catalog (geos_spark.queries.QUERIES; 108
+                 queries) — synthetic-table operators (joins,
                  tiling, kNN, clustering, coverage
                  validate/simplify/clean, dedup + the full near-dup
                  pipeline + paragraph dedup + exact duplicated-
@@ -29,7 +29,7 @@ queries()     -> operator catalog (geos_spark.queries.QUERIES; 124 as
                  accessors),
                  Structured-Streaming twins run to completion
                  (stream_dedup/tiles/sessions/first_seen/pip/quota/
-                 ann/ppl/cut), plus the xmltester corpus promoted as xt_*
+                 ann/cut), plus the xmltester corpus promoted as xt_*
                  fixture queries (the corpus audit is CLOSED: every
                  case in general/misc/robust/issue/validate is
                  scored or in the 8-entry analysed SKIP list; the

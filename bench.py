@@ -485,53 +485,6 @@ def _bench_queries(spark):
             vecs, 0.7, n_planes=160, bands=8, dim=64, max_bucket=2000
         )
 
-    def bpe_train_256():
-        # tokenizer-induction at a production merge count: one corpus
-        # scan builds the word domain, 256 merges learned driver-side
-        # from the collected (vocab-sized) domain — O(1) Spark jobs
-        # total, not one per merge. Oracle coverage: catalog rows
-        # bpe_train/bpe_vocab/bpe_encode + the prefix-stability test
-        # (driver-side trainer == per-merge distributed loop).
-        from geos_spark.operators.bpe import bpe_train
-
-        docs = spark.read.parquet(dedup_src)
-        return bpe_train(docs, merges=256)
-
-    def logreg_200k():
-        # iterative-ML shape at throughput: hashed-BOW featurization
-        # (6m (doc,bin) rows) + 5 batch-GD iterations, each two
-        # shuffles with the weight vector as an array literal; labels
-        # are a balanced synthetic split (training mechanics, not
-        # learnability, is what's measured). Oracle coverage: catalog
-        # rows logreg_weights/logreg_confusion (unrolled-GD twin).
-        from geos_spark.operators.classifier import (
-            hashed_features,
-            train_logreg,
-        )
-
-        docs = spark.read.parquet(dedup_src)
-        feats = hashed_features(
-            docs, F.col("doc_id") % 2 == 0, word_re="[a-z0-9]+"
-        )
-        w = train_logreg(feats, iters=5)
-        return spark.createDataFrame(
-            list(enumerate(w)), "bin int, weight double"
-        )
-
-    def doc_ppl_200k():
-        # corpus bigram-LM training (two count aggs) + per-doc
-        # self-perplexity scoring (bigram equijoins) at 200k docs /
-        # 6m tokens; alnum tokenization because the synthetic vocab
-        # is w%05d. Oracle coverage: catalog row `doc_ppl` (DuckDB
-        # twin); reference-parity in tests/test_lm.py.
-        from geos_spark.operators.lm import doc_perplexity
-
-        docs = spark.read.parquet(dedup_src)
-        return doc_perplexity(docs, word_re="[a-z0-9]+").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("ppl"), 4).alias("mean_ppl"),
-        )
-
     pages_src = _pages_corpus_parquet(spark, N_SYNTH)
     linked_src = _pages_corpus_parquet(spark, 2 * N_SYNTH, linked=True)
 
@@ -661,9 +614,6 @@ def _bench_queries(spark):
         "host_rank_2m": (host_rank_2m, 2 * N_SYNTH),
         "dedup_clusters_200k": (dedup_clusters_200k, 200_000),
         "embed_lsh_200k": (embed_lsh_200k, 202_000),
-        "bpe_train_256": (bpe_train_256, 200_000),
-        "doc_ppl_200k": (doc_ppl_200k, 200_000),
-        "logreg_200k": (logreg_200k, 200_000),
         "dedup_cut_200k": (dedup_cut_200k, 200_000),
         "raster_1024": (raster_1024, 1024 * 1024),
         "pip_join_10m": (pip_join_10m, 10 * N_SYNTH),
@@ -756,32 +706,18 @@ def _scaling_queries(spark, cores: int):
             docs, num_hashes=16, bands=4, shingle_k=3, threshold=0.5
         )
 
-    ppl_src = _dedup_corpus_parquet(spark, 600_000, parts)
-
-    def doc_ppl_600k():
-        # LM-training shape as scaling evidence: two corpus-count
-        # aggregations (unigram/bigram) feeding bigram equijoins —
-        # shuffle-bound with a ~17m-row pair table, a different
-        # profile from both the map-heavy scrub and the iterative
-        # graph jobs
-        from geos_spark.operators.lm import doc_perplexity
-
-        docs = spark.read.parquet(ppl_src)
-        return doc_perplexity(docs, word_re="[a-z0-9]+").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("ppl"), 4).alias("mean_ppl"),
-        )
+    src_600k = _dedup_corpus_parquet(spark, 600_000, parts)
 
     def dedup_cut_600k():
         # ExactSubstr duplicated-substring removal at 3x the headline
         # workload (600k docs / 18m words): window-hash emit (one
         # materialized pass), corpus-wide count aggregation, hash
         # equijoin back, per-doc array-fold rebuild — the hash-shuffle
-        # text-pipeline family (same shuffle-bound profile as
-        # doc_ppl_600k: ~15m 8-byte keys through two exchanges)
+        # text-pipeline family (~15m 8-byte keys through two
+        # exchanges)
         from geos_spark.operators.dedup import remove_dup_ngrams
 
-        docs = spark.read.parquet(ppl_src)
+        docs = spark.read.parquet(src_600k)
         out = remove_dup_ngrams(docs, n=5)
         return out.agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -851,7 +787,6 @@ def _scaling_queries(spark, cores: int):
         "tile_pipeline_96m": (tile_pipeline_96m, 96_000_000),
         "token_stats_6m": (token_stats_6m, 6_000_000),
         "dedup_clusters_200k": (dedup_clusters_200k, 200_000),
-        "doc_ppl_600k": (doc_ppl_600k, 600_000),
         "dedup_cut_600k": (dedup_cut_600k, 600_000),
         "dedup_cut_1800k": (dedup_cut_1800k, 1_800_000),
         "pii_scrub_1m": (pii_scrub_1m, 1_000_000),
@@ -958,8 +893,7 @@ def main() -> None:
         n = int(os.environ.get("SPARK_GRAFT_SCALE_EXECS", "1"))
         levels = (n, 4 * n)
         qnames = ["pip_join_48m", "pip_native_48m", "tile_pipeline_96m",
-                  "token_stats_6m", "dedup_clusters_200k", "doc_ppl_600k",
-                  "pii_scrub_1m"]
+                  "token_stats_6m", "dedup_clusters_200k", "pii_scrub_1m"]
         subset = os.environ.get("SPARK_GRAFT_SCALE_QUERIES")
         if subset:
             qnames = [q for q in qnames if q in subset.split(",")]

@@ -158,19 +158,17 @@ def grid_xy(x, y, level: int, extent: tuple[float, float, float, float]):
     [0, 2^level - 1] so boundary/outside coordinates land in the edge
     tiles.
 
-    ``x`` and ``y`` are Columns, or SQL expressions as strings, and the
-    ordinates come back in the same form. SQL text costs one parse per
-    expression where a Column costs a py4j round trip per operator,
-    which dominates the planning of a per-query key."""
+    ``x`` and ``y`` are SQL expressions (quote a bare column name with
+    ``sql_name``), and so are the ordinates that come back. SQL text
+    costs one parse per expression where a Column costs a py4j round
+    trip per operator, which dominates the planning of a per-query
+    key."""
     n = 1 << level
     sx, sy = grid_strides(level, extent)
 
-    def ordinate(c, origin: float, stride: float):
-        if isinstance(c, str):
-            f = f"floor(({c} - {float(origin)!r}D) / {stride!r}D)"
-            return f"greatest(0, least({n - 1}, {f}))"
-        f = F.floor((c - F.lit(origin)) / F.lit(stride))
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), f))
+    def ordinate(c: str, origin: float, stride: float) -> str:
+        f = f"floor(({c} - {float(origin)!r}D) / {stride!r}D)"
+        return f"greatest(0, least({n - 1}, {f}))"
 
     return ordinate(x, extent[0], sx), ordinate(y, extent[1], sy)
 
@@ -195,15 +193,16 @@ def with_grid_exploded(
     native (sequence + explode), so it is safe on join build sides and
     broadcast plans (a python UDF there defeats codegen and costs
     seconds per stage)."""
-    xmin, ymin, xmax, ymax = (F.col(c) for c in bbox_cols)
+    xmin, ymin, xmax, ymax = (sql_name(c) for c in bbox_cols)
     if pad:
-        xmin, ymin = xmin - F.lit(pad), ymin - F.lit(pad)
-        xmax, ymax = xmax + F.lit(pad), ymax + F.lit(pad)
+        p = f"{float(pad)!r}D"
+        xmin, ymin = f"({xmin} - {p})", f"({ymin} - {p})"
+        xmax, ymax = f"({xmax} + {p})", f"({ymax} + {p})"
     gx0, gy0 = grid_xy(xmin, ymin, level, extent)
     gx1, gy1 = grid_xy(xmax, ymax, level, extent)
-    return df.withColumn("__gx", F.explode(F.sequence(gx0, gx1))).withColumn(
-        "__gy", F.explode(F.sequence(gy0, gy1))
-    )
+    return df.withColumn(
+        "__gx", F.expr(f"explode(sequence({gx0}, {gx1}))")
+    ).withColumn("__gy", F.expr(f"explode(sequence({gy0}, {gy1}))"))
 
 
 def with_tile_keys_exploded(
@@ -251,8 +250,8 @@ def with_tile_cell(
 ) -> DataFrame:
     """Point coordinates -> containing-tile Hilbert cell (native), on
     the ``grid_xy`` ordinates."""
-    gx, gy = grid_xy(F.col(x_col), F.col(y_col), level, extent)
-    tmp = df.withColumn("__gx", gx).withColumn("__gy", gy)
+    gx, gy = grid_xy(sql_name(x_col), sql_name(y_col), level, extent)
+    tmp = df.withColumns({"__gx": F.expr(gx), "__gy": F.expr(gy)})
     return with_hilbert_cell(tmp, "__gx", "__gy", level, out).drop(
         "__gx", "__gy"
     )

@@ -121,8 +121,8 @@ class PolygonPack:
         ns = np.clip(seg_cnt // 4, 1, 512).astype(np.int64)
         y0 = self.bbox[:, 1]
         y1 = self.bbox[:, 3]
-        span = y1 - y0
-        h = np.where(span > 0, span / ns, 1.0)
+        h = (y1 - y0) / ns
+        h = np.where(h > 0, h, 1.0)  # a subnormal span / ns can round to 0
         self.stripe_h = h
         self.stripe_y0 = y0
         self.stripe_n = ns
@@ -210,10 +210,12 @@ def locate_points(
     sy0 = pack.stripe_y0[pair_poly]
     sh = pack.stripe_h[pair_poly]
     sn = pack.stripe_n[pair_poly]
-    stripe_local = np.floor((py_pair - sy0) / sh).astype(np.int64)
-    # the top edge (py == ymax) belongs to the last stripe
     in_range = (py_pair >= sy0) & (py_pair <= pack.bbox[pair_poly, 3])
-    stripe_local = np.clip(stripe_local, 0, sn - 1)
+    # divide on in-range lanes only: with a subnormal stripe height the
+    # quotient of a far-away point overflows
+    q = np.divide(py_pair - sy0, sh, out=np.zeros(n_pairs), where=in_range)
+    # the top edge (py == ymax) belongs to the last stripe
+    stripe_local = np.clip(np.floor(q).astype(np.int64), 0, sn - 1)
     sid = pack.poly_stripe_offsets[pair_poly] + stripe_local
     counts = np.where(
         in_range,

@@ -32,6 +32,7 @@ from __future__ import annotations
 import numpy as np
 
 from geos_spark.kernels.orientation import orientation_index
+from geos_spark.kernels.wkb import decode_polygons_flagged
 
 SUB_LEVELS = 3  # 2^3 x 2^3 sub-cells per tile: one 64-bit word
 _SUB = 1 << SUB_LEVELS
@@ -55,28 +56,6 @@ def grid_ordinate(v, origin: float, stride: float, n: int) -> np.ndarray:
     with np.errstate(invalid="ignore"):
         q = np.floor((np.asarray(v, dtype=np.float64) - origin) / stride)
     return np.clip(q, 0, n - 1)
-
-
-def _decode(wkbs):
-    """(pack, geom_offsets, bad): rows that fail to decode get no
-    polygons and are flagged ``bad``."""
-    from geos_spark.kernels.wkb import decode_polygons
-
-    bad = np.zeros(len(wkbs), dtype=bool)
-    try:
-        pack, geo = decode_polygons(wkbs)
-        return pack, geo, bad
-    except Exception:
-        pass
-    for i, b in enumerate(wkbs):
-        try:
-            decode_polygons([b])
-        except Exception:
-            bad[i] = True
-    pack, good = decode_polygons([b for b, x in zip(wkbs, bad) if not x])
-    counts = np.zeros(len(wkbs), dtype=np.int64)
-    counts[~bad] = np.diff(good)
-    return pack, np.concatenate(([0], np.cumsum(counts))), bad
 
 
 def _expand(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -175,7 +154,7 @@ def subcell_masks(wkbs, bbox, level: int, extent):
     partial |= (cx == 0) | (cx == ns - 1) | (cy == 0) | (cy == ns - 1)
 
     wkbs = list(wkbs)
-    pack, geo, bad = _decode([wkbs[i] for i in rows])
+    pack, geo, bad = decode_polygons_flagged([wkbs[i] for i in rows])
     poly_row = np.repeat(np.arange(len(rows)), np.diff(geo))
     pt_row = poly_row[np.repeat(pack.ring_poly, np.diff(pack.ring_offsets))]
     bad[pt_row[~np.isfinite(pack.coords).all(axis=1)]] = True

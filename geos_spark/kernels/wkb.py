@@ -330,3 +330,24 @@ def decode_polygons(wkbs) -> "tuple":
     c = np.concatenate(coords) if coords else np.zeros((0, 2), dtype=np.float64)
     pack = PolygonPack(c, np.array(ring_offsets), np.array(ring_poly), npoly)
     return pack, np.asarray(geom_offsets, dtype=np.int64)
+
+
+def decode_polygons_flagged(wkbs) -> "tuple":
+    """``decode_polygons`` plus ``bad``, a bool per input row that
+    failed to decode; such a row gets no polygons (an empty range in
+    ``geom_offsets``). One call on the normal path: rows are decoded
+    one by one only when it raises."""
+    bad = np.zeros(len(wkbs), dtype=bool)
+    try:
+        return (*decode_polygons(wkbs), bad)
+    except Exception:
+        pass
+    for i, b in enumerate(wkbs):
+        try:
+            decode_polygons([b])
+        except Exception:
+            bad[i] = True
+    pack, good = decode_polygons([b for b, x in zip(wkbs, bad) if not x])
+    counts = np.zeros(len(wkbs), dtype=np.int64)
+    counts[~bad] = np.diff(good)
+    return pack, np.concatenate(([0], np.cumsum(counts))), bad

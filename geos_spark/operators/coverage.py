@@ -201,12 +201,8 @@ def coverage_simplify_partitioned(
             F.col("env.ymax").alias("ymax"),
         )
     )
-    cx = (F.col("xmin") + F.col("xmax")) / 2
-    cy = (F.col("ymin") + F.col("ymax")) / 2
-    hgx, hgy = grid_xy(cx, cy, level, extent)
-    home = base.withColumn(
-        "part", (hgx * F.lit(n) + hgy).cast("long")
-    )
+    hgx, hgy = grid_xy("((xmin + xmax) / 2)", "((ymin + ymax) / 2)", level, extent)
+    home = base.withColumn("part", F.expr(f"CAST({hgx} * {n} + {hgy} AS BIGINT)"))
     # halo: every partition whose tile range the CLOSED envelope
     # touches. A member whose envelope ends exactly on a partition
     # line shares boundary with the tile on the other side — the min
@@ -219,10 +215,10 @@ def coverage_simplify_partitioned(
 
     gx0 = lo(F.col("xmin"), minx, sx)
     gy0 = lo(F.col("ymin"), miny, sy)
-    gx1, gy1 = grid_xy(F.col("xmax"), F.col("ymax"), level, extent)
+    gx1, gy1 = grid_xy("xmax", "ymax", level, extent)
     spread = (
-        home.withColumn("tgx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("tgy", F.explode(F.sequence(gy0, gy1)))
+        home.withColumn("tgx", F.explode(F.sequence(gx0, F.expr(gx1))))
+        .withColumn("tgy", F.explode(F.sequence(gy0, F.expr(gy1))))
         .withColumn(
             "touch_part", (F.col("tgx") * F.lit(n) + F.col("tgy")).cast("long")
         )
@@ -371,17 +367,15 @@ def coverage_clean_partitioned(
             )
     margin = float(margin)
 
-    cx = (F.col("xmin") + F.col("xmax")) / 2
-    cy = (F.col("ymin") + F.col("ymax")) / 2
-    hgx, hgy = grid_xy(cx, cy, level, extent)
-    home = base.withColumn("part", (hgx * F.lit(n) + hgy).cast("long"))
+    hgx, hgy = grid_xy("((xmin + xmax) / 2)", "((ymin + ymax) / 2)", level, extent)
+    home = base.withColumn("part", F.expr(f"CAST({hgx} * {n} + {hgy} AS BIGINT)"))
 
-    m = F.lit(margin)
-    gx0, gy0 = grid_xy(F.col("xmin") - m, F.col("ymin") - m, level, extent)
-    gx1, gy1 = grid_xy(F.col("xmax") + m, F.col("ymax") + m, level, extent)
+    m = f"{margin!r}D"
+    gx0, gy0 = grid_xy(f"(xmin - {m})", f"(ymin - {m})", level, extent)
+    gx1, gy1 = grid_xy(f"(xmax + {m})", f"(ymax + {m})", level, extent)
     work = (
-        home.withColumn("tgx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("tgy", F.explode(F.sequence(gy0, gy1)))
+        home.withColumn("tgx", F.expr(f"explode(sequence({gx0}, {gx1}))"))
+        .withColumn("tgy", F.expr(f"explode(sequence({gy0}, {gy1}))"))
         .select(
             (F.col("tgx") * F.lit(n) + F.col("tgy")).cast("long").alias("grp"),
             "id",

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from geos_spark.functions.hilbert_native import (
     grid_xy,
+    sql_name,
     with_tile_key,
     with_tile_keys_exploded,
 )
@@ -100,15 +101,12 @@ def knn_join(
     level: int = 4,
     extent=DEFAULT_EXTENT,
     broadcast_build: bool | None = None,
-    build_count: int | None = None,
 ) -> DataFrame:
     """Cell-ring-expansion kNN (scale path for large build sides).
 
     ``broadcast_build``: force (True/False) the broadcast hint on the
     build side. Default None adds no hint and runs no plan-time action
-    — Catalyst/AQE decide from actual sizes. ``build_count`` is an
-    optional row-count hint: when given (and broadcast_build is None),
-    the build side is broadcast iff it is at most 100k rows.
+    — Catalyst/AQE decide from actual sizes.
 
     Two-phase plan (constant job count for dense build sides, no
     iterative lineage):
@@ -140,8 +138,8 @@ def knn_join(
     bx, by = build_xy
 
     def grid(df: DataFrame, xc: str, yc: str, pre: str) -> DataFrame:
-        gx, gy = grid_xy(F.col(xc), F.col(yc), level, extent)
-        return df.withColumn(pre + "gx", gx).withColumn(pre + "gy", gy)
+        gx, gy = grid_xy(sql_name(xc), sql_name(yc), level, extent)
+        return df.withColumns({pre + "gx": F.expr(gx), pre + "gy": F.expr(gy)})
 
     def ckpt(df: DataFrame) -> DataFrame:
         """Cut lineage lazily: the reuse pattern here is a handful of
@@ -157,12 +155,10 @@ def knn_join(
     # the probe-side explode destroys Catalyst's size estimate, so the
     # planner may not pick a broadcast join on its own (the same trap
     # as spatial_join). Callers who know the build side is small pass
-    # broadcast_build=True (or a build_count hint); with the default
-    # None we add NO plan-time action — the build scan keeps its own
-    # statistics, so Catalyst's autoBroadcastJoinThreshold and AQE's
-    # runtime join-strategy switch handle the decision from real sizes.
-    if broadcast_build is None and build_count is not None:
-        broadcast_build = build_count <= 100_000
+    # broadcast_build=True; with the default None we add NO plan-time
+    # action — the build scan keeps its own statistics, so Catalyst's
+    # autoBroadcastJoinThreshold and AQE's runtime join-strategy switch
+    # handle the decision from real sizes.
     if broadcast_build:
         b = F.broadcast(b)
 

@@ -107,16 +107,18 @@ def pip_refine(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
     the polygon WKB: each distinct polygon is decoded once per Arrow
     batch."""
     from geos_spark.kernels.pip import locate_in_geoms
-    from geos_spark.kernels.wkb import decode_polygons
+    from geos_spark.kernels.wkb import decode_polygons_flagged
 
     _drop_zip_importers()
 
     codes, uniques = pd.factorize(wkb.map(bytes))
-    pack, geom_offsets = decode_polygons(list(uniques))
-    return pd.Series(locate_in_geoms(px, py, pack, geom_offsets, codes))
+    pack, geom_offsets, bad = decode_polygons_flagged(list(uniques))
+    loc = locate_in_geoms(px, py, pack, geom_offsets, codes)
+    return _with_nulls(loc, bad[codes] if bad.any() else None)
 
 
-# Per python worker: prepared-dim token -> (sorted ids, pack, offsets).
+# Per python worker: prepared-dim token -> (sorted ids, pack, offsets,
+# undecodable rows or None).
 # Module state survives across the tasks a reused worker runs (a UDF
 # closure's own state is unpickled afresh for every task); bounded so
 # a long-lived worker does not keep every dim a session prepared.
@@ -124,17 +126,28 @@ _WORKER_PACKS: dict = {}
 _WORKER_PACKS_MAX = 8
 
 
+def _with_nulls(loc: np.ndarray, null: np.ndarray | None) -> pd.Series:
+    """Locations as a Series, NULL where ``null`` is set: the GEOS
+    C-API per-row NULL for a polygon that fails to decode, which the
+    predicate filter then drops."""
+    if null is None or not null.any():
+        return pd.Series(loc)
+    return pd.Series(pd.arrays.IntegerArray(loc, null))
+
+
 def _worker_pack(token: str, bc):
     """The decoded polygons of one prepared dim, decoded on the first
     batch this worker refines against it."""
-    from geos_spark.kernels.wkb import decode_polygons
+    from geos_spark.kernels.wkb import decode_polygons_flagged
 
     hit = _WORKER_PACKS.get(token)
     if hit is None:
         if len(_WORKER_PACKS) >= _WORKER_PACKS_MAX:
             del _WORKER_PACKS[next(iter(_WORKER_PACKS))]  # oldest first
         ids, wkbs = bc.value
-        hit = _WORKER_PACKS[token] = (ids, *decode_polygons(wkbs))
+        pack, geom_offsets, bad = decode_polygons_flagged(wkbs)
+        bad = bad if bad.any() else None
+        hit = _WORKER_PACKS[token] = (ids, pack, geom_offsets, bad)
         _drop_zip_importers()
     return hit
 
@@ -151,14 +164,18 @@ def _refine_by_id(bc, token: str):
     ) -> pd.Series:
         from geos_spark.kernels.pip import locate_in_geoms
 
-        ids, pack, geom_offsets = _worker_pack(token, bc)
+        ids, pack, geom_offsets, bad = _worker_pack(token, bc)
         out = np.full(len(pid), _INTERIOR, dtype=np.int32)
         todo = ~full.to_numpy(bool)
         codes = np.searchsorted(ids, pid.to_numpy(np.int64)[todo])
         out[todo] = locate_in_geoms(
             px.to_numpy()[todo], py.to_numpy()[todo], pack, geom_offsets, codes
         )
-        return pd.Series(out)
+        null = None
+        if bad is not None:
+            null = np.zeros(len(pid), dtype=bool)
+            null[todo] = bad[codes]
+        return _with_nulls(out, null)
 
     return _refine
 
@@ -218,7 +235,8 @@ def prepare_polygons(
     a point outside a build row's ALL mask is dropped by the join, a
     point in its FULL mask is INTERIOR, and only the rest reach the
     exact refine. A polygon the driver cannot decode gets all-PARTIAL
-    masks, so every candidate of it is refined."""
+    masks, so every candidate of it reaches the refine, which gives it
+    a NULL location: the join drops it."""
     import pyarrow as pa
 
     key = (poly_id_col, tuple(bbox_cols), wkb_col, level, tuple(extent))
@@ -703,10 +721,10 @@ def polygon_join(
         & (F.col(bymin) <= F.col(aymax))
     )
     # reference-point dedup (codegen'd, no shuffle)
-    rx = F.greatest(F.col(axmin), F.col(bxmin))
-    ry = F.greatest(F.col(aymin), F.col(bymin))
+    rx = f"greatest({sql_name(axmin)}, {sql_name(bxmin)})"
+    ry = f"greatest({sql_name(aymin)}, {sql_name(bymin)})"
     rgx, rgy = grid_xy(rx, ry, level, extent)
-    cand = cand.where((F.col("__gx") == rgx) & (F.col("__gy") == rgy))
+    cand = cand.where(f"__gx = {rgx} AND __gy = {rgy}")
 
     refined = cand.withColumn(
         "__ok", relate_refine(predicate)(F.col(a_wkb), F.col(b_wkb))

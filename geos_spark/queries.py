@@ -4237,57 +4237,6 @@ QUERIES.update({"stream_pii": q_stream_pii})
 ORACLES.update({"stream_pii": q_pii_redact_sql()})
 
 
-def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights toward the English subset: hashed
-    unigram models (4096 buckets, add-1 smoothing) for target=en vs
-    raw=all, per-doc mean log-likelihood ratio. Both models broadcast;
-    the oracle replays the full pipeline in SQL."""
-    from geos_spark.operators.curation import dsir_weights
-
-    docs = _docs(spark, sf_dir)
-    out = dsir_weights(docs, docs.where(F.col("lang") == "en"))
-    return out.select(
-        "doc_id",
-        "n_toks",
-        F.round(F.col("weight"), 6).alias("weight_r"),
-    )
-
-
-def q_dsir_sql() -> str:
-    return r"""
-WITH tok AS (
-  SELECT doc_id, lang,
-         unnest(string_split_regex(trim(text), '\s+')) AS w
-  FROM documents
-), tb AS (
-  SELECT doc_id, lang,
-         CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % 4096 AS b
-  FROM tok
-), tmodel AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS ctn FROM tb
-  WHERE lang = 'en' GROUP BY b
-), cmodel AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS ccn FROM tb GROUP BY b
-), ttot AS (SELECT SUM(ctn) AS T FROM tmodel),
-ctot AS (SELECT SUM(ccn) AS C FROM cmodel),
-scored AS (
-  SELECT tb.doc_id,
-         ln(COALESCE(t.ctn, 0) + 1.0) - ln(COALESCE(c.ccn, 0) + 1.0) AS lr
-  FROM tb
-  LEFT JOIN tmodel t ON tb.b = t.b
-  LEFT JOIN cmodel c ON tb.b = c.b
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-       ROUND(AVG(lr) - ln(T + 4096.0) + ln(C + 4096.0), 6) AS weight_r
-FROM scored CROSS JOIN ttot CROSS JOIN ctot
-GROUP BY doc_id, T, C
-"""
-
-
-QUERIES.update({"dsir": q_dsir})
-ORACLES.update({"dsir": q_dsir_sql()})
-
-
 def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-exponent corpus diagnostic: OLS of ln(freq) on ln(rank)
     over the top-1000 terms (distributed top-k, never a global sort)."""
@@ -4323,35 +4272,8 @@ FROM top
 """
 
 
-def q_median_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive per-language median threshold: keep docs at or above
-    their language's exact median length."""
-    from geos_spark.operators.curation import median_filter
-
-    out = median_filter(_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.round(F.col("group_median"), 6).alias("median_r"),
-    )
-
-
-def q_median_filter_sql() -> str:
-    return """
-WITH med AS (
-  SELECT lang, median(n_chars) AS m FROM documents GROUP BY lang
-)
-SELECT d.doc_id, d.lang, d.n_chars, ROUND(m, 6) AS median_r
-FROM documents d JOIN med USING (lang)
-WHERE d.n_chars >= m
-"""
-
-
-QUERIES.update({"zipf": q_zipf, "median_filter": q_median_filter})
-ORACLES.update(
-    {"zipf": q_zipf_sql(), "median_filter": q_median_filter_sql()}
-)
+QUERIES.update({"zipf": q_zipf})
+ORACLES.update({"zipf": q_zipf_sql()})
 
 
 def q_xt_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4784,51 +4706,6 @@ SELECT vec_id, cid, ROUND(d2, 6) AS dist2_r FROM (
 
 QUERIES.update({"kmeans": q_kmeans})
 ORACLES.update({"kmeans": q_kmeans_sql()})
-
-
-def q_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixture calculator: per-language keep-rates realizing a
-    target token mixture under the no-upsampling rule (the binding
-    scarcest-supply group keeps 100%)."""
-    from geos_spark.operators.curation import mixture_rates
-
-    out = mixture_rates(
-        _docs(spark, sf_dir),
-        {"en": 0.4, "de": 0.2, "fr": 0.2, "es": 0.1, "zh": 0.1},
-    )
-    return out.select(
-        "lang",
-        F.col("tokens").cast("long").alias("tokens"),
-        F.round("current_frac", 6).alias("current_frac_r"),
-        F.round("target_frac", 6).alias("target_frac_r"),
-        F.round("rate", 6).alias("rate_r"),
-    )
-
-
-def q_mixture_sql() -> str:
-    return """
-WITH t(lang, target_frac) AS (
-  VALUES ('de', 0.2), ('en', 0.4), ('es', 0.1), ('fr', 0.2), ('zh', 0.1)
-), sup AS (
-  SELECT lang, CAST(SUM(n_chars) AS DOUBLE) AS tokens
-  FROM documents GROUP BY lang
-), j AS (
-  SELECT s.lang, s.tokens, CAST(t.target_frac AS DOUBLE) AS target_frac,
-         s.tokens / (SELECT SUM(tokens) FROM sup) AS current_frac,
-         CAST(t.target_frac AS DOUBLE) / s.tokens AS supply_ratio
-  FROM sup s JOIN t ON s.lang = t.lang
-)
-SELECT lang, CAST(tokens AS BIGINT) AS tokens,
-       ROUND(current_frac, 6) AS current_frac_r,
-       ROUND(target_frac, 6) AS target_frac_r,
-       ROUND(LEAST(1.0, target_frac / (SELECT MAX(supply_ratio) FROM j)
-                        / tokens), 6) AS rate_r
-FROM j
-"""
-
-
-QUERIES.update({"mixture": q_mixture})
-ORACLES.update({"mixture": q_mixture_sql()})
 
 
 def q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5349,326 +5226,6 @@ QUERIES.update({"host_cc": q_host_cc})
 ORACLES.update({"host_cc": q_host_cc_sql()})
 
 
-def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training (Sennrich merge learning) over the
-    documents corpus: 8 merges learned on the word-count domain table
-    — per-iteration pair-count shuffle + TakeOrdered argmax + one
-    literal replace() on the SEP-wrapped symbol encoding, all JVM
-    (``operators/bpe.py``). The oracle unrolls the same loop into 8
-    DuckDB CTE stages; tie-breaks are (count DESC, lhs, rhs) binary
-    collation, so the learned table is bit-stable across engines."""
-    from geos_spark.operators.bpe import bpe_train
-
-    return bpe_train(_docs(spark, sf_dir), merges=8)
-
-
-def q_bpe_train_sql() -> str:
-    from geos_spark.operators.bpe import bpe_train_sql
-
-    return bpe_train_sql(merges=8)
-
-
-QUERIES.update({"bpe_train": q_bpe_train})
-ORACLES.update({"bpe_train": q_bpe_train_sql()})
-
-
-def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subword vocabulary histogram under learned BPE merges: train 8
-    merges on the documents corpus, then the 32 most frequent tokens
-    with corpus totals — computed off the final word-count domain
-    table (one vocabulary-sized explode+agg, no second corpus scan).
-    Ordering ties break on token ASC, so the top-32 cut is bit-stable
-    across engines."""
-    from geos_spark.operators.bpe import bpe_vocab
-
-    return bpe_vocab(_docs(spark, sf_dir), merges=8, top=32)
-
-
-def q_bpe_vocab_sql() -> str:
-    from geos_spark.operators.bpe import bpe_vocab_sql
-
-    return bpe_vocab_sql(merges=8, top=32)
-
-
-QUERIES.update({"bpe_vocab": q_bpe_vocab})
-ORACLES.update({"bpe_vocab": q_bpe_vocab_sql()})
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counts under the learned BPE vocabulary:
-    encoding as a (doc, word) -> domain-table lookup join — the final
-    training domain already holds every distinct word's segmentation,
-    so no document is re-tokenized. NULL-text docs keep their row with
-    0 tokens (explode_outer / left-join contract on both engines)."""
-    from geos_spark.operators.bpe import bpe_encode
-
-    return bpe_encode(_docs(spark, sf_dir), merges=8)
-
-
-def q_bpe_encode_sql() -> str:
-    from geos_spark.operators.bpe import bpe_encode_sql
-
-    return bpe_encode_sql(merges=8)
-
-
-QUERIES.update({"bpe_encode": q_bpe_encode})
-ORACLES.update({"bpe_encode": q_bpe_encode_sql()})
-
-
-def q_doc_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document self-perplexity under a corpus-trained bigram LM
-    with add-one smoothing (the CCNet model-based quality signal;
-    Wenzek et al. 2020): two count aggregations train the LM, scoring
-    is shuffle equijoins of each doc's bigrams against the count
-    tables — no broadcast of corpus-sized state, no driver loop."""
-    from geos_spark.operators.lm import doc_perplexity
-
-    return doc_perplexity(_docs(spark, sf_dir))
-
-
-def q_doc_ppl_sql() -> str:
-    from geos_spark.operators.lm import doc_perplexity_sql
-
-    return doc_perplexity_sql()
-
-
-QUERIES.update({"doc_ppl": q_doc_ppl})
-ORACLES.update({"doc_ppl": q_doc_ppl_sql()})
-
-
-def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail quality buckets: NTILE(3) over rounded
-    perplexity with doc_id tie-break (bit-stable cut points), reported
-    as per-bucket count/min/max/avg. The oracle-checked exact path;
-    the 100 TB shape is threshold bucketing (lm.bucket_by_thresholds),
-    a pure narrow map against pre-computed quantile boundaries."""
-    from geos_spark.operators.lm import ppl_buckets
-
-    return ppl_buckets(_docs(spark, sf_dir), n_buckets=3)
-
-
-def q_ppl_buckets_sql() -> str:
-    from geos_spark.operators.lm import ppl_buckets_sql
-
-    return ppl_buckets_sql(n_buckets=3)
-
-
-QUERIES.update({"ppl_buckets": q_ppl_buckets})
-ORACLES.update({"ppl_buckets": q_ppl_buckets_sql()})
-
-
-def q_logreg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed logistic-regression training, itself correctness-
-    gated: 5 batch-GD iterations over hashed-BOW features (64 bins +
-    bias, portable-md5 hashing) predicting lang='en'; per-iteration
-    dot/gradient rounding to 9 decimals makes the float training
-    trajectory bit-identical across engines (see operators/classifier
-    for the tie analysis behind INIT_W and LR). Output = the learned
-    weight vector."""
-    from geos_spark.operators.classifier import logreg_weights
-
-    return logreg_weights(_docs(spark, sf_dir), F.col("lang") == "en")
-
-
-def q_logreg_weights_sql() -> str:
-    from geos_spark.operators.classifier import logreg_weights_sql
-
-    return logreg_weights_sql("lang = 'en'")
-
-
-QUERIES.update({"logreg_weights": q_logreg_weights})
-ORACLES.update({"logreg_weights": q_logreg_weights_sql()})
-
-
-def q_logreg_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confusion matrix of the trained hashed-BOW classifier on its
-    training corpus — prediction is the sign of the rounded dot
-    product (no exp in the decision), so the counts are exact
-    integers on both engines."""
-    from geos_spark.operators.classifier import logreg_confusion
-
-    return logreg_confusion(_docs(spark, sf_dir), F.col("lang") == "en")
-
-
-def q_logreg_confusion_sql() -> str:
-    from geos_spark.operators.classifier import logreg_confusion_sql
-
-    return logreg_confusion_sql("lang = 'en'")
-
-
-QUERIES.update({"logreg_confusion": q_logreg_confusion})
-ORACLES.update({"logreg_confusion": q_logreg_confusion_sql()})
-
-
-def q_curate_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The model-based curation decision as ONE scored row (the tier
-    DCLM/CCNet stack on top of the heuristic curate_pipeline): per
-    document, its bigram-LM perplexity NTILE bucket and its trained
-    hashed-BOW classifier prediction, combined into keep = not in the
-    perplexity tail AND classifier positive. All-integer output; the
-    oracle replays LM scoring, SQL NTILE, and the full unrolled GD
-    chain."""
-    from geos_spark.operators.curation import model_quality_gate
-
-    return model_quality_gate(_docs(spark, sf_dir), F.col("lang") == "en")
-
-
-def q_curate_model_sql() -> str:
-    from geos_spark.operators.classifier import logreg_scores_sql
-    from geos_spark.operators.lm import doc_perplexity_sql
-
-    return f"""WITH ppl_t AS MATERIALIZED (
-{doc_perplexity_sql()}
-),
-bucketed AS (
-  SELECT doc_id, NTILE(3) OVER (ORDER BY ppl ASC, doc_id ASC) AS bucket
-  FROM ppl_t
-),
-scores AS MATERIALIZED (
-{logreg_scores_sql("lang = 'en'")}
-)
-SELECT b.doc_id, b.bucket::INT AS bucket,
-       (CASE WHEN s.dot > 0 THEN 1 ELSE 0 END)::INT AS pred,
-       (CASE WHEN b.bucket < 3 AND s.dot > 0 THEN 1 ELSE 0 END)::INT AS keep
-FROM bucketed b JOIN scores s USING (doc_id)"""
-
-
-QUERIES.update({"curate_model": q_curate_model})
-ORACLES.update({"curate_model": q_curate_model_sql()})
-
-
-def q_doc_ppl_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney self-perplexity (the KenLM smoothing
-    family CCNet's quality model actually uses): absolute-discount
-    bigram probability backed off to the continuation distribution
-    (distinct-context counts, not raw frequencies). Two extra
-    vocabulary-sized aggregations over the distinct-bigram table plus
-    a 1-row broadcast vs the add-one path."""
-    from geos_spark.operators.lm import doc_perplexity_kn
-
-    return doc_perplexity_kn(_docs(spark, sf_dir))
-
-
-def q_doc_ppl_kn_sql() -> str:
-    from geos_spark.operators.lm import doc_perplexity_kn_sql
-
-    return doc_perplexity_kn_sql()
-
-
-QUERIES.update({"doc_ppl_kn": q_doc_ppl_kn})
-ORACLES.update({"doc_ppl_kn": q_doc_ppl_kn_sql()})
-
-
-def q_stream_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of doc_ppl: documents arrive as a file-source
-    stream and are scored against the FROZEN bigram LM trained on the
-    static corpus (stream-static equijoins + streaming per-doc
-    aggregation, availableNow to completion) — hash-checked against
-    the SAME DuckDB oracle as the batch query."""
-    from geos_spark.streaming import (
-        read_documents_stream,
-        run_stream_to_memory,
-        streaming_ppl_score,
-    )
-
-    s = read_documents_stream(spark, f"{sf_dir}/documents.parquet")
-    out, _ = run_stream_to_memory(
-        streaming_ppl_score(s, _docs(spark, sf_dir)),
-        spark,
-        output_mode="complete",
-    )
-    return out
-
-
-QUERIES.update({"stream_ppl": q_stream_ppl})
-ORACLES.update({"stream_ppl": q_doc_ppl_sql()})
-
-
-def q_source_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source reputation rollup (the crawl-prioritization input a
-    curation pipeline feeds back to the crawler): document-level
-    bigram-LM perplexity aggregated by source — n_docs, mean/max ppl,
-    and mean doc length. One extra grouped aggregate over the doc_ppl
-    output joined back to the source dimension column."""
-    from geos_spark.operators.lm import doc_perplexity
-
-    docs = _docs(spark, sf_dir)
-    ppl = doc_perplexity(docs)
-    return (
-        ppl.join(docs.select("doc_id", "source", "n_chars"), "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.round(F.avg("ppl"), 6).alias("avg_ppl"),
-            F.round(F.max("ppl"), 6).alias("max_ppl"),
-            F.round(F.avg(F.col("n_chars").cast("double")), 6).alias("avg_chars"),
-        )
-    )
-
-
-def q_source_ppl_sql() -> str:
-    from geos_spark.operators.lm import doc_perplexity_sql
-
-    return f"""WITH ppl_t AS MATERIALIZED (
-{doc_perplexity_sql()}
-)
-SELECT d.source, COUNT(*)::BIGINT AS n_docs,
-       ROUND(AVG(p.ppl), 6) AS avg_ppl,
-       ROUND(MAX(p.ppl), 6) AS max_ppl,
-       ROUND(AVG(d.n_chars::DOUBLE), 6) AS avg_chars
-FROM ppl_t p JOIN documents d USING (doc_id)
-GROUP BY d.source"""
-
-
-QUERIES.update({"source_ppl": q_source_ppl})
-ORACLES.update({"source_ppl": q_source_ppl_sql()})
-
-
-def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic-cluster quality profiling (the SemDeDup-adjacent
-    composition): k-means clusters over the embedding space joined
-    with bigram-LM perplexity of the same documents — per cluster,
-    how many docs, how tight (mean squared distance), and how
-    predictable (mean ppl). The table a pipeline uses to prune
-    low-quality semantic regions wholesale."""
-    from geos_spark.operators.cluster import kmeans_assign
-    from geos_spark.operators.lm import doc_perplexity
-
-    km = kmeans_assign(_emb(spark, sf_dir), k=8, iterations=3)
-    ppl = doc_perplexity(_docs(spark, sf_dir))
-    return (
-        km.join(ppl, km["vec_id"] == ppl["doc_id"])
-        .groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            # average the ROUNDED per-vector distances — the oracle
-            # aggregates its dist2_r column, so the inputs must match
-            F.round(F.avg(F.round(F.col("dist2"), 6)), 6).alias("avg_dist2"),
-            F.round(F.avg("ppl"), 6).alias("avg_ppl"),
-        )
-    )
-
-
-def q_cluster_quality_sql() -> str:
-    from geos_spark.operators.lm import doc_perplexity_sql
-
-    return f"""WITH km AS MATERIALIZED (
-{q_kmeans_sql()}
-),
-ppl_t AS MATERIALIZED (
-{doc_perplexity_sql()}
-)
-SELECT km.cid, COUNT(*)::BIGINT AS n_docs,
-       ROUND(AVG(km.dist2_r), 6) AS avg_dist2,
-       ROUND(AVG(p.ppl), 6) AS avg_ppl
-FROM km JOIN ppl_t p ON km.vec_id = p.doc_id
-GROUP BY km.cid"""
-
-
-QUERIES.update({"cluster_quality": q_cluster_quality})
-ORACLES.update({"cluster_quality": q_cluster_quality_sql()})
-
-
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding near-dup pruning
     blocked by k-means cluster — candidate pairs are per-cluster
@@ -5705,28 +5262,6 @@ FROM km LEFT JOIN losers l USING (vec_id)"""
 
 QUERIES.update({"semdedup": q_semdedup})
 ORACLES.update({"semdedup": q_semdedup_sql()})
-
-
-def q_doc_ppl_kn3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trigram interpolated Kneser-Ney self-perplexity — the
-    higher-order KenLM recursion: absolute-discounted trigram
-    probability backed off through the bigram and unigram
-    CONTINUATION distributions (distinct-context counts at every
-    level below the top). Seven equijoins of the per-doc trigram
-    table against vocabulary-sized count aggregates."""
-    from geos_spark.operators.lm import doc_perplexity_kn3
-
-    return doc_perplexity_kn3(_docs(spark, sf_dir))
-
-
-def q_doc_ppl_kn3_sql() -> str:
-    from geos_spark.operators.lm import doc_perplexity_kn3_sql
-
-    return doc_perplexity_kn3_sql()
-
-
-QUERIES.update({"doc_ppl_kn3": q_doc_ppl_kn3})
-ORACLES.update({"doc_ppl_kn3": q_doc_ppl_kn3_sql()})
 
 
 # ----------------------------------------------------------------------

@@ -568,61 +568,6 @@ def streaming_crawl_delta(
     return j.select("url", status.alias("status"), "old_md5", "new_md5")
 
 
-def streaming_ppl_score(
-    sdf: DataFrame,
-    lm_corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Score STREAMING documents against a FROZEN bigram LM trained on
-    a static corpus — the production CCNet deployment shape (the LM is
-    trained offline; arriving crawl records are scored as they land).
-
-    The LM count tables (unigram, bigram, vocab size) are static
-    DataFrames; the stream side explodes each arriving doc's bigrams
-    and scores them through stream-static equijoins (supported
-    natively — the static side is broadcast/shuffled per micro-batch),
-    then a streaming per-doc aggregation (complete mode). Identical
-    arithmetic to ``lm.doc_perplexity``, so when the stream replays
-    the training corpus, the result table equals the batch query and
-    the same DuckDB oracle binds it.
-    """
-    from geos_spark.operators.lm import (
-        _doc_bigrams,
-        _doc_words,
-        _materialize,
-    )
-
-    # static LM side: one tokenize scan fans into uni/vocab/bi AND is
-    # re-read per micro-batch — materialize it once (streaming frames
-    # cannot be checkpointed, the static corpus side can)
-    words_s = _materialize(_doc_words(lm_corpus, id_col, text_col))
-    docw = words_s.select(F.explode("ws").alias("w"))
-    uni = docw.groupBy("w").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = docw.agg(F.count_distinct("w").alias("v"))
-    bi = _doc_bigrams(words_s, id_col).groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("c2")
-    )
-
-    dbg_stream = _doc_bigrams(_doc_words(sdf, id_col, text_col), id_col)
-    scored = (
-        dbg_stream.join(bi, ["w1", "w2"])
-        .join(uni, F.col("w1") == F.col("w"))
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            F.col(id_col),
-            F.log(
-                (F.col("c2") + F.lit(1.0))
-                / (F.col("c1") + F.col("v").cast("double"))
-            ).alias("logp"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.round(F.exp(-F.avg("logp")), 6).alias("ppl"),
-    )
-
-
 def streaming_dedup_cut(
     sdf: DataFrame,
     corpus: DataFrame,

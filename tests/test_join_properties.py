@@ -586,10 +586,10 @@ def test_subcell_tile_key_is_grid_xy_tile_key(spark, case):
     from geos_spark.kernels.subcells import SUB_LEVELS, grid_ordinate, grid_strides
 
     level, extent, _, points = case
-    gx, gy = grid_xy(F.col("x"), F.col("y"), level, extent)
+    gx, gy = grid_xy("x", "y", level, extent)
     rows = (
         with_tile_key(_points_df(spark, points), "x", "y", level, extent)
-        .select("pid", "__cell", "__sub", tile_key(gx, gy, level).alias("key"))
+        .select("pid", "__cell", "__sub", tile_key(F.expr(gx), F.expr(gy), level).alias("key"))
         .collect()
     )
     assert all(r["__cell"] == r["key"] for r in rows)

@@ -132,6 +132,47 @@ def test_malformed_dim_row_gets_all_partial_masks(spark):
     assert prepared.all_subcells > 4 * 64 and prepared.full_subcells > 0
 
 
+def test_malformed_dim_row_nulls_only_its_candidates(spark, tmp_path):
+    """A dim row whose WKB cannot be decoded does not abort the joins
+    against its dim: its candidates get a NULL location and drop out,
+    so the batch joins (broadcast and shuffle) and the stream join
+    return exactly the rows of the dim without it."""
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+    from geos_spark.operators.spatial_join import point_in_polygon_join
+    from geos_spark.streaming import run_stream_to_memory, streaming_pip_join
+
+    tri = write_wkb(Geom.polygon([[(1.0, 1.0), (30.0, 1.0), (30.0, 30.0), (1.0, 1.0)]]))
+    rows = [(1, tri, 1.0, 1.0, 30.0, 30.0), (2, b"\x01\x03\x00\x00", 0.0, 0.0, 40.0, 40.0)]
+    schema = "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double"
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
+        [(20, 10), (10, 20), (30, 15), (1, 1), (35, 35), (5, 2), (45, 45), (15.5, 15.5)]
+    )]
+    src = str(tmp_path / "points")
+    spark.createDataFrame(pts, "pid long, x double, y double").write.parquet(src)
+    points = spark.read.parquet(src)
+    kw = dict(level=2, extent=(0.0, 0.0, 64.0, 64.0), poly_id_col="poly_id")
+
+    def batch(dim, **extra):
+        out = point_in_polygon_join(points, dim, "intersects", keep_location=True, **kw, **extra)
+        return sorted(tuple(r) for r in out.select("pid", "poly_id", "location").collect())
+
+    def stream(dim):
+        s = spark.readStream.schema(points.schema).parquet(src)
+        out, _ = run_stream_to_memory(
+            streaming_pip_join(s, dim, **kw).select("pid", "poly_id"), spark, output_mode="append"
+        )
+        return sorted(tuple(r) for r in out.collect())
+
+    alone = spark.createDataFrame(rows[:1], schema)
+    both = spark.createDataFrame(rows, schema)
+    want = batch(alone)
+    assert [r[0] for r in want] == [0, 2, 3, 5, 7]
+    assert batch(both) == want
+    assert batch(both, broadcast_build=False) == batch(alone, broadcast_build=False) == want
+    assert stream(both) == stream(alone) == [r[:2] for r in want]
+
+
 def test_multimodal_plumbing(spark):
     from geos_spark.operators.multimodal import decode_image, extract_features
 

@@ -3,6 +3,8 @@
 randomized cross-check against an independent matplotlib-free winding
 implementation on clean inputs."""
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -115,3 +117,23 @@ def test_degenerate_empty_pairs():
         np.zeros((0, 2)), pack, np.zeros(0, dtype=int), np.zeros(0, dtype=int)
     )
     assert len(loc) == 0
+
+
+def test_subnormal_y_span_locates_without_float_warnings():
+    """A polygon whose y-span is subnormal has a subnormal stripe height
+    (or one that rounds to 0 once split into stripes): points above it
+    must not overflow the stripe index and in-range points still land
+    in a stripe."""
+    tri = np.array([[0, 0], [1, 5e-324], [0.5, 1e-323], [0, 0]])
+    # 9 segments -> 2 stripes over a 1-ulp span
+    comb = np.array(
+        [[0, 0], [1, 0], [2, 0], [3, 0], [4, 0],
+         [4, 5e-324], [3, 5e-324], [2, 5e-324], [1, 5e-324], [0, 0]]
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert locate_point_in_ring(0.5, 1.0, tri) == EXTERIOR
+        assert locate_point_in_ring(0.5, 5e-324, tri) == INTERIOR
+        assert locate_point_in_ring(0.5, 1.0, comb) == EXTERIOR
+        assert locate_point_in_ring(2.0, 5e-324, comb) == BOUNDARY
+        assert locate_point_in_ring(2.5, 0.0, comb) == BOUNDARY

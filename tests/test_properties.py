@@ -136,68 +136,6 @@ def test_char_entropy_bounds(spark, texts):
             assert r["e"] <= math.log(max(r["n"], 2)) + 1e-9
 
 
-_word = st.text(alphabet="abcd", min_size=1, max_size=4)
-_corpus = st.lists(
-    st.lists(_word, min_size=0, max_size=8).map(" ".join),
-    min_size=1,
-    max_size=6,
-)
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(_corpus)
-def test_bpe_train_matches_pure_python_on_random_corpora(spark, texts):
-    from geos_spark.operators.bpe import bpe_train
-    from tests.test_bpe import _ref_bpe
-
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [tuple(r) for r in bpe_train(df, merges=3).collect()]
-    assert got == _ref_bpe(texts, 3)
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(_corpus)
-def test_bpe_token_conservation(spark, texts):
-    # sum of per-doc encoded token counts == vocabulary histogram
-    # total: encoding is a pure re-partitioning of the corpus tokens
-    from geos_spark.operators.bpe import bpe_encode, bpe_vocab
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    enc = sum(r.n_bpe_tokens for r in bpe_encode(df, merges=2).collect())
-    voc = sum(r.total_count for r in bpe_vocab(df, merges=2, top=10**6).collect())
-    assert enc == voc
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(_corpus)
-def test_doc_perplexity_exceeds_one(spark, texts):
-    # with add-one smoothing p(w2|w1) = (c2+1)/(c1+V) < 1 strictly
-    # (c2 <= c1 with equality forcing V >= 2), so every defined
-    # self-perplexity is > 1
-    from geos_spark.operators.lm import doc_perplexity
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    for r in doc_perplexity(df).collect():
-        assert r.ppl > 1.0
-        assert r.n_bigrams >= 1
-
-
 _cellsets = st.sets(
     st.tuples(
         st.integers(min_value=0, max_value=14),

@@ -455,48 +455,3 @@ def test_stream_ann_multibatch_equals_batch(spark, tmp_path):
     assert got == expect
     assert len(rows) == len(expect)  # the duplicate emitted nothing
     assert len([p for p in q.recentProgress if p.numInputRows > 0]) >= 2
-
-
-def test_stream_ppl_equals_batch(spark):
-    from geos_spark.operators.lm import doc_perplexity
-    from geos_spark.streaming import (
-        read_documents_stream,
-        run_stream_to_memory,
-        streaming_ppl_score,
-    )
-
-    static = spark.read.parquet(DOCS)
-    s = read_documents_stream(spark, DOCS)
-    assert s.isStreaming
-    out, q = run_stream_to_memory(
-        streaming_ppl_score(s, static), spark, output_mode="complete"
-    )
-    assert _collect_sorted(out) == _collect_sorted(doc_perplexity(static))
-    assert not q.isActive
-
-
-def test_stream_ppl_frozen_lm_drops_unseen_bigrams(spark, tmp_path):
-    """The LM is FROZEN: a streamed doc whose bigrams never occurred
-    in the training corpus contributes no scoreable pairs (inner-join
-    semantics), while seen bigrams score with training counts."""
-    from geos_spark.streaming import (
-        read_documents_stream,
-        run_stream_to_memory,
-        streaming_ppl_score,
-    )
-
-    train = spark.createDataFrame(
-        [(0, "the cat sat on the mat")], "doc_id long, text string"
-    )
-    arriving = spark.createDataFrame(
-        [(10, "the cat sat"), (11, "entirely novel words here")],
-        "doc_id long, text string",
-    )
-    p = str(tmp_path / "arrivals")
-    arriving.write.parquet(p)
-    s = read_documents_stream(spark, p)
-    out, _ = run_stream_to_memory(
-        streaming_ppl_score(s, train), spark, output_mode="complete"
-    )
-    got = {r.doc_id: r.n_bigrams for r in out.collect()}
-    assert got == {10: 2}  # doc 11 has zero trained bigrams

@@ -344,41 +344,6 @@ def test_streaming_pii_incremental(spark, tmp_path):
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 2
 
 
-def test_dsir_weights_direction(spark):
-    from geos_spark.operators.curation import dsir_weights
-
-    # target distribution: "aa bb"; raw adds "zz ww" docs
-    corpus = spark.createDataFrame(
-        [
-            (1, "aa bb aa bb"),
-            (2, "zz ww zz ww"),
-            (3, "aa zz"),
-        ],
-        "doc_id int, text string",
-    )
-    target = spark.createDataFrame(
-        [(10, "aa bb aa bb aa bb")], "doc_id int, text string"
-    )
-    out = {
-        r["doc_id"]: r
-        for r in dsir_weights(corpus, target, buckets=64).collect()
-    }
-    # target-like doc outranks off-target doc; mixed in between
-    assert out[1]["weight"] > out[3]["weight"] > out[2]["weight"]
-    assert out[1]["n_toks"] == 4
-    # closed-form check for doc 2 (zz/ww never in target): corpus
-    # counts are zz=3 (doc2 x2 + doc3), ww=2, so
-    # lr = (2*(-ln 4) + 2*(-ln 3))/4; weight = lr - ln(6+64) + ln(10+64)
-    import math
-
-    exp = (
-        -(math.log(4.0) + math.log(3.0)) / 2.0
-        - math.log(6 + 64.0)
-        + math.log(10 + 64.0)
-    )
-    assert out[2]["weight"] == pytest.approx(exp, rel=1e-12)
-
-
 def test_zipf_fit_synthetic(spark):
     import math
 
@@ -401,20 +366,6 @@ def test_zipf_fit_synthetic(spark):
     assert out["slope"] == pytest.approx(-1.0, abs=0.01)
     assert out["r2"] > 0.999
     assert math.exp(out["intercept"]) == pytest.approx(1024, rel=0.02)
-
-
-def test_median_filter_exact(spark):
-    from geos_spark.operators.curation import median_filter
-
-    df = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (3, "a", 30), (4, "b", 5), (5, "b", 7)],
-        "doc_id int, lang string, n_chars int",
-    )
-    out = median_filter(df).collect()
-    kept = {r["doc_id"]: r["group_median"] for r in out}
-    # lang a: median 20 -> keep 2,3; lang b: median 6.0 -> keep 5
-    assert set(kept) == {2, 3, 5}
-    assert kept[2] == 20.0 and kept[5] == 6.0
 
 
 def test_hits_closed_form(spark):
@@ -529,26 +480,6 @@ def test_kmeans_two_blobs(spark):
     # other the odd (far) blob
     assert sorted(len(v) for v in by_cid.values()) == [1, 1]
     assert all(r["dist2"] < 0.01 for r in out)
-
-
-def test_mixture_rates_no_upsampling(spark):
-    from geos_spark.operators.curation import mixture_rates
-
-    # supplies: a=1000, b=100; targets 50/50 -> b binds (kept 100%),
-    # a downsampled to 100 tokens-worth -> rate 0.1
-    df = spark.createDataFrame(
-        [("a", 1000), ("b", 100)], "lang string, n_chars int"
-    )
-    out = {
-        r["lang"]: r
-        for r in mixture_rates(df, {"a": 0.5, "b": 0.5}).collect()
-    }
-    assert out["b"]["rate"] == pytest.approx(1.0)
-    assert out["a"]["rate"] == pytest.approx(0.1)
-    # realized mixture: 1000*0.1 : 100*1.0 = 50:50
-    assert out["a"]["tokens"] * out["a"]["rate"] == pytest.approx(
-        out["b"]["tokens"] * out["b"]["rate"]
-    )
 
 
 def _pr_ref(out, n_iter, d=0.85, weights=None, p=None, r0=None):

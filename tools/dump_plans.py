@@ -63,12 +63,6 @@ AUDITED = [
     ("kmeans", "k-means final assignment (broadcast centroid dim, "
      "zip_with distance fold, struct-min argmin -- the iterative "
      "rounds are separate checkpointed jobs)"),
-    ("doc_ppl", "corpus bigram-LM perplexity (two count aggregates "
-     "train the LM; scoring is bigram equijoins + 1-row vocab "
-     "broadcast, zero python)"),
-    ("bpe_encode", "BPE encoding as a domain-table lookup join "
-     "(merges baked in as replace() literals at train time; no "
-     "document re-tokenization)"),
     ("semdedup", "SemDeDup cluster-blocked embedding dedup "
      "(cid-keyed self-equijoin -- per-cluster products, never the "
      "corpus square; sequential-fold cosine)"),
