@@ -111,7 +111,8 @@ def pip_refine(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
 
     _drop_zip_importers()
 
-    codes, uniques = pd.factorize(wkb.map(bytes))
+    # a NULL WKB decodes as the empty one does: flagged, NULL location
+    codes, uniques = pd.factorize(wkb.fillna(b"").map(bytes))
     pack, geom_offsets, bad = decode_polygons_flagged(list(uniques))
     loc = locate_in_geoms(px, py, pack, geom_offsets, codes)
     return _with_nulls(loc, bad[codes] if bad.any() else None)

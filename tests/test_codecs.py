@@ -4,6 +4,7 @@ must parse and survive WKT->WKB->WKT)."""
 
 import glob
 import re
+import struct
 
 import numpy as np
 import pytest
@@ -12,6 +13,7 @@ from geos_spark.kernels import geom as G
 from geos_spark.kernels.wkb import (
     decode_points,
     decode_polygons,
+    decode_polygons_flagged,
     encode_points,
     parse_wkb,
     write_wkb,
@@ -82,6 +84,89 @@ def test_decode_polygons_pack():
     assert pack.n_polys == 3
     assert list(offs) == [0, 1, 3]
     assert pack.bbox[0].tolist() == [0, 0, 4, 4]
+
+
+_SQUARE = write_wkb(parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"))
+_TWO = write_wkb(
+    parse_wkt(
+        "MULTIPOLYGON (((10 10, 12 10, 12 12, 10 10)),"
+        " ((20 20, 22 20, 22 22, 20 20)))"
+    )
+)
+# one per way a polygon WKB can fail to decode
+_MALFORMED = {
+    "empty": b"",
+    "header_only": _SQUARE[:4],
+    "no_ring_count": _SQUARE[:5],
+    "cut_ring_length": _SQUARE[:11],
+    "cut_coordinates": _SQUARE[:-3],
+    "unknown_type": _SQUARE[:1] + struct.pack("<I", 99) + _SQUARE[5:],
+    "bad_byte_order": b"\x07" + _SQUARE[1:],
+    "ring_count_past_end": _SQUARE[:5] + struct.pack("<I", 2**31) + _SQUARE[9:],
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_MALFORMED))
+def test_decode_polygons_flagged_flags_the_malformed_row(kind):
+    bad_wkb = _MALFORMED[kind]
+    with pytest.raises(Exception):
+        decode_polygons([bad_wkb])
+    pack, offs, bad = decode_polygons_flagged([_SQUARE, bad_wkb, _TWO])
+    assert bad.tolist() == [False, True, False]
+    # the bad row owns an empty polygon range; the others keep theirs
+    assert offs.tolist() == [0, 1, 1, 3]
+    ref, _ = decode_polygons([_SQUARE, _TWO])
+    assert np.array_equal(pack.coords, ref.coords)
+    assert np.array_equal(pack.bbox, ref.bbox)
+
+
+@pytest.mark.parametrize("at", [0, 1, 2, 3])
+def test_decode_polygons_flagged_keeps_rows_aligned(at):
+    good = [_TWO, _SQUARE, _TWO]
+    rows = good[:at] + [_MALFORMED["header_only"]] + good[at:]
+    pack, offs, bad = decode_polygons_flagged(rows)
+    assert np.flatnonzero(bad).tolist() == [at]
+    sizes = np.diff(offs).tolist()
+    assert sizes == [2, 1, 2][:at] + [0] + [2, 1, 2][at:]
+    _, ref_offs = decode_polygons(good)
+    assert offs[-1] == ref_offs[-1] == pack.n_polys
+
+
+def test_decode_polygons_flagged_decodes_good_rows_in_one_call(monkeypatch):
+    from geos_spark.kernels import wkb
+
+    calls = []
+
+    def counted(wkbs):
+        calls.append(len(wkbs))
+        return decode_polygons(wkbs)
+
+    monkeypatch.setattr(wkb, "decode_polygons", counted)
+    _, offs, bad = wkb.decode_polygons_flagged([_SQUARE, _TWO] * 3)
+    assert calls == [6]
+    assert not bad.any() and offs.tolist() == [0, 1, 3, 4, 6, 7, 9]
+
+
+def test_decode_polygons_flagged_every_row_bad():
+    pack, offs, bad = decode_polygons_flagged(list(_MALFORMED.values()))
+    assert bad.all()
+    assert offs.tolist() == [0] * (len(_MALFORMED) + 1)
+    assert pack.n_polys == 0 and len(pack.coords) == 0
+
+
+def test_decode_polygons_flagged_no_rows():
+    pack, offs, bad = decode_polygons_flagged([])
+    assert offs.tolist() == [0] and bad.tolist() == [] and pack.n_polys == 0
+
+@pytest.mark.parametrize(
+    "wkt,n_polys",
+    [("POINT (1 2)", 0), ("LINESTRING (1 2, 3 4)", 0), ("POLYGON EMPTY", 1)],
+)
+def test_decode_polygons_flagged_non_areal_rows_are_not_bad(wkt, n_polys):
+    # a row that decodes is never flagged, whatever polygons it yields
+    _, offs, bad = decode_polygons_flagged([write_wkb(parse_wkt(wkt)), _SQUARE])
+    assert not bad.any()
+    assert offs.tolist() == [0, n_polys, n_polys + 1]
 
 
 def _xml_wkts():

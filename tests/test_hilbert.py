@@ -129,3 +129,94 @@ def test_tile_levels_above_16_raise(spark):
         with_tile_cell(pts, "x", "y", 17, extent)
     with pytest.raises(ValueError):
         point_in_polygon_join(pts, polys, level=17, extent=extent)
+
+
+# awkward names: every grid helper must quote what it is given
+_QX, _QY = "x coord", "y`q"
+
+
+@pytest.mark.parametrize(
+    "level,extent",
+    [(0, (0.0, 0.0, 4096.0, 4096.0)), (5, (-3.5, 1.25, 97.0, 50.3)), (16, (0.0, 0.0, 4096.0, 4096.0))],
+)
+def test_grid_xy_sql_matches_numpy_ordinates(spark, level, extent):
+    """``grid_xy``'s SQL ordinates equal ``grid_ordinate``'s on tile
+    edges and one ulp either side, the extent corners and points
+    outside the extent."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from geos_spark.functions.hilbert_native import grid_xy, sql_name
+    from geos_spark.kernels.subcells import grid_ordinate, grid_strides
+
+    n = 1 << level
+    sx, sy = grid_strides(level, extent)
+    xs, ys = [], []
+    for k in (0, 1, n // 2, n - 1, n):
+        ex, ey = extent[0] + k * sx, extent[1] + k * sy
+        for d in (-math.inf, None, math.inf):
+            xs.append(ex if d is None else math.nextafter(ex, d))
+            ys.append(ey if d is None else math.nextafter(ey, d))
+    xs += [extent[0] - 10 * sx, extent[2] + 10 * sx, extent[2], extent[0]]
+    ys += [extent[3], extent[1], extent[1] - 10 * sy, extent[3] + 10 * sy]
+    df = spark.createDataFrame(list(zip(xs, ys)), [_QX, _QY])
+    gx, gy = grid_xy(sql_name(_QX), sql_name(_QY), level, extent)
+    got = [(r[0], r[1]) for r in df.select(F.expr(gx), F.expr(gy)).collect()]
+    want = zip(
+        grid_ordinate(xs, extent[0], sx, n).astype(np.int64).tolist(),
+        grid_ordinate(ys, extent[1], sy, n).astype(np.int64).tolist(),
+    )
+    assert got == list(want)
+
+
+@pytest.mark.parametrize("pad", [0.0, 0.75])
+def test_with_grid_exploded_covers_the_padded_envelope(spark, pad):
+    """Each box explodes to exactly the tiles its padded envelope
+    overlaps, clamped to the grid, under column names that need
+    quoting (a dot would otherwise read as a struct field)."""
+    from geos_spark.functions.hilbert_native import with_grid_exploded
+    from geos_spark.kernels.subcells import grid_ordinate, grid_strides
+
+    level, extent = 3, (-3.5, 1.25, 97.0, 50.3)
+    n = 1 << level
+    sx, sy = grid_strides(level, extent)
+    boxes = [
+        (0, 10.0, 10.0, 10.0, 10.0),  # a point-sized box
+        (1, -3.5, 1.25, 97.0, 50.3),  # the whole extent
+        (2, -50.0, -50.0, -40.0, -40.0),  # outside, below the origin
+        (3, extent[0] + 2 * sx, extent[1] + sy, extent[0] + 5 * sx, extent[1] + 3 * sy),  # on tile edges
+    ]
+    cols = ("min x", "min y", "max.x", "max.y")
+    df = spark.createDataFrame(boxes, ["id", *cols])
+    got = sorted(
+        (r[0], r[1], r[2])
+        for r in with_grid_exploded(df, cols, level, extent, pad).select("id", "__gx", "__gy").collect()
+    )
+
+    def ords(v, origin, stride):
+        return int(grid_ordinate([v], origin, stride, n)[0])
+
+    want = sorted(
+        (i, gx, gy)
+        for i, x0, y0, x1, y1 in boxes
+        for gx in range(ords(x0 - pad, extent[0], sx), ords(x1 + pad, extent[0], sx) + 1)
+        for gy in range(ords(y0 - pad, extent[1], sy), ords(y1 + pad, extent[1], sy) + 1)
+    )
+    assert got == want
+
+
+def test_with_tile_cell_quotes_its_columns(spark):
+    from geos_spark.functions.hilbert_native import with_tile_cell
+    from geos_spark.kernels.subcells import grid_ordinate, grid_strides
+
+    level, extent = 4, (0.0, 0.0, 4096.0, 4096.0)
+    n = 1 << level
+    sx, sy = grid_strides(level, extent)
+    rs = np.random.RandomState(4)
+    xy = np.concatenate([rs.uniform(-100, 4200, size=(40, 2)), [[0.0, 0.0], [4096.0, 4096.0]]])
+    df = spark.createDataFrame([tuple(map(float, p)) for p in xy], [_QX, _QY])
+    got = [r.cell for r in with_tile_cell(df, _QX, _QY, level, extent).collect()]
+    gx = grid_ordinate(xy[:, 0], extent[0], sx, n).astype(np.int64)
+    gy = grid_ordinate(xy[:, 1], extent[1], sy, n).astype(np.int64)
+    assert got == H.hilbert_encode(level, gx, gy).astype(np.int64).tolist()

@@ -173,6 +173,62 @@ def test_malformed_dim_row_nulls_only_its_candidates(spark, tmp_path):
     assert stream(both) == stream(alone) == [r[:2] for r in want]
 
 
+@pytest.mark.parametrize("bad_wkb", [None, b"", b"\x01\x03\x00\x00"], ids=["null", "empty", "header_only"])
+def test_pip_refine_nulls_rows_it_cannot_decode(bad_wkb):
+    """The shuffle join's refine, on one batch: rows whose WKB is NULL
+    or cannot be decoded get a NULL location, every other row (repeated
+    polygons included) the kernel's."""
+    import pandas as pd
+
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+    from geos_spark.operators.spatial_join import pip_refine
+
+    sq = write_wkb(Geom.polygon([[(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]]))
+    px = pd.Series([2.0, 4.0, 2.0, 9.0, 2.0])
+    py = pd.Series([2.0, 1.0, 2.0, 9.0, 2.0])
+    wkb = pd.Series([sq, sq, bad_wkb, sq, bad_wkb], dtype=object)
+    got = pip_refine.func(px, py, wkb)
+    assert got.isna().tolist() == [False, False, True, False, True]
+    assert got[~got.isna()].astype(int).tolist() == [0, 1, 2]  # INTERIOR, BOUNDARY, EXTERIOR
+
+@pytest.mark.parametrize("path", ["prepared", "shuffle", "stream"])
+def test_null_wkb_dim_row_drops_out_of_the_join(spark, tmp_path, path):
+    """A dim row with a NULL WKB (and a valid envelope) is a row that
+    cannot be decoded: its candidates get a NULL location, and each
+    join path returns exactly the rows of the dim without it."""
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+    from geos_spark.operators.spatial_join import point_in_polygon_join
+    from geos_spark.streaming import run_stream_to_memory, streaming_pip_join
+
+    tri = write_wkb(Geom.polygon([[(1.0, 1.0), (30.0, 1.0), (30.0, 30.0), (1.0, 1.0)]]))
+    rows = [(1, tri, 1.0, 1.0, 30.0, 30.0), (2, None, 0.0, 0.0, 40.0, 40.0)]
+    schema = "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double"
+    src = str(tmp_path / "points")
+    spark.createDataFrame(
+        [(0, 20.0, 10.0), (1, 10.0, 20.0), (2, 30.0, 15.0), (3, 35.0, 35.0), (4, 15.5, 15.5)],
+        "pid long, x double, y double",
+    ).write.parquet(src)
+    kw = dict(level=2, extent=(0.0, 0.0, 64.0, 64.0), poly_id_col="poly_id")
+
+    def join(dim):
+        if path == "stream":
+            s = spark.readStream.schema("pid long, x double, y double").parquet(src)
+            out, _ = run_stream_to_memory(
+                streaming_pip_join(s, dim, **kw).select("pid", "poly_id"), spark, output_mode="append"
+            )
+        else:
+            out = point_in_polygon_join(
+                spark.read.parquet(src), dim, broadcast_build=path == "prepared", **kw
+            ).select("pid", "poly_id")
+        return sorted(tuple(r) for r in out.collect())
+
+    assert join(spark.createDataFrame(rows, schema)) == join(
+        spark.createDataFrame(rows[:1], schema)
+    ) == [(0, 1), (2, 1), (4, 1)]
+
+
 def test_multimodal_plumbing(spark):
     from geos_spark.operators.multimodal import decode_image, extract_features
 

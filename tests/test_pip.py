@@ -137,3 +137,53 @@ def test_subnormal_y_span_locates_without_float_warnings():
         assert locate_point_in_ring(0.5, 1.0, comb) == EXTERIOR
         assert locate_point_in_ring(2.0, 5e-324, comb) == BOUNDARY
         assert locate_point_in_ring(2.5, 0.0, comb) == BOUNDARY
+
+
+# a 40-segment square (10 stripes) with its top edge at y = 4
+_COMB_TOP = np.array(
+    [[x, 0.0] for x in np.linspace(0, 4, 11)]
+    + [[4.0, y] for y in np.linspace(0, 4, 11)[1:]]
+    + [[x, 4.0] for x in np.linspace(4, 0, 11)[1:]]
+    + [[0.0, y] for y in np.linspace(4, 0, 11)[1:]]
+)
+
+
+@pytest.mark.parametrize(
+    "ring,points,want",
+    [
+        pytest.param(  # zero y-span: the unit stripe height fallback
+            [[0, 3], [4, 3], [8, 3], [0, 3]],
+            [[2, 3], [2, 4], [2, 2], [9, 3], [8, 3]],
+            [BOUNDARY, EXTERIOR, EXTERIOR, EXTERIOR, BOUNDARY],
+            id="flat_ring",
+        ),
+        pytest.param(  # normal but tiny stripe height, far-away points
+            [[0, 0], [1, 0], [2, 0], [3, 0], [4, 0],
+             [4, 1e-300], [3, 1e-300], [2, 1e-300], [1, 1e-300], [0, 0]],
+            [[2, 1e300], [2, -1e300], [2, 0.5e-300], [5, 0.5e-300], [2, 0]],
+            [EXTERIOR, EXTERIOR, INTERIOR, EXTERIOR, BOUNDARY],
+            id="tiny_span_far_points",
+        ),
+        pytest.param(  # subnormal span, points at infinity or NaN in y
+            [[0, 0], [1, 5e-324], [0.5, 1e-323], [0, 0]],
+            [[0.5, np.inf], [0.5, -np.inf], [0.5, np.nan], [0.5, 5e-324]],
+            [EXTERIOR, EXTERIOR, EXTERIOR, INTERIOR],
+            id="subnormal_span_nonfinite_y",
+        ),
+        pytest.param(  # y == ymax is clamped into the last stripe
+            _COMB_TOP,
+            [[2, 4], [4, 4], [2, 4 - 1e-12], [2, 4 + 1e-12], [2, 0]],
+            [BOUNDARY, BOUNDARY, INTERIOR, EXTERIOR, BOUNDARY],
+            id="top_edge_in_last_stripe",
+        ),
+    ],
+)
+def test_locate_points_extreme_stripes(ring, points, want):
+    """Stripe lookup at the edges of its arithmetic: every point lands
+    in the right stripe (or none) without a floating-point warning."""
+    pack = PolygonPack.from_rings([[np.asarray(ring, dtype=float)]])
+    pts = np.asarray(points, dtype=float)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        loc = locate_points(pts, pack, np.arange(len(pts)), np.zeros(len(pts), dtype=int))
+    assert loc.tolist() == want
