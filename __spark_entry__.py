@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  -> flagship point-in-polygon spatial join at sf0.001.
-queries()     -> operator catalog (geos_spark.queries.QUERIES; 108
+queries()     -> operator catalog (geos_spark.queries.QUERIES; 97
                  queries) — synthetic-table operators (joins,
                  tiling, kNN, clustering, coverage
                  validate/simplify/clean, dedup + the full near-dup
@@ -18,18 +18,14 @@ queries()     -> operator catalog (geos_spark.queries.QUERIES; 108
                  (BM25, inverted index), web link graph
                  (anchor extraction, host PageRank — unweighted /
                  weighted / TrustRank-personalized / incremental
-                 warm-start), ANN
-                 (exact/LSH/matmul/IVF/IVF-PQ + the certified
-                 IVF-PQ recall contract ann_pq_recall), the scored
-                 banded-LSH near-dup scale path (embed_neardup_lsh),
-                 text, html->text
+                 warm-start), text, html->text
                  extraction with the cross-engine byte-identity
                  oracle (pages_extract), Z/M ordinate surface
                  (geom_zm), SQL/MM curve measures, structural
                  accessors),
                  Structured-Streaming twins run to completion
                  (stream_dedup/tiles/sessions/first_seen/pip/quota/
-                 ann/cut), plus the xmltester corpus promoted as xt_*
+                 cut), plus the xmltester corpus promoted as xt_*
                  fixture queries (the corpus audit is CLOSED: every
                  case in general/misc/robust/issue/validate is
                  scored or in the 8-entry analysed SKIP list; the

@@ -26,115 +26,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_SYNTH = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "1000000"))
 
 
-def _ann_corpus_parquet(spark, n: int, dim: int, parts: int) -> str:
-    """Deterministic 200k x 64 embedding corpus, materialized to a
-    cached parquet so benchmark timings never include generation.
-    Same hash-lattice values as the old inline Catalyst expression:
-    pmod(id*2654435761 + d*40503, 65536)/65536 - 0.5."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".bench_cache",
-        f"ann_{n}_{dim}.parquet",
-    )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _gen(batches):
-        d = np.arange(dim, dtype=np.int64) * 40503
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            m = ((ids[:, None] * 2654435761 + d[None, :]) % 65536) \
-                / 65536.0 - 0.5
-            yield pd.DataFrame({"vec_id": ids, "embedding": list(m)})
-
-    spark.range(0, n, 1, parts).mapInPandas(_gen, schema).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
-
-
-
-def _lsh_corpus_parquet(spark, n: int, dim: int, parts: int) -> str:
-    """Deterministic near-dup embedding corpus for the banded-LSH
-    line: splitmix64-mixed Box-Muller pseudo-Gaussians (geometrically
-    iid — the plain hash-lattice corpus is a shifted lattice whose
-    rows cluster in sign space and would make any hyperplane LSH
-    quadratic) + every 100th vector re-emitted as id+1e6 with small
-    deterministic noise (cosine ~0.996: the planted near-dup pairs)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".bench_cache",
-        f"lsh_{n}_{dim}.parquet",
-    )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _mix(x):
-        x = (x + np.uint64(0x9E3779B97F4A7C15)).astype(np.uint64)
-        z = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
-
-    def _vecs(ids):
-        dd = np.arange(dim, dtype=np.uint64)
-        idx = ids[:, None].astype(np.uint64) * np.uint64(dim) + dd[None, :]
-        with np.errstate(over="ignore"):
-            h1 = _mix(idx)
-            h2 = _mix(idx + np.uint64(0xABCDEF1234567890))
-        u1 = ((h1 >> np.uint64(11)).astype(np.float64) + 1.0) / (2**53 + 2)
-        u2 = (h2 >> np.uint64(11)).astype(np.float64) / (2**53)
-        return np.sqrt(-2 * np.log(u1)) * np.cos(2 * np.pi * u2)
-
-    def _gen(batches):
-        dd = np.arange(dim, dtype=np.int64)
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            z = _vecs(ids)
-            out = [pd.DataFrame({"vec_id": ids, "embedding": list(z)})]
-            m = ids % 100 == 0
-            if m.any():
-                noise = (
-                    ((ids[m][:, None] * 48271 + dd[None, :] * 69621 + 7)
-                     % 1000) / 1000.0 - 0.5
-                ) * 0.3
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": ids[m] + 1_000_000,
-                            "embedding": list(z[m] + noise),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    spark.range(0, n, 1, parts).mapInPandas(_gen, schema).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
-
-
 def _dedup_corpus_parquet(spark, n: int, parts: int) -> str:
     """Deterministic near-dup corpus: 30-word texts from a 50k-word
     vocab via splitmix-style bit mixing (a plain linear-congruential
@@ -308,63 +199,6 @@ def _bench_queries(spark):
             broadcast_build=True,
         ).select("doc_id", "rank", "poly_id")
 
-    # ANN corpus: written to a cached parquet ONCE, outside the timed
-    # region, so ann_matmul_200k measures the operator (scan + BLAS
-    # matmul + top-k), not the synthetic generator.
-    ann_path = _ann_corpus_parquet(spark, 200_000, 64, CPUS * 2)
-    import pandas as pd
-
-    ann_qs = pd.DataFrame(
-        {
-            "q_id": range(64),
-            "q_vec": [
-                [
-                    ((i * 2654435761 + d * 40503) % 65536) / 65536.0 - 0.5
-                    for d in range(64)
-                ]
-                for i in range(64)
-            ],
-        }
-    )
-
-    def ann_matmul_200k():
-        # 64-query block shipped as a numpy matrix: per-batch BLAS
-        # matmul + local top-k, shuffle O(parts * Q * k).  Oracle
-        # coverage: catalog query `ann_matmul` (shares ann_topk's
-        # rank oracle) + tests/test_similarity.py rank-agreement.
-        from geos_spark.operators.similarity import cosine_topk_matmul
-
-        vecs = spark.read.parquet(ann_path)
-        return cosine_topk_matmul(vecs, ann_qs, k=5)
-
-    def ann_ivf_200k():
-        # the IVF scale path on the same 200k corpus: BLAS batch
-        # assignment (no shuffle), corpus repartitioned BY LIST (the
-        # amortized indexing step), per-list matmul against only the
-        # queries probing it — compute ~n_probe/n_lists (1/8) of brute
-        # force. Oracle coverage: catalog query `ann_ivf` (hash-exact
-        # fold variant) + rank-agreement tests (test_operators.py).
-        from geos_spark.operators.similarity import cosine_topk_ivf_blas
-
-        vecs = spark.read.parquet(ann_path)
-        return cosine_topk_ivf_blas(
-            vecs, ann_qs, k=5, n_lists=64, n_probe=8
-        )
-
-    def ann_pq_200k():
-        # the compressed-index tier: PQ codes (8 x uint over 64 dims)
-        # + ADC candidate scoring + exact re-rank of refine*k. The
-        # searched representation is ~64x smaller than the vectors;
-        # oracle coverage: catalog row `ann_pq` (hash-exact vs the
-        # ivf oracle at the gate's scale) + agreement/recall tests.
-        from geos_spark.operators.similarity import cosine_topk_ivfpq
-
-        vecs = spark.read.parquet(ann_path)
-        return cosine_topk_ivfpq(
-            vecs, ann_qs, k=5, n_lists=64, n_probe=8,
-            m_subspaces=8, ks=64, refine=8,
-        )
-
     # streaming-ingest corpus: 1m doc_ids cached to parquet once
     # (outside timed regions), so the stream line measures the
     # streaming run, not the generator
@@ -455,7 +289,6 @@ def _bench_queries(spark):
         )
 
     dedup_src = _dedup_corpus_parquet(spark, 200_000, CPUS)
-    lsh_path = _lsh_corpus_parquet(spark, 200_000, 64, CPUS)
 
     def dedup_clusters_200k():
         # the full near-dup pipeline (LSH candidates -> Jaccard
@@ -467,22 +300,6 @@ def _bench_queries(spark):
         docs = spark.read.parquet(dedup_src)
         return dedup_clusters(
             docs, num_hashes=16, bands=4, shingle_k=3, threshold=0.5
-        )
-
-    def embed_lsh_200k():
-        # the scored LSH scale path of embedding near-dup at bench
-        # scale: 202k vectors (2k planted near-dup pairs), 160 planes
-        # x 8 20-bit bands (bits-per-band is the scale knob: 20 bits
-        # keeps candidates ~300k instead of the ~5M a 16-bit config
-        # yields at this corpus size), ids-only candidate shuffle,
-        # exact-cosine verify; recall 1997/2000 planted pairs.
-        # Oracle coverage: catalog row `embed_neardup_lsh` (SQL
-        # replica of the LSH spec with clone/bg recall contracts).
-        from geos_spark.operators.dedup import embedding_neardup_pairs
-
-        vecs = spark.read.parquet(lsh_path)
-        return embedding_neardup_pairs(
-            vecs, 0.7, n_planes=160, bands=8, dim=64, max_bucket=2000
         )
 
     pages_src = _pages_corpus_parquet(spark, N_SYNTH)
@@ -602,9 +419,6 @@ def _bench_queries(spark):
         "distance_join_1m": (distance_join_1m, N_SYNTH),
         "distance_native_1m": (distance_native_1m, N_SYNTH),
         "knn_ring_100k": (knn_ring_100k, 100000),
-        "ann_matmul_200k": (ann_matmul_200k, 200_000),
-        "ann_ivf_200k": (ann_ivf_200k, 200_000),
-        "ann_pq_200k": (ann_pq_200k, 200_000),
         "stream_assign_1m": (stream_assign_1m, N_SYNTH),
         "stream_pip_1m": (stream_pip_1m, N_SYNTH),
         "dedup_exact": (dedup_exact_sf, None),
@@ -613,7 +427,6 @@ def _bench_queries(spark):
         "pii_redact_1m": (pii_redact_1m, N_SYNTH),
         "host_rank_2m": (host_rank_2m, 2 * N_SYNTH),
         "dedup_clusters_200k": (dedup_clusters_200k, 200_000),
-        "embed_lsh_200k": (embed_lsh_200k, 202_000),
         "dedup_cut_200k": (dedup_cut_200k, 200_000),
         "raster_1024": (raster_1024, 1024 * 1024),
         "pip_join_10m": (pip_join_10m, 10 * N_SYNTH),

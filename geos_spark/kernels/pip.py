@@ -119,9 +119,12 @@ class PolygonPack:
             return
         seg_cnt = self.poly_seg_offsets[1:] - self.poly_seg_offsets[:-1]
         ns = np.clip(seg_cnt // 4, 1, 512).astype(np.int64)
-        y0 = self.bbox[:, 1]
-        y1 = self.bbox[:, 3]
-        h = (y1 - y0) / ns
+        # stripes are cut on y / 2: halving is monotone, so a segment and
+        # a point on it still meet in one stripe, and the difference of
+        # two halved doubles cannot overflow, so a y-span wider than the
+        # float range (-1e308 .. 1e308) keeps a finite stripe height
+        y0 = self.bbox[:, 1] * 0.5
+        h = (self.bbox[:, 3] * 0.5 - y0) / ns
         h = np.where(h > 0, h, 1.0)  # a subnormal span / ns can round to 0
         self.stripe_h = h
         self.stripe_y0 = y0
@@ -133,10 +136,14 @@ class PolygonPack:
         smin = np.minimum(self.seg_y1, self.seg_y2)
         smax = np.maximum(self.seg_y1, self.seg_y2)
         lo = np.clip(
-            np.floor((smin - y0[sp]) / h[sp]).astype(np.int64), 0, ns[sp] - 1
+            np.floor((smin * 0.5 - y0[sp]) / h[sp]).astype(np.int64),
+            0,
+            ns[sp] - 1,
         )
         hi = np.clip(
-            np.floor((smax - y0[sp]) / h[sp]).astype(np.int64), 0, ns[sp] - 1
+            np.floor((smax * 0.5 - y0[sp]) / h[sp]).astype(np.int64),
+            0,
+            ns[sp] - 1,
         )
         counts = hi - lo + 1
         total = int(counts.sum())
@@ -206,14 +213,25 @@ def locate_points(
 
     # stripe-restricted expansion: only the segments whose y-interval
     # stripe contains the query point's y (IndexedPointInAreaLocator)
+    px_pair = points[pair_pt, 0]
     py_pair = points[pair_pt, 1]
     sy0 = pack.stripe_y0[pair_poly]
     sh = pack.stripe_h[pair_poly]
     sn = pack.stripe_n[pair_poly]
-    in_range = (py_pair >= sy0) & (py_pair <= pack.bbox[pair_poly, 3])
+    # a point off the polygon's envelope, or with a NaN ordinate, is
+    # exterior and visits no segment
+    bb = pack.bbox[pair_poly]
+    in_range = (
+        (px_pair >= bb[:, 0])
+        & (px_pair <= bb[:, 2])
+        & (py_pair >= bb[:, 1])
+        & (py_pair <= bb[:, 3])
+    )
     # divide on in-range lanes only: with a subnormal stripe height the
     # quotient of a far-away point overflows
-    q = np.divide(py_pair - sy0, sh, out=np.zeros(n_pairs), where=in_range)
+    q = np.divide(
+        py_pair * 0.5 - sy0, sh, out=np.zeros(n_pairs), where=in_range
+    )
     # the top edge (py == ymax) belongs to the last stripe
     stripe_local = np.clip(np.floor(q).astype(np.int64), 0, sn - 1)
     sid = pack.poly_stripe_offsets[pair_poly] + stripe_local
@@ -234,8 +252,8 @@ def locate_points(
         else np.zeros(0, dtype=np.int64)
     )
 
-    px = points[pair_pt, 0][pair_rep]
-    py = points[pair_pt, 1][pair_rep]
+    px = px_pair[pair_rep]
+    py = py_pair[pair_rep]
     x1 = pack.seg_x1[seg_idx]
     y1 = pack.seg_y1[seg_idx]
     x2 = pack.seg_x2[seg_idx]

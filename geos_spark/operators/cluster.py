@@ -434,115 +434,3 @@ def cluster_dbscan(
             .alias("cluster"),
         )
     )
-
-
-def kmeans_assign(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column, fully deterministic:
-    centroids initialize to the ``k`` lowest-id vectors (keyed by
-    their seed id), assignment breaks distance ties by ascending
-    centroid id, and the iteration count is fixed — so a SQL oracle
-    replays the algorithm exactly (squared-distance folds run in the
-    same dimension order in both engines).
-
-    Scale shape per iteration:
-    - assignment: vectors x BROADCAST centroid dim (k rows) with a
-      zip_with/aggregate fold — no shuffle on the big side;
-    - argmin: one min(struct(dist, cid)) aggregate keyed by vector id
-      (struct ordering gives the tie-break for free);
-    - centroid update: posexplode to (cid, dim) partial means — two
-      tiny keyed shuffles — then re-assembled and localCheckpoint'ed
-      (the per-iteration lineage cut, as in links.hits).
-
-    Returns (id_col, cid, dist2) for the final assignment.
-    """
-    vecs = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-            "__e"
-        ),
-    )
-    cents = (
-        vecs.orderBy(id_col)
-        .limit(k)
-        .select(F.col(id_col).alias("cid"), F.col("__e").alias("__c"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _dist2():
-        return F.aggregate(
-            F.zip_with(F.col("__e"), F.col("__c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    assign = None
-    for _ in range(iterations):
-        assign = (
-            vecs.crossJoin(F.broadcast(cents))
-            .select(
-                id_col,
-                "__e",
-                F.struct(
-                    _dist2().alias("dist2"), F.col("cid").alias("cid")
-                ).alias("__dc"),
-            )
-            .groupBy(id_col)
-            .agg(
-                F.min("__dc").alias("best"),
-                F.first("__e").alias("__e"),
-            )
-            .select(
-                id_col,
-                F.col("best.cid").alias("cid"),
-                F.col("best.dist2").alias("dist2"),
-                "__e",
-            )
-        )
-        dims = assign.select(
-            "cid", F.posexplode("__e").alias("pos", "v")
-        )
-        new_c = (
-            dims.groupBy("cid", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "m"))
-                    ),
-                    lambda s: s["m"],
-                ).alias("__c")
-            )
-        )
-        # empty clusters keep their previous centroid
-        cents = (
-            cents.select("cid", F.col("__c").alias("__c_old"))
-            .join(new_c, on="cid", how="left")
-            .select(
-                "cid", F.coalesce("__c", "__c_old").alias("__c")
-            )
-            .localCheckpoint(eager=True)
-        )
-    # final assignment against the last centroids
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .select(
-            id_col,
-            F.struct(
-                _dist2().alias("dist2"), F.col("cid").alias("cid")
-            ).alias("__dc"),
-        )
-        .groupBy(id_col)
-        .agg(F.min("__dc").alias("best"))
-        .select(
-            id_col,
-            F.col("best.cid").alias("cid"),
-            F.col("best.dist2").alias("dist2"),
-        )
-    )

@@ -356,223 +356,6 @@ def simhash64(text: Column, shingle_k: int = 2) -> Column:
     return out
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int | None = None,
-    bands: int = 4,
-    max_bucket: int | None = 10_000,
-    dim: int | None = None,
-    vectorized: bool = True,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a_id < b_id, cosine >=
-    threshold) — the embedding-space member of the dedup family.
-
-    Two plans:
-
-    - exact baseline (``n_planes=None``): self-join with the cosine
-      as a native zip_with/aggregate expression. Quadratic by nature
-      — the ground-truth path for oracles and small dims.
-    - LSH scale path: ``n_planes`` deterministic hyperplane signs per
-      row, split into ``bands``; candidates are pairs sharing any
-      full band (band-value equijoin — the minhash-LSH shape, no
-      cross product), hot buckets capped at ``max_bucket`` rows, then
-      the exact cosine verifies. Recall < 1 by construction (a
-      near-dup pair is missed iff every band has a flipped plane) —
-      raise ``n_planes``/``bands`` for tighter recall; candidate
-      generation stays a bucketed equijoin at any scale.
-
-    All arithmetic is double-precision JVM expressions; python never
-    touches the hot path.
-    """
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
-
-    base = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("__n", norm(F.col("__v")))
-
-    if n_planes is None:
-        a = base.select(
-            F.col("__id").alias("a_id"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        )
-        b = base.select(
-            F.col("__id").alias("b_id"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        )
-        cos = dot(F.col("__va"), F.col("__vb")) / (
-            F.col("__na") * F.col("__nb")
-        )
-        return (
-            a.join(b, F.col("a_id") < F.col("b_id"))
-            .withColumn("cos", cos)
-            .where(F.col("cos") >= F.lit(float(threshold)))
-            .select("a_id", "b_id", "cos")
-        )
-
-    import numpy as np
-
-    if dim is None:
-        # one-row probe; pass dim explicitly to keep planning lazy
-        dim = len(df.select(vec_col).first()[0])
-    per_band = n_planes // bands
-    rs = np.random.RandomState(20260817)
-    planes = rs.standard_normal((n_planes, dim))
-    band_cols = [f"__band{bi}" for bi in range(bands)]
-    if vectorized:
-        # Arrow fast path: per-batch BLAS matmul for the sign
-        # signatures (identical spec; sign margins are orders of
-        # magnitude above summation-order noise — measured in the
-        # scored row's docstring). A 128-plane signature as Catalyst
-        # HOF folds is interpreted per plane per row and dominates
-        # wall-clock at bench scale; one matmul per Arrow batch is the
-        # ann_matmul-style scale answer.
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        weights = np.ascontiguousarray(planes.T)  # (dim, n_planes)
-        shifts = (per_band - 1 - np.arange(per_band)).astype(np.int64)
-        sig_schema = T.StructType(
-            [
-                T.StructField("__id", T.LongType()),
-                T.StructField("__v", T.ArrayType(T.DoubleType())),
-                T.StructField("__n", T.DoubleType()),
-            ]
-            + [T.StructField(c, T.LongType()) for c in band_cols]
-        )
-
-        def _sign_bands(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vm = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
-                )
-                bits = (vm @ weights >= 0).astype(np.int64)
-                cols = {
-                    "__id": pdf["__id"].to_numpy(np.int64),
-                    "__v": pdf["__v"],
-                    "__n": np.sqrt((vm * vm).sum(axis=1)),
-                }
-                for bi in range(bands):
-                    blk = bits[:, bi * per_band : (bi + 1) * per_band]
-                    cols[band_cols[bi]] = (blk << shifts[None, :]).sum(
-                        axis=1
-                    )
-                yield pd.DataFrame(cols)
-
-        sig = df.select(
-            F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-        ).mapInPandas(_sign_bands, sig_schema)
-    else:
-        sig = base
-        for bi in range(bands):
-            bits = None
-            for pi in range(per_band):
-                plane = F.array(
-                    *[
-                        F.lit(float(x))
-                        for x in planes[bi * per_band + pi]
-                    ]
-                )
-                proj = dot(F.col("__v"), plane)
-                bit = F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-                bits = bit if bits is None else bits * 2 + bit
-            sig = sig.withColumn(band_cols[bi], bits.cast("long"))
-    exploded = sig.select(
-        "__id",
-        "__v",
-        "__n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("b"), F.col(c).alias("h")
-                    )
-                    for bi, c in enumerate(band_cols)
-                ]
-            )
-        ).alias("__bk"),
-    ).select("__id", "__v", "__n", "__bk.b", "__bk.h")
-    # the exploded signature table feeds THREE consumers (the bucket
-    # counts and both sides of the candidate equijoin) — materialize
-    # it once or the signature stage (a full corpus scan + matmul)
-    # re-runs per consumer, the multi-consumer recomputation trap
-    exploded = _materialize(exploded)
-    if max_bucket is not None:
-        counts = exploded.groupBy("b", "h").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        exploded = exploded.join(
-            F.broadcast(counts.where(F.col("__bn") <= max_bucket)),
-            ["b", "h"],
-        )
-    # candidates shuffle IDS ONLY (16 B/row); the dim-sized vector
-    # payload joins back per side after the distinct — carrying
-    # __v through the band equijoin instead puts ~8*dim B on every
-    # candidate row and the pair shuffle becomes the bottleneck
-    # (measured 5 GB at the 200k bench line)
-    l = exploded.select(F.col("__id").alias("a_id"), "b", "h")
-    r = exploded.select(F.col("__id").alias("b_id"), "b", "h")
-    pair_ids = (
-        l.join(r, ["b", "h"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    side = exploded.select("__id", "__v", "__n").distinct()
-    cand = pair_ids.join(
-        side.select(
-            F.col("__id").alias("a_id"),
-            F.col("__v").alias("__va"),
-            F.col("__n").alias("__na"),
-        ),
-        "a_id",
-    ).join(
-        side.select(
-            F.col("__id").alias("b_id"),
-            F.col("__v").alias("__vb"),
-            F.col("__n").alias("__nb"),
-        ),
-        "b_id",
-    )
-    if vectorized:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql import types as T
-
-        @pandas_udf(T.DoubleType())
-        def _pair_cos(va, vb):
-            import pandas as pd
-
-            if not len(va):
-                return pd.Series([], dtype="float64")
-            A = np.asarray([np.asarray(v, dtype=np.float64) for v in va])
-            B = np.asarray([np.asarray(v, dtype=np.float64) for v in vb])
-            return pd.Series(np.einsum("ij,ij->i", A, B))
-
-        cos = _pair_cos(F.col("__va"), F.col("__vb")) / (
-            F.col("__na") * F.col("__nb")
-        )
-    else:
-        cos = dot(F.col("__va"), F.col("__vb")) / (
-            F.col("__na") * F.col("__nb")
-        )
-    return (
-        cand.withColumn("cos", cos)
-        .where(F.col("cos") >= F.lit(float(threshold)))
-        .select("a_id", "b_id", "cos")
-    )
-
-
 def dedup_clusters(
     df: DataFrame,
     text_col: str = "text",

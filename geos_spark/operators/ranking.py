@@ -1,10 +1,9 @@
 """Lexical retrieval operators: inverted-index construction and BM25
 scoring over the documents table.
 
-The webtext-pipeline counterpart of the engine's ANN family: where
-``similarity.py`` ranks by embedding cosine, these rank by exact
-lexical statistics — the standard first-stage retriever (and the
-standard dataset-curation tool for query-targeted corpus slicing).
+These rank by exact lexical statistics — the standard first-stage
+retriever (and the standard dataset-curation tool for query-targeted
+corpus slicing).
 
 Everything is native DataFrame ops:
 - tokenization is ``split`` on whitespace runs (JVM, codegen);

@@ -41,10 +41,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def _doc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_doc_point(_docs(spark, sf_dir).select("doc_id"))
 
@@ -1205,583 +1201,6 @@ ranked AS (
 )
 SELECT doc_id, lang AS lang_guess, score AS lang_score
 FROM ranked WHERE rn = 1
-"""
-
-
-# ----------------------------------------------------------------------
-# similarity search: brute-force cosine top-k
-# ----------------------------------------------------------------------
-
-
-def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs over the embeddings
-    table, with exact clones of every 10th vector planted (cloned ids
-    offset by 100000) so the operator demonstrably finds true dupes
-    (cosine 1.0) alongside the near-threshold background pairs.
-    Exact-baseline path (ground truth; the banded-LSH scale path of
-    the same operator is approximate by design and benchmarked
-    separately).  tau=0.454 sits 1.3e-3 clear of the nearest pair on
-    either side, so double-precision accumulation-order noise cannot
-    flip membership."""
-    from geos_spark.operators.dedup import embedding_neardup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dupes = emb.where(F.col("vec_id") % 10 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    out = embedding_neardup_pairs(emb.unionByName(dupes), 0.454)
-    return out.select("a_id", "b_id")
-
-
-def q_embed_neardup_sql() -> str:
-    return """
-WITH e AS (
-    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    UNION ALL
-    SELECT vec_id + 100000, embedding::DOUBLE[] FROM embeddings
-    WHERE vec_id % 10 = 0
-)
-SELECT a.vec_id AS a_id, b.vec_id AS b_id
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v))
-         * sqrt(list_dot_product(b.v, b.v))) >= 0.454
-"""
-
-
-def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH *scale path* of embedding near-dup as a scored contract
-    (the exact row above stays the quadratic ground-truth baseline;
-    THIS row's plan is the one that survives 100 TB: sign-signature ->
-    band equijoin -> exact verify, no self cross-join anywhere).
-
-    Certified hash-strict against an independent DuckDB replica of the
-    same LSH spec (plane constants embedded in the oracle SQL), with
-    two recall contracts enforced structurally:
-
-    - planted cosine-1.0 clones: recall 1.0 — the oracle's output
-      includes every clone pair from the exact definition, so a single
-      missed clone mismatches the row;
-    - near-threshold background pairs: the oracle gates its own output
-      on lsh-recall >= 0.6 of the exact quadratic pair set (computed
-      oracle-side only), so if the banded plan's recall ever drops
-      below the bound the oracle emits zero rows and the gate goes
-      red.  Measured recall with this seed: 11/14 at sf0.01, 105/130
-      at sf0.1 (clones always 100%).
-
-    n_planes=96 / bands=16 = 6 sign bits per band: 64 buckets per
-    band today, and the bits-per-band knob is what scales bucket
-    occupancy down as the corpus grows."""
-    from geos_spark.operators.dedup import embedding_neardup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dupes = emb.where(F.col("vec_id") % 10 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 100000
-    )
-    out = embedding_neardup_pairs(
-        emb.unionByName(dupes), 0.454, n_planes=96, bands=16, dim=64
-    )
-    return out.select(
-        "a_id",
-        "b_id",
-        (
-            (F.col("b_id") == F.col("a_id") + 100000)
-            & (F.col("a_id") % 10 == 0)
-        ).alias("is_clone"),
-    )
-
-
-def q_embed_neardup_lsh_sql() -> str:
-    """Independent SQL replica of the banded-LSH plan: the same
-    hyperplane constants (seed 20260817, the operator's spec) as
-    literal arrays, sign bits packed MSB-first exactly as the Spark
-    column expression does."""
-    import numpy as np
-
-    n_planes, bands, dim = 96, 16, 64
-    per = n_planes // bands
-    planes = np.random.RandomState(20260817).standard_normal(
-        (n_planes, dim)
-    )
-
-    def arr(i):
-        return "[" + ", ".join(format(x, ".17g") for x in planes[i]) + "]"
-
-    band_exprs = []
-    for b in range(bands):
-        terms = [
-            f"(CASE WHEN list_dot_product(v, {arr(b * per + p)}::DOUBLE[]) >= 0 "
-            f"THEN {1 << (per - 1 - p)} ELSE 0 END)"
-            for p in range(per)
-        ]
-        band_exprs.append(" + ".join(terms) + f" AS band{b}")
-    expl = " UNION ALL ".join(
-        f"SELECT vec_id, band{b} AS h, {b} AS b FROM sig"
-        for b in range(bands)
-    )
-    return f"""
-WITH e AS (
-    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-    UNION ALL
-    SELECT vec_id + 100000, embedding::DOUBLE[] FROM embeddings
-    WHERE vec_id % 10 = 0
-),
-sig AS (
-    SELECT vec_id, {", ".join(band_exprs)} FROM e
-),
-expl AS ({expl}),
-cand AS (
-    SELECT DISTINCT l.vec_id AS a_id, r.vec_id AS b_id
-    FROM expl l JOIN expl r ON l.b = r.b AND l.h = r.h
-                           AND l.vec_id < r.vec_id
-),
-lsh_pairs AS (
-    SELECT a_id, b_id FROM cand
-    JOIN e ea ON ea.vec_id = a_id
-    JOIN e eb ON eb.vec_id = b_id
-    WHERE list_dot_product(ea.v, eb.v)
-          / (sqrt(list_dot_product(ea.v, ea.v))
-             * sqrt(list_dot_product(eb.v, eb.v))) >= 0.454
-),
-exact_bg AS (
-    SELECT a.vec_id AS a_id, b.vec_id AS b_id
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v)
-          / (sqrt(list_dot_product(a.v, a.v))
-             * sqrt(list_dot_product(b.v, b.v))) >= 0.454
-      AND NOT (b.vec_id = a.vec_id + 100000 AND a.vec_id % 10 = 0)
-),
-recall_gate AS (
-    SELECT (SELECT COUNT(*) FROM lsh_pairs p
-            JOIN exact_bg x ON p.a_id = x.a_id AND p.b_id = x.b_id)
-           >= CEIL(0.6 * (SELECT COUNT(*) FROM exact_bg)) AS ok
-)
-SELECT a_id, b_id,
-       (b_id = a_id + 100000 AND a_id % 10 = 0) AS is_clone
-FROM (
-    SELECT a_id, b_id FROM lsh_pairs
-    UNION
-    SELECT vec_id AS a_id, vec_id + 100000 AS b_id FROM embeddings
-    WHERE vec_id % 10 = 0
-)
-WHERE (SELECT ok FROM recall_gate)
-"""
-
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k (brute-force fold baseline): broadcast query side, F.aggregate dot products, window top-k per query."""
-    from geos_spark.operators.similarity import cosine_topk
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = cosine_topk(emb, queries, k=5)
-    return out.select("q_id", F.col("rank").cast("int").alias("rank"), "vec_id")
-
-
-def q_ann_topk_sql() -> str:
-    return """
-WITH q AS (
-    SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-    FROM embeddings WHERE vec_id % 50 = 0
-),
-v AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings
-),
-scored AS (
-    SELECT q.q_id, v.vec_id,
-           list_dot_product(q.qv, v.vv)
-             / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(v.vv, v.vv))) AS cosine
-    FROM q CROSS JOIN v
-    WHERE q.q_id <> v.vec_id
-),
-ranked AS (
-    SELECT q_id, vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC
-           ) AS rank
-    FROM scored
-)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id FROM ranked WHERE rank <= 5
-"""
-
-
-def q_ann_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BLAS-matmul throughput variant of exact cosine top-k
-    (``cosine_topk_matmul``): the query block ships as a numpy matrix
-    inside mapInPandas, each Arrow batch does one matmul + local
-    top-k, the shuffle is O(partitions * Q * k).  Same query selection
-    and rank-only output as ``ann_topk``, so it shares that oracle:
-    BLAS summation order differs from the sequential fold only in the
-    last ulp, while the smallest adjacent-rank cosine gap in this
-    corpus is 2.9e-4 (measured, sf0.01) — ranks are identical.
-
-    Query-block bound: Q*dim*8 bytes in driver + every task closure
-    (serving-shape; the operator enforces a 512 MB default cap and a
-    10^5-row block is pinned by test); Q ~ corpus escalates to the
-    LSH all-pairs shapes — see cosine_topk_matmul's docstring."""
-    from geos_spark.operators.similarity import cosine_topk_matmul
-
-    emb = _emb(spark, sf_dir)
-    queries_pdf = (
-        emb.where(F.col("vec_id") % 50 == 0)
-        .select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        .toPandas()
-    )
-    out = cosine_topk_matmul(emb, queries_pdf, k=5)
-    return out.select(
-        "q_id", F.col("rank").cast("int").alias("rank"), "vec_id"
-    )
-
-
-_ANN_PLANES = 6
-_ANN_DIM = 64  # embeddings.parquet vector width (all SFs)
-_ANN_SEED = 42
-_ANN_MAX_BUCKET = 1000  # hot-bucket fan-out guard (m rows -> m^2 pairs)
-
-
-_IVF_LISTS = 16
-_IVF_PROBE = 4
-
-
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN (coarse-quantize + probe, the Faiss-IVFFlat
-    layout): deterministic pivot centroids (the 16 lowest-id vectors),
-    zero-shuffle HOF assignment, n_probe=4 bucketed equijoin search.
-    Same query selection as ``ann_topk``; approximate by design — the
-    oracle reproduces the same assignment/probe/search exactly."""
-    from geos_spark.operators.similarity import cosine_topk_ivf
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    out = cosine_topk_ivf(
-        emb, queries, k=5, n_lists=_IVF_LISTS, n_probe=_IVF_PROBE
-    )
-    return out.select(
-        "q_id", F.col("rank").cast("int").alias("rank"), "vec_id"
-    )
-
-
-def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN (compressed-index tier): coarse-quantize to
-    inverted lists, PQ-encode (8 subspaces x 16 pivot codewords),
-    ADC candidate scoring, exact re-rank of the top refine*k with a
-    deterministic (ADC desc, vec_id asc) candidate cut.
-
-    The oracle is a full SQL replica of the SAME pipeline (codebooks,
-    codes, ADC tables, refine cut, re-rank), so the row is hash-strict
-    at ANY sf — including when refine*k no longer covers the probed
-    lists and the pruning is live (sf0.1's ~312-row lists).  The
-    separate ``ann_pq_recall`` row states the quality contract
-    (set-recall >= 0.85 vs the exact top-k over the same probed
-    lists); this row certifies the algorithm executes its spec
-    bit-for-bit.  Cross-engine float margins measured at sf0.01/0.1:
-    codeword argmin gap >= 1.6e-6, ADC refine-boundary gap >= 1.6e-5,
-    re-rank top-k gap >= 3e-4 — all >= 9 orders above double noise."""
-    from geos_spark.operators.similarity import cosine_topk_ivfpq
-
-    emb = _emb(spark, sf_dir)
-    qpdf = (
-        emb.where(F.col("vec_id") % 50 == 0)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-        )
-        .toPandas()
-    )
-    out = cosine_topk_ivfpq(
-        emb, qpdf, k=5, n_lists=_IVF_LISTS, n_probe=_IVF_PROBE,
-        m_subspaces=8, ks=16, refine=8,
-    )
-    return out.select(
-        "q_id", F.col("rank").cast("int").alias("rank"), "vec_id"
-    )
-
-
-def q_ann_pq_sql() -> str:
-    """Full SQL replica of the IVF-PQ pipeline (same spec as
-    ``cosine_topk_ivfpq``): pivot codebooks from the 16 lowest-id
-    vectors, per-subspace nearest-codeword codes (squared-L2 argmin,
-    tie lowest codeword), per-query ADC tables, probed-list candidate
-    scoring by summed table lookups, deterministic refine*k cut, exact
-    cosine re-rank."""
-    n_lists, n_probe, m_sub, ks, sub, refine_k, k = 16, 4, 8, 16, 8, 40, 5
-    return f"""
-WITH v AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings
-),
-c AS (
-    SELECT vec_id AS cid, vv AS cv, sqrt(list_dot_product(vv, vv)) AS cn
-    FROM v ORDER BY vec_id LIMIT {n_lists}
-),
-cscore AS (
-    SELECT v.vec_id, c.cid,
-           list_dot_product(v.vv, c.cv)
-             / (sqrt(list_dot_product(v.vv, v.vv)) * c.cn) AS cs
-    FROM v CROSS JOIN c
-),
-assign AS (
-    SELECT vec_id, cid AS list_id FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn
-        FROM cscore) WHERE rn = 1
-),
-probe AS (
-    SELECT vec_id AS q_id, cid AS list_id FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn
-        FROM cscore WHERE vec_id % 50 = 0) WHERE rn <= {n_probe}
-),
-piv AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS j,
-           CASE WHEN nrm = 0 THEN vv
-                ELSE list_transform(vv, x -> x / nrm) END AS pv
-    FROM (SELECT vec_id, vv, sqrt(list_dot_product(vv, vv)) AS nrm
-          FROM v ORDER BY vec_id LIMIT {ks})
-),
-book AS (
-    SELECT m.m, piv.j, piv.pv[m.m*{sub}+1 : m.m*{sub}+{sub}] AS bw
-    FROM piv CROSS JOIN (SELECT unnest(range({m_sub})) AS m) m
-),
-vhat AS (
-    SELECT vec_id,
-           CASE WHEN nrm = 0 THEN vv
-                ELSE list_transform(vv, x -> x / nrm) END AS hv
-    FROM (SELECT vec_id, vv, sqrt(list_dot_product(vv, vv)) AS nrm FROM v)
-),
-codes AS (
-    SELECT vec_id, m, j AS code FROM (
-        SELECT h.vec_id, b.m, b.j,
-               ROW_NUMBER() OVER (
-                   PARTITION BY h.vec_id, b.m
-                   ORDER BY list_dot_product(
-                       list_transform(range({sub}),
-                                      i -> h.hv[b.m*{sub} + i + 1] - b.bw[i + 1]),
-                       list_transform(range({sub}),
-                                      i -> h.hv[b.m*{sub} + i + 1] - b.bw[i + 1])
-                   ) ASC, b.j ASC) AS rn
-        FROM vhat h CROSS JOIN book b
-    ) WHERE rn = 1
-),
-adc AS (
-    SELECT q.vec_id AS q_id, b.m, b.j,
-           list_dot_product(
-               list_transform(range({sub}), i -> q.hv[b.m*{sub} + i + 1]),
-               b.bw
-           ) AS t
-    FROM (SELECT h.* FROM vhat h WHERE h.vec_id % 50 = 0) q
-    CROSS JOIN book b
-),
-approx AS (
-    SELECT p.q_id, a.vec_id, a.list_id, SUM(t.t) AS score
-    FROM probe p
-    JOIN assign a ON a.list_id = p.list_id AND a.vec_id <> p.q_id
-    JOIN codes cd ON cd.vec_id = a.vec_id
-    JOIN adc t ON t.q_id = p.q_id AND t.m = cd.m AND t.j = cd.code
-    GROUP BY p.q_id, a.vec_id, a.list_id
-),
-cand AS (
-    -- the refine cut is PER PROBED LIST (the operator prunes inside
-    -- each applyInPandas list group), not across the probed union
-    SELECT q_id, vec_id FROM (
-        SELECT q_id, vec_id,
-               ROW_NUMBER() OVER (
-                   PARTITION BY q_id, list_id
-                   ORDER BY score DESC, vec_id ASC
-               ) AS rn
-        FROM approx) WHERE rn <= {refine_k}
-),
-rerank AS (
-    SELECT cand.q_id, cand.vec_id,
-           list_dot_product(qv.vv, av.vv)
-             / (sqrt(list_dot_product(qv.vv, qv.vv))
-                * sqrt(list_dot_product(av.vv, av.vv))) AS cosine
-    FROM cand
-    JOIN v qv ON qv.vec_id = cand.q_id
-    JOIN v av ON av.vec_id = cand.vec_id
-)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id FROM (
-    SELECT q_id, vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC
-           ) AS rank
-    FROM rerank) WHERE rank <= {k}
-"""
-
-
-def q_ann_ivf_sql() -> str:
-    return f"""
-WITH v AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings
-),
-c AS (
-    SELECT vec_id AS cid, vv AS cv,
-           sqrt(list_dot_product(vv, vv)) AS cn
-    FROM v ORDER BY vec_id LIMIT {_IVF_LISTS}
-),
-cscore AS (
-    SELECT v.vec_id, c.cid,
-           list_dot_product(v.vv, c.cv)
-             / (sqrt(list_dot_product(v.vv, v.vv)) * c.cn) AS cs
-    FROM v CROSS JOIN c
-),
-assign AS (
-    SELECT vec_id, cid AS list_id FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cs DESC, cid ASC
-               ) AS rn
-        FROM cscore
-    ) WHERE rn = 1
-),
-probe AS (
-    SELECT vec_id AS q_id, cid AS list_id FROM (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (
-                   PARTITION BY vec_id ORDER BY cs DESC, cid ASC
-               ) AS rn
-        FROM cscore WHERE vec_id % 50 = 0
-    ) WHERE rn <= {_IVF_PROBE}
-),
-scored AS (
-    SELECT p.q_id, a.vec_id,
-           list_dot_product(qv.vv, av.vv)
-             / (sqrt(list_dot_product(qv.vv, qv.vv))
-                * sqrt(list_dot_product(av.vv, av.vv))) AS cosine
-    FROM probe p
-    JOIN assign a ON a.list_id = p.list_id AND a.vec_id <> p.q_id
-    JOIN v qv ON qv.vec_id = p.q_id
-    JOIN v av ON av.vec_id = a.vec_id
-),
-ranked AS (
-    SELECT q_id, vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC
-           ) AS rank
-    FROM scored
-)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id FROM ranked WHERE rank <= 5
-"""
-
-
-def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The *approximate contract* of IVF-PQ, certified at any sf: the
-    PQ + ADC + refine pipeline must keep set-recall >= 0.85 against
-    the exact top-k over the same probed lists (ann_ivf's plan — the
-    pruning-free ground truth of the compressed tier).
-
-    Where ``ann_pq`` is hash-exact only while refine*k covers the
-    lists (sf0.01; the r4 10x sweep measured 0.89 set-recall once
-    sf0.1's ~312-row lists out-grow the refine budget), THIS row
-    states the approximate contract directly, so the certified
-    artifact is the one that holds when pruning goes live.  Output is
-    the contract verdict (n_queries, k, recall_ok); the oracle binds
-    n_queries/k from the table and pins recall_ok TRUE — a recall
-    regression below the bound flips the boolean and reddens the
-    gate."""
-    from geos_spark.operators.similarity import (
-        cosine_topk_ivf,
-        cosine_topk_ivfpq,
-    )
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    qpdf = queries.toPandas()
-    pq = cosine_topk_ivfpq(
-        emb, qpdf, k=5, n_lists=_IVF_LISTS, n_probe=_IVF_PROBE,
-        m_subspaces=8, ks=16, refine=8,
-    ).select("q_id", "vec_id")
-    ivf = cosine_topk_ivf(
-        emb, queries, k=5, n_lists=_IVF_LISTS, n_probe=_IVF_PROBE
-    ).select("q_id", "vec_id")
-    hits = ivf.join(
-        pq.withColumn("__m", F.lit(1)), ["q_id", "vec_id"], "left"
-    ).agg(
-        (
-            F.sum(F.coalesce("__m", F.lit(0)))
-            >= F.ceil(F.lit(0.85) * F.count(F.lit(1)))
-        ).alias("recall_ok")
-    )
-    nq = queries.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries")
-    )
-    return nq.crossJoin(hits).select(
-        "n_queries", F.lit(5).cast("int").alias("k"), "recall_ok"
-    )
-
-
-def q_ann_pq_recall_sql() -> str:
-    return """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-       CAST(5 AS INT) AS k,
-       TRUE AS recall_ok
-FROM embeddings WHERE vec_id % 50 = 0
-"""
-
-
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH bucketed cosine top-k — the 100 TB scale path
-    (bucket equijoin instead of the Q x N product). Deterministic
-    planes, so the DuckDB oracle reproduces buckets and ranking
-    exactly."""
-    from geos_spark.operators.similarity import cosine_topk_lsh
-
-    emb = _emb(spark, sf_dir)
-    out = cosine_topk_lsh(
-        emb, k=5, n_planes=_ANN_PLANES, dim=_ANN_DIM,
-        max_bucket=_ANN_MAX_BUCKET,
-    )
-    return out.select(
-        "q_id", F.col("rank").cast("int").alias("rank"), "vec_id"
-    )
-
-
-def q_ann_lsh_sql() -> str:
-    import numpy as np
-
-    rs = np.random.RandomState(_ANN_SEED)
-    planes = rs.standard_normal((_ANN_PLANES, _ANN_DIM))
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(vv, [{', '.join(repr(float(x)) for x in planes[p])}]) > 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(_ANN_PLANES)
-    )
-    return f"""
-WITH v AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings
-),
-b0 AS (
-    SELECT vec_id, vv,
-           sqrt(list_dot_product(vv, vv)) AS nrm,
-           {bucket_terms} AS bucket
-    FROM v
-),
-b AS (
-    SELECT b0.* FROM b0
-    JOIN (SELECT bucket FROM b0 GROUP BY bucket
-          HAVING COUNT(*) <= {_ANN_MAX_BUCKET}) ok USING (bucket)
-),
-scored AS (
-    SELECT a.vec_id AS q_id, c.vec_id AS vec_id,
-           list_dot_product(a.vv, c.vv) / (a.nrm * c.nrm) AS cosine
-    FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
-),
-ranked AS (
-    SELECT q_id, vec_id,
-           ROW_NUMBER() OVER (
-               PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC
-           ) AS rank
-    FROM scored
-)
-SELECT q_id, CAST(rank AS INT) AS rank, vec_id FROM ranked WHERE rank <= 5
 """
 
 
@@ -3290,35 +2709,6 @@ def q_stream_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "source", "n_chars", "rank")
 
 
-def q_stream_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ANN serving: the query stream probes a static
-    IVF-indexed corpus (stateless HOF probe expansion -> stream-static
-    list equijoin -> stateful per-query top-k emit). Single-batch
-    input reproduces the batch IVF search exactly, so the row shares
-    ann_ivf's oracle."""
-    from geos_spark.streaming import (
-        read_documents_stream,
-        run_stream_to_memory,
-        streaming_ann_topk,
-    )
-
-    emb = _emb(spark, sf_dir)
-    qs = read_documents_stream(
-        spark, f"{sf_dir}/embeddings.parquet"
-    ).where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-    )
-    out, _ = run_stream_to_memory(
-        streaming_ann_topk(
-            qs, emb, k=5, n_lists=_IVF_LISTS, n_probe=_IVF_PROBE
-        ),
-        spark,
-        output_mode="append",
-    )
-    return out.select("q_id", F.col("rank").cast("int").alias("rank"), "vec_id")
-
-
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user session windows over the events stream
     (gap 30min, watermark 1h, append mode): the emitted set after an
@@ -3450,14 +2840,6 @@ QUERIES = {
     "token_stats": q_token_stats,
     "bpe_tokens": q_bpe_tokens,
     "lang_guess": q_lang_guess,
-    "ann_topk": q_ann_topk,
-    "ann_matmul": q_ann_matmul,
-    "embed_neardup": q_embed_neardup,
-    "embed_neardup_lsh": q_embed_neardup_lsh,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "ann_pq": q_ann_pq,
-    "ann_pq_recall": q_ann_pq_recall,
     "rect_join": q_rect_join,
     "tile_area_sum": q_tile_area_sum,
     "tile_clip": q_tile_clip,
@@ -3477,7 +2859,6 @@ QUERIES = {
     "sample_hash": q_sample_hash,
     "source_quota": q_source_quota,
     "stream_quota": q_stream_quota,
-    "stream_ann": q_stream_ann,
     "rect_overlay": q_rect_overlay,
     "union_area": q_union_area,
     "union_area_dsu": q_union_area_dsu,
@@ -3526,14 +2907,6 @@ ORACLES = _Oracles({
     "token_stats": q_token_stats_sql(),
     "bpe_tokens": q_bpe_tokens_sql(),
     "lang_guess": q_lang_guess_sql(),
-    "ann_topk": q_ann_topk_sql(),
-    "ann_matmul": q_ann_topk_sql(),
-    "embed_neardup": q_embed_neardup_sql(),
-    "embed_neardup_lsh": q_embed_neardup_lsh_sql(),
-    "ann_lsh": q_ann_lsh_sql(),
-    "ann_ivf": q_ann_ivf_sql(),
-    "ann_pq": q_ann_pq_sql(),
-    "ann_pq_recall": q_ann_pq_recall_sql(),
     "rect_join": q_rect_join_sql(),
     "tile_area_sum": q_tile_area_sum_sql(),
     "union_points": q_union_points_sql(),
@@ -3546,7 +2919,6 @@ ORACLES = _Oracles({
     "sample_hash": q_sample_hash_sql(),
     "source_quota": q_source_quota_sql(),
     "stream_quota": q_source_quota_sql(),
-    "stream_ann": q_ann_ivf_sql(),
     "rect_overlay": q_rect_overlay_sql(),
     "poly_join": q_poly_join_sql(),
     "poly_contains": q_poly_contains_sql(),
@@ -4639,75 +4011,6 @@ QUERIES.update({"stream_crawl_delta": q_stream_crawl_delta})
 ORACLES.update({"stream_crawl_delta": q_stream_crawl_delta_sql()})
 
 
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Lloyd's k-means (k=8, 3 update rounds) over the
-    embeddings table; final per-vector assignment with squared
-    distance rounded to 6 decimals. The oracle replays every
-    assignment/update round in chained MATERIALIZED CTEs."""
-    from geos_spark.operators.cluster import kmeans_assign
-
-    out = kmeans_assign(_emb(spark, sf_dir), k=8, iterations=3)
-    return out.select(
-        "vec_id",
-        "cid",
-        F.round(F.col("dist2"), 6).alias("dist2_r"),
-    )
-
-
-def q_kmeans_sql() -> str:
-    head = """
-WITH v AS MATERIALIZED (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), c0 AS MATERIALIZED (
-  SELECT vec_id AS cid, e AS c FROM v ORDER BY vec_id LIMIT 8
-)"""
-    assign = """, a{k} AS MATERIALIZED (
-  SELECT vec_id, cid, d2 FROM (
-    SELECT v.vec_id, c.cid,
-           list_sum(list_transform(range(1, 65),
-                    i -> (v.e[i] - c.c[i]) * (v.e[i] - c.c[i]))) AS d2,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, 65),
-                      i -> (v.e[i] - c.c[i]) * (v.e[i] - c.c[i]))) ASC,
-                      c.cid ASC) AS rn
-    FROM v CROSS JOIN c{p} c
-  ) WHERE rn = 1
-), c{k} AS MATERIALIZED (
-  SELECT p.cid, COALESCE(n.c, p.c) AS c
-  FROM c{p} p LEFT JOIN (
-    SELECT cid, list(m ORDER BY pos) AS c FROM (
-      SELECT a.cid, pos, avg(val) AS m
-      FROM a{k} a JOIN v ON a.vec_id = v.vec_id,
-           LATERAL (SELECT unnest(v.e) AS val,
-                           unnest(generate_series(1, 64)) AS pos) u
-      GROUP BY a.cid, pos
-    ) GROUP BY cid
-  ) n ON p.cid = n.cid
-)"""
-    body = head + "".join(
-        assign.format(k=k, p=k - 1) for k in (1, 2, 3)
-    )
-    return body + """
-SELECT vec_id, cid, ROUND(d2, 6) AS dist2_r FROM (
-  SELECT v.vec_id, c.cid,
-         list_sum(list_transform(range(1, 65),
-                  i -> (v.e[i] - c.c[i]) * (v.e[i] - c.c[i]))) AS d2,
-         ROW_NUMBER() OVER (
-           PARTITION BY v.vec_id
-           ORDER BY list_sum(list_transform(range(1, 65),
-                    i -> (v.e[i] - c.c[i]) * (v.e[i] - c.c[i]))) ASC,
-                    c.cid ASC) AS rn
-  FROM v CROSS JOIN c3 c
-) WHERE rn = 1
-"""
-
-
-QUERIES.update({"kmeans": q_kmeans})
-ORACLES.update({"kmeans": q_kmeans_sql()})
-
-
 def q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-frontier prioritization — the composition row tying the
     graph and snapshot tiers together: per-url priority = host
@@ -5224,44 +4527,6 @@ SELECT host, MIN(label) AS component FROM walk GROUP BY host
 
 QUERIES.update({"host_cc": q_host_cc})
 ORACLES.update({"host_cc": q_host_cc_sql()})
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): embedding near-dup pruning
-    blocked by k-means cluster — candidate pairs are per-cluster
-    products, not the corpus square. keep=0 iff a same-cluster
-    smaller-id vector lies within cosine >= tau; tau reuses
-    embed_neardup's 0.454 (1.3e-3 clear of the full pair spectrum, and
-    within-cluster pairs are a subset of that spectrum, so float
-    accumulation noise cannot flip membership)."""
-    from geos_spark.operators.similarity import semdedup
-
-    return semdedup(_emb(spark, sf_dir), k=8, iterations=3, tau=0.454)
-
-
-def q_semdedup_sql() -> str:
-    return f"""WITH km AS MATERIALIZED (
-{q_kmeans_sql()}
-),
-e AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nv
-  FROM embeddings
-),
-losers AS (
-  SELECT DISTINCT b.vec_id
-  FROM (SELECT km.cid, e.vec_id, e.v, e.nv FROM km JOIN e USING (vec_id)) a
-  JOIN (SELECT km.cid, e.vec_id, e.v, e.nv FROM km JOIN e USING (vec_id)) b
-    ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE list_dot_product(a.v, b.v) / (a.nv * b.nv) >= 0.454
-)
-SELECT km.vec_id, km.cid::INT AS cid,
-       (CASE WHEN l.vec_id IS NULL THEN 1 ELSE 0 END)::INT AS keep
-FROM km LEFT JOIN losers l USING (vec_id)"""
-
-
-QUERIES.update({"semdedup": q_semdedup})
-ORACLES.update({"semdedup": q_semdedup_sql()})
 
 
 # ----------------------------------------------------------------------

@@ -430,103 +430,6 @@ def streaming_source_quota(
     )
 
 
-def streaming_ann_topk(
-    queries: DataFrame,
-    vectors: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """Streaming ANN: an unbounded QUERY stream searched against a
-    static IVF-indexed corpus — the online-serving twin of
-    :func:`geos_spark.operators.similarity.cosine_topk_ivf`.
-
-    Composition is stream-legal end to end: the query's probe
-    expansion is a stateless HOF projection; the probe->inverted-list
-    equijoin is a stream-static join (append mode); the per-query
-    top-k cannot be a window on a stream, so it runs as a stateful
-    group emit (``applyInPandasWithState`` keyed by q_id — all of a
-    query's candidates arrive in its own micro-batch because the
-    fan-out happens inside the batch, so each group emits exactly
-    once; the one-bit state guards against a duplicate q_id arriving
-    in a later batch, which is dropped like first_seen).
-
-    The static inverted lists are built once at plan time and
-    persisted — at production scale that is the indexing step,
-    written as the corpus table's partitioning. Results for each
-    micro-batch equal the batch operator on the same query rows
-    (same oracle on a single-batch stream).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from geos_spark.operators.similarity import (
-        _centroid_scores,
-        dot,
-        ivf_assign,
-        norm,
-    )
-
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in vectors.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(n_lists)
-        .collect()
-    ]
-    inv = ivf_assign(vectors, cents, id_col=id_col, vec_col=vec_col)
-    inv = inv.persist()
-    inv.count()  # materialize the index once, not per micro-batch
-
-    scores_q = _centroid_scores(F.col(q_vec_col), cents)
-    probed = queries.select(
-        F.col(q_id_col).alias("q_id"),
-        F.col(q_vec_col).alias("q"),
-        norm(F.col(q_vec_col)).alias("q_norm"),
-        F.explode(
-            F.slice(F.reverse(F.array_sort(scores_q)), 1, n_probe)
-        ).alias("__c"),
-    ).withColumn("list_id", -F.col("__c")["nid"]).drop("__c")
-
-    scored = (
-        probed.join(inv, "list_id")
-        .where(F.col("q_id") != F.col("vec_id"))
-        .withColumn(
-            "cosine",
-            dot(F.col("q"), F.col("v"))
-            / (F.col("q_norm") * F.col("v_norm")),
-        )
-        .select("q_id", "vec_id", "cosine")
-    )
-
-    def topk(key, pdfs, state):
-        if state.exists:
-            return  # duplicate q_id in a later batch: already served
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        batch = batch.sort_values(
-            ["cosine", "vec_id"], ascending=[False, True]
-        ).head(k)
-        batch = batch.reset_index(drop=True)
-        batch["rank"] = range(1, len(batch) + 1)
-        state.update((True,))
-        yield batch[["q_id", "rank", "vec_id", "cosine"]]
-
-    return scored.groupBy("q_id").applyInPandasWithState(
-        topk,
-        outputStructType=(
-            "q_id long, rank integer, vec_id long, cosine double"
-        ),
-        stateStructType="served boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_pii_scrub(sdf: DataFrame) -> DataFrame:
     """Streaming twin of the PII scrub: the identical stateless
     redact_pii projection over an unbounded stream (append mode — no

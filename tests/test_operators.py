@@ -568,122 +568,6 @@ def test_url_functions(spark):
         assert r["c"] == c, (url, r["c"])
 
 
-def test_cosine_topk_lsh_recall(spark):
-    from geos_spark.operators.similarity import cosine_topk, cosine_topk_lsh
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).where(F.col("q_id") % 100 == 0)
-    exact = cosine_topk(emb, q, k=3)
-    approx = cosine_topk_lsh(emb, k=3, n_planes=4).where(
-        F.col("q_id") % 100 == 0
-    )
-    e = {(r.q_id, r.vec_id) for r in exact.collect()}
-    a = {(r.q_id, r.vec_id) for r in approx.collect()}
-    # bucketed candidates are a subset; recall must be meaningful
-    assert len(a & e) / len(e) > 0.2
-
-
-def test_cosine_topk_ivf_recall_and_exact_limit(spark):
-    """IVF ANN: (a) full-probe (n_probe == n_lists) degenerates to the
-    exact result — every list is searched, so approximation comes ONLY
-    from unprobed lists; (b) partial probe keeps meaningful recall and
-    returns a subset of the searched universe; (c) the assignment adds
-    no shuffle (no Exchange before the probe join on the corpus side)."""
-    from geos_spark.operators.similarity import cosine_topk, cosine_topk_ivf
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).where(F.col("q_id") % 100 == 0)
-
-    exact = {
-        (r.q_id, r.rank): r.vec_id for r in cosine_topk(emb, q, k=3).collect()
-    }
-    full = {
-        (r.q_id, r.rank): r.vec_id
-        for r in cosine_topk_ivf(
-            emb, q, k=3, n_lists=8, n_probe=8
-        ).collect()
-    }
-    assert full == exact and len(exact) > 0
-
-    part = cosine_topk_ivf(emb, q, k=3, n_lists=8, n_probe=2)
-    p = {(r.q_id, r.vec_id) for r in part.collect()}
-    e = {(qr, v) for (qr, _), v in exact.items()}
-    assert len(p & e) / len(e) > 0.2
-
-    # zero-shuffle assignment: quantizing the corpus is a pure
-    # projection — its physical plan has no Exchange at all
-    from geos_spark.operators.similarity import ivf_assign
-
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in emb.orderBy("vec_id").limit(8).collect()
-    ]
-    plan = (
-        ivf_assign(emb, cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-
-
-def test_cosine_topk_ivf_blas_agrees_with_fold_ivf(spark):
-    """The list-partitioned BLAS IVF reproduces the exact fold IVF at
-    the same (n_lists, n_probe): identical (q_id, rank, vec_id) —
-    same pivot centroids => same assignment => same candidates; BLAS
-    differs only in the last ulp of the scores."""
-    from geos_spark.operators.similarity import (
-        cosine_topk_ivf,
-        cosine_topk_ivf_blas,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).where(F.col("q_id") % 50 == 0)
-    fold = {
-        (r.q_id, r.rank): r.vec_id
-        for r in cosine_topk_ivf(
-            emb, q, k=5, n_lists=8, n_probe=3
-        ).collect()
-    }
-    blas = {
-        (r.q_id, r.rank): r.vec_id
-        for r in cosine_topk_ivf_blas(
-            emb, q.toPandas(), k=5, n_lists=8, n_probe=3
-        ).collect()
-    }
-    assert fold == blas and len(fold) > 0
-
-
-def test_cosine_topk_matmul_agrees_with_fold(spark):
-    """The BLAS-matmul throughput variant must reproduce the exact
-    sequential-fold path: identical (q_id, rank, vec_id) triples and
-    cosines within 1e-9 (summation order differs only in the last
-    ulp; the corpus's smallest adjacent-rank gap is ~1e-4)."""
-    from geos_spark.operators.similarity import cosine_topk, cosine_topk_matmul
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).where(F.col("q_id") % 20 == 0)
-    exact = {
-        (r.q_id, r.rank): (r.vec_id, r.cosine)
-        for r in cosine_topk(emb, q, k=5).collect()
-    }
-    blas = {
-        (r.q_id, r.rank): (r.vec_id, r.cosine)
-        for r in cosine_topk_matmul(emb, q.toPandas(), k=5).collect()
-    }
-    assert set(exact) == set(blas) and len(exact) > 0
-    for key, (vid, cos) in exact.items():
-        bvid, bcos = blas[key]
-        assert bvid == vid
-        assert abs(bcos - cos) < 1e-9
-
-
 def test_dedup_clusters_end_to_end(spark):
     """Full pipeline: clones + a near-dup chain collapse to one
     canonical doc each; unrelated docs and the NULL-text doc stay
@@ -777,130 +661,3 @@ def test_source_quota_exact_and_salt_invariant(spark):
             .collect()
         }
         assert got == exp, buckets
-
-
-def test_cosine_topk_ivfpq_agreement_and_recall(spark):
-    """IVF-PQ: with sufficient refine the re-ranked output equals
-    cosine_topk_ivf exactly; ADC-only candidates (refine=1) still
-    recover planted near-duplicate neighbors (the compression tier
-    keeps cluster structure)."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from geos_spark.operators.similarity import cosine_topk_ivfpq
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qpdf = (
-        emb.where(F.col("vec_id") % 25 == 0)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-        )
-        .toPandas()
-    )
-    # compare against the BLAS IVF variant: identical assignment
-    # numerics (the fold variant can flip a near-tied coarse
-    # assignment in the last ulp on this tiny corpus; the hash-exact
-    # fold-oracle agreement is covered by the ann_pq catalog gate at
-    # sf0.01)
-    from geos_spark.operators.similarity import cosine_topk_ivf_blas
-
-    ref = {
-        (r.q_id, r.rank): r.vec_id
-        for r in cosine_topk_ivf_blas(
-            emb, qpdf, k=3, n_lists=8, n_probe=4
-        ).collect()
-    }
-    got = {
-        (r.q_id, r.rank): r.vec_id
-        for r in cosine_topk_ivfpq(
-            emb, qpdf, k=3, n_lists=8, n_probe=4, m_subspaces=8,
-            ks=8, refine=16,
-        ).collect()
-    }
-    # lists here (~62 rows) exceed refine*k=48, so ADC pruning is
-    # live: assert high set-recall vs the uncompressed IVF (rank-
-    # exactness when refine covers the lists is pinned by the ann_pq
-    # catalog gate at sf0.01)
-    by_q_ref: dict = {}
-    by_q_got: dict = {}
-    for (q, _), v in ref.items():
-        by_q_ref.setdefault(q, set()).add(v)
-    for (q, _), v in got.items():
-        by_q_got.setdefault(q, set()).add(v)
-    hits = sum(
-        len(by_q_ref[q] & by_q_got.get(q, set())) for q in by_q_ref
-    )
-    total = sum(len(v) for v in by_q_ref.values())
-    assert hits / total >= 0.9, (hits, total)
-
-    # planted clusters: 40 base vectors + a tiny-perturbation clone
-    # each; the ADC candidate stage must surface the clone
-    rng_base = [
-        [((i * 37 + d * 11) % 97) / 97.0 - 0.5 for d in range(16)]
-        for i in range(40)
-    ]
-    rows = []
-    for i, v in enumerate(rng_base):
-        rows.append((i, v))
-        rows.append((1000 + i, [x + 1e-4 for x in v]))
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    import pandas as pd
-
-    qp = pd.DataFrame(
-        {"q_id": [i for i in range(40)], "q_vec": rng_base}
-    )
-    # refine=4: ADC scores tie between identical codes (clone and
-    # base share a code by construction), so the exact re-rank needs
-    # a few candidates to resolve the tie deterministically
-    out = cosine_topk_ivfpq(
-        df, qp, k=1, n_lists=4, n_probe=4, m_subspaces=8, ks=16,
-        refine=8,
-    ).collect()
-    top1 = {r.q_id: r.vec_id for r in out if r.rank == 1}
-    hits = sum(1 for i in range(40) if top1.get(i) == 1000 + i)
-    assert hits == 40  # all clones recovered
-
-
-def test_cosine_topk_matmul_1e5_query_block(spark):
-    """Pins the documented query-block bound: a 10^5-row x 64-dim
-    block (~50 MB closure) works; the guard rejects blocks over
-    max_query_bytes with the escalation message."""
-    import numpy as np
-    import pandas as pd
-    import pytest
-    from pyspark.sql import functions as F
-
-    from geos_spark.operators.similarity import cosine_topk_matmul
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rs = np.random.RandomState(7)
-    Q = 100_000
-    qpdf = pd.DataFrame(
-        {
-            "q_id": np.arange(Q, dtype=np.int64) + 10_000_000,
-            "q_vec": list(rs.standard_normal((Q, 64))),
-        }
-    )
-    out = cosine_topk_matmul(emb, qpdf, k=3)
-    agg = out.agg(
-        F.countDistinct("q_id").alias("nq"), F.count("*").alias("n")
-    ).collect()[0]
-    assert agg.nq == Q and agg.n == 3 * Q
-    # spot-check one query against a local brute force
-    one = {
-        (r["rank"], r.vec_id)
-        for r in out.where(F.col("q_id") == 10_000_000).collect()
-    }
-    corpus = emb.orderBy("vec_id").collect()
-    V = np.asarray([r.embedding for r in corpus])
-    ids = np.asarray([r.vec_id for r in corpus])
-    q = np.asarray(qpdf["q_vec"][0])
-    cos = (V @ q) / (np.linalg.norm(V, axis=1) * np.linalg.norm(q))
-    order = np.lexsort((ids, -cos))[:3]
-    assert one == {(i + 1, int(ids[j])) for i, j in enumerate(order)}
-    # the guard: an over-bound block raises with the escalation hint
-    with pytest.raises(ValueError, match="cosine_topk_lsh"):
-        cosine_topk_matmul(emb, qpdf, k=3, max_query_bytes=1 << 20)

@@ -12,7 +12,7 @@ from tests.conftest import SF_DIR
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 
@@ -75,10 +75,15 @@ def test_all_queries_match_oracle(spark, catalog):
     for name, fn in queries.items():
         if name not in oracles:
             continue
-        got = fn(spark, SF_DIR).toPandas()
-        exp = con.execute(oracles[name]).df()
+        # a row whose query or oracle cannot be built is one failure,
+        # not the end of the test: every later row is still compared
         try:
+            got = fn(spark, SF_DIR).toPandas()
+            exp = con.execute(oracles[name]).df()
             _compare(got, exp, name)
-        except AssertionError as e:
-            failures.append((name, str(e)[:500]))
-    assert not failures, failures
+        except Exception as e:  # noqa: BLE001
+            failures.append((name, f"{type(e).__name__}: {str(e)[:500]}"))
+    assert not failures, (
+        f"{len(failures)} rows fail: {[n for n, _ in failures]}\n"
+        + "\n".join(f"{n}: {e}" for n, e in failures)
+    )

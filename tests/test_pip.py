@@ -147,6 +147,14 @@ _COMB_TOP = np.array(
     + [[0.0, y] for y in np.linspace(4, 0, 11)[1:]]
 )
 
+# an 18-segment ring (4 stripes) from y = -1e308 to 1e308: no segment's
+# y-span overflows, but the ring's does
+_TALL = np.array(
+    [[1.0, 2.5e307 * k] for k in range(-4, 5)]
+    + [[-1.0, 2.5e307 * k] for k in range(4, -5, -1)]
+    + [[1.0, -1e308]]
+)
+
 
 @pytest.mark.parametrize(
     "ring,points,want",
@@ -175,6 +183,27 @@ _COMB_TOP = np.array(
             [[2, 4], [4, 4], [2, 4 - 1e-12], [2, 4 + 1e-12], [2, 0]],
             [BOUNDARY, BOUNDARY, INTERIOR, EXTERIOR, BOUNDARY],
             id="top_edge_in_last_stripe",
+        ),
+        pytest.param(  # y-span wider than the float range, one stripe
+            [[0, -1e308], [1, 0], [0, 1e308], [-1, 0], [0, -1e308]],
+            [[0, 0], [0, 1e308], [0.25, 5e307], [0, 1.7e308], [0, -1.7e308],
+             [2, 0]],
+            [INTERIOR, BOUNDARY, INTERIOR, EXTERIOR, EXTERIOR, EXTERIOR],
+            id="huge_span_one_stripe",
+        ),
+        pytest.param(  # the same over 4 stripes
+            _TALL,
+            [[0, 0], [1, 0], [0, 1e308], [0, -1e308], [0.5, 9e307],
+             [0, 1.7e308], [0, -1.7e308], [2, 5e307], [-1, -6e307]],
+            [INTERIOR, BOUNDARY, BOUNDARY, BOUNDARY, INTERIOR,
+             EXTERIOR, EXTERIOR, EXTERIOR, BOUNDARY],
+            id="huge_span_four_stripes",
+        ),
+        pytest.param(  # NaN or infinite x at an in-range y
+            SQUARE,
+            [[np.nan, 5], [np.nan, 0], [-np.inf, 5], [np.inf, 5], [5, 5]],
+            [EXTERIOR, EXTERIOR, EXTERIOR, EXTERIOR, INTERIOR],
+            id="nonfinite_x",
         ),
     ],
 )

@@ -399,59 +399,3 @@ def test_stream_quota_admission_across_batches(spark, tmp_path):
         ("B", 6): 2,  # admitted in batch 1 with the NEXT rank
     }
     assert len([p for p in q.recentProgress if p.numInputRows > 0]) >= 2
-
-
-def test_stream_ann_multibatch_equals_batch(spark, tmp_path):
-    """Each micro-batch's queries get exactly the batch IVF answer;
-    a duplicate q_id arriving in a later batch is served once."""
-    import pyspark.sql.functions as F
-
-    from geos_spark.operators.similarity import cosine_topk_ivf
-    from geos_spark.streaming import (
-        read_documents_stream,
-        run_stream_to_memory,
-        streaming_ann_topk,
-    )
-
-    corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qb = corpus.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    expect = {
-        (r.q_id, r.rank): r.vec_id
-        for r in cosine_topk_ivf(
-            corpus, qb, k=3, n_lists=8, n_probe=4
-        ).collect()
-    }
-
-    src = str(tmp_path / "annq")
-    qpdf = qb.toPandas()
-    half = len(qpdf) // 2
-
-    def wf(pdf):
-        before = set(os.listdir(src)) if os.path.isdir(src) else set()
-        spark.createDataFrame(pdf).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        for f in set(os.listdir(src)) - before:
-            if f.endswith(".parquet"):
-                os.utime(os.path.join(src, f))
-
-    wf(qpdf.iloc[:half])
-    time.sleep(1.1)
-    # second batch: the rest PLUS a duplicate of the first query
-    import pandas as pd
-
-    wf(pd.concat([qpdf.iloc[half:], qpdf.iloc[:1]], ignore_index=True))
-
-    qs = read_documents_stream(spark, src, max_files_per_trigger=1)
-    out, q = run_stream_to_memory(
-        streaming_ann_topk(qs, corpus, k=3, n_lists=8, n_probe=4),
-        spark,
-        output_mode="append",
-    )
-    rows = out.collect()
-    got = {(r.q_id, r.rank): r.vec_id for r in rows}
-    assert got == expect
-    assert len(rows) == len(expect)  # the duplicate emitted nothing
-    assert len([p for p in q.recentProgress if p.numInputRows > 0]) >= 2

@@ -462,26 +462,6 @@ def test_anchor_text_extraction(spark):
     assert idx[("https://u.ex/q", "other")] == (1, 1)
 
 
-def test_kmeans_two_blobs(spark):
-    from geos_spark.operators.cluster import kmeans_assign
-
-    # two tight 4-d blobs; k=2 with lowest-id init (one seed per blob
-    # given ids interleave)
-    rows = []
-    for i in range(40):
-        base = [0.0, 0.0, 0.0, 0.0] if i % 2 == 0 else [9.0, 9.0, 9.0, 9.0]
-        rows.append((i, [b + 0.01 * (i % 5) for b in base]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = kmeans_assign(df, k=2, iterations=3).collect()
-    by_cid = {}
-    for r in out:
-        by_cid.setdefault(r["cid"], set()).add(r["vec_id"] % 2)
-    # each cluster is pure: one holds the even (origin) blob, the
-    # other the odd (far) blob
-    assert sorted(len(v) for v in by_cid.values()) == [1, 1]
-    assert all(r["dist2"] < 0.01 for r in out)
-
-
 def _pr_ref(out, n_iter, d=0.85, weights=None, p=None, r0=None):
     """Pure-python PageRank mirror of the operator's semantics."""
     hosts = sorted(set(out) | {v for vs in out.values() for v in vs})

@@ -19,8 +19,7 @@ import duckdb
 import pandas as pd
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 

@@ -30,10 +30,6 @@ AUDITED = [
     ("knn_centers", "two-phase exact kNN (ring expansion + per-probe "
      "radius refine)"),
     ("dedup_exact", "exact dedup (single hash aggregate)"),
-    ("ann_matmul", "BLAS-matmul ANN (mapInPandas batch matmul + "
-     "local top-k, shuffle O(parts*Q*k))"),
-    ("ann_ivf", "IVF ANN (pivot-centroid quantize as Exchange-free "
-     "HOF projection, n_probe bucketed search)"),
     ("dedup_clusters", "full near-dup pipeline (exact collapse -> "
      "minhash agg -> LSH bucket gather -> Jaccard verify join -> "
      "connected components; the CC stage runs its own bounded jobs "
@@ -60,12 +56,6 @@ AUDITED = [
     ("anchor_text", "anchor-text index (two regexp_extract_all "
      "passes zipped positionally, one (dst,anchor)-keyed shuffle "
      "with partial aggregation)"),
-    ("kmeans", "k-means final assignment (broadcast centroid dim, "
-     "zip_with distance fold, struct-min argmin -- the iterative "
-     "rounds are separate checkpointed jobs)"),
-    ("semdedup", "SemDeDup cluster-blocked embedding dedup "
-     "(cid-keyed self-equijoin -- per-cluster products, never the "
-     "corpus square; sequential-fold cosine)"),
     ("rasterize", "vector->raster mask (pixel centers as a codegen "
      "range projection probed through the prepared-dim spatial "
      "join; per-polygon mask moments aggregate)"),
