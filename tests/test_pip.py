@@ -205,6 +205,25 @@ _TALL = np.array(
             [EXTERIOR, EXTERIOR, EXTERIOR, EXTERIOR, INTERIOR],
             id="nonfinite_x",
         ),
+        pytest.param(  # orientation products overflow at 1e300
+            [[0, -1e300], [1e300, 0], [0, 1e300], [-1e300, 0], [0, -1e300]],
+            [[0, 0], [2.5e299, 3e299], [5e299, 5e299], [6e299, 5e299],
+             [-5e299, -5e299]],
+            [INTERIOR, INTERIOR, BOUNDARY, EXTERIOR, BOUNDARY],
+            id="huge_diamond",
+        ),
+        pytest.param(  # a point-to-vertex difference overflows: 2e308
+            [[1e308, 1], [-1.5e308, -0.01], [-1.5e308, -10], [1e308, 1]],
+            [[-1e308, 0], [-1e308, 1], [-1e308, -8]],
+            [INTERIOR, EXTERIOR, EXTERIOR],
+            id="overflowing_differences_below",
+        ),
+        pytest.param(  # the same edge with the triangle above it
+            [[1e308, 1], [-1.5e308, -0.01], [-1.5e308, 10], [1e308, 1]],
+            [[-1e308, 0], [-1e308, 1], [-1e308, -8]],
+            [EXTERIOR, INTERIOR, EXTERIOR],
+            id="overflowing_differences_above",
+        ),
     ],
 )
 def test_locate_points_extreme_stripes(ring, points, want):

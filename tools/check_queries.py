@@ -18,6 +18,9 @@ import sys
 import duckdb
 import pandas as pd
 
+# run as a script, only tools/ is on sys.path: put the repo root there
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents"
 ).split()
