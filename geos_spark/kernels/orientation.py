@@ -15,7 +15,6 @@ Returns +1 (counter-clockwise / left), -1 (clockwise / right), 0
 
 from __future__ import annotations
 
-import math
 from fractions import Fraction
 
 import numpy as np
@@ -75,30 +74,6 @@ def _orientation_exact(pax, pay, pbx, pby, pcx, pcy) -> int:
     return (det > 0) - (det < 0)
 
 
-def _orientation_scalar(pax, pay, pbx, pby, pcx, pcy) -> int:
-    """orientation_filter + exact fallback on one lane, in Python
-    floats (which overflow to inf without a warning)."""
-    pax, pay, pbx, pby = float(pax), float(pay), float(pbx), float(pby)
-    pcx, pcy = float(pcx), float(pcy)
-    l1, l2 = pax - pcx, pby - pcy
-    r1, r2 = pay - pcy, pbx - pcx
-    detleft = l1 * l2
-    detright = r1 * r2
-    det = detleft - detright
-    err = abs(detleft + detright) * _FILTER_COEFF
-    underflow = (abs(detleft) < _MIN_NORMAL and l1 != 0 and l2 != 0) or (
-        abs(detright) < _MIN_NORMAL and r1 != 0 and r2 != 0
-    )
-    certain = abs(det) >= err and not underflow
-    if certain and math.isinf(det):
-        certain = not all(
-            math.isfinite(v) for v in (pax, pay, pbx, pby, pcx, pcy)
-        )
-    if certain:
-        return (det > 0) - (det < 0)
-    return _orientation_exact(pax, pay, pbx, pby, pcx, pcy)
-
-
 def orientation_index(pax, pay, pbx, pby, pcx, pcy) -> np.ndarray:
     """Robust orientation of c relative to directed segment a->b.
 
@@ -107,12 +82,13 @@ def orientation_index(pax, pay, pbx, pby, pcx, pcy) -> np.ndarray:
     (b-a) x (c-b), not (b-a) x (c-a); both have the same sign set but
     we keep the reference's form for bit-identical tie behavior.
     """
-    if (
-        np.ndim(pax) == 0 and np.ndim(pay) == 0 and np.ndim(pbx) == 0
-        and np.ndim(pby) == 0 and np.ndim(pcx) == 0 and np.ndim(pcy) == 0
-    ):
-        return np.int8(_orientation_scalar(pax, pay, pbx, pby, pcx, pcy))
     idx, uncertain = orientation_filter(pax, pay, pbx, pby, pcx, pcy)
+    if idx.ndim == 0:
+        if uncertain:
+            return np.int8(
+                _orientation_exact(pax, pay, pbx, pby, pcx, pcy)
+            )
+        return idx
     if uncertain.any():
         pax, pay, pbx, pby, pcx, pcy = np.broadcast_arrays(
             np.asarray(pax, dtype=np.float64),

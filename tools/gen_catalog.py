@@ -1,17 +1,12 @@
 """Generate CATALOG.md: one line per catalog query — name, the first
 sentence of its docstring, and whether its oracle is hash-strict.
 
-Usage: python tools/gen_catalog.py
+Usage: PYTHONPATH=. python tools/gen_catalog.py
 """
 
 from __future__ import annotations
 
-import os
 import re
-import sys
-
-# run as a script, only tools/ is on sys.path: put the repo root there
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def first_sentence(doc: str | None) -> str:
