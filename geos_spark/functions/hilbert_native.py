@@ -1,12 +1,14 @@
 """Tile grid ordinates, join keys and Hilbert cell codes as native
 Spark Column expressions.
 
-Tile assignment has two steps. ``grid_xy`` is the one place a
-coordinate becomes a clamped grid ordinate. Every internal equijoin
-keys on ``tile_key``, the row-major index ``gy * 2^level + gx`` of
-those ordinates: a hash join needs an injective key, not a
-space-filling-curve order. The Hilbert code (``with_hilbert_cell``)
-is applied only where a cell id leaves the engine.
+Tile assignment has two steps. ``grid_xy`` is the one place SQL turns
+a coordinate into a clamped grid ordinate (its numpy twin,
+``grid_ordinate`` in ``kernels/subcells.py``, serves the point join).
+Every internal equijoin keys on ``tile_key``, the row-major index
+``gy * 2^level + gx`` of those ordinates: a hash join needs an
+injective key, not a space-filling-curve order. The Hilbert code
+(``with_hilbert_cell``) is applied only where a cell id leaves the
+engine.
 
 ``with_hilbert_cell`` is the branch-free bitwise algorithm of
 ``geos_spark.kernels.hilbert.hilbert_encode`` (reference semantics:
@@ -25,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geos_spark.kernels.subcells import SUB_LEVELS, grid_strides
+from geos_spark.kernels.subcells import grid_strides
 
 _M32 = 0xFFFFFFFF
 
@@ -225,19 +227,9 @@ def with_tile_key(
     level: int,
     extent: tuple[float, float, float, float],
 ) -> DataFrame:
-    """Point coordinates -> containing-tile ``__cell`` join key, and
-    ``__sub``, the bit ``8 * (sy mod 8) + (sx mod 8)`` of the point's
-    sub-cell in its tile's 8 x 8 sub-grid (the masks of
-    ``kernels/subcells.py``). One ``grid_xy`` call at
-    ``level + SUB_LEVELS`` gives the sub-cell ordinates; the tile
-    ordinate is their integer quotient by 8, which equals
-    ``grid_xy(level)``'s: the sub-cell stride is the tile stride over
-    8 exactly, so the two floors agree, and so do the clamps."""
-    k = 1 << SUB_LEVELS
-    sx, sy = grid_xy(sql_name(x_col), sql_name(y_col), level + SUB_LEVELS, extent)
-    cell = tile_key(F.expr(f"({sx}) div {k}"), F.expr(f"({sy}) div {k}"), level)
-    sub = F.expr(f"CAST(({sy}) % {k} * {k} + ({sx}) % {k} AS INT) AS __sub")
-    return df.select("*", cell.alias("__cell"), sub)
+    """Point coordinates -> containing-tile ``__cell`` join key."""
+    gx, gy = grid_xy(sql_name(x_col), sql_name(y_col), level, extent)
+    return df.withColumn("__cell", tile_key(F.expr(gx), F.expr(gy), level))
 
 
 def with_tile_cell(

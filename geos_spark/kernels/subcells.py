@@ -58,7 +58,7 @@ def grid_ordinate(v, origin: float, stride: float, n: int) -> np.ndarray:
     return np.clip(q, 0, n - 1)
 
 
-def _expand(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def expand_ranges(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(owner, value) for every integer in lo[i]..hi[i] (empty when
     lo > hi)."""
     counts = np.maximum(hi - lo + 1, 0)
@@ -82,7 +82,7 @@ def _touched(seg, clip, grid, ns: int):
     ey0, ey1 = np.minimum(y1, y2), np.maximum(y1, y2)
     r_lo = np.maximum(grid_ordinate(ey0, miny, sy, ns) - 1, clip[1])
     r_hi = np.minimum(grid_ordinate(ey1, miny, sy, ns) + 1, clip[3])
-    e, r = _expand(r_lo.astype(np.int64), r_hi.astype(np.int64))
+    e, r = expand_ranges(r_lo.astype(np.int64), r_hi.astype(np.int64))
     # the edge's x-span inside the padded row band
     ddy = y2[e] - y1[e]
     flat = ddy == 0
@@ -94,7 +94,7 @@ def _touched(seg, clip, grid, ns: int):
     xb = x1[e] + tb * (x2[e] - x1[e])
     c_lo = np.maximum(grid_ordinate(np.minimum(xa, xb), minx, sx, ns) - 1, clip[0][e])
     c_hi = np.minimum(grid_ordinate(np.maximum(xa, xb), minx, sx, ns) + 1, clip[2][e])
-    k, c = _expand(c_lo.astype(np.int64), c_hi.astype(np.int64))
+    k, c = expand_ranges(c_lo.astype(np.int64), c_hi.astype(np.int64))
     e, r = e[k], r[k]
     bx0, bx1 = minx + c * sx - dx, minx + (c + 1) * sx + dx
     by0, by1 = miny + r * sy - dy, miny + (r + 1) * sy + dy
@@ -192,7 +192,7 @@ def subcell_masks(wkbs, bbox, level: int, extent):
     every = partial | full
 
     # build rows: the 8 x 8 block of each tile, packed into a long
-    bt_row, intra = _expand(np.zeros(len(rows), dtype=np.int64), tw * th - 1)
+    bt_row, intra = expand_ranges(np.zeros(len(rows), dtype=np.int64), tw * th - 1)
     btx, bty = intra % tw[bt_row], intra // tw[bt_row]
     key = (gy0[bt_row] + bty) * n + gx0[bt_row] + btx
     corner = base[bt_row] + bty * _SUB * w[bt_row] + btx * _SUB

@@ -56,9 +56,7 @@ def within_distance_join(
         # exploded side has no size estimate -> hint (see spatial_join)
         b = F.broadcast(b)
     d2 = (F.col(px) - F.col(bx)) ** 2 + (F.col(py) - F.col(by)) ** 2
-    return p.join(b, "__cell").where(d2 <= F.lit(distance * distance)).drop(
-        "__cell", "__sub"
-    )
+    return p.join(b, "__cell").where(d2 <= F.lit(distance * distance)).drop("__cell")
 
 
 def knn_join_broadcast(

@@ -65,15 +65,16 @@ def rasterize_polygons(
     level: int = 6,
 ) -> DataFrame:
     """Polygon -> mask: (poly_id, px, py) rows for every pixel whose
-    center intersects the polygon.  Runs the two-phase point join
-    against the prepared dim (tile equijoin on a broadcast build side,
-    then the by-id pandas refine), so only candidate pixels, not the
-    whole grid, reach python."""
+    center intersects the polygon.  Runs the point join against the
+    prepared dim: every pixel centre crosses into python once, where
+    one Arrow UDF looks up its tile, drops it or accepts it by the
+    envelopes and sub-cell masks, and refines only the pixels in
+    PARTIAL sub-cells."""
     from geos_spark.operators.spatial_join import point_in_polygon_join
 
     spark = polys.sparkSession
     # one probe partition per task slot: every probe task pays the
-    # python refine's start-up, so more partitions than slots only
+    # python worker's start-up, so more partitions than slots only
     # add that fixed cost
     pts = pixel_centers(spark, grid, extent, spark.sparkContext.defaultParallelism)
     out = point_in_polygon_join(

@@ -1,43 +1,33 @@
 """Distributed spatial join: the engine's flagship operator.
 
-Two-phase plan (SURVEY §2.5, §3.1):
+Point joins are a broadcast-partition local join (SURVEY §2.5, §3.1):
+the polygon dim is indexed once, the index is broadcast to the python
+workers, and each partition of points is joined locally, with no JVM
+join and no exchange on the point side.
 
-1. **global phase (native)** — both sides are keyed on the row-major
-   tile index ``gy * 2^level + gx`` (``hilbert_native.tile_key``):
-   points get their containing tile, polygons explode to every tile
-   their envelope overlaps. The key is a plain injective index, not
-   the Hilbert code, so the plan carries no bitwise chain to optimize
-   on every query. A Catalyst equijoin on ``__cell`` plus a codegen'd
-   bbox containment/overlap filter reproduces the reference's
-   envelope short-circuit (``src/geom/Geometry.cpp:295``) *before*
-   any python runs.
-2. **sub-cell filter (native, prepared dims)** — each build row
-   carries two 64-bit masks over its tile's 8 x 8 sub-cells
+1. **prepare (driver, once per dim)**: :func:`prepare_polygons` reads
+   the dim once and explodes each polygon to the row-major tiles
+   ``gy * 2^level + gx`` its envelope overlaps. Each (polygon, tile)
+   build row gets two 64-bit masks over the tile's 8 x 8 sub-cells
    (``kernels/subcells.py``, the APRIL intervals of *Raster
    Intervals*): ALL, the sub-cells the closed polygon touches, and
-   FULL, those inside its open interior. The point's sub-cell bit
-   sorts each candidate: outside ALL it is **dropped** in the join
-   condition; in FULL it is **accepted** as INTERIOR with no kernel
-   call; otherwise it is **refined**.
-3. **local refine (pUDF)** — surviving candidate pairs cross the Arrow
-   boundary once and the vectorized ray-crossing locator (robust
-   orientation filter, ``kernels/pip.py``) classifies the points not
-   in a FULL sub-cell.
+   FULL, those inside its open interior. The build rows, sorted by
+   tile key, and the dim's WKBs ride one broadcast (:class:`DimIndex`);
+   each worker decodes the WKBs once, for every later batch.
+2. **probe (worker, per Arrow batch of points)**: one Arrow UDF
+   (:func:`probe_points`) looks up each point's tile and tests it
+   against that tile's build rows: the envelope short-circuit of the
+   reference (``src/geom/Geometry.cpp:295``), then the point's
+   sub-cell bit. Outside ALL the pair is **dropped**; in FULL it is
+   **accepted** as INTERIOR; the rest get the robust ray-crossing
+   refine (``kernels/pip.py``). The UDF returns each point's accepted
+   polygon ids, and a native ``explode`` makes them rows.
 
-Prepared polygon dims: a broadcast point join prepares its polygon
-dim once per DataFrame (:class:`PreparedPolygons`, the distributed
-analogue of GEOS ``src/geom/prep/PreparedPolygon.cpp``). The driver
-decodes the dim once to build the ``(__cell, id, bbox, __all,
-__full)`` build side, a small local relation; the WKBs ride one
-SparkContext broadcast, and each python worker decodes them once into
-a polygon pack that every later batch, join and micro-batch reuses.
-Candidates carry only the polygon id through the join and the Arrow
-boundary. The dim's other columns come back through a left join on
-the id that the optimizer removes when the caller reads none of them.
-The batch join, the stream join and the rasterizer all take this
-path; ``broadcast_build=False`` ships the WKB through a shuffle join
-instead, with no sub-cell masks, and decodes each distinct polygon
-once per Arrow batch.
+The dim's columns come back through a left join on the id that the
+optimizer removes when the caller reads none of them. Batch, stream
+and raster joins all take this path; ``broadcast_build=False`` keys
+both sides in SQL and ships the WKB through a shuffle equijoin on the
+tile key instead, with no sub-cell masks.
 
 Pair dedup: a point lives in exactly one tile, so point joins produce
 no duplicates. (Polygon-polygon joins use reference-point dedup — see
@@ -49,13 +39,15 @@ from __future__ import annotations
 import uuid
 import weakref
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from geos_spark.functions.hilbert_native import (
     grid_xy,
@@ -66,7 +58,13 @@ from geos_spark.functions.hilbert_native import (
     with_tile_keys_exploded,
 )
 from geos_spark.functions.st import DEFAULT_EXTENT
-from geos_spark.kernels.subcells import subcell_masks
+from geos_spark.kernels.subcells import (
+    SUB_LEVELS,
+    expand_ranges,
+    grid_ordinate,
+    grid_strides,
+    subcell_masks,
+)
 
 # Location codes (geom::Location)
 _INTERIOR, _BOUNDARY, _EXTERIOR = 0, 1, 2
@@ -115,93 +113,137 @@ def pip_refine(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
     codes, uniques = pd.factorize(wkb.fillna(b"").map(bytes))
     pack, geom_offsets, bad = decode_polygons_flagged(list(uniques))
     loc = locate_in_geoms(px, py, pack, geom_offsets, codes)
-    return _with_nulls(loc, bad[codes] if bad.any() else None)
+    return pd.Series(pd.arrays.IntegerArray(loc, bad[codes]))
 
 
-# Per python worker: prepared-dim token -> (sorted ids, pack, offsets,
-# undecodable rows or None).
+@dataclass(frozen=True)
+class DimIndex:
+    """The broadcast index of a prepared polygon dim: ``ids``, sorted,
+    and ``wkbs`` in that order; the build rows, by row-major tile key at
+    ``level`` over ``extent``, with their dim ``row`` (into ``ids``), its
+    ``bbox`` and their ``all`` and ``full`` sub-cell masks. Tile
+    ``tiles[i]`` has build rows ``start[i]:start[i + 1]``; the sorted
+    keys end in one no point reaches, so every lookup lands in range."""
+
+    ids: np.ndarray
+    wkbs: list
+    level: int
+    extent: tuple[float, float, float, float]
+    tiles: np.ndarray
+    start: np.ndarray
+    row: np.ndarray
+    bbox: np.ndarray
+    all: np.ndarray
+    full: np.ndarray
+
+
+def probe_points(ix: DimIndex, pack, geom_offsets, x, y, accepted):
+    """``(point, dim row, location)`` of every pair of the points
+    ``(x, y)`` and the dim whose location is in ``accepted``, in point
+    order. ``pack`` and ``geom_offsets`` are the decoded ``ix.wkbs``;
+    a row that did not decode has no polygons and all-PARTIAL masks,
+    so its every pair is EXTERIOR, which no predicate accepts.
+
+    A NaN or infinite coordinate matches nothing; other points outside
+    the extent clamp into its border tiles. The tile ordinate is the
+    sub-cell ordinate over 8, which is ``grid_xy(level)``'s: the
+    sub-cell stride is the tile stride over 8 exactly, so the floors
+    and the clamps agree."""
+    from geos_spark.kernels.pip import locate_in_geoms
+
+    m, n = 1 << SUB_LEVELS, 1 << ix.level
+    sx, sy = grid_strides(ix.level + SUB_LEVELS, ix.extent)
+    pt = np.flatnonzero(np.isfinite(x) & np.isfinite(y))
+    ox = grid_ordinate(x[pt], ix.extent[0], sx, n * m).astype(np.int64)
+    oy = grid_ordinate(y[pt], ix.extent[1], sy, n * m).astype(np.int64)
+    key = oy // m * n + ox // m
+    bit = np.left_shift(np.uint64(1), (oy % m * m + ox % m).astype(np.uint64))
+    i = np.searchsorted(ix.tiles, key)
+    lo = ix.start[i]
+    p, b = expand_ranges(lo, np.where(ix.tiles[i] == key, ix.start[i + 1], lo) - 1)
+    # the ALL mask first: it drops more pairs than the envelope
+    k = np.flatnonzero((ix.all[b] & bit[p]) != 0)
+    pt, bit, b = pt[p[k]], bit[p[k]], b[k]
+    px, py, box = x[pt], y[pt], ix.bbox[b]
+    keep = (px >= box[:, 0]) & (px <= box[:, 2]) & (py >= box[:, 1]) & (py <= box[:, 3])
+    # a FULL pair is INTERIOR with no kernel call (``touches`` drops it)
+    todo = keep & ((ix.full[b] & bit) == 0)
+    loc = np.full(len(b), _INTERIOR, dtype=np.int32)
+    loc[todo] = locate_in_geoms(px[todo], py[todo], pack, geom_offsets, ix.row[b[todo]])
+    ok = np.flatnonzero(keep & np.isin(loc, accepted))
+    return pt[ok], ix.row[b[ok]], loc[ok]
+
+
+# Per python worker: prepared-dim token -> (index, pack, offsets).
 # Module state survives across the tasks a reused worker runs (a UDF
-# closure's own state is unpickled afresh for every task); bounded so
-# a long-lived worker does not keep every dim a session prepared.
+# closure is unpickled afresh for every task); bounded so a long-lived
+# worker does not keep every dim a session prepared.
 _WORKER_PACKS: dict = {}
 _WORKER_PACKS_MAX = 8
 
 
-def _with_nulls(loc: np.ndarray, null: np.ndarray | None) -> pd.Series:
-    """Locations as a Series, NULL where ``null`` is set: the GEOS
-    C-API per-row NULL for a polygon that fails to decode, which the
-    predicate filter then drops."""
-    if null is None or not null.any():
-        return pd.Series(loc)
-    return pd.Series(pd.arrays.IntegerArray(loc, null))
-
-
 def _worker_pack(token: str, bc):
-    """The decoded polygons of one prepared dim, decoded on the first
-    batch this worker refines against it."""
+    """The index and decoded polygons of one prepared dim, decoded on
+    the first batch this worker probes against it."""
     from geos_spark.kernels.wkb import decode_polygons_flagged
 
     hit = _WORKER_PACKS.get(token)
     if hit is None:
         if len(_WORKER_PACKS) >= _WORKER_PACKS_MAX:
             del _WORKER_PACKS[next(iter(_WORKER_PACKS))]  # oldest first
-        ids, wkbs = bc.value
-        pack, geom_offsets, bad = decode_polygons_flagged(wkbs)
-        bad = bad if bad.any() else None
-        hit = _WORKER_PACKS[token] = (ids, pack, geom_offsets, bad)
+        ix = bc.value
+        pack, geom_offsets, _ = decode_polygons_flagged(ix.wkbs)
+        hit = _WORKER_PACKS[token] = (ix, pack, geom_offsets)
         _drop_zip_importers()
     return hit
 
 
-def _refine_by_id(bc, token: str):
-    """PIP refine where candidates carry only the polygon id (8 bytes a
-    row through Arrow instead of the WKB) and whether the point lies
-    in a FULL sub-cell, which makes it INTERIOR with no kernel call;
-    ``bc.value`` is the dim's (sorted ids, wkbs)."""
+def _probe_udf(bc, token: str, id_field: T.StructField, accepted, keep_location):
+    """The Arrow UDF of one point join against a prepared dim: per
+    point, the list of its accepted polygon ids (with ``keep_location``
+    a list of (id, location) structs), built from offsets and values."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    @pandas_udf(T.IntegerType())
-    def _refine(
-        px: pd.Series, py: pd.Series, pid: pd.Series, full: pd.Series
-    ) -> pd.Series:
-        from geos_spark.kernels.pip import locate_in_geoms
+    id_type = to_arrow_type(id_field.dataType)
+    item = id_field.dataType
+    if keep_location:
+        item = T.StructType([id_field, T.StructField("location", T.IntegerType())])
 
-        ids, pack, geom_offsets, bad = _worker_pack(token, bc)
-        out = np.full(len(pid), _INTERIOR, dtype=np.int32)
-        todo = ~full.to_numpy(bool)
-        codes = np.searchsorted(ids, pid.to_numpy(np.int64)[todo])
-        out[todo] = locate_in_geoms(
-            px.to_numpy()[todo], py.to_numpy()[todo], pack, geom_offsets, codes
-        )
-        null = None
-        if bad is not None:
-            null = np.zeros(len(pid), dtype=bool)
-            null[todo] = bad[codes]
-        return _with_nulls(out, null)
+    @arrow_udf(T.ArrayType(item))
+    def _probe(x: pa.Array, y: pa.Array) -> pa.Array:
+        ix, pack, geom_offsets = _worker_pack(token, bc)
+        # float64, NaN where NULL
+        x, y = (a.cast(pa.float64()).to_numpy(zero_copy_only=False) for a in (x, y))
+        pt, row, loc = probe_points(ix, pack, geom_offsets, x, y, accepted)
+        counts = np.bincount(pt, minlength=len(x))
+        offsets = pa.array(np.concatenate(([0], np.cumsum(counts))), pa.int32())
+        values = pa.array(ix.ids[row]).cast(id_type)
+        if keep_location:
+            values = pa.StructArray.from_arrays(
+                [values, pa.array(loc)], names=[id_field.name, "location"]
+            )
+        return pa.ListArray.from_arrays(offsets, values)
 
-    return _refine
+    return _probe
 
 
 @dataclass(frozen=True)
 class PreparedPolygons:
     """A polygon dim read and prepared once for broadcast point joins.
 
-    ``build`` is the ``(__cell, id, bbox, __all, __full)`` side as a
-    local relation (no WKB): one row per tile the polygon's envelope
-    overlaps and its boundary or interior reaches, with the ALL and
-    FULL masks of the tile's 8 x 8 sub-cells (``kernels/subcells.py``).
-    ``rest`` holds the dim's other columns, one row per id (None when
-    there are none), ``columns`` the dim's own columns in order and
-    ``refine`` the by-id pandas UDF over one broadcast of the WKBs.
-    ``id_col`` is the caller's id column, or an internal one the join
-    drops again. ``build_rows``, ``all_subcells`` and
-    ``full_subcells`` count the build rows and the sub-cells set in
-    their ALL and FULL masks."""
+    ``index`` is the broadcast :class:`DimIndex`, and
+    ``probe(accepted, keep_location)`` makes the Arrow UDF of one join
+    over it. ``rest`` holds the dim's columns, one row per id, which a
+    join re-attaches by ``id_col``: the caller's id column or an
+    internal one. ``columns`` are the dim's own columns in order;
+    ``build_rows``, ``all_subcells`` and ``full_subcells`` count the
+    build rows and the sub-cells set in their ALL and FULL masks."""
 
     id_col: str
     columns: tuple[str, ...]
-    build: DataFrame
-    rest: DataFrame | None
-    refine: object
+    rest: DataFrame
+    index: DimIndex
+    probe: object
     build_rows: int
     all_subcells: int
     full_subcells: int
@@ -232,14 +274,13 @@ def prepare_polygons(
     The dim is read when it is first prepared: later joins against the
     same DataFrame reuse what was read then, so a changed dim source
     needs a new DataFrame. The driver decodes the dim once to classify
-    the sub-cells of every tile (``kernels.subcells.subcell_masks``):
-    a point outside a build row's ALL mask is dropped by the join, a
-    point in its FULL mask is INTERIOR, and only the rest reach the
-    exact refine. A polygon the driver cannot decode gets all-PARTIAL
-    masks, so every candidate of it reaches the refine, which gives it
-    a NULL location: the join drops it."""
-    import pyarrow as pa
-
+    the sub-cells of every tile (``kernels.subcells.subcell_masks``)
+    and broadcasts the build rows, sorted by tile key, with the ids
+    and WKBs (:class:`DimIndex`); no per-query relation is built. A
+    polygon the driver cannot decode gets all-PARTIAL masks, and the
+    workers, which cannot decode it either, drop its every pair."""
+    if level > 16:
+        raise ValueError("Level out of range")
     key = (poly_id_col, tuple(bbox_cols), wkb_col, level, tuple(extent))
     memo = _PREPARED.setdefault(polygons, {})
     if key in memo:
@@ -253,80 +294,60 @@ def prepare_polygons(
     order = np.argsort(ids, kind="stable")
     if (np.diff(ids[order]) == 0).any():
         raise ValueError(f"poly_id_col {poly_id_col!r} is not unique")
+    dim = dim.take(pa.array(order))
     wkbs = dim.column(wkb_col).to_pylist()
-    bc = spark.sparkContext.broadcast((ids[order], [wkbs[i] for i in order]))
     bbox = np.column_stack(
         [dim.column(c).to_numpy().astype(np.float64) for c in bbox_cols]
     )
     row, cell, all_mask, full_mask = subcell_masks(wkbs, bbox, level, extent)
-    build = (
-        dim.select([id_col, *bbox_cols])
-        .take(pa.array(row, pa.int64()))
-        .add_column(0, "__cell", pa.array(cell, pa.int64()))
-        .append_column("__all", pa.array(all_mask, pa.int64()))
-        .append_column("__full", pa.array(full_mask, pa.int64()))
+    by = np.argsort(cell, kind="stable")
+    tiles = np.append(np.unique(cell), np.iinfo(np.int64).max)
+    index = DimIndex(
+        ids=ids[order], wkbs=wkbs, level=level,
+        extent=tuple(float(v) for v in extent),
+        tiles=tiles, start=np.append(np.searchsorted(cell[by], tiles), len(by)),
+        row=row[by], bbox=bbox[row[by]],
+        all=all_mask[by].view(np.uint64), full=full_mask[by].view(np.uint64),
     )
-    others = [c for c in dim.column_names if c != id_col and c not in bbox_cols]
-    rest = None
-    if others:
-        # one row per id, as the optimizer can see: a left join on the
-        # id then drops out of plans that read none of these columns
-        rest = spark.createDataFrame(dim.select([id_col, *others]))
-        rest = rest.dropDuplicates([id_col])
+    bc = spark.sparkContext.broadcast(index)
+    id_field = polygons.schema[id_col] if poly_id_col else T.StructField(id_col, T.LongType())
+    # one row per id, as the optimizer can see: a left join on the id
+    # then drops out of plans that read none of the dim's columns. The
+    # local relation carries no size estimate: hint the broadcast.
+    rest = spark.createDataFrame(dim).dropDuplicates([id_col])
     memo[key] = PreparedPolygons(
         id_col=id_col,
         columns=tuple(polygons.columns),
-        # the local relations carry no size estimate: hint the broadcasts
-        build=F.broadcast(spark.createDataFrame(build)),
-        rest=None if rest is None else F.broadcast(rest),
-        refine=_refine_by_id(bc, uuid.uuid4().hex),
-        build_rows=len(row),
-        all_subcells=_popcount(all_mask),
-        full_subcells=_popcount(full_mask),
+        rest=F.broadcast(rest),
+        index=index,
+        probe=partial(_probe_udf, bc, uuid.uuid4().hex, id_field),
+        build_rows=len(index.row),
+        all_subcells=_popcount(index.all),
+        full_subcells=_popcount(index.full),
     )
     return memo[key]
 
 
 _EDGES_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("x1", T.DoubleType()),
-            T.StructField("y1", T.DoubleType()),
-            T.StructField("x2", T.DoubleType()),
-            T.StructField("y2", T.DoubleType()),
-        ]
-    )
+    T.StructType([T.StructField(c, T.DoubleType()) for c in ("x1", "y1", "x2", "y2")])
 )
 
 
-@pandas_udf(_EDGES_SCHEMA)
-def _wkb_edges(wkb: pd.Series) -> pd.Series:
+@arrow_udf(_EDGES_SCHEMA)
+def _wkb_edges(wkb: pa.Array) -> pa.Array:
     """All boundary segments of each (multi)polygon as an array column
-    (dim-table prep for ``within_distance_join_polygons``)."""
-    from geos_spark.kernels import geom as G
-    from geos_spark.kernels.wkb import parse_wkb
+    (dim-table prep for ``within_distance_join_polygons``), built from
+    the decoded pack's segment arrays; a NULL or undecodable WKB gets
+    NULL edges."""
+    from geos_spark.kernels.wkb import decode_polygons_flagged
 
-    def _one(b):
-        if b is None:
-            return None
-        g = parse_wkb(bytes(b))
-        out = []
-        for p in g.geoms():
-            if p.type_id != G.POLYGON:
-                continue
-            for r in p.data:
-                for i in range(len(r) - 1):
-                    out.append(
-                        {
-                            "x1": float(r[i, 0]),
-                            "y1": float(r[i, 1]),
-                            "x2": float(r[i + 1, 0]),
-                            "y2": float(r[i + 1, 1]),
-                        }
-                    )
-        return out
-
-    return wkb.map(_one)
+    pack, geom_offsets, bad = decode_polygons_flagged([b or b"" for b in wkb.to_pylist()])
+    edges = pa.StructArray.from_arrays(
+        [pack.seg_x1, pack.seg_y1, pack.seg_x2, pack.seg_y2],
+        names=["x1", "y1", "x2", "y2"],
+    )
+    offsets = pa.array(pack.poly_seg_offsets[geom_offsets], pa.int32())
+    return pa.ListArray.from_arrays(offsets, edges, mask=pa.array(bad))
 
 
 def _native_within_distance(
@@ -376,7 +397,11 @@ def _native_within_distance(
         return dist2 <= d2
 
     n_cross = F.size(F.filter(edges, crossing))
-    return (F.pmod(n_cross, F.lit(2)) == 1) | F.exists(edges, seg_near)
+    # NULL edges (an undecodable polygon) match nothing: a non-ANSI
+    # session sizes NULL as -1, an odd crossing count
+    return edges.isNotNull() & (
+        (F.pmod(n_cross, F.lit(2)) == 1) | F.exists(edges, seg_near)
+    )
 
 
 def within_distance_join_polygons(
@@ -427,7 +452,7 @@ def within_distance_join_polygons(
         _native_within_distance(
             F.col(x_col), F.col(y_col), F.col("__edges"), distance
         )
-    ).drop("__cell", "__sub", "__edges")
+    ).drop("__cell", "__edges")
     if poly_id_col is not None:
         # re-attach remaining polygon columns (incl. wkb): output
         # contract matches point_in_polygon_join. A left join on the
@@ -498,10 +523,9 @@ def _polys_intersect_fast(ga, gb) -> bool:
     other (complete for valid polygons — if boundaries are disjoint
     and neither contains the other, they are disjoint). Falls back to
     the general relate for non-areal operands."""
-    import numpy as np
-
     from geos_spark.kernels import geom as G
     from geos_spark.kernels import relate as R
+    from geos_spark.kernels.pip import EXTERIOR
     from geos_spark.kernels.scalars import _segments
     from geos_spark.kernels.segments import segments_intersect_any
 
@@ -517,8 +541,6 @@ def _polys_intersect_fast(ga, gb) -> bool:
     # siblings are not, with no boundary crossing)
     va = np.asarray([p.data[0][0] for p in pa])
     vb = np.asarray([p.data[0][0] for p in pb])
-    from geos_spark.kernels.pip import EXTERIOR
-
     if (R._locate_in_polys(va, pb) != EXTERIOR).any():
         return True
     return bool((R._locate_in_polys(vb, pa) != EXTERIOR).any())
@@ -534,8 +556,6 @@ def _areal_summary(ga, gb):
     Reference semantics: IntersectionMatrix.cpp:279-284 via the
     prepared-geometry shortcuts (PreparedPolygonContains.cpp).
     """
-    import numpy as np
-
     from geos_spark.kernels import geom as G
     from geos_spark.kernels.orientation import orientation_index
     from geos_spark.kernels.scalars import _segments
@@ -603,8 +623,6 @@ def _polys_superset_fast(ga, gb, fallback):
     is a hole of A poking into B's interior (one vertex per A hole
     ring decides).  A transversal boundary crossing puts part of B's
     closure in ext(A) -> False."""
-    import numpy as np
-
     from geos_spark.kernels import relate as R
     from geos_spark.kernels.pip import EXTERIOR, INTERIOR
 
@@ -651,8 +669,6 @@ def _polys_overlaps_fast(ga, gb):
     with no boundary contact, decide from per-part containment (a
     hole of one poking into the other's interior breaks subset-ness
     without any boundary contact)."""
-    import numpy as np
-
     from geos_spark.kernels import relate as R
     from geos_spark.kernels.pip import INTERIOR
 
@@ -755,18 +771,16 @@ def point_in_polygon_join(
 
     Returns all columns of both inputs (plus ``location`` if
     requested). Inputs must not share column names. ``points`` may be
-    a streaming DataFrame.
+    a streaming DataFrame. A NULL, NaN or infinite coordinate matches
+    nothing.
 
     With ``broadcast_build`` (the default) the polygon dim is prepared
-    once per DataFrame (:func:`prepare_polygons`): the dim is read
-    when it is first prepared, and later joins against the same
-    DataFrame reuse that read, so a changed dim needs a new DataFrame.
-    Each candidate is then dropped, accepted or refined by the bit of
-    its point's sub-cell: outside the build row's ALL mask it never
-    leaves the join; in its FULL mask it is INTERIOR without a kernel
-    call (``touches`` drops it before the refine); every other
-    candidate gets the exact ray-crossing refine. Only the dim columns
-    the caller reads are re-attached.
+    once per DataFrame (:func:`prepare_polygons`): later joins against
+    the same DataFrame reuse its first read, so a changed dim needs a
+    new DataFrame. Each batch of points is joined locally in a python
+    worker (:func:`probe_points`): the plan is the points' scan, one
+    Arrow UDF and an ``explode``, with no exchange, and only the dim
+    columns the caller reads are re-attached.
     ``poly_id_col`` names a unique integer id column; without one the
     dim gets an internal id. ``broadcast_build=False`` is for
     polygon sides too large to broadcast: the exploded polygons,
@@ -780,49 +794,42 @@ def point_in_polygon_join(
         )
     accepted = _POINT_PREDICATES[predicate]
 
-    pts = with_tile_key(points, x_col, y_col, level, extent)
-    # global phase: cell equijoin + envelope short-circuit (codegen),
-    # as SQL text: one parse instead of a py4j call per operator
-    x, y = sql_name(x_col), sql_name(y_col)
-    xmin, ymin, xmax, ymax = (sql_name(c) for c in bbox_cols)
-    keep = f"{x} >= {xmin} AND {x} <= {xmax} AND {y} >= {ymin} AND {y} <= {ymax}"
     if broadcast_build:
         prepared = prepare_polygons(
             polygons, poly_id_col=poly_id_col, wkb_col=wkb_col,
             bbox_cols=bbox_cols, level=level, extent=extent,
         )
-        # the point's sub-cell bit: outside ALL -> dropped here, in
-        # FULL -> INTERIOR with no kernel, else the exact refine
-        keep += " AND (__all & shiftleft(1L, __sub)) != 0"
-        full = "(__full & shiftleft(1L, __sub)) != 0"
-        if _INTERIOR not in accepted:
-            keep += f" AND NOT {full}"
-        cand = pts.join(prepared.build, "__cell")
-        loc_expr = prepared.refine(x_col, y_col, prepared.id_col, F.expr(full))
-    else:
-        polys = with_tile_keys_exploded(polygons, bbox_cols, level, extent)
-        cand = pts.join(polys, "__cell")
-        loc_expr = pip_refine(x_col, y_col, wkb_col)
+        hits = prepared.probe(accepted, keep_location)(x_col, y_col)
+        if keep_location:
+            out = points.select("*", F.inline(hits))
+        else:
+            out = points.select("*", F.explode(hits).alias(prepared.id_col))
+        # re-attach the dim's columns (incl. wkb and bbox) by a left
+        # join on the unique id: the optimizer removes it from plans
+        # that read none of them
+        out = out.join(prepared.rest, prepared.id_col, "left")
+        return out.select(
+            *points.columns,
+            *prepared.columns,
+            *(["location"] if keep_location else []),
+        )
 
-    # the envelope and mask conjuncts go into the join condition; the
-    # pUDF stays a filter above the join, on the survivors only
+    # shuffle join: tile-key equijoin + envelope short-circuit
+    # (codegen) as SQL text, one parse instead of a py4j call per
+    # operator; the pUDF stays a filter above the join
+    pts = with_tile_key(points, x_col, y_col, level, extent)
+    polys = with_tile_keys_exploded(polygons, bbox_cols, level, extent)
+    x, y = sql_name(x_col), sql_name(y_col)
+    xmin, ymin, xmax, ymax = (sql_name(c) for c in bbox_cols)
+    keep = F.expr(f"{x} >= {xmin} AND {x} <= {xmax} AND {y} >= {ymin} AND {y} <= {ymax}")
+    cand = pts.join(polys, "__cell")
+    loc_expr = pip_refine(x_col, y_col, wkb_col)
     if keep_location:
-        refined = cand.where(F.expr(keep)).withColumn("location", loc_expr)
+        refined = cand.where(keep).withColumn("location", loc_expr)
         out = refined.where(F.col("location").isin(list(accepted)))
     else:
         # filter directly on the pUDF: withColumn + where would make
         # Catalyst evaluate the python UDF twice (once in the filter,
         # once in the projection that is then dropped)
-        out = cand.where(F.expr(keep) & loc_expr.isin(list(accepted)))
-    if not broadcast_build:
-        return out.drop("__cell", "__sub")
-    if prepared.rest is not None:
-        # re-attach the dim's other columns (incl. wkb) by a left join
-        # on the unique id: the optimizer removes it from plans that
-        # read none of them
-        out = out.join(prepared.rest, prepared.id_col, "left")
-    return out.select(
-        *points.columns,
-        *prepared.columns,
-        *(["location"] if keep_location else []),
-    )
+        out = cand.where(keep & loc_expr.isin(list(accepted)))
+    return out.drop("__cell")

@@ -104,7 +104,7 @@ SELECT doc_id, CAST(cell AS BIGINT) AS cell FROM {fin}
 
 
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase point-in-polygon spatial join: tile-key equijoin + codegen bbox and sub-cell mask filter + Arrow pUDF ray-casting refine against the prepared (broadcast) polygon dim."""
+    """Point-in-polygon spatial join as a broadcast-partition local join: one Arrow UDF probes each batch of points against the prepared (broadcast) polygon dim index (tile lookup, bbox and sub-cell mask filter, ray-casting refine), then a native explode."""
     pts = _doc_points(spark, sf_dir)
     polys = star_polygons(spark)
     out = point_in_polygon_join(
@@ -116,8 +116,8 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pip_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship join as ``entry()`` runs it: the same prepared-dim
-    path as ``pip_join`` (tile equijoin against the broadcast local
-    build side, by-id robust ray-crossing refine; ref algorithm:
+    path as ``pip_join`` (local probe of the broadcast dim index in
+    one Arrow UDF, robust ray-crossing refine; ref algorithm:
     src/algorithm/RayCrossingCounter.cpp). Kept as its own catalog id
     for the driver contract."""
     pts = _doc_points(spark, sf_dir)
@@ -2731,9 +2731,9 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the flagship spatial join: a file-source
     stream of document points joined stream-static against the star
-    polygons prepared once (no state store — each micro-batch joins
-    independently against the broadcast build side and refines by
-    polygon id), driven to completion in append mode. Same 46-row
+    polygons prepared once (no state store — each micro-batch probes
+    its points independently against the broadcast dim index, inside
+    the python worker), driven to completion in append mode. Same 46-row
     oracle as ``pip_join``/``pip_native``."""
     from geos_spark.sources.pages import with_doc_point
     from geos_spark.streaming import (
@@ -4539,8 +4539,9 @@ _G_RASTER = 512  # 512x512 raster over the 4096 extent -> 8.0-unit pixels
 def q_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector -> raster: the 256 star polygons sampled on a 512x512
     pixel grid (pixel center in polygon, RayCrossingCounter rule) via
-    the two-phase join against the prepared dim — only candidate
-    pixels reach the python refine.  Scored
+    the point join against the prepared dim — every pixel centre is
+    probed in one Arrow UDF, and only those in PARTIAL sub-cells reach
+    the exact refine.  Scored
     as per-polygon mask aggregates (count + first/second index
     moments + pixel bbox), which pin the exact set-pixel SET, not
     just its size."""

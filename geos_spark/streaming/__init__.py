@@ -30,6 +30,7 @@ from __future__ import annotations
 import itertools
 import os
 import tempfile
+import weakref
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,9 @@ from geos_spark.functions.hilbert_native import with_hilbert_cell
 from geos_spark.sources.pages import with_doc_point
 
 _qname_counter = itertools.count()
+
+# session -> {absolute source path: pinned schema}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def read_documents_stream(
@@ -50,14 +54,22 @@ def read_documents_stream(
 
     The schema is pinned from a batch read (streaming file sources
     require an explicit schema — inference at 100 TB would list the
-    whole input). ``max_files_per_trigger`` bounds micro-batch size.
+    whole input), once per (session, absolute path): the read lists
+    the source and runs a footer job, so later calls reuse the first
+    schema and start no Spark job. A source whose schema changes needs
+    a new path or session. ``max_files_per_trigger`` bounds
+    micro-batch size.
 
     A single-file input (the sandbox testdata ships one .parquet file
     per table) is exposed through a one-symlink directory: the file
     source is a directory *lister* by contract. Production inputs are
     directories already.
     """
-    schema = spark.read.parquet(path).schema
+    schemas = _SCHEMAS.setdefault(spark, {})
+    key = os.path.abspath(path)
+    if key not in schemas:
+        schemas[key] = spark.read.parquet(path).schema
+    schema = schemas[key]
     if os.path.isfile(path):
         d = tempfile.mkdtemp(prefix="geos_stream_src_")
         os.symlink(
@@ -286,16 +298,17 @@ def streaming_pip_join(
     so the stream refines with the same robust orientation kernel as
     the batch join. The dim is prepared once, when this is called
     (:func:`geos_spark.operators.spatial_join.prepare_polygons`): every
-    micro-batch joins its tile keys against the same broadcast local
-    build side and refines by polygon id against polygons each python
-    worker decoded once. A changed dim needs a new DataFrame and a new
-    query. The join is streaming-legal in append mode with NO state
-    store at all (each micro-batch joins independently; nothing is
-    buffered across batches).
+    micro-batch probes each Arrow batch of points, inside the python
+    worker, against the broadcast dim index that worker decoded once,
+    so a micro-batch plan is the file scan, one Arrow UDF and an
+    ``explode``, with no exchange. A changed dim needs a new DataFrame
+    and a new query. The join is streaming-legal in append mode with
+    NO state store at all (each micro-batch joins independently;
+    nothing is buffered across batches).
 
     That statelessness is the scale story: an unbounded 10^12-row
     probe stream joins against the dim side at file-source pace with
-    per-executor memory bounded by the broadcast build (+ one Arrow
+    per-executor memory bounded by the broadcast index (+ one Arrow
     batch), and the result can flow straight to a checkpointed
     exactly-once file sink (:func:`stream_to_parquet`). Semantics and
     oracle are the batch join's (reference algorithm:

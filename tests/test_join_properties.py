@@ -13,7 +13,7 @@ edge and outside the extent, and zero-width boxes.
 - Sub-cell masks of the prepared dim: no sub-cell an edge or a vertex
   touches is FULL or dropped, the masked join returns the exact
   rational oracle's rows at levels up to 16 (sub-cell level 19), and
-  the sub-cell-derived tile key is ``grid_xy``'s.
+  the point join's sub-cell-derived tile key is ``grid_xy``'s.
 """
 
 import math
@@ -573,33 +573,22 @@ def test_masked_join_agrees_with_exact_oracle(spark, case):
 @_settings
 @given(case=_subcell_case())
 def test_subcell_tile_key_is_grid_xy_tile_key(spark, case):
-    """The probe's key, taken from its sub-cell ordinates, equals
-    ``tile_key(grid_xy(level))`` on every point, and its sub-cell bit
-    equals the one the driver-side classifier assigns."""
+    """``with_tile_key``'s SQL key, which the shuffle and distance
+    joins equijoin on, equals the numpy ``grid_ordinate`` key at the
+    level on every point, and so does the key the point join's worker
+    takes from the sub-cell ordinates (level + 3, divided by 8)."""
     import numpy as np
 
-    from geos_spark.functions.hilbert_native import (
-        grid_xy,
-        tile_key,
-        with_tile_key,
-    )
+    from geos_spark.functions.hilbert_native import with_tile_key
     from geos_spark.kernels.subcells import SUB_LEVELS, grid_ordinate, grid_strides
 
     level, extent, _, points = case
-    gx, gy = grid_xy("x", "y", level, extent)
-    rows = (
-        with_tile_key(_points_df(spark, points), "x", "y", level, extent)
-        .select("pid", "__cell", "__sub", tile_key(F.expr(gx), F.expr(gy), level).alias("key"))
-        .collect()
-    )
-    assert all(r["__cell"] == r["key"] for r in rows)
-    ns = 8 << level
-    s8x, s8y = grid_strides(level + SUB_LEVELS, extent)
+    rows = with_tile_key(_points_df(spark, points), "x", "y", level, extent).collect()
+    got = {r.pid: r["__cell"] for r in rows}
     xy = np.array(points)
-    ox = grid_ordinate(xy[:, 0], extent[0], s8x, ns).astype(np.int64)
-    oy = grid_ordinate(xy[:, 1], extent[1], s8y, ns).astype(np.int64)
-    want = {
-        i: (int(y // 8 * (1 << level) + x // 8), int(y % 8 * 8 + x % 8))
-        for i, (x, y) in enumerate(zip(ox, oy))
-    }
-    assert {r.pid: (r["__cell"], r["__sub"]) for r in rows} == want
+    n = 1 << level
+    for lv, k in ((level, 1), (level + SUB_LEVELS, 1 << SUB_LEVELS)):
+        s_x, s_y = grid_strides(lv, extent)
+        ox = grid_ordinate(xy[:, 0], extent[0], s_x, n * k).astype(np.int64) // k
+        oy = grid_ordinate(xy[:, 1], extent[1], s_y, n * k).astype(np.int64) // k
+        assert got == {i: int(y * n + x) for i, (x, y) in enumerate(zip(ox, oy))}

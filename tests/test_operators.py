@@ -118,8 +118,10 @@ def test_malformed_dim_row_gets_all_partial_masks(spark):
             wkb_col="wkb", bbox_cols=("xmin", "ymin", "xmax", "ymax"),
             level=2, extent=(0.0, 0.0, 64.0, 64.0),
         )
-        got = prepared.build.select("poly_id", "__cell", "__all", "__full")
-        return prepared, {(r[0], r[1]): (r[2], r[3]) for r in got.collect()}
+        ix = prepared.index
+        key = np.repeat(ix.tiles, np.diff(ix.start))
+        got = zip(ix.ids[ix.row], key, ix.all.view(np.int64), ix.full.view(np.int64))
+        return prepared, {(int(i), int(c)): (int(a), int(f)) for i, c, a, f in got}
 
     prepared, both = masks(rows)
     bad = {k: v for k, v in both.items() if k[0] == 2}
@@ -334,6 +336,76 @@ def test_within_distance_join_polygons_matches_kernel(spark):
             if geom_distance(p, g) <= d:
                 want.add((r.doc_id, pid))
     assert got == want and len(want) > 0
+
+
+def _edges_per_segment(wkb):
+    """Reference: every ring segment of every polygon part, in order."""
+    from geos_spark.kernels import geom as G
+    from geos_spark.kernels.wkb import parse_wkb
+
+    return [
+        {"x1": r[i, 0], "y1": r[i, 1], "x2": r[i + 1, 0], "y2": r[i + 1, 1]}
+        for p in parse_wkb(wkb).geoms() if p.type_id == G.POLYGON
+        for r in p.data for i in range(len(r) - 1)
+    ]
+
+
+def test_wkb_edges_keep_every_segment_and_null_bad_rows():
+    """``_wkb_edges`` gives a decodable row exactly its ring segments
+    in ring order (holes, multipolygon and collection parts included;
+    a non-areal row has none), and a NULL or undecodable WKB NULL
+    edges, wherever it sits in the batch."""
+    import pyarrow as pa
+
+    from geos_spark.kernels import geom as G
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+    from geos_spark.operators.spatial_join import _wkb_edges
+
+    shell = [(0.0, 0.0), (8.0, 0.0), (8.0, 8.0), (0.0, 8.0), (0.0, 0.0)]
+    hole = [(2.0, 2.0), (2.0, 4.0), (4.0, 4.0), (2.0, 2.0)]
+    tri = Geom.polygon([[(10.0, 0.5), (12.5, 0.25), (11.0, 3.0), (10.0, 0.5)]])
+    good = [
+        write_wkb(Geom.polygon([shell, hole])),
+        write_wkb(Geom.collection(G.MULTIPOLYGON, [tri, Geom.polygon([shell])])),
+        write_wkb(Geom.collection(G.GEOMETRYCOLLECTION, [Geom.point(1.0, 1.0), tri])),
+        write_wkb(Geom.linestring([(0.0, 0.0), (1.0, 1.0)])),
+    ]
+    rows = [None, good[0], b"\x01\x03\x00", good[1], b"", good[2], good[3], None]
+    got = _wkb_edges.func(pa.array(rows, pa.binary())).to_pylist()
+    want = [None if b in (None, b"\x01\x03\x00", b"") else _edges_per_segment(b) for b in rows]
+    assert got == want
+    assert [len(e) for e in want if e is not None] == [7, 7, 3, 0]
+
+
+def test_distance_join_drops_undecodable_polygons(spark):
+    """``within_distance_join_polygons`` against a dim holding a NULL
+    and a malformed WKB does not abort: it returns exactly the rows of
+    the dim without them."""
+    from geos_spark.kernels.geom import Geom
+    from geos_spark.kernels.wkb import write_wkb
+    from geos_spark.operators.spatial_join import within_distance_join_polygons
+
+    tri = write_wkb(Geom.polygon([[(1.0, 1.0), (30.0, 1.0), (30.0, 30.0), (1.0, 1.0)]]))
+    rows = [
+        (1, tri, 1.0, 1.0, 30.0, 30.0),
+        (2, None, 0.0, 0.0, 40.0, 40.0),
+        (3, b"\x01\x03\x00\x00", 0.0, 0.0, 40.0, 40.0),
+    ]
+    schema = "poly_id long, wkb binary, xmin double, ymin double, xmax double, ymax double"
+    pts = spark.createDataFrame(
+        [(0, 20.0, 10.0), (1, 10.0, 20.0), (2, 31.0, 15.0), (3, 35.0, 35.0), (4, 0.5, 0.5)],
+        "pid long, x double, y double",
+    )
+
+    def join(data):
+        out = within_distance_join_polygons(
+            pts, spark.createDataFrame(data, schema), 1.5, level=2,
+            extent=(0.0, 0.0, 64.0, 64.0), poly_id_col="poly_id",
+        )
+        return sorted(tuple(r) for r in out.select("pid", "poly_id").collect())
+
+    assert join(rows) == join(rows[:1]) == [(0, 1), (2, 1), (4, 1)]
 
 
 def test_simhash_df_null_text_row_kept(spark):

@@ -2,9 +2,12 @@
 
 These guard the scale contract, not results: filters reach the parquet
 scan, dimension joins broadcast, the native tiers contain no python
-eval nodes, the refine pUDF sits after (not before) the envelope
-short-circuit, and the joins carry no Hilbert chain to optimize.
+eval nodes, the point join runs locally in one Arrow UDF with no
+exchange on the point side, and the joins carry no Hilbert chain to
+optimize.
 """
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -13,6 +16,12 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _tree_nodes(plan: str) -> list[str]:
+    """The operator names of a formatted plan's tree, one per node."""
+    tree = plan.split("\n\n", 1)[0].splitlines()[1:]
+    return [re.sub(r"^[\s:+\-*]*", "", line).split(" ")[0] for line in tree]
 
 
 def test_filter_pushdown_to_parquet(spark):
@@ -25,28 +34,34 @@ def test_filter_pushdown_to_parquet(spark):
 
 
 def test_pip_join_plan_shape(spark):
+    """Broadcast-partition local join: the point side is its source,
+    one Arrow UDF and an explode, with no JVM join and no exchange.
+    The only join is the re-attach of the dim's columns, broadcast."""
     from geos_spark.operators.spatial_join import point_in_polygon_join
     from geos_spark.sources.pages import EXTENT, star_polygons, with_doc_point
 
     pts = with_doc_point(spark.range(0, 1000).withColumnRenamed("id", "doc_id"))
-    out = point_in_polygon_join(
-        pts, star_polygons(spark), "intersects", level=6, extent=EXTENT
-    )
-    plan = _plan(out)
-    # dimension build side broadcasts — no shuffle of the probe side
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # exactly one python eval NODE (formatted plans print each
-    # operator twice: tree + detail section)
-    assert plan.count("ArrowEvalPython (") == 1
+    stars = star_polygons(spark)
+    ids = point_in_polygon_join(
+        pts, stars, "intersects", level=6, extent=EXTENT, poly_id_col="poly_id"
+    ).select("doc_id", "poly_id")
+    full = point_in_polygon_join(pts, stars, "intersects", level=6, extent=EXTENT)
+    for out, joins in ((ids, 0), (full, 1)):
+        nodes = _tree_nodes(_plan(out))
+        assert nodes.count("ArrowEvalPython") == nodes.count("Generate") == 1
+        assert nodes.count("BroadcastHashJoin") == nodes.count("BroadcastExchange") == joins
+        assert not {"SortMergeJoin", "ShuffledHashJoin"} & set(nodes)
+    # the id-only plan is the point side alone: no exchange at all (the
+    # full one shuffles only the dim's dedup, under its broadcast)
+    assert "Exchange" not in _tree_nodes(_plan(ids))
 
 
 def test_pip_join_reattach_is_pruned(spark):
-    """The dim's other columns come back through a left join on the
-    unique id, which the optimizer removes when none of them is read:
-    an id-only select and a count/hash aggregate each hold exactly one
-    ``BroadcastExchange`` (the build side), while a full select keeps
-    the re-attach and returns the dim's columns."""
+    """The dim's columns come back through a left join on the unique
+    id, which the optimizer removes when none of them is read: an
+    id-only select and a count/hash aggregate hold no
+    ``BroadcastExchange``, while a full select keeps the re-attach,
+    its one broadcast, and returns the dim's columns."""
     from geos_spark.operators.spatial_join import point_in_polygon_join
     from geos_spark.sources.pages import EXTENT, star_polygons, with_doc_point
 
@@ -61,8 +76,8 @@ def test_pip_join_reattach_is_pruned(spark):
         F.sum(F.xxhash64("doc_id", "poly_id")).alias("h"),
     )
     for q in (ids, agg):
-        assert _plan(q).count("BroadcastExchange (") == 1
-    assert _plan(out).count("BroadcastExchange (") == 2
+        assert _tree_nodes(_plan(q)).count("BroadcastExchange") == 0
+    assert _tree_nodes(_plan(out)).count("BroadcastExchange") == 1
     assert out.columns == pts.columns + stars.columns
     rows = out.select("poly_id", "wkb").collect()
     wkb = {r.poly_id: bytes(r.wkb) for r in stars.select("poly_id", "wkb").collect()}

@@ -119,6 +119,54 @@ def test_stream_pip_join_multibatch_equals_batch(spark, tmp_path):
     assert _collect_sorted(out) == _collect_sorted(batch)
 
 
+def test_read_documents_stream_pins_schema_once(spark, tmp_path):
+    """The first call per (session, absolute path) reads the schema; a
+    repeat call, under a relative spelling of the same path, starts no
+    Spark job and pins the same schema a batch read gives."""
+    from geos_spark.streaming import read_documents_stream
+
+    src = str(tmp_path / "docs")
+    spark.read.parquet(DOCS).select("doc_id", "text").limit(10).write.parquet(src)
+    first = read_documents_stream(spark, src)
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-repeat", "repeat stream read")
+    try:
+        again = read_documents_stream(spark, os.path.relpath(src))
+        jobs = sc.statusTracker().getJobIdsForGroup("schema-repeat")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert first.schema == again.schema == spark.read.parquet(src).schema
+
+
+def test_stream_pip_join_microbatch_has_no_exchange(spark, tmp_path):
+    """A micro-batch of the stream join probes the broadcast dim index
+    locally: its executed plan holds one Arrow UDF and an explode and
+    no exchange of any kind."""
+    from geos_spark.queries import EXTENT, _LEVEL_JOIN, star_polygons
+    from geos_spark.sources.pages import with_doc_point
+    from geos_spark.streaming import (
+        read_documents_stream,
+        run_stream_to_memory,
+        streaming_pip_join,
+    )
+
+    src = str(tmp_path / "docs")
+    spark.read.parquet(DOCS).select("doc_id").write.parquet(src)
+    s = read_documents_stream(spark, src)
+    out, q = run_stream_to_memory(
+        streaming_pip_join(
+            with_doc_point(s), star_polygons(spark), level=_LEVEL_JOIN, extent=EXTENT
+        ).select("doc_id", "poly_id"),
+        spark,
+        output_mode="append",
+    )
+    assert out.count() > 0
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1 and plan.count("Generate") == 1
+    assert "Exchange" not in plan and "Join" not in plan
+
+
 def _write_ts_file(spark, path, rows):
     """One parquet file of (doc_id, ts) rows; bump mtime of only the
     NEW files so the file source (earliest-mtime-first) lists them in

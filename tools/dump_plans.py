@@ -20,9 +20,10 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 AUDITED = [
     ("pip_native", "flagship point-in-polygon join as entry() runs "
      "it (same prepared-dim plan as pip_join)"),
-    ("pip_join", "two-phase pUDF spatial join (tile-key equijoin "
-     "against the prepared dim's broadcast local build side + codegen "
-     "bbox and sub-cell mask filter + by-id Arrow refine)"),
+    ("pip_join", "broadcast-partition local point join (one Arrow "
+     "UDF probes each batch of points against the prepared dim's "
+     "broadcast index: tile lookup, envelope and sub-cell mask "
+     "filter, exact refine; then a native explode)"),
     ("distance_native", "zero-python within-distance join to polygons "
      "(point-to-segment distance as Catalyst HOFs)"),
     ("tile_assign", "native Hilbert tile assignment (pure bitwise "
@@ -57,8 +58,8 @@ AUDITED = [
      "passes zipped positionally, one (dst,anchor)-keyed shuffle "
      "with partial aggregation)"),
     ("rasterize", "vector->raster mask (pixel centers as a codegen "
-     "range projection probed through the prepared-dim spatial "
-     "join; per-polygon mask moments aggregate)"),
+     "range projection, every one probed by the prepared-dim point "
+     "join's Arrow UDF; per-polygon mask moments aggregate)"),
     ("dedup_cut", "exact duplicated-substring removal (window-hash "
      "emit materialized once, corpus count agg + hash equijoin "
      "back, per-doc array fold rebuilds the text -- the final plan "
@@ -78,19 +79,19 @@ def main() -> None:
         "(plans are data-size-independent apart from AQE's runtime "
         "coalescing; the structure below is what runs at any SF).",
         "",
-        "Audit keys: every `Exchange` is a shuffle — the joins below "
-        "have exactly one build-side `BroadcastExchange` (the dim's "
-        "other columns come back through a left join on its unique "
+        "Audit keys: every `Exchange` is a shuffle — the point joins "
+        "below have no join and no exchange on the point side (the "
+        "dim's columns come back through a left join on its unique "
         "id, which the optimizer removes because these queries read "
         "only ids) and no unplanned shuffles; `WholeStageCodegen` "
         "spans cover the native tiers; `PushedFilters`/`ReadSchema` "
         "show scan pruning; `ArrowEvalPython` appears in exactly two "
-        "declared places — the by-id pUDF refine of the point joins "
-        "(`pip_join`/`pip_native`/`rasterize`), whose build side is a "
-        "`LocalTableScan` prepared once per dim with the `__all`/"
-        "`__full` sub-cell masks (the join condition drops candidates "
-        "outside ALL; the refine's boolean argument marks those in "
-        "FULL, which skip the kernel), and the one-time 256-row "
+        "declared places — the point joins' probe "
+        "(`pip_join`/`pip_native`/`rasterize`), one Arrow UDF that "
+        "joins each batch of points against the dim index broadcast "
+        "once per dim (tile keys, envelopes and `ALL`/`FULL` sub-cell "
+        "masks) and returns each point's polygon ids to a `Generate` "
+        "(explode), and the one-time 256-row "
         "build-side `_wkb_edges` decode UNDER the `BroadcastExchange` "
         "of `distance_native` (whose probe-side point-to-segment "
         "refine is higher-order Column expressions, no python worker "
