@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)  -> flagship point-in-polygon spatial join at sf0.001.
-queries()     -> operator catalog (geos_spark.queries.QUERIES; 97
+queries()     -> operator catalog (geos_spark.queries.QUERIES; 84
                  queries) — synthetic-table operators (joins,
                  tiling, kNN, clustering, coverage
                  validate/simplify/clean, dedup + the full near-dup
@@ -15,10 +15,7 @@ queries()     -> operator catalog (geos_spark.queries.QUERIES; 97
                  sampling, source quota, boilerplate line removal,
                  URL canonicalization, PII redaction, Gopher/C4
                  quality filter, char entropy), lexical retrieval
-                 (BM25, inverted index), web link graph
-                 (anchor extraction, host PageRank — unweighted /
-                 weighted / TrustRank-personalized / incremental
-                 warm-start), text, html->text
+                 (BM25, inverted index), text, html->text
                  extraction with the cross-engine byte-identity
                  oracle (pages_extract), Z/M ordinate surface
                  (geom_zm), SQL/MM curve measures, structural

@@ -81,22 +81,20 @@ def _dedup_corpus_parquet(spark, n: int, parts: int) -> str:
     return path
 
 
-def _pages_corpus_parquet(spark, n: int, linked: bool = False) -> str:
-    """Deterministic Common-Crawl-shape pages corpus (synth_pages /
-    synth_linked_pages), cached to parquet so bench lines time the
-    operator, not the generator."""
-    suffix = "_linked" if linked else ""
+def _pages_corpus_parquet(spark, n: int) -> str:
+    """Deterministic Common-Crawl-shape pages corpus (synth_pages),
+    cached to parquet so bench lines time the operator, not the
+    generator."""
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         ".bench_cache",
-        f"pages_{n}{suffix}.parquet",
+        f"pages_{n}.parquet",
     )
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    from geos_spark.sources.pages import synth_linked_pages, synth_pages
+    from geos_spark.sources.pages import synth_pages
 
-    gen = synth_linked_pages if linked else synth_pages
-    gen(spark, n).write.mode("overwrite").parquet(path)
+    synth_pages(spark, n).write.mode("overwrite").parquet(path)
     return path
 
 
@@ -303,7 +301,6 @@ def _bench_queries(spark):
         )
 
     pages_src = _pages_corpus_parquet(spark, N_SYNTH)
-    linked_src = _pages_corpus_parquet(spark, 2 * N_SYNTH, linked=True)
 
     def pii_redact_1m():
         # the pre-training PII scrub at throughput: 4 regex classes
@@ -324,22 +321,6 @@ def _bench_queries(spark):
             F.sum("n_phone").alias("p"),
             F.sum(F.length("text_redacted")).alias("chars"),
         )
-
-    def host_rank_2m():
-        # full web-graph pipeline: 2m pages (cached parquet) ->
-        # anchor extraction (6m hrefs, JVM regex) -> host-graph
-        # collapse -> 3 PageRank iterations over the 997-host graph.
-        # Oracle coverage: catalog rows `link_extract` + `host_rank`.
-        from geos_spark.operators.links import (
-            extract_links,
-            host_edges,
-            pagerank,
-        )
-
-        pages = spark.read.parquet(linked_src)
-        edges = host_edges(extract_links(pages))
-        # all 997 hosts appear as sources by construction (i % 997)
-        return pagerank(edges, iterations=3, n_nodes=997)
 
     def dedup_cut_200k():
         # ExactSubstr duplicated-substring removal at 200k docs / 6m
@@ -425,7 +406,6 @@ def _bench_queries(spark):
         "token_stats": (token_stats_sf, None),
         "pages_extract_1m": (pages_extract_1m, N_SYNTH),
         "pii_redact_1m": (pii_redact_1m, N_SYNTH),
-        "host_rank_2m": (host_rank_2m, 2 * N_SYNTH),
         "dedup_clusters_200k": (dedup_clusters_200k, 200_000),
         "dedup_cut_200k": (dedup_cut_200k, 200_000),
         "raster_1024": (raster_1024, 1024 * 1024),
@@ -572,28 +552,6 @@ def _scaling_queries(spark, cores: int):
             F.sum(F.length("text_redacted")).alias("chars"),
         )
 
-    def page_rank_2m():
-        # iterative-graph job shape with a GRAPH-sized state: PageRank
-        # over the PAGE-level link graph (2m nodes, ~5m edges) — each
-        # of the 3 rounds is a real 5m-row join-aggregate shuffle, the
-        # shape that must scale on a web-sized graph (the 997-host
-        # quotient graph is pure fixed iteration latency and says
-        # nothing about scaling)
-        from geos_spark.operators.links import extract_links, pagerank
-        from geos_spark.sources.pages import synth_linked_pages
-
-        pages = synth_linked_pages(spark, 2_000_000, partitions=parts)
-        edges = extract_links(pages).where(
-            F.col("src_url") != F.col("dst_url")
-        )
-        return pagerank(
-            edges,
-            iterations=3,
-            src_col="src_url",
-            dst_col="dst_url",
-            n_nodes=2_000_000,
-        )
-
     return {
         "pip_join_48m": (pip_join_48m, 48_000_000),
         "pip_native_48m": (pip_native_48m, 48_000_000),
@@ -603,7 +561,6 @@ def _scaling_queries(spark, cores: int):
         "dedup_cut_600k": (dedup_cut_600k, 600_000),
         "dedup_cut_1800k": (dedup_cut_1800k, 1_800_000),
         "pii_scrub_1m": (pii_scrub_1m, 1_000_000),
-        "page_rank_2m": (page_rank_2m, 2_000_000),
     }
 
 

@@ -1427,7 +1427,18 @@ def _sql_quote(s: str) -> str:
 
 
 def values_oracle(pairs) -> str:
-    """``SELECT * FROM (VALUES ...)`` oracle of (case_id, expected)."""
+    """``SELECT * FROM (VALUES ...)`` oracle of (case_id, expected).
+
+    SQL has no empty ``VALUES`` list, and every case list here comes
+    from the reference corpus, so an empty one means the corpus is
+    missing: raise ``ValueError`` naming it rather than emit SQL that
+    fails to parse."""
+    pairs = list(pairs)
+    if not pairs:
+        raise ValueError(
+            "no oracle cases: the xmltester corpus at fixtures.BASE "
+            f"({BASE}) is missing or empty"
+        )
     vals = ",\n".join(
         f"({_sql_quote(cid)}, {_sql_quote(res)})" for cid, res in pairs
     )

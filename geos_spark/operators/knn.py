@@ -42,19 +42,17 @@ def within_distance_join(
     build_xy: tuple[str, str] = ("cx", "cy"),
     level: int = 6,
     extent=DEFAULT_EXTENT,
-    broadcast_build: bool = True,
 ) -> DataFrame:
     """Pairs (probe, build) with euclidean distance <= d. Native-only
-    plan: tile equijoin + codegen'd squared-distance filter."""
+    plan: tile equijoin against the broadcast build side + codegen'd
+    squared-distance filter."""
     px, py = probe_xy
     bx, by = build_xy
     p = with_tile_key(probe, px, py, level, extent)
-    b = with_tile_keys_exploded(
-        build, (bx, by, bx, by), level, extent, pad=distance
+    # exploded side has no size estimate -> hint (see spatial_join)
+    b = F.broadcast(
+        with_tile_keys_exploded(build, (bx, by, bx, by), level, extent, pad=distance)
     )
-    if broadcast_build:
-        # exploded side has no size estimate -> hint (see spatial_join)
-        b = F.broadcast(b)
     d2 = (F.col(px) - F.col(bx)) ** 2 + (F.col(py) - F.col(by)) ** 2
     return p.join(b, "__cell").where(d2 <= F.lit(distance * distance)).drop("__cell")
 

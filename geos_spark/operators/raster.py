@@ -40,14 +40,17 @@ def pixel_centers(
     spark: SparkSession,
     grid: int,
     extent: tuple[float, float, float, float] = DEFAULT_EXTENT,
-    parts: int = 32,
 ) -> DataFrame:
     """(px, py, x, y) centers of a G x G raster over ``extent`` —
-    pure Column arithmetic inside whole-stage codegen."""
+    pure Column arithmetic inside whole-stage codegen, one partition
+    per task slot: every task that probes the centers against a
+    polygon dim pays the python worker's start-up, so more partitions
+    than slots only add that fixed cost."""
     x0, y0, x1, y1 = extent
     cw = (x1 - x0) / grid
     ch = (y1 - y0) / grid
     i = F.col("id")
+    parts = spark.sparkContext.defaultParallelism
     return spark.range(0, grid * grid, 1, parts).select(
         (i % grid).alias("px"),
         (i / grid).cast("long").alias("py"),
@@ -72,13 +75,8 @@ def rasterize_polygons(
     PARTIAL sub-cells."""
     from geos_spark.operators.spatial_join import point_in_polygon_join
 
-    spark = polys.sparkSession
-    # one probe partition per task slot: every probe task pays the
-    # python worker's start-up, so more partitions than slots only
-    # add that fixed cost
-    pts = pixel_centers(spark, grid, extent, spark.sparkContext.defaultParallelism)
     out = point_in_polygon_join(
-        pts,
+        pixel_centers(polys.sparkSession, grid, extent),
         polys,
         "intersects",
         level=level,
@@ -88,26 +86,12 @@ def rasterize_polygons(
     return out.select(poly_id_col, "px", "py")
 
 
-def vectorize_mask(
-    mask: DataFrame,
-    grid: int,
-    extent: tuple[float, float, float, float] = DEFAULT_EXTENT,
-) -> DataFrame:
-    """Mask -> polygons: one row per 4-connected region.
-
-    Returns (region, n_cells, area, perimeter, n_polys, n_holes, wkb)
-    where ``region`` is the min pixel id (py*grid+px) of the region,
-    and area/perimeter/counts are measured from the traced rings —
-    checking them against the combinatorial cell formulas certifies
-    the geometry itself.
-    """
-    import numpy as np
-    import pandas as pd
-
+def _labelled_cells(mask: DataFrame, grid: int) -> DataFrame:
+    """The front end of both vectorize paths: the distinct set pixels
+    (px, py) with their pixel id ``py*grid+px``, joined to the
+    4-connected component each belongs to (``cluster``, the region's
+    min pixel id)."""
     from geos_spark.operators.cluster import connected_components
-
-    x0, y0, x1, y1 = extent
-    cw = (x1 - x0) / grid
 
     m = mask.select(
         F.col("px").cast("long").alias("px"),
@@ -131,9 +115,29 @@ def vectorize_mask(
         .join(m.alias("b"), F.col("b.id") == F.col("a.id") + grid)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    pairs = right.unionByName(up)
-    labels = connected_components(m.select("id"), pairs)
-    cells = m.join(labels, "id").select("cluster", "px", "py")
+    labels = connected_components(m.select("id"), right.unionByName(up))
+    return m.join(labels, "id")
+
+
+def vectorize_mask(
+    mask: DataFrame,
+    grid: int,
+    extent: tuple[float, float, float, float] = DEFAULT_EXTENT,
+) -> DataFrame:
+    """Mask -> polygons: one row per 4-connected region.
+
+    Returns (region, n_cells, area, perimeter, n_polys, n_holes, wkb)
+    where ``region`` is the min pixel id (py*grid+px) of the region,
+    and area/perimeter/counts are measured from the traced rings —
+    checking them against the combinatorial cell formulas certifies
+    the geometry itself.
+    """
+    import numpy as np
+    import pandas as pd
+
+    x0, y0, x1, y1 = extent
+    cw = (x1 - x0) / grid
+    cells = _labelled_cells(mask, grid).select("cluster", "px", "py")
 
     cell = float(cw)
     origin = (float(x0), float(y0))
@@ -190,32 +194,9 @@ def vectorize_mask_tiled(
     import numpy as np
     import pandas as pd
 
-    from geos_spark.operators.cluster import connected_components
-
     x0, y0, x1, y1 = extent
     cw = (x1 - x0) / grid
-
-    m = mask.select(
-        F.col("px").cast("long").alias("px"),
-        F.col("py").cast("long").alias("py"),
-    ).distinct()
-    m = m.withColumn("id", F.col("py") * grid + F.col("px"))
-    m = _materialize(m)
-
-    a = m.select("id", "px")
-    right = (
-        a.where(F.col("px") < grid - 1)
-        .alias("a")
-        .join(m.alias("b"), F.col("b.id") == F.col("a.id") + 1)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    up = (
-        a.alias("a")
-        .join(m.alias("b"), F.col("b.id") == F.col("a.id") + grid)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    labels = connected_components(m.select("id"), right.unionByName(up))
-    cells = m.join(labels, "id").select(
+    cells = _labelled_cells(mask, grid).select(
         "cluster",
         "px",
         "py",

@@ -184,36 +184,3 @@ def pack_shards(
         .withColumn("shard_offset", soff)
         .drop("__pid", "__before", "__base")
     )
-
-
-def global_rank(
-    df: DataFrame, sort_cols: list[str], num_ranges: int = 64
-) -> tuple[DataFrame, int]:
-    """Exact 0-based global rank by ``sort_cols`` as a DISTRIBUTED
-    prefix count (the ``pack_shards`` shape — never a partitionless
-    window, which collapses the dataset onto one task):
-    range-exchange on the sort key, per-partition local ranks via
-    ``row_number``, then per-partition row counts (``num_ranges``
-    longs on the driver) joined back as broadcast base offsets.
-    Requires the composite sort key to be unique (ties within one
-    rank are partition-order dependent). Returns (df + ``__rank``,
-    total row count)."""
-    ranged = df.repartitionByRange(num_ranges, *[F.col(c) for c in sort_cols])
-    with_pid = ranged.withColumn("__pid", F.spark_partition_id())
-    w = Window.partitionBy("__pid").orderBy(*[F.asc(c) for c in sort_cols])
-    local = with_pid.withColumn(
-        "__local", F.row_number().over(w) - 1
-    ).persist()
-    counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")).collect()
-    base, acc = {}, 0
-    for r in sorted(counts, key=lambda r: r["__pid"]):
-        base[r["__pid"]] = acc
-        acc += r["__n"]
-    dim = df.sparkSession.createDataFrame(
-        [(p, b) for p, b in sorted(base.items())] or [(0, 0)],
-        schema="__pid int, __base long",
-    )
-    out = local.join(F.broadcast(dim), "__pid").withColumn(
-        "__rank", F.col("__base") + F.col("__local")
-    ).drop("__pid", "__local", "__base")
-    return out, acc

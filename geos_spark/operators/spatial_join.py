@@ -416,18 +416,18 @@ def within_distance_join_polygons(
     level: int = 6,
     extent=DEFAULT_EXTENT,
     poly_id_col: str | None = None,
-    broadcast_build: bool = True,
 ) -> DataFrame:
     """Within-distance join of points to POLYGONS with a zero-python
     refine (GEOSDistanceWithin for point-vs-polygonal operands, capi
     geos_c.h.in DistanceWithin).
 
     Global phase: each polygon explodes to every tile its d-expanded
-    envelope overlaps; points join on their containing tile; a codegen
-    expanded-bbox filter prunes. Refine: ``_native_within_distance``
-    higher-order expressions over the boundary edge arrays — the whole
-    probe-side plan stays inside whole-stage codegen (no Arrow
-    boundary, no python workers on the probe side). ``poly_id_col``,
+    envelope overlaps, and that side is broadcast; points join on
+    their containing tile; a codegen expanded-bbox filter prunes.
+    Refine: ``_native_within_distance`` higher-order expressions over
+    the boundary edge arrays — the whole probe-side plan stays inside
+    whole-stage codegen (no Arrow boundary, no python workers on the
+    probe side). ``poly_id_col``,
     when given, must be unique: the polygons' other columns are
     re-attached by it."""
     xmin, ymin, xmax, ymax = bbox_cols
@@ -437,10 +437,10 @@ def within_distance_join_polygons(
         *bbox_cols,
         _wkb_edges(F.col(wkb_col)).alias("__edges"),
     )
-    polys = with_tile_keys_exploded(build, bbox_cols, level, extent, pad=distance)
-    if broadcast_build:
-        # the explode defeats size estimation: hint the broadcast
-        polys = F.broadcast(polys)
+    # the explode defeats size estimation: hint the broadcast
+    polys = F.broadcast(
+        with_tile_keys_exploded(build, bbox_cols, level, extent, pad=distance)
+    )
     d = F.lit(float(distance))
     cand = pts.join(polys, "__cell").where(
         (F.col(x_col) >= F.col(xmin) - d)

@@ -3366,111 +3366,6 @@ ORACLES.update(
 )
 
 
-def q_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web link-graph extraction: anchors pulled from html bytes with
-    an all-JVM regexp chain; the oracle reconstructs the edge list
-    independently from the generator formula (cross-engine proof that
-    the regex extraction is exact)."""
-    from geos_spark.operators.links import extract_links
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    return extract_links(synth_linked_pages(spark, n))
-
-
-def q_link_extract_sql() -> str:
-    return """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-)
-SELECT 'https://site' || (i % 997)::VARCHAR || '.example/page/'
-         || i::VARCHAR AS src_url,
-       'https://site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-         || '.example/page/' || ((i*7 + j*131 + 1) % n)::VARCHAR AS dst_url
-FROM links CROSS JOIN nd
-"""
-
-
-def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full web-graph pipeline: extract anchors -> collapse to the
-    host graph -> 3 PageRank iterations. The oracle replays all three
-    iterations as chained SQL CTEs."""
-    from geos_spark.operators.links import (
-        extract_links,
-        host_edges,
-        pagerank,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    out = pagerank(edges, iterations=3)
-    return out.select(
-        "host", F.round(F.col("rank"), 6).alias("rank_r")
-    )
-
-
-def q_host_rank_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), nn AS (SELECT count(*) AS nh FROM nodes),
-outdeg AS (
-  SELECT src_host, CAST(count(*) AS BIGINT) AS outdeg
-  FROM edges GROUP BY src_host
-), r0 AS (
-  SELECT host, CAST(1.0 AS DOUBLE) / nh AS rank
-  FROM nodes CROSS JOIN nn
-)"""
-    it = """, r{next} AS (
-  SELECT nds.host,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.nh
-           + CAST(0.85 AS DOUBLE) * COALESCE(m.mass, CAST(0.0 AS DOUBLE)) AS rank
-  FROM nodes nds CROSS JOIN nn
-  LEFT JOIN (
-    SELECT e.dst_host AS host, SUM(r.rank / o.outdeg) AS mass
-    FROM edges e
-    JOIN r{cur} r ON e.src_host = r.host
-    JOIN outdeg o ON e.src_host = o.src_host
-    GROUP BY e.dst_host
-  ) m ON nds.host = m.host
-)"""
-    body = head + "".join(
-        it.format(cur=k, next=k + 1) for k in range(3)
-    )
-    return body + "\nSELECT host, ROUND(rank, 6) AS rank_r FROM r3"
-
-
-QUERIES.update(
-    {
-        "link_extract": q_link_extract,
-        "host_rank": q_host_rank,
-    }
-)
-
-ORACLES.update(
-    {
-        "link_extract": q_link_extract_sql(),
-        "host_rank": q_host_rank_sql(),
-    }
-)
-
-
 def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style sequence packing: documents laid end-to-end by
     doc_id, cut into 4096-char shards. The engine computes the global
@@ -3507,75 +3402,8 @@ FROM documents
 """
 
 
-def q_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recrawl delta: snapshot B perturbs every 5th doc's content,
-    drops every 11th, and adds a shifted id-space page for every 13th;
-    the operator classifies each url added/removed/changed/unchanged
-    via a slim fingerprint full-outer join."""
-    from geos_spark.operators.crawl import crawl_delta
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    url = F.concat(F.lit("u/"), F.col("doc_id").cast("string"))
-    old = d.select(url.alias("url"), "text")
-    new_existing = (
-        d.where(F.col("doc_id") % 11 != 0)
-        .select(
-            url.alias("url"),
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(F.col("text"), F.lit(" upd")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-    )
-    added = d.where(F.col("doc_id") % 13 == 0).select(
-        F.concat(
-            F.lit("u/"), (F.col("doc_id") + 1000000).cast("string")
-        ).alias("url"),
-        F.col("text"),
-    )
-    out = crawl_delta(old, new_existing.unionByName(added))
-    return out.select("url", "status", "old_md5", "new_md5")
-
-
-def q_crawl_delta_sql() -> str:
-    return """
-WITH old AS (
-  SELECT 'u/' || doc_id::VARCHAR AS url, md5(text) AS old_md5
-  FROM documents
-), new AS (
-  SELECT 'u/' || doc_id::VARCHAR AS url,
-         md5(CASE WHEN doc_id % 5 = 0 THEN text || ' upd' ELSE text END)
-           AS new_md5
-  FROM documents WHERE doc_id % 11 <> 0
-  UNION ALL
-  SELECT 'u/' || (doc_id + 1000000)::VARCHAR AS url, md5(text) AS new_md5
-  FROM documents WHERE doc_id % 13 = 0
-)
-SELECT COALESCE(o.url, n.url) AS url,
-       CASE WHEN o.old_md5 IS NULL THEN 'added'
-            WHEN n.new_md5 IS NULL THEN 'removed'
-            WHEN o.old_md5 = n.new_md5 THEN 'unchanged'
-            ELSE 'changed' END AS status,
-       o.old_md5, n.new_md5
-FROM old o FULL OUTER JOIN new n ON o.url = n.url
-"""
-
-
-QUERIES.update(
-    {
-        "pack_shards": q_pack_shards,
-        "crawl_delta": q_crawl_delta,
-    }
-)
-
-ORACLES.update(
-    {
-        "pack_shards": q_pack_shards_sql(),
-        "crawl_delta": q_crawl_delta_sql(),
-    }
-)
+QUERIES.update({"pack_shards": q_pack_shards})
+ORACLES.update({"pack_shards": q_pack_shards_sql()})
 
 
 def q_stream_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3662,176 +3490,6 @@ def q_xt_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES.update({"xt_misc": q_xt_misc})
-
-
-def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs/authorities over the same host graph as host_rank:
-    3 iterations with per-half-step L2 normalization, replayed
-    exactly by chained SQL CTEs."""
-    from geos_spark.operators.links import (
-        extract_links,
-        hits,
-        host_edges,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    out = hits(edges, iterations=3)
-    return out.select(
-        "host",
-        F.round(F.col("hub"), 6).alias("hub_r"),
-        F.round(F.col("authority"), 6).alias("auth_r"),
-    )
-
-
-def q_host_hits_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), h0 AS (SELECT host, CAST(1.0 AS DOUBLE) AS hub FROM nodes)"""
-    step = """, a{k}r AS MATERIALIZED (
-  SELECT e.dst_host AS host, SUM(h.hub) AS authority
-  FROM edges e JOIN h{p} h ON e.src_host = h.host GROUP BY e.dst_host
-), a{k} AS MATERIALIZED (
-  SELECT host, authority
-           / (SELECT sqrt(SUM(authority*authority)) FROM a{k}r) AS authority
-  FROM a{k}r
-), h{k}r AS MATERIALIZED (
-  SELECT e.src_host AS host, SUM(a.authority) AS hub
-  FROM edges e JOIN a{k} a ON e.dst_host = a.host GROUP BY e.src_host
-), h{k} AS MATERIALIZED (
-  SELECT host, hub / (SELECT sqrt(SUM(hub*hub)) FROM h{k}r) AS hub
-  FROM h{k}r
-)"""
-    body = head + "".join(step.format(k=k, p=k - 1) for k in (1, 2, 3))
-    return body + """
-SELECT n.host,
-       ROUND(COALESCE(h3.hub, 0.0), 6) AS hub_r,
-       ROUND(COALESCE(a3.authority, 0.0), 6) AS auth_r
-FROM nodes n
-LEFT JOIN h3 ON n.host = h3.host
-LEFT JOIN a3 ON n.host = a3.host
-"""
-
-
-QUERIES.update({"host_hits": q_host_hits})
-ORACLES.update({"host_hits": q_host_hits_sql()})
-
-
-def q_host_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic synchronous label propagation (3 iterations,
-    frequency-then-lexicographic tie-break) over the undirected host
-    graph — community detection for spam-cluster discovery."""
-    from geos_spark.operators.links import (
-        extract_links,
-        host_edges,
-        label_propagation,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    return label_propagation(edges, iterations=3).select(
-        "host", "label"
-    )
-
-
-def q_host_communities_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), sym AS MATERIALIZED (
-  SELECT src_host AS u, dst_host AS v FROM edges
-  UNION SELECT dst_host, src_host FROM edges
-), l0 AS MATERIALIZED (
-  SELECT DISTINCT u AS host, u AS label FROM sym
-)"""
-    step = """, l{k} AS MATERIALIZED (
-  SELECT host, label FROM (
-    SELECT s.u AS host, l.label, count(*) AS cnt,
-           ROW_NUMBER() OVER (
-             PARTITION BY s.u
-             ORDER BY count(*) DESC, l.label ASC) AS rn
-    FROM sym s JOIN l{p} l ON s.v = l.host
-    GROUP BY s.u, l.label
-  ) WHERE rn = 1
-)"""
-    body = head + "".join(step.format(k=k, p=k - 1) for k in (1, 2, 3))
-    return body + "\nSELECT host, label FROM l3"
-
-
-QUERIES.update({"host_communities": q_host_communities})
-ORACLES.update({"host_communities": q_host_communities_sql()})
-
-
-def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text index: (target url, anchor term) with link and
-    distinct-source-host counts — extracted from html bytes with the
-    two-pass regexp capture; the oracle rebuilds the whole index from
-    the generator formula."""
-    from geos_spark.operators.links import (
-        anchor_text_index,
-        extract_anchor_texts,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    out = anchor_text_index(
-        extract_anchor_texts(synth_linked_pages(spark, n))
-    )
-    return out.select("dst_url", "anchor", "n_links", "n_hosts")
-
-
-def q_anchor_text_sql() -> str:
-    from geos_spark.sources.pages import _WORDS
-
-    words = ", ".join(f"'{w}'" for w in _WORDS)
-    return f"""
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), pairs AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'https://site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example/page/' || ((i*7 + j*131 + 1) % n)::VARCHAR AS dst_url,
-         ([{words}])[(((i*7 + j*131 + 1) % n) % {len(_WORDS)})::INT + 1]
-           AS anchor
-  FROM links CROSS JOIN nd
-)
-SELECT dst_url, anchor,
-       CAST(count(*) AS BIGINT) AS n_links,
-       CAST(count(DISTINCT src_host) AS BIGINT) AS n_hosts
-FROM pairs GROUP BY dst_url, anchor
-"""
-
-
-QUERIES.update({"anchor_text": q_anchor_text})
-ORACLES.update({"anchor_text": q_anchor_text_sql()})
 
 
 def q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3949,584 +3607,6 @@ FROM m
 
 QUERIES.update({"curate_pipeline": q_curate_pipeline})
 ORACLES.update({"curate_pipeline": q_curate_pipeline_sql()})
-
-
-def q_stream_crawl_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest-side crawl delta: the NEW snapshot streams in
-    (same perturbation scheme as crawl_delta minus 'removed', which is
-    snapshot-complete by nature) and classifies against the static old
-    snapshot via a stream-static left join, append mode."""
-    from geos_spark.streaming import (
-        read_documents_stream,
-        run_stream_to_memory,
-        streaming_crawl_delta,
-    )
-
-    url = F.concat(F.lit("u/"), F.col("doc_id").cast("string"))
-    old = _docs(spark, sf_dir).select(url.alias("url"), "text")
-    s = read_documents_stream(spark, f"{sf_dir}/documents.parquet")
-    new_stream = (
-        s.where(F.col("doc_id") % 11 != 0)
-        .select(
-            F.concat(F.lit("u/"), F.col("doc_id").cast("string")).alias(
-                "url"
-            ),
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(F.col("text"), F.lit(" upd")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-    )
-    out, _ = run_stream_to_memory(
-        streaming_crawl_delta(new_stream, old),
-        spark,
-        output_mode="append",
-    )
-    return out.select("url", "status", "old_md5", "new_md5")
-
-
-def q_stream_crawl_delta_sql() -> str:
-    return """
-WITH old AS (
-  SELECT 'u/' || doc_id::VARCHAR AS url, md5(text) AS old_md5
-  FROM documents
-), new AS (
-  SELECT 'u/' || doc_id::VARCHAR AS url,
-         md5(CASE WHEN doc_id % 5 = 0 THEN text || ' upd' ELSE text END)
-           AS new_md5
-  FROM documents WHERE doc_id % 11 <> 0
-)
-SELECT n.url,
-       CASE WHEN o.old_md5 IS NULL THEN 'added'
-            WHEN o.old_md5 = n.new_md5 THEN 'unchanged'
-            ELSE 'changed' END AS status,
-       o.old_md5, n.new_md5
-FROM new n LEFT JOIN old o ON n.url = o.url
-"""
-
-
-QUERIES.update({"stream_crawl_delta": q_stream_crawl_delta})
-ORACLES.update({"stream_crawl_delta": q_stream_crawl_delta_sql()})
-
-
-def q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier prioritization — the composition row tying the
-    graph and snapshot tiers together: per-url priority = host
-    PageRank x freshness factor (changed 1.0 / added 0.8 / unchanged
-    0.2), the standard recrawl-scheduling shape. The oracle replays
-    PageRank AND the delta classification in one SQL."""
-    from geos_spark.operators.crawl import crawl_delta
-    from geos_spark.operators.links import (
-        extract_links,
-        host_edges,
-        pagerank,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    docs = _docs(spark, sf_dir)
-    n = docs.count()
-    ranks = pagerank(
-        host_edges(extract_links(synth_linked_pages(spark, n))),
-        iterations=3,
-    )
-    # snapshots keyed by the page url (host = site{id%997}.example)
-    url = F.concat(
-        F.lit("https://site"),
-        (F.col("doc_id") % 997).cast("string"),
-        F.lit(".example/page/"),
-        F.col("doc_id").cast("string"),
-    )
-    old = docs.select(url.alias("url"), "text")
-    new = docs.select(
-        url.alias("url"),
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.col("text"), F.lit(" upd")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    delta = crawl_delta(old, new).where(F.col("status") != "removed")
-    from geos_spark.operators.links import host_of
-
-    fresh = (
-        F.when(F.col("status") == "changed", F.lit(1.0))
-        .when(F.col("status") == "added", F.lit(0.8))
-        .otherwise(F.lit(0.2))
-    )
-    out = (
-        delta.withColumn("host", host_of("url"))
-        .join(ranks, on="host", how="left")
-        .select(
-            "url",
-            "status",
-            F.round(
-                F.coalesce(F.col("rank"), F.lit(0.0)) * fresh, 9
-            ).alias("priority_r"),
-        )
-    )
-    return out
-
-
-def q_frontier_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), nn AS (SELECT count(*) AS nh FROM nodes),
-outdeg AS (
-  SELECT src_host, CAST(count(*) AS BIGINT) AS outdeg
-  FROM edges GROUP BY src_host
-), r0 AS (
-  SELECT host, CAST(1.0 AS DOUBLE) / nh AS rank
-  FROM nodes CROSS JOIN nn
-)"""
-    it = """, r{next} AS (
-  SELECT nds.host,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.nh
-           + CAST(0.85 AS DOUBLE) * COALESCE(m.mass, CAST(0.0 AS DOUBLE)) AS rank
-  FROM nodes nds CROSS JOIN nn
-  LEFT JOIN (
-    SELECT e.dst_host AS host, SUM(r.rank / o.outdeg) AS mass
-    FROM edges e
-    JOIN r{cur} r ON e.src_host = r.host
-    JOIN outdeg o ON e.src_host = o.src_host
-    GROUP BY e.dst_host
-  ) m ON nds.host = m.host
-)"""
-    tail = """, delta AS (
-  SELECT 'https://site' || (doc_id % 997)::VARCHAR || '.example/page/'
-           || doc_id::VARCHAR AS url,
-         'site' || (doc_id % 997)::VARCHAR || '.example' AS host,
-         CASE WHEN doc_id % 5 = 0 THEN 'changed' ELSE 'unchanged' END AS status
-  FROM documents
-)
-SELECT d.url, d.status,
-       ROUND(COALESCE(r3.rank, 0.0)
-             * CASE d.status WHEN 'changed' THEN 1.0
-                             WHEN 'added' THEN 0.8
-                             ELSE 0.2 END, 9) AS priority_r
-FROM delta d LEFT JOIN r3 ON d.host = r3.host
-"""
-    return head + "".join(
-        it.format(cur=k, next=k + 1) for k in range(3)
-    ) + tail
-
-
-QUERIES.update({"frontier": q_frontier})
-ORACLES.update({"frontier": q_frontier_sql()})
-
-
-def q_host_rank_w(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank over the host graph: an anchor repeated k
-    times carries k× the endorsement (host_edges keeps the anchor
-    multiplicity as ``weight``). The oracle replays the 3 iterations
-    with mass = rank * weight / sum(weight per source)."""
-    from geos_spark.operators.links import (
-        extract_links,
-        host_edges,
-        pagerank,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    out = pagerank(edges, iterations=3, weight_col="weight")
-    return out.select(
-        "host", F.round(F.col("rank"), 6).alias("rank_r")
-    )
-
-
-def q_host_rank_w_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host, CAST(count(*) AS DOUBLE) AS weight
-  FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), nn AS (SELECT count(*) AS nh FROM nodes),
-outdeg AS (
-  SELECT src_host, SUM(weight) AS wtot
-  FROM edges GROUP BY src_host
-), r0 AS (
-  SELECT host, CAST(1.0 AS DOUBLE) / nh AS rank
-  FROM nodes CROSS JOIN nn
-)"""
-    it = """, r{next} AS (
-  SELECT nds.host,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.nh
-           + CAST(0.85 AS DOUBLE) * COALESCE(m.mass, CAST(0.0 AS DOUBLE)) AS rank
-  FROM nodes nds CROSS JOIN nn
-  LEFT JOIN (
-    SELECT e.dst_host AS host, SUM(r.rank * e.weight / o.wtot) AS mass
-    FROM edges e
-    JOIN r{cur} r ON e.src_host = r.host
-    JOIN outdeg o ON e.src_host = o.src_host
-    GROUP BY e.dst_host
-  ) m ON nds.host = m.host
-)"""
-    body = head + "".join(
-        it.format(cur=k, next=k + 1) for k in range(3)
-    )
-    return body + "\nSELECT host, ROUND(rank, 6) AS rank_r FROM r3"
-
-
-def q_host_rank_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank / personalized PageRank: the teleport distribution is
-    uniform over a deterministic trusted-seed set (hosts whose numeric
-    id is divisible by 10) instead of all nodes — the spam-demotion
-    ranking (Gyöngyi et al. 2004). Non-seed hosts get teleport mass 0
-    and are ranked purely by their link distance from trust."""
-    from geos_spark.operators.links import (
-        extract_links,
-        host_edges,
-        pagerank,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    seeds = nodes.where(
-        F.regexp_extract("host", r"site(\d+)\.", 1).cast("int")
-        % 10
-        == 0
-    )
-    ns = seeds.agg(F.count("*").alias("__ns"))
-    seeds_p = seeds.crossJoin(ns).select(
-        "host", (F.lit(1.0) / F.col("__ns")).alias("p")
-    )
-    out = pagerank(edges, iterations=3, teleport=seeds_p)
-    return out.select(
-        "host", F.round(F.col("rank"), 6).alias("rank_r")
-    )
-
-
-def q_host_rank_trust_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes0 AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), ns AS (
-  SELECT count(*) AS nseed FROM nodes0
-  WHERE CAST(regexp_extract(host, 'site(\\d+)\\.', 1) AS INT) % 10 = 0
-), nodes AS (
-  SELECT host,
-         CASE WHEN CAST(regexp_extract(host, 'site(\\d+)\\.', 1) AS INT)
-                   % 10 = 0
-              THEN CAST(1.0 AS DOUBLE) / ns.nseed
-              ELSE CAST(0.0 AS DOUBLE) END AS p
-  FROM nodes0 CROSS JOIN ns
-), outdeg AS (
-  SELECT src_host, CAST(count(*) AS DOUBLE) AS outdeg
-  FROM edges GROUP BY src_host
-), r0 AS (
-  SELECT host, p, p AS rank FROM nodes
-)"""
-    it = """, r{next} AS (
-  SELECT nds.host, nds.p,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) * nds.p
-           + CAST(0.85 AS DOUBLE) * COALESCE(m.mass, CAST(0.0 AS DOUBLE)) AS rank
-  FROM nodes nds
-  LEFT JOIN (
-    SELECT e.dst_host AS host, SUM(r.rank / o.outdeg) AS mass
-    FROM edges e
-    JOIN r{cur} r ON e.src_host = r.host
-    JOIN outdeg o ON e.src_host = o.src_host
-    GROUP BY e.dst_host
-  ) m ON nds.host = m.host
-)"""
-    body = head + "".join(
-        it.format(cur=k, next=k + 1) for k in range(3)
-    )
-    return body + "\nSELECT host, ROUND(rank, 6) AS rank_r FROM r3"
-
-
-def q_host_rank_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental PageRank over a crawl delta: the prior snapshot is
-    the first half of the crawl (its own link formula over m = n//2
-    pages), ranked 2 iterations; the grown snapshot re-ranks with 2
-    warm iterations seeded from the prior ranks (new hosts start at
-    uniform 1/N of the grown graph). The oracle replays both chains —
-    prior chain, coalesce-seeded warm chain — as SQL CTEs."""
-    from geos_spark.operators.links import (
-        extract_links,
-        host_edges,
-        pagerank,
-        pagerank_incremental,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    m = n // 2
-    prior = pagerank(
-        host_edges(extract_links(synth_linked_pages(spark, m))),
-        iterations=2,
-    )
-    grown = host_edges(extract_links(synth_linked_pages(spark, n)))
-    out = pagerank_incremental(grown, prior, iterations=2)
-    return out.select(
-        "host", F.round(F.col("rank"), 6).alias("rank_r")
-    )
-
-
-def q_host_rank_incr_sql() -> str:
-    head = """
-WITH nd AS (SELECT count(*) AS n, count(*) // 2 AS m FROM documents),
-linksp AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents CROSS JOIN nd WHERE doc_id < nd.m
-), edgesp0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % m) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM linksp CROSS JOIN nd
-), edgesp AS (
-  SELECT src_host, dst_host FROM edgesp0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodesp AS (
-  SELECT src_host AS host FROM edgesp
-  UNION SELECT dst_host FROM edgesp
-), nnp AS (SELECT count(*) AS nh FROM nodesp),
-outdegp AS (
-  SELECT src_host, CAST(count(*) AS BIGINT) AS outdeg
-  FROM edgesp GROUP BY src_host
-), p0 AS (
-  SELECT host, CAST(1.0 AS DOUBLE) / nh AS rank
-  FROM nodesp CROSS JOIN nnp
-)"""
-    itp = """, p{next} AS (
-  SELECT nds.host,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.nh
-           + CAST(0.85 AS DOUBLE) * COALESCE(m.mass, CAST(0.0 AS DOUBLE)) AS rank
-  FROM nodesp nds CROSS JOIN nnp nn
-  LEFT JOIN (
-    SELECT e.dst_host AS host, SUM(r.rank / o.outdeg) AS mass
-    FROM edgesp e
-    JOIN p{cur} r ON e.src_host = r.host
-    JOIN outdegp o ON e.src_host = o.src_host
-    GROUP BY e.dst_host
-  ) m ON nds.host = m.host
-)"""
-    mid = """, links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), nn AS (SELECT count(*) AS nh FROM nodes),
-outdeg AS (
-  SELECT src_host, CAST(count(*) AS BIGINT) AS outdeg
-  FROM edges GROUP BY src_host
-), w0 AS (
-  SELECT nds.host,
-         COALESCE(pr.rank, CAST(1.0 AS DOUBLE) / nn.nh) AS rank
-  FROM nodes nds CROSS JOIN nn
-  LEFT JOIN p2 pr ON nds.host = pr.host
-)"""
-    itw = """, w{next} AS (
-  SELECT nds.host,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.nh
-           + CAST(0.85 AS DOUBLE) * COALESCE(m.mass, CAST(0.0 AS DOUBLE)) AS rank
-  FROM nodes nds CROSS JOIN nn
-  LEFT JOIN (
-    SELECT e.dst_host AS host, SUM(r.rank / o.outdeg) AS mass
-    FROM edges e
-    JOIN w{cur} r ON e.src_host = r.host
-    JOIN outdeg o ON e.src_host = o.src_host
-    GROUP BY e.dst_host
-  ) m ON nds.host = m.host
-)"""
-    body = (
-        head
-        + "".join(itp.format(cur=k, next=k + 1) for k in range(2))
-        + mid
-        + "".join(itw.format(cur=k, next=k + 1) for k in range(2))
-    )
-    return body + "\nSELECT host, ROUND(rank, 6) AS rank_r FROM w2"
-
-
-QUERIES.update(
-    {
-        "host_rank_w": q_host_rank_w,
-        "host_rank_trust": q_host_rank_trust,
-        "host_rank_incr": q_host_rank_incr,
-    }
-)
-
-ORACLES.update(
-    {
-        "host_rank_w": q_host_rank_w_sql(),
-        "host_rank_trust": q_host_rank_trust_sql(),
-        "host_rank_incr": q_host_rank_incr_sql(),
-    }
-)
-
-
-def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-depth labeling: multi-source BFS from the trusted seed
-    set (hosts with numeric id divisible by 10) over the directed
-    host graph, depth capped at 4 — the discrete companion to
-    host_rank_trust (hop distance from trust instead of stationary
-    mass). The oracle is a recursive CTE taking MIN(depth) per host."""
-    from geos_spark.operators.links import (
-        bfs_depth,
-        extract_links,
-        host_edges,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    seeds = nodes.where(
-        F.regexp_extract("host", r"site(\d+)\.", 1).cast("int")
-        % 10
-        == 0
-    )
-    return bfs_depth(edges, seeds, max_depth=4).select(
-        "host", F.col("depth").cast("int").alias("depth")
-    )
-
-
-def q_crawl_depth_sql() -> str:
-    return """
-WITH RECURSIVE nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), nodes0 AS (
-  SELECT src_host AS host FROM edges
-  UNION SELECT dst_host FROM edges
-), seeds AS (
-  SELECT host FROM nodes0
-  WHERE CAST(regexp_extract(host, 'site(\\d+)\\.', 1) AS INT) % 10 = 0
-), walk AS (
-  SELECT host, 0 AS depth FROM seeds
-  UNION
-  SELECT e.dst_host AS host, w.depth + 1 AS depth
-  FROM walk w JOIN edges e ON e.src_host = w.host
-  WHERE w.depth < 4
-)
-SELECT host, CAST(MIN(depth) AS INT) AS depth
-FROM walk GROUP BY host
-"""
-
-
-QUERIES.update({"crawl_depth": q_crawl_depth})
-ORACLES.update({"crawl_depth": q_crawl_depth_sql()})
-
-
-def q_host_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weakly-connected components of the host graph (mirror-farm /
-    link-ring discovery) via the contraction union-find; component
-    representative = lexicographically smallest member host. The
-    oracle enumerates undirected reachability as a recursive CTE and
-    takes MIN(label) per host."""
-    from geos_spark.operators.links import (
-        extract_links,
-        host_components,
-        host_edges,
-    )
-    from geos_spark.sources.pages import synth_linked_pages
-
-    n = _docs(spark, sf_dir).count()
-    edges = host_edges(extract_links(synth_linked_pages(spark, n)))
-    return host_components(edges)
-
-
-def q_host_cc_sql() -> str:
-    return """
-WITH RECURSIVE nd AS (SELECT count(*) AS n FROM documents),
-links AS (
-  SELECT doc_id AS i, unnest(range(2 + (doc_id % 3))) AS j
-  FROM documents
-), edges0 AS (
-  SELECT 'site' || (i % 997)::VARCHAR || '.example' AS src_host,
-         'site' || (((i*7 + j*131 + 1) % n) % 997)::VARCHAR
-           || '.example' AS dst_host
-  FROM links CROSS JOIN nd
-), edges AS (
-  SELECT src_host, dst_host FROM edges0
-  WHERE src_host <> dst_host GROUP BY src_host, dst_host
-), sym AS MATERIALIZED (
-  SELECT src_host AS u, dst_host AS v FROM edges
-  UNION SELECT dst_host, src_host FROM edges
-), nodes AS (
-  SELECT DISTINCT u AS host FROM sym
-), walk AS (
-  SELECT host, host AS label FROM nodes
-  UNION
-  SELECT s.u AS host, w.label
-  FROM sym s JOIN walk w ON s.v = w.host
-)
-SELECT host, MIN(label) AS component FROM walk GROUP BY host
-"""
-
-
-QUERIES.update({"host_cc": q_host_cc})
-ORACLES.update({"host_cc": q_host_cc_sql()})
 
 
 # ----------------------------------------------------------------------

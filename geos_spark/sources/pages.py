@@ -315,53 +315,3 @@ def synth_pages(spark: SparkSession, n: int, partitions: int | None = None) -> D
         .withColumnRenamed("id", "page_id")
         .select("page_id", "url", "warc_ts", "html", "text", "lang")
     )
-
-
-def synth_linked_pages(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    """``synth_pages`` plus deterministic anchors: page i carries
-    2 + (i % 3) links, link j targeting page (i*7 + j*131 + 1) mod n
-    (so the host graph spans the 997 hosts with skewed in-degree).
-
-    The ``text`` column is untouched (byte-identity contract); html is
-    rebuilt with the anchor tags appended after the body text.
-    """
-    pages = synth_pages(spark, n, partitions)
-    i = F.col("page_id")
-    n_links = (F.pmod(i, F.lit(3)) + 2).cast("int")
-    target = lambda j: F.pmod(i * 7 + j * 131 + 1, F.lit(n))  # noqa: E731
-    words = F.array(*[F.lit(w) for w in _WORDS])
-    anchors = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), n_links - 1),
-            lambda j: F.concat(
-                F.lit('<a href="https://site'),
-                F.pmod(target(j), F.lit(997)).cast("string"),
-                F.lit(".example/page/"),
-                target(j).cast("string"),
-                F.lit('">'),
-                # anchor text: a wordlist word keyed by the TARGET id
-                # (the retrieval-signal shape: pages describing the
-                # same target tend to reuse its anchor term)
-                F.element_at(
-                    words,
-                    F.pmod(target(j), F.lit(len(_WORDS))).cast("int") + 1,
-                ),
-                F.lit("</a>"),
-            ),
-        ),
-        "",
-    )
-    return pages.withColumn(
-        "html",
-        F.encode(
-            F.concat(
-                F.lit("<html><body>"),
-                F.col("text"),
-                anchors,
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ),
-    )

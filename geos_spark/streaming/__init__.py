@@ -452,38 +452,6 @@ def streaming_pii_scrub(sdf: DataFrame) -> DataFrame:
     return redact_pii(sdf)
 
 
-def streaming_crawl_delta(
-    new_stream: DataFrame,
-    old_snapshot: DataFrame,
-    url_col: str = "url",
-    content_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of crawl_delta for the INGEST direction: as new
-    crawl records stream in, classify each against the static previous
-    snapshot — ``added`` (url unseen), ``changed``, ``unchanged``.
-
-    A stream-static LEFT join (supported in append mode); ``removed``
-    is inherently a snapshot-complete notion and stays batch-only
-    (crawl_delta), documented contract. Fingerprints are computed
-    before the join on both sides, so page bodies never enter join
-    state."""
-    o = old_snapshot.select(
-        F.col(url_col).alias("url"),
-        F.md5(F.col(content_col)).alias("old_md5"),
-    )
-    n = new_stream.select(
-        F.col(url_col).alias("url"),
-        F.md5(F.col(content_col)).alias("new_md5"),
-    )
-    j = n.join(o, on="url", how="left")
-    status = (
-        F.when(F.col("old_md5").isNull(), F.lit("added"))
-        .when(F.col("old_md5") == F.col("new_md5"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return j.select("url", status.alias("status"), "old_md5", "new_md5")
-
-
 def streaming_dedup_cut(
     sdf: DataFrame,
     corpus: DataFrame,

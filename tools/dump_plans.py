@@ -48,15 +48,9 @@ AUDITED = [
     ("pack_shards", "sequence packing (distributed prefix sum: "
      "range exchange + per-partition windows + broadcast base "
      "offsets -- never a global single-task window)"),
-    ("host_rank", "web-graph PageRank (anchor extraction feeds a "
-     "persisted edge list; 3 join-aggregate iterations over the "
-     "host key)"),
     ("decontam", "benchmark decontamination (benchmark gram set as "
      "a BroadcastExchange of 8-byte hashes; corpus side stateless "
      "explode, only matched grams shuffle)"),
-    ("anchor_text", "anchor-text index (two regexp_extract_all "
-     "passes zipped positionally, one (dst,anchor)-keyed shuffle "
-     "with partial aggregation)"),
     ("rasterize", "vector->raster mask (pixel centers as a codegen "
      "range projection, every one probed by the prepared-dim point "
      "join's Arrow UDF; per-polygon mask moments aggregate)"),
