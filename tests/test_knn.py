@@ -33,3 +33,18 @@ def test_ring_knn_k_larger_than_cell(spark):
     exact = knn_join_broadcast(pts, centers, k=6)
     ring = knn_join(pts, centers, k=6, level=5, extent=EXTENT)
     assert _pairs(ring) == _pairs(exact)
+
+
+def test_within_distance_join_includes_exact_distance(spark):
+    """The distance filter is inclusive: a 3-4-5 triangle puts a probe
+    exactly d = 5 from one center (kept) and just past it from another
+    (dropped), with both centers in other tiles than the probe."""
+    from geos_spark.operators.knn import within_distance_join
+
+    probe = spark.createDataFrame([(0, 100.0, 100.0)], "doc_id long, x double, y double")
+    build = spark.createDataFrame(
+        [(1, 103.0, 104.0), (2, 96.0, 96.9999), (3, 100.0, 105.0)],
+        "poly_id long, cx double, cy double",
+    )
+    got = within_distance_join(probe, build, 5.0, level=10, extent=EXTENT)
+    assert sorted(r.poly_id for r in got.collect()) == [1, 3]

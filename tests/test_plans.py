@@ -9,6 +9,7 @@ optimize.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -142,3 +143,31 @@ def test_distance_join_fully_native(spark):
     plan = _plan(out)
     assert "Python" not in plan and "Arrow" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("build", ["points", "polygons"])
+def test_distance_joins_broadcast_without_size_estimate(spark, build):
+    """Both within-distance joins hint the broadcast of their exploded
+    build side, so the tile join broadcasts even with automatic
+    broadcast switched off."""
+    from geos_spark.operators.knn import within_distance_join
+    from geos_spark.operators.spatial_join import within_distance_join_polygons
+    from geos_spark.queries import _centers
+    from geos_spark.sources.pages import EXTENT, star_polygons, with_doc_point
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        pts = with_doc_point(spark.range(0, 100).withColumnRenamed("id", "doc_id"))
+        if build == "points":
+            out = within_distance_join(pts, _centers(spark), 50.0, level=6, extent=EXTENT)
+        else:
+            out = within_distance_join_polygons(
+                pts, star_polygons(spark), 10.0, level=6, extent=EXTENT
+            )
+        nodes = _tree_nodes(_plan(out))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" in nodes
+    assert "SortMergeJoin" not in nodes and "ShuffledHashJoin" not in nodes

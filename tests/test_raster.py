@@ -264,6 +264,67 @@ def test_vectorize_tiled_stars(spark):
     pd.testing.assert_frame_equal(d, t)
 
 
+def test_pixel_centers_grid_and_partitions(spark):
+    """Each center sits mid-cell of a non-square extent, (px, py)
+    index the cell, and the grid spans one partition per task slot."""
+    from geos_spark.operators.raster import pixel_centers
+
+    df = pixel_centers(spark, 4, extent=(10.0, -8.0, 18.0, 8.0))
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    got = sorted(tuple(r) for r in df.collect())
+    want = sorted(
+        (px, py, 10.0 + (px + 0.5) * 2.0, -8.0 + (py + 0.5) * 4.0)
+        for px in range(4)
+        for py in range(4)
+    )
+    assert got == want
+
+
+def test_labelled_cells_four_connectivity(spark):
+    """The front end both vectorize paths share: duplicate mask rows
+    collapse, a region is labelled by its min pixel id, diagonal
+    neighbours stay apart, and the last pixel of a row is not adjacent
+    to the first pixel of the next although their ids are consecutive."""
+    from geos_spark.operators.raster import _labelled_cells
+
+    grid = 5
+    cells = [
+        (4, 0), (0, 1),  # ids 4 and 5: a row wrap, not adjacent
+        (2, 0), (2, 1), (2, 1), (3, 1),  # an L (ids 2, 7, 8), one duplicate
+        (2, 3), (3, 4),  # ids 17 and 23: diagonal only
+    ]
+    df = spark.createDataFrame(cells, "px long, py long")
+    rows = _labelled_cells(df, grid).collect()
+    assert len(rows) == 7
+    regions = {}
+    for r in rows:
+        assert r.id == r.py * grid + r.px
+        regions.setdefault(r.cluster, set()).add(r.id)
+    assert regions == {2: {2, 7, 8}, 4: {4}, 5: {5}, 17: {17}, 23: {23}}
+
+
+@pytest.mark.parametrize("tiled", [False, True], ids=["direct", "tiled"])
+def test_vectorize_row_wrap_regions_stay_apart(spark, tiled):
+    """Two vertical dominoes on the right and left grid edges, one row
+    apart: their pixel ids are pairwise consecutive (7/8, 15/16) but
+    they share no edge, so both paths trace two separate regions."""
+    from geos_spark.operators.raster import vectorize_mask, vectorize_mask_tiled
+
+    grid = 8
+    cw = 4096.0 / grid  # DEFAULT_EXTENT
+    df = spark.createDataFrame(
+        [(7, 0), (7, 1), (0, 1), (0, 2)], "px long, py long"
+    )
+    out = vectorize_mask_tiled(df, grid, block=4) if tiled else vectorize_mask(df, grid)
+    regions = out.orderBy("region").collect()
+    assert [r.region for r in regions] == [7, 8]
+    for r in regions:
+        assert r.n_cells == 2
+        assert r.area == 2 * cw * cw
+        assert r.perimeter == 6 * cw
+        assert (r.n_polys, r.n_holes) == (1, 0)
+
+
 def test_traced_geometry_is_ogc_valid():
     """The vectorizer's output must pass the engine's own isValid —
     including pinch masks, where the split rings touch at a point
