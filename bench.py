@@ -193,8 +193,7 @@ def _bench_queries(spark):
             spark.range(0, 100000, 1, CPUS * 2).withColumnRenamed("id", "doc_id")
         )
         return knn_join(
-            pts, _centers(spark), k=4, level=4, extent=EXTENT,
-            broadcast_build=True,
+            pts, _centers(spark), k=4, level=4, extent=EXTENT
         ).select("doc_id", "rank", "poly_id")
 
     # streaming-ingest corpus: 1m doc_ids cached to parquet once

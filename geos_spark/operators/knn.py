@@ -8,29 +8,36 @@
   distance filter refines. No python in the plan at all for
   point-to-point distance.
 
-- ``knn_join_broadcast``: exact kNN against a small build side —
-  broadcast + window top-k (ties by id, matching GEOSSTRtree_nearest
-  determinism).
-
-- ``knn_join``: cell-ring-expansion kNN for large build sides:
-  candidates from the probe's tile ring r=0,1,2... until the k-th
-  candidate distance is below the ring lower bound. Implemented as a
-  bounded iterative DataFrame loop (driver-side ring counter, no
-  collect of data rows).
+- ``knn_join``: cell-ring-expansion kNN in the point join's shape
+  (``spatial_join.prepare_polygons`` / ``probe_points``). The driver
+  reads the build side once, sorts it by (row-major tile key, id) and
+  broadcasts it (:class:`PointIndex`); one Arrow UDF expands rings
+  around each batch of probe points in numpy (:func:`knn_probe`) and
+  returns each point's k nearest build rows, which a native
+  ``posexplode`` makes rows. Distances are exact and ties break by
+  build id (``GEOSSTRtree_nearest`` determinism,
+  ``src/index/strtree/BoundablePair.cpp``). The plan is the probe's
+  scan, one python stage and a ``Generate``: no join, no window, no
+  exchange and no driver loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from dataclasses import dataclass
+from functools import cache
 
-from geos_spark.functions.hilbert_native import (
-    grid_xy,
-    sql_name,
-    with_tile_key,
-    with_tile_keys_exploded,
-)
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
+
+from geos_spark.functions.hilbert_native import with_tile_key, with_tile_keys_exploded
 from geos_spark.functions.st import DEFAULT_EXTENT
+from geos_spark.kernels.subcells import expand_ranges, grid_ordinate, grid_strides
+from geos_spark.operators.spatial_join import _drop_zip_importers
 
 
 def within_distance_join(
@@ -57,32 +64,144 @@ def within_distance_join(
     return p.join(b, "__cell").where(d2 <= F.lit(distance * distance)).drop("__cell")
 
 
-def knn_join_broadcast(
-    probe: DataFrame,
-    build: DataFrame,
-    k: int,
-    *,
-    probe_id: str = "doc_id",
-    build_id: str = "poly_id",
-    probe_xy: tuple[str, str] = ("x", "y"),
-    build_xy: tuple[str, str] = ("cx", "cy"),
-) -> DataFrame:
-    """Exact kNN vs a broadcastable build side.
+@dataclass(frozen=True)
+class PointIndex:
+    """The broadcast build side of a kNN join: its rows sorted by
+    (row-major tile key ``gy * 2^level + gx`` over ``extent``, id), with
+    their ``ids`` (an Arrow array), coordinates ``x`` and ``y``, tile
+    ``key`` and ``tie``, the row's position in id order. The tiles
+    ``gx0..gx1`` of grid row ``gy`` hold the one slice of rows from
+    ``searchsorted(key, gy * 2^level + gx0)`` to
+    ``searchsorted(key, gy * 2^level + gx1, "right")``."""
 
-    Returns probe columns + (rank, build_id, dist2). Ties break by
-    build id ascending (GEOSSTRtree_nearest tie determinism).
-    """
-    px, py = probe_xy
-    bx, by = build_xy
-    d2 = (F.col(px) - F.col(bx)) ** 2 + (F.col(py) - F.col(by)) ** 2
-    scored = probe.join(F.broadcast(build)).withColumn("dist2", d2)
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("dist2").asc(), F.col(build_id).asc()
+    ids: pa.Array
+    x: np.ndarray
+    y: np.ndarray
+    key: np.ndarray
+    tie: np.ndarray
+    level: int
+    extent: tuple[float, float, float, float]
+
+
+def build_index(ids: pa.Array, x, y, level: int, extent) -> PointIndex:
+    """The index of the build rows ``ids`` at ``(x, y)`` (float64, NaN
+    where NULL). A row with a NaN or infinite coordinate matches
+    nothing, so it is left out. Ids order as Spark sorts them
+    ascending, NULL first."""
+    ok = np.flatnonzero(np.isfinite(x) & np.isfinite(y))
+    ok = ok[pc.sort_indices(ids.take(ok), null_placement="at_start").to_numpy()]
+    n = 1 << level
+    sx, sy = grid_strides(level, extent)
+    key = (
+        grid_ordinate(y[ok], extent[1], sy, n).astype(np.int64) * n
+        + grid_ordinate(x[ok], extent[0], sx, n).astype(np.int64)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    tie = np.argsort(key, kind="stable")
+    rows = ok[tie]
+    return PointIndex(
+        ids=ids.take(rows), x=x[rows], y=y[rows], key=key[tie], tie=tie,
+        level=level, extent=tuple(float(v) for v in extent),
     )
+
+
+def knn_probe(ix: PointIndex, k: int, x, y):
+    """``(point, build row, dist2)`` of the k nearest build rows of
+    every point ``(x, y)``, by point, then rank: ``dist2`` ascending,
+    ties by id. ``dist2`` is ``dx * dx + dy * dy`` in float64. A NaN or
+    infinite coordinate matches nothing.
+
+    Cell-ring expansion: a point's candidates are the build rows in
+    the (2R + 1)-square block of tiles around its tile, for R = 1, 2,
+    4, ... until the block holds k rows or spans the grid; then one
+    block at the exact radius that the k-th distance gives. No row
+    outside a block of radius R lies nearer than R tile sides, less a
+    pad of a few ulps of the extent (the one ``subcell_masks`` uses):
+    the tile floor can put a coordinate a few ulps below a tile edge
+    into the next tile. Clamping a point outside the extent into a
+    border tile only moves it away from the rows beyond the block."""
+    minx, miny, maxx, maxy = ix.extent
+    n = 1 << ix.level
+    sx, sy = grid_strides(ix.level, ix.extent)
+    pad = 2.0**-45 * max(abs(minx) + abs(maxx), abs(miny) + abs(maxy))
+    pt = np.flatnonzero(np.isfinite(x) & np.isfinite(y))
+    x, y = x[pt], y[pt]
+    gx = grid_ordinate(x, minx, sx, n).astype(np.int64)
+    gy = grid_ordinate(y, miny, sy, n).astype(np.int64)
+
+    def slices(i, r):
+        """(point, lo, hi) for each grid row of the blocks of radius
+        ``r`` around points ``i``: that row's build rows are lo:hi."""
+        o, row = expand_ranges(np.maximum(gy[i] - r, 0), np.minimum(gy[i] + r, n - 1))
+        p, r = i[o], r[o]
+        lo = np.searchsorted(ix.key, row * n + np.maximum(gx[p] - r, 0))
+        hi = np.searchsorted(ix.key, row * n + np.minimum(gx[p] + r, n - 1), "right")
+        return p, lo, hi
+
+    def candidates(i, r):
+        p, lo, hi = slices(i, r)
+        s, b = expand_ranges(lo, hi - 1)
+        p = p[s]
+        dx, dy = x[p] - ix.x[b], y[p] - ix.y[b]
+        return p, b, dx * dx + dy * dy
+
+    def top_k(p, b, d2):
+        o = np.lexsort((ix.tie[b], d2, p))
+        p, b, d2 = p[o], b[o], d2[o]
+        rank = np.arange(len(p)) - np.searchsorted(p, p)
+        top = rank < k
+        return p[top], b[top], d2[top], rank[top]
+
+    # R = 1, 2, 4, ... until the block holds k rows or spans the grid
+    r = np.full(len(pt), min(1, n - 1))
+    todo = np.arange(len(pt))
+    while len(todo):
+        p, lo, hi = slices(todo, r[todo])
+        held = np.bincount(p, hi - lo, minlength=len(pt))[todo]
+        todo = todo[(held < k) & (r[todo] < n - 1)]
+        r[todo] = np.minimum(2 * r[todo], n - 1)
+
+    # one block at the exact radius, where the k-th distance needs more
+    p, b, d2, rank = top_k(*candidates(np.arange(len(pt)), r))
+    kth = np.full(len(pt), np.inf)
+    kth[p[rank == k - 1]] = d2[rank == k - 1]
+    reach = np.sqrt(kth) * (1 + 2.0**-40) + pad
+    exact = np.minimum(np.floor(reach / min(sx, sy)) + 1, n - 1).astype(np.int64)
+    wide = exact > r
+    w = np.flatnonzero(wide)
+    more = candidates(w, exact[w])
+    stay = ~wide[p]
+    p, b, d2, _ = top_k(*(np.concatenate([a[stay], m]) for a, m in zip((p, b, d2), more)))
+    return pt[p], b, d2
+
+
+@cache
+def _worker_ready() -> None:
+    """Once per python worker, after the UDF's imports are done."""
+    _drop_zip_importers()
+
+
+def _knn_udf(bc, k: int, id_name: str, id_type: T.DataType):
+    """The Arrow UDF of one kNN join: per point, the list of its k
+    nearest (build id, dist2) structs in rank order."""
+    item = T.StructType(
+        [T.StructField(id_name, id_type), T.StructField("dist2", T.DoubleType())]
+    )
+
+    @arrow_udf(T.ArrayType(item))
+    def _knn(x: pa.Array, y: pa.Array) -> pa.Array:
+        _worker_ready()
+        ix = bc.value
+        # float64, NaN where NULL
+        x, y = (a.cast(pa.float64()).to_numpy(zero_copy_only=False) for a in (x, y))
+        p, b, d2 = knn_probe(ix, k, x, y)
+        counts = np.bincount(p, minlength=len(x))
+        offsets = pa.array(np.concatenate(([0], np.cumsum(counts))), pa.int32())
+        values = pa.StructArray.from_arrays(
+            [ix.ids.take(b), pa.array(d2)], names=[id_name, "dist2"]
+        )
+        return pa.ListArray.from_arrays(offsets, values)
+
+    return _knn
 
 
 def knn_join(
@@ -90,182 +209,33 @@ def knn_join(
     build: DataFrame,
     k: int,
     *,
-    probe_id: str = "doc_id",
     build_id: str = "poly_id",
     probe_xy: tuple[str, str] = ("x", "y"),
     build_xy: tuple[str, str] = ("cx", "cy"),
     level: int = 4,
     extent=DEFAULT_EXTENT,
-    broadcast_build: bool | None = None,
 ) -> DataFrame:
-    """Cell-ring-expansion kNN (scale path for large build sides).
+    """Exact kNN: each probe point's k nearest build points.
 
-    ``broadcast_build``: force (True/False) the broadcast hint on the
-    build side. Default None adds no hint and runs no plan-time action
-    — Catalyst/AQE decide from actual sizes.
+    Returns the probe's columns plus ``rank`` (1 to k), ``build_id``
+    and ``dist2``, the squared distance; ties break by build id
+    ascending. A probe with fewer than k build points gets them all. A
+    NULL, NaN or infinite coordinate on either side matches nothing.
+    ``level`` and ``extent`` set the tile grid of the ring expansion;
+    points outside the extent clamp into its border tiles.
 
-    Two-phase plan (constant job count for dense build sides, no
-    iterative lineage):
-
-    1. **Neighborhood pass** — every probe joins the 3x3 cell block
-       around its own cell (plain hash equijoin). Probes whose k-th
-       candidate distance is within the ring-1 lower bound are final.
-    2. **Radius pass** — each remaining probe computes its *own* exact
-       search radius from its k-th candidate distance
-       (``r_i = floor(sqrt(kth)/tile) + 1``: every point beyond radius
-       r_i is strictly farther than the current k-th neighbor — the
-       branch-and-bound lower-bound reasoning of GEOSSTRtree_nearest,
-       src/index/strtree/BoundablePair.cpp, transplanted to the grid)
-       and explodes exactly the cells inside it via a native
-       ``F.sequence`` fan-out. One join, one window — final by
-       construction.
-
-    Probes that found fewer than k candidates in their 3x3 block
-    (sparse regions) fall back to a doubling-radius loop until k
-    candidates exist, then take the same exact radius pass. Exact
-    results; ties break by build id (GEOSSTRtree_nearest
-    determinism).
-    """
-    minx, miny, maxx, maxy = extent
-    n = 1 << level
-    sx = (maxx - minx) / n
-    sy = (maxy - miny) / n
-    px, py = probe_xy
+    The build side is read once, when the join is built, and broadcast
+    whole: it must fit one broadcast. Larger build sides wait for a
+    range-partitioned build shared with the point join."""
     bx, by = build_xy
-
-    def grid(df: DataFrame, xc: str, yc: str, pre: str) -> DataFrame:
-        gx, gy = grid_xy(sql_name(xc), sql_name(yc), level, extent)
-        return df.withColumns({pre + "gx": F.expr(gx), pre + "gy": F.expr(gy)})
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        """Cut lineage lazily: the reuse pattern here is a handful of
-        consumers inside one final DAG, so a lazy cache avoids the
-        extra materialization job an eager localCheckpoint would run
-        (the iterative starving loop below is bounded at log2(n)
-        rounds, so lineage depth stays small)."""
-        return df.cache()
-
-    p = grid(probe, px, py, "p_")
-    b = grid(build, bx, by, "b_")
-
-    # the probe-side explode destroys Catalyst's size estimate, so the
-    # planner may not pick a broadcast join on its own (the same trap
-    # as spatial_join). Callers who know the build side is small pass
-    # broadcast_build=True; with the default None we add NO plan-time
-    # action — the build scan keeps its own statistics, so Catalyst's
-    # autoBroadcastJoinThreshold and AQE's runtime join-strategy switch
-    # handle the decision from real sizes.
-    if broadcast_build:
-        b = F.broadcast(b)
-
-    d2 = (F.col(px) - F.col(bx)) ** 2 + (F.col(py) - F.col(by)) ** 2
-    tile_min = min(sx, sy)
-    out_cols = [c for c in probe.columns] + ["rank", build_id, "dist2"]
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("dist2").asc(), F.col(build_id).asc()
+    t = build.select(build_id, bx, by).toArrow()  # the one read of the build side
+    x, y = (t.column(i).cast(pa.float64()).to_numpy() for i in (1, 2))
+    ix = build_index(t.column(0).combine_chunks(), x, y, level, extent)
+    bc = probe.sparkSession.sparkContext.broadcast(ix)
+    hits = _knn_udf(bc, k, build_id, build.schema[build_id].dataType)(*probe_xy)
+    return probe.select("*", F.posexplode(hits).alias("__pos", "__hit")).select(
+        *probe.columns,
+        (F.col("__pos") + 1).alias("rank"),
+        F.col("__hit")[build_id].alias(build_id),
+        F.col("__hit.dist2").alias("dist2"),
     )
-
-    def cand_join(probes: DataFrame, radius) -> DataFrame:
-        """Equijoin each probe against the build rows in the cells
-        within Chebyshev ``radius`` of its cell (radius is a Column or
-        an int — native sequence fan-out, no cross join)."""
-        rcol = radius if isinstance(radius, Column) else F.lit(radius)
-        exploded = (
-            probes.withColumn(
-                "__ngx",
-                F.explode(
-                    F.sequence(
-                        F.greatest(F.lit(0), F.col("p_gx") - rcol),
-                        F.least(F.lit(n - 1), F.col("p_gx") + rcol),
-                    )
-                ),
-            )
-            .withColumn(
-                "__ngy",
-                F.explode(
-                    F.sequence(
-                        F.greatest(F.lit(0), F.col("p_gy") - rcol),
-                        F.least(F.lit(n - 1), F.col("p_gy") + rcol),
-                    )
-                ),
-            )
-        )
-        return exploded.join(
-            b,
-            (F.col("__ngx") == F.col("b_gx"))
-            & (F.col("__ngy") == F.col("b_gy")),
-        ).withColumn("dist2", d2)
-
-    def topk_of(cand: DataFrame) -> DataFrame:
-        return cand.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
-
-    # phase 1: 3x3 neighborhood pass
-    topk1 = ckpt(topk_of(cand_join(p, 1)))
-    stats1 = topk1.groupBy(probe_id).agg(
-        F.count(F.lit(1)).alias("__n"), F.max("dist2").alias("__kth")
-    )
-    bound1 = tile_min * tile_min  # ring-1 lower bound (uses r, not r+1)
-    final1 = stats1.where(
-        (F.col("__n") >= k) & (F.col("__kth") <= F.lit(bound1))
-    ).select(probe_id)
-    results = topk1.join(final1, probe_id, "left_semi").select(*out_cols)
-
-    # probes that saw >= k candidates but aren't provably final: their
-    # exact radius comes from their own k-th distance
-    need_radius = stats1.where(
-        (F.col("__n") >= k) & (F.col("__kth") > F.lit(bound1))
-    ).select(probe_id, F.col("__kth"))
-
-    # sparse regions: < k candidates in the 3x3 block — double the
-    # radius until k exist (each round touches only these probes)
-    starving = ckpt(
-        p.join(
-            stats1.where(F.col("__n") >= k).select(probe_id),
-            probe_id,
-            "left_anti",
-        )
-    )
-    r = 2
-    live = starving.limit(1).count() > 0
-    while live:
-        prev_starving = starving
-        if r >= n:
-            # whole grid in reach: rank whatever exists and finish
-            results = results.unionByName(
-                topk_of(cand_join(starving, n)).select(*out_cols)
-            )
-            break
-        got = topk_of(cand_join(starving, r))
-        stats_s = got.groupBy(probe_id).agg(
-            F.count(F.lit(1)).alias("__n"), F.max("dist2").alias("__kth")
-        )
-        sated = stats_s.where(F.col("__n") >= k)
-        need_radius = need_radius.unionByName(
-            sated.select(probe_id, F.col("__kth"))
-        )
-        starving = ckpt(
-            starving.join(sated.select(probe_id), probe_id, "left_anti")
-        )
-        # materialize the new frontier (one job a round: it is also
-        # the loop's emptiness test), then release the previous
-        # round's cache blocks — the loop would otherwise hold
-        # O(log n) cached copies of the shrinking probe set
-        live = starving.limit(1).count() > 0
-        try:
-            prev_starving.unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-        r *= 2
-
-    # phase 2: one exact per-probe radius pass. Every point beyond
-    # radius r_i = floor(sqrt(kth)/tile)+1 is strictly farther than
-    # the current k-th neighbor, so the result is final.
-    p2 = p.join(need_radius, probe_id)
-    r_i = F.least(
-        F.lit(n),
-        (F.floor(F.sqrt(F.col("__kth")) / F.lit(tile_min)) + 1).cast("int"),
-    )
-    topk2 = topk_of(cand_join(p2.withColumn("__r", r_i), F.col("__r")))
-    return results.unionByName(topk2.select(*out_cols))

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from geos_spark.functions.hilbert_native import with_hilbert_cell
 from geos_spark.kernels.hilbert import hilbert_sql_ctes
-from geos_spark.operators.knn import knn_join_broadcast, within_distance_join
+from geos_spark.operators.knn import knn_join, within_distance_join
 from geos_spark.operators.spatial_join import point_in_polygon_join
 from geos_spark.sources.pages import (
     EXTENT,
@@ -190,9 +190,9 @@ JOIN star_bbox bb
 
 
 def q_knn_centers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN join (k=4) of centers to doc points: two-phase ring expansion with per-probe exact radius refine."""
+    """Exact kNN join (k=4) of centers to doc points: cell-ring expansion in one Arrow UDF over the broadcast, tile-sorted centers."""
     pts = _doc_points(spark, sf_dir)
-    out = knn_join_broadcast(pts, _centers(spark), k=4)
+    out = knn_join(pts, _centers(spark), k=4)
     return out.select("doc_id", "rank", "poly_id")
 
 

@@ -197,3 +197,33 @@ def test_cli_geosop_round5_ops(spark, tmp_path, capsys):
     assert write_wkt(parse_wkb(bytes(v))) == "POINT (4 0)"
     v = run(["--op", "bufferSingleSided", "--a", line, "--arg", "1"])
     assert write_wkt(parse_wkb(bytes(v))) == "LINESTRING (0 1, 10 1)"
+
+
+def test_cli_knn(spark, tmp_path, capsys):
+    """The ``knn`` op reads the user's build table (poly_id, cx, cy)
+    and returns each point's k nearest rows, as a brute force ranks
+    them."""
+    from geos_spark.cli import main
+    from geos_spark.queries import _centers
+    from tests.test_knn import _brute
+
+    a = str(tmp_path / "pts")
+    b = str(tmp_path / "centers")
+    out = str(tmp_path / "out")
+    _write_points(spark, a, n=300)
+    _centers(spark).where(F.col("poly_id") % 5 == 0).write.parquet(b)
+    main(["--op", "knn", "--a", a, "--b", b, "--out", out, "--level", "7", "--k", "3"])
+    summary = json.loads(
+        [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")][-1]
+    )
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(out)
+        .select("doc_id", "rank", "poly_id", "dist2").collect()
+    )
+    want = _brute(
+        [tuple(r) for r in spark.read.parquet(a).select("doc_id", "x", "y").collect()],
+        [tuple(r) for r in spark.read.parquet(b).select("poly_id", "cx", "cy").collect()],
+        3,
+    )
+    assert summary["op"] == "knn" and summary["rows"] == len(want) == 900
+    assert got == want

@@ -171,3 +171,30 @@ def test_distance_joins_broadcast_without_size_estimate(spark, build):
         spark.conf.set(key, old)
     assert "BroadcastHashJoin" in nodes
     assert "SortMergeJoin" not in nodes and "ShuffledHashJoin" not in nodes
+
+
+def test_knn_plan_is_one_arrow_udf(spark):
+    """The kNN join is local to each batch of probe points: the
+    ``knn_centers`` plan is the points' scan, one Arrow UDF and a
+    ``Generate``, with no join, window or exchange. Building a
+    ``knn_join`` runs at most the one job that reads the build side:
+    the ring expansion runs no job of its own."""
+    from geos_spark.operators.knn import knn_join
+    from geos_spark.queries import QUERIES, _centers
+    from geos_spark.sources.pages import EXTENT, with_doc_point
+
+    nodes = _tree_nodes(_plan(QUERIES["knn_centers"](spark, "/root/testdata/sf0.001")))
+    assert nodes.count("ArrowEvalPython") == nodes.count("Generate") == 1
+    assert not {"BroadcastNestedLoopJoin", "CartesianProduct", "Window"} & set(nodes)
+    assert not [n for n in nodes if "Exchange" in n]
+
+    sc = spark.sparkContext
+    pts = with_doc_point(spark.range(0, 1000).withColumnRenamed("id", "doc_id"))
+    sparse = _centers(spark).where(F.col("poly_id") % 64 == 0)
+    sc.setJobGroup("knn-build", "build a knn_join")
+    try:
+        knn_join(pts, sparse, k=8, level=6, extent=EXTENT)
+        jobs = sc.statusTracker().getJobIdsForGroup("knn-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 1

@@ -28,8 +28,10 @@ AUDITED = [
      "(point-to-segment distance as Catalyst HOFs)"),
     ("tile_assign", "native Hilbert tile assignment (pure bitwise "
      "Column chain, whole-stage codegen)"),
-    ("knn_centers", "two-phase exact kNN (ring expansion + per-probe "
-     "radius refine)"),
+    ("knn_centers", "exact kNN by cell-ring expansion (one Arrow UDF "
+     "expands rings around each batch of points over the broadcast, "
+     "tile-sorted centers and returns each point's k nearest to a "
+     "Generate: no join, no window, no exchange)"),
     ("dedup_exact", "exact dedup (single hash aggregate)"),
     ("dedup_clusters", "full near-dup pipeline (exact collapse -> "
      "minhash agg -> LSH bucket gather -> Jaccard verify join -> "
@@ -79,7 +81,7 @@ def main() -> None:
         "id, which the optimizer removes because these queries read "
         "only ids) and no unplanned shuffles; `WholeStageCodegen` "
         "spans cover the native tiers; `PushedFilters`/`ReadSchema` "
-        "show scan pruning; `ArrowEvalPython` appears in exactly two "
+        "show scan pruning; `ArrowEvalPython` appears in exactly three "
         "declared places — the point joins' probe "
         "(`pip_join`/`pip_native`/`rasterize`), one Arrow UDF that "
         "joins each batch of points against the dim index broadcast "
@@ -89,7 +91,9 @@ def main() -> None:
         "build-side `_wkb_edges` decode UNDER the `BroadcastExchange` "
         "of `distance_native` (whose probe-side point-to-segment "
         "refine is higher-order Column expressions, no python worker "
-        "touches the big side).",
+        "touches the big side), and the kNN probe of `knn_centers`, "
+        "one Arrow UDF over the centers broadcast once, which feeds a "
+        "`Generate` (posexplode) the same way.",
         "",
     ]
     for name, why in AUDITED:
