@@ -24,7 +24,6 @@
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import cache
 
 import numpy as np
 import pyarrow as pa
@@ -164,6 +163,7 @@ def knn_probe(ix: PointIndex, k: int, x, y):
     p, b, d2, rank = top_k(*candidates(np.arange(len(pt)), r))
     kth = np.full(len(pt), np.inf)
     kth[p[rank == k - 1]] = d2[rank == k - 1]
+    # the relative margin covers the rounding of dist2 and of sqrt
     reach = np.sqrt(kth) * (1 + 2.0**-40) + pad
     exact = np.minimum(np.floor(reach / min(sx, sy)) + 1, n - 1).astype(np.int64)
     wide = exact > r
@@ -174,10 +174,17 @@ def knn_probe(ix: PointIndex, k: int, x, y):
     return pt[p], b, d2
 
 
-@cache
+_WORKER_READY = False
+
+
 def _worker_ready() -> None:
-    """Once per python worker, after the UDF's imports are done."""
-    _drop_zip_importers()
+    """Drops the zip importers once per python worker, after the UDF's
+    imports are done: module state outlives the tasks a reused worker
+    runs, and the UDF reaches it through this importable function."""
+    global _WORKER_READY
+    if not _WORKER_READY:
+        _drop_zip_importers()
+        _WORKER_READY = True
 
 
 def _knn_udf(bc, k: int, id_name: str, id_type: T.DataType):
